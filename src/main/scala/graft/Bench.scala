@@ -1,17 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     // untimed warmup: session bring-up, codegen compiler, parquet
     // reader, and the custom expression classes — on SYNTHETIC frames
     // only. Warming two registered queries (the previous shape) gave
@@ -93,10 +84,7 @@ object Bench {
     // round's query set alone in one JVM and separate per-query
     // regressions from whole-suite JVM pressure (codegen cache, GC).
     // The driver never sets it; absent means the full registry.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val suite = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val suite = SparkEntry.selected(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     def runPass(): Seq[(String, Double, Boolean)] = suite.map { case (name, fn) =>
       val t0 = System.nanoTime()
       // full plan evaluation, NOT count(): under count() Catalyst prunes

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan-dump CLI: write `explain("formatted")` output for registered
@@ -22,28 +21,12 @@ object Explain {
       sys.exit(2)
     }
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length == 3) Some(args(2).split(",").toSet) else None
-    val queries = only.map(f => SparkEntry.queries.filter(kv => f(kv._1)))
-      .getOrElse(SparkEntry.queries)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     new java.io.File(outDir).mkdirs()
     val mode = ExplainMode.fromString("formatted")
-    queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val plan = fn(spark, sfDir).queryExecution.explainString(mode)
-        Files.writeString(Paths.get(s"$outDir/$name.txt"), plan)
-      } catch { case e: Throwable =>
-        System.err.println(s"[explain] $name failed: ${e.getMessage}")
-      } finally graft.operators.Materialize.releaseAll(spark)
+    SparkEntry.forEachQuery(spark, sfDir, SparkEntry.selected(args.lift(2)), "explain") {
+      (name, df) =>
+        Files.writeString(Paths.get(s"$outDir/$name.txt"), df.queryExecution.explainString(mode))
     }
     spark.stop()
   }

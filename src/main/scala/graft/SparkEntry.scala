@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{Curation, Dedup, Events, Geo, Multimodal, Relational, Similarity, TextAnalysis, WordScore}
+import graft.operators.{Curation, Dedup, Events, Geo, Materialize, Multimodal, Relational, Similarity, TextAnalysis, WordScore}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -20,6 +20,45 @@ object SparkEntry {
     WordScore.flagship(Tables.documents(spark, "/root/testdata/sf0.001"))
 
   type Query = (SparkSession, String) => DataFrame
+
+  /** The local session the driver mains ([[Bench]], [[Verify]],
+    * [[Explain]]) run in: `local[SPARK_GRAFT_CPUS]` (default 4), one
+    * shuffle partition per core, AQE on, UTC, no UI, WARN logging.
+    */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** [[queries]] sorted by name, restricted to a comma-separated name
+    * list when one is given (the mains' optional subset argument).
+    */
+  def selected(only: Option[String]): Seq[(String, Query)] = {
+    val names = only.map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+    queries.toSeq.sortBy(_._1).filter { case (n, _) => names.forall(_(n)) }
+  }
+
+  /** Builds each query and hands it to `use`; a failure is logged under
+    * `tag` and the run moves on. Each query's [[Materialize]] pins are
+    * released before the next starts, so a full run never holds more
+    * than one query's persisted blocks.
+    */
+  def forEachQuery(spark: SparkSession, sfDir: String, qs: Seq[(String, Query)],
+                   tag: String)(use: (String, DataFrame) => Unit): Unit =
+    qs.foreach { case (name, fn) =>
+      try use(name, fn(spark, sfDir))
+      catch { case e: Throwable =>
+        System.err.println(s"[$tag] $name failed: ${e.getMessage}")
+      } finally Materialize.releaseAll(spark)
+    }
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, Query] = {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,31 +13,13 @@ object Verify {
     // optional dev-loop filter: dump (and list oracle SQL for) only the
     // named queries, so one operator can be parity-checked in seconds —
     // the driver always passes 2 args and gets the full suite
-    val only: Option[Set[String]] = if (args.length == 3) Some(args(2).split(",").toSet) else None
-    val queries = only.map(f => SparkEntry.queries.filter(kv => f(kv._1)))
-      .getOrElse(SparkEntry.queries)
-    val oracles = only.map(f => SparkEntry.oracleSql.filter(kv => f(kv._1)))
-      .getOrElse(SparkEntry.oracleSql)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = SparkEntry.selected(args.lift(2))
+    val names = queries.map(_._1).toSet
+    val oracles = SparkEntry.oracleSql.filter(kv => names(kv._1))
+    val spark = SparkEntry.localSession()
     new java.io.File(outDir).mkdirs()
-    queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // result fully on disk — drop any Materialize pins the query made
-      // (t_tfidf's tf table, connected-component labels) so 81 queries
-      // don't accumulate 81 queries' worth of persisted blocks
-      finally graft.operators.Materialize.releaseAll(spark)
+    SparkEntry.forEachQuery(spark, sfDir, queries, "verify") { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -79,15 +79,9 @@ object Text {
     * The reference's lookup table (`ComputeWordScore.java:86-93`) is
     * exactly `stars - 3`; the double→int truncation at `:113`
     * (Number.intValue) is `cast("int")` (both truncate toward zero).
-    */
-  def starsModifier(stars: Column): Column = stars.cast("int") - lit(3)
-
-  /** [[starsModifier]] with the reference's fail-fast domain semantics:
-    * stars outside {1..5} kill the job (the reference's
+    * Stars outside {1..5} kill the job, as in the reference (its
     * `SCORE_MODIFIERS.get` returns null there and the unboxing NPE
-    * fails the task, `ComputeWordScore.java:113`). Total-function
-    * scoring stays available via [[starsModifier]] for pipelines that
-    * prefer to pre-filter.
+    * fails the task, `ComputeWordScore.java:113`).
     */
   def starsModifierStrict(stars: Column): Column = {
     val t = stars.cast("int")

@@ -2157,13 +2157,13 @@ object TextAnalysis {
   private def bpeLearn(s: SparkSession, d: String)
       : (DataFrame, Seq[(Int, String, String, Long)]) = {
     // batch = 16: the batched loop's accepted prefix is count-invariant
-    // by construction (see bpeLearnBatched), and graft.BpeDiag verifies
-    // rule- AND vocab-identity against the strict B=1 loop on every
-    // shipped SF (full corpus + both stability halves) — supersteps
-    // drop 8 → 2-3, i.e. ~2.5× fewer driver round-trips and pin jobs
-    // per training. The oracle stays the strict-sequential unrolled
-    // CTE chain, so any data regime where batching diverges is caught
-    // by the hash gate, not silently shipped.
+    // by construction (see bpeLearnBatched), and TextAnalysisSpec's
+    // "batched bpe (B=16)" test pins rule-identity against the strict
+    // B=1 loop — supersteps drop 8 → 2-3, i.e. ~2.5× fewer driver
+    // round-trips and pin jobs per training. The t_bpe_train and
+    // t_bpe_stability oracles stay the strict-sequential unrolled CTE
+    // chain, so any data regime where batching diverges is caught by
+    // the hash gate, not silently shipped.
     val (words, rules, _) = bpeLearnBatched(s, d, batch = 16)
     (words, rules)
   }
@@ -2194,10 +2194,10 @@ object TextAnalysis {
     * is bit-identical to strict BPE, which is what [[tBpeTrainSql]]
     * oracles; [[tBpeTrain]] SHIPS B=16 — `TextAnalysisSpec` pins that
     * the fixture learns IDENTICAL rules at B=16 in fewer supersteps,
-    * and `graft.BpeDiag` re-proves rule- and vocab-identity on every
-    * shipped SF (full corpus + both t_bpe_stability halves), so the
-    * strict oracle hash gate still guards the batched path end to
-    * end (the measured superstep counts live in docs/SCALE.md).
+    * and the strict-sequential oracles of `t_bpe_train` and
+    * `t_bpe_stability` (full corpus + both md5-bucket halves) hash-gate
+    * the batched path end to end (the measured superstep counts live
+    * in docs/SCALE.md).
     *
     * Returns (vocab after the merges, rules in acceptance order,
     * supersteps executed).
@@ -2902,10 +2902,10 @@ object TextAnalysis {
     * table reflects corpus structure, not sampling noise — the
     * go/no-go before freezing a production tokenizer from a sample.
     *
-    * Determinism: both trainings are the batched loop verified
-    * rule-identical to strict B=1 on every shipped SF half
-    * (graft.BpeDiag; the oracle stays strict-sequential, so divergence
-    * cannot ship silently); the comparison is set arithmetic on
+    * Determinism: both trainings are the batched loop, pinned
+    * rule-identical to strict B=1 by TextAnalysisSpec's "batched bpe
+    * (B=16)" test; the oracle stays strict-sequential, so divergence
+    * cannot ship silently. The comparison is set arithmetic on
     * exact string pairs; jaccard is an unrounded int/int quotient
     * (FIXTURES §C safe case). Scale: two vocab-bounded merge loops
     * (each the tBpeTrain plan over half the corpus) + driver-side

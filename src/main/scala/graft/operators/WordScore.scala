@@ -31,22 +31,27 @@ import graft.functions.Text
   */
 object WordScore {
 
-  /** (stars, text) → (word, score), sorted score desc, word asc (the
-    * deterministic tie-break the reference explicitly allows, `:56`).
-    * Fail-fast on stars outside {1..5}, matching the reference's NPE
-    * task failure (`ComputeWordScore.java:113`) EXACTLY: the reference
-    * unboxes the modifier at `context.write`, i.e. once per emitted
-    * token — a bad-stars review whose text tokenizes to zero words
-    * never reaches the write and succeeds. The strict modifier is
-    * therefore evaluated in the projection ABOVE the Generate (per
-    * word), not below it (per review); Catalyst does not push project
-    * expressions under a Generate, so token-less reviews never
-    * evaluate it (pinned by WordScoreSpec).
+  /** (stars, text) → one (modifier, word) row per token. Fail-fast on
+    * stars outside {1..5}, matching the reference's NPE task failure
+    * (`ComputeWordScore.java:113`) EXACTLY: the reference unboxes the
+    * modifier at `context.write`, i.e. once per emitted token — a
+    * bad-stars review whose text tokenizes to zero words never reaches
+    * the write and succeeds. The strict modifier is therefore evaluated
+    * in the projection ABOVE the Generate (per word), not below it (per
+    * review); Catalyst does not push project expressions under a
+    * Generate, so token-less reviews never evaluate it (pinned by
+    * WordScoreSpec for both [[score]] and [[wordScoreSalted]]).
     */
-  def score(reviews: DataFrame, stars: Column, text: Column): DataFrame =
+  private def wordModifiers(reviews: DataFrame, stars: Column, text: Column): DataFrame =
     reviews
       .select(stars.as("stars_in"), Text.explodedWord(text).as("word"))
       .select(Text.starsModifierStrict(col("stars_in")).as("modifier"), col("word"))
+
+  /** (stars, text) → (word, score), sorted score desc, word asc (the
+    * deterministic tie-break the reference explicitly allows, `:56`).
+    */
+  def score(reviews: DataFrame, stars: Column, text: Column): DataFrame =
+    wordModifiers(reviews, stars, text)
       .groupBy("word")
       .agg(sum("modifier").as("score"))
       .orderBy(col("score").desc, col("word"))
@@ -77,9 +82,7 @@ object WordScore {
     */
   def wordScoreSalted(reviews: DataFrame, stars: Column, text: Column,
                       saltBuckets: Int = 16): DataFrame =
-    reviews
-      .select(Text.starsModifier(stars).as("modifier"),
-              Text.explodedWord(text).as("word"))
+    wordModifiers(reviews, stars, text)
       .withColumn("salt", pmod(spark_partition_id(), lit(saltBuckets)))
       .groupBy("word", "salt")
       .agg(sum("modifier").as("partial"))

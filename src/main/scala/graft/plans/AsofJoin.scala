@@ -257,18 +257,9 @@ private[graft] abstract class LongCol {
 }
 
 private[graft] object LongCol {
-  /** A/B measurement seam (docs/PLANS.md round 12): setting the system
-    * property `graft.bench.boxedTimeEval=true` forces the boxed-eval
-    * fallback even for bound LONG columns, so the primitive path's
-    * effect is measurable in ONE JVM with everything else identical.
-    * Never set in production paths.
-    */
-  private def forceBoxed: Boolean =
-    "true".equals(System.getProperty("graft.bench.boxedTimeEval"))
-
   def bind(e: Expression, schema: Seq[Attribute]): LongCol =
     BindReferences.bindReference(e, schema) match {
-      case b: BoundReference if b.dataType == LongType && !forceBoxed =>
+      case b: BoundReference if b.dataType == LongType =>
         new LongCol {
           private[this] val ord = b.ordinal
           def isNull(r: InternalRow): Boolean = r.isNullAt(ord)

@@ -33,19 +33,18 @@ object ReviewSource {
   * (TextOutputFormat after the KV inversion, `ComputeWordScore.java:
   * 192,206-216`), one file (1 reducer, `:209-213`).
   *
-  * `singleFile = true` reproduces the reference's one-file contract —
-  * and, like its single reducer, serializes the FINAL sort stage:
+  * The single file reproduces the reference's one-file contract — and,
+  * like its single reducer, serializes the FINAL sort stage:
   * `coalesce(1)` is a narrow dependency, so one task merges all range
   * partitions. All upstream work (scan, tokenize, aggregate, shuffle)
   * stays distributed. At 100 TB drop the single-file requirement
-  * (`singleFile = false`): the range exchange already orders part files
+  * (no `coalesce(1)`): the range exchange already orders part files
   * within and across each other, so the sorted output is the
   * lexicographic concatenation of parts.
   */
 object TsvSink {
-  def write(scored: DataFrame, path: String, singleFile: Boolean = true): Unit = {
-    val out = scored.select(
-      concat_ws("\t", col("score").cast("string"), col("word")).as("value"))
-    (if (singleFile) out.coalesce(1) else out).write.mode("overwrite").text(path)
-  }
+  def write(scored: DataFrame, path: String): Unit =
+    scored.select(
+        concat_ws("\t", col("score").cast("string"), col("word")).as("value"))
+      .coalesce(1).write.mode("overwrite").text(path)
 }

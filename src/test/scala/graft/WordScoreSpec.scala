@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -95,16 +96,23 @@ class WordScoreSpec extends SparkSpec {
     assert(WordScoreMain.parseArgs(Array("in", "out", "-D")) === None)
   }
 
+  // both scoring forms must keep the reference's stars semantics
+  private val scorers = Seq[(String, (DataFrame, Column, Column) => DataFrame)](
+    "score" -> (WordScore.score(_, _, _)),
+    "wordScoreSalted" -> (WordScore.wordScoreSalted(_, _, _)))
+
   test("out-of-domain stars fail the job like the reference's NPE") {
     val dir = Files.createTempDirectory("badstars").toFile
     Files.writeString(new java.io.File(dir, "r.json").toPath,
       "{\"stars\": 7.0, \"text\": \"off the scale\"}\n")
     val bad = ReviewSource.reviews(spark, dir.getAbsolutePath)
-    val e = intercept[Exception] {
-      WordScore.score(bad, col("stars"), col("text")).collect()
+    for ((name, scoreFn) <- scorers) {
+      val e = intercept[Exception] {
+        scoreFn(bad, col("stars"), col("text")).collect()
+      }
+      assert(e.getMessage.contains("out of domain") ||
+        Option(e.getCause).exists(_.getMessage.contains("out of domain")), name)
     }
-    assert(e.getMessage.contains("out of domain") ||
-      Option(e.getCause).exists(_.getMessage.contains("out of domain")))
   }
 
   test("bad-stars review with zero tokens succeeds (reference NPEs only at write)") {
@@ -112,9 +120,11 @@ class WordScoreSpec extends SparkSpec {
     // token; a whitespace-only text emits nothing, so stars=7 passes
     import spark.implicits._
     val bad = Seq((7.0, " \t\n "), (5.0, "fine words")).toDF("stars", "text")
-    val out = WordScore.score(bad, col("stars"), col("text"))
-      .as[(String, Long)].collect().toMap
-    assert(out === Map("fine" -> 2L, "words" -> 2L))
+    for ((name, scoreFn) <- scorers) {
+      val out = scoreFn(bad, col("stars"), col("text"))
+        .as[(String, Long)].collect().toMap
+      assert(out === Map("fine" -> 2L, "words" -> 2L), name)
+    }
   }
 
   test("malformed JSON fails fast like the reference") {

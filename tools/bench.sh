@@ -7,16 +7,7 @@ SF=${1:-/root/testdata/sf0.1}
 OUT=${2:-bench_out.json}
 cd /root/repo
 sbt -batch compile -warn >/dev/null
-CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. tools/env.sh
 SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-SPARK_GRAFT_BENCH_OUT="$OUT" java $ADD_OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx48g \
+SPARK_GRAFT_BENCH_OUT="$OUT" java $ADD_OPENS -Xmx48g \
   -cp "$CP" graft.Bench

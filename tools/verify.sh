@@ -7,17 +7,8 @@ SF=${1:-/root/testdata/sf0.001}
 OUT=${2:-/tmp/graft_verify}
 cd /root/repo
 sbt -batch compile -warn >/dev/null
-CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. tools/env.sh
 rm -rf "$OUT"
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} java $ADD_OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx8g \
+SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} java $ADD_OPENS -Xmx8g \
   -cp "$CP" graft.Verify "$SF" "$OUT" ${GRAFT_ONLY:+"$GRAFT_ONLY"}
 python3 tools/parity.py "$SF" "$OUT"
