@@ -23,7 +23,10 @@ object SparkEntry {
 
   /** The local session the driver mains ([[Bench]], [[Verify]],
     * [[Explain]]) run in: `local[SPARK_GRAFT_CPUS]` (default 4), one
-    * shuffle partition per core, AQE on, UTC, no UI, WARN logging.
+    * shuffle partition per core, AQE on, UTC, no UI, WARN logging. The
+    * engine's whole registry (GraftSql.ensureRegistered) is installed
+    * up front, so every query plans with the same rules whatever ran
+    * before it.
     */
   def localSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -35,6 +38,7 @@ object SparkEntry {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
     spark
   }
 

@@ -47,10 +47,6 @@ object Vectors {
   /** ‖a‖₂ (sequential double sum of squares, codegen'd). */
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Portable reference form of [[norm]]. */
-  def normHof(a: Column): Column =
-    sqrt(aggregate(transform(a, x => dbl(x) * dbl(x)), lit(0.0), (acc, x) => acc + x))
-
   /** Cosine similarity with precomputed norms (callers precompute norms
     * once per vector instead of per pair).
     */

@@ -428,7 +428,7 @@ object Events {
     * as the DataFrame paths every round.
     */
   def eAsofSql(s: SparkSession, d: String): DataFrame = {
-    graft.plans.AsofJoin.ensureRegistered(s)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(s)
     load(s, d).createOrReplaceTempView("graft_sql_events")
     Tables.orders(s, d).createOrReplaceTempView("graft_sql_orders")
     s.sql(eAsofSqlText)
@@ -3459,7 +3459,7 @@ object Events {
     * invisible in results.
     */
   def eBandAuto(s: SparkSession, d: String): DataFrame = {
-    Geo.ensureRegistered(s)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(s)
     val ev = load(s, d)
     val pur = ev.where(col("event_type") === "purchase")
       .select(expr("ts_ns div 1000").as("e_us"))

@@ -351,17 +351,6 @@ object Geo {
        |  FROM customer GROUP BY 1, 2
        |) GROUP BY n_points ORDER BY n_points""".stripMargin
 
-  /** Idempotent per-session registration of the naive-spatial-join
-    * optimizer rule (mirrors AsofJoin.ensureRegistered — query
-    * functions cannot assume `spark.sql.extensions` was set).
-    */
-  def ensureRegistered(s: SparkSession): Unit = {
-    val em = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!em.extraOptimizations.contains(graft.plans.GridJoinRewrite))
-      em.extraOptimizations =
-        em.extraOptimizations :+ graft.plans.GridJoinRewrite
-  }
-
   // ----------------------------------------------- optimizer on-ramp
   /** [[gGridJoin]] written the way a USER would write it — a naive
     * crossJoin + distance filter — and left to the
@@ -372,7 +361,7 @@ object Geo {
     * in the plan.
     */
   def gGridAuto(s: SparkSession, d: String): DataFrame = {
-    ensureRegistered(s)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(s)
     custPoints(s, d).crossJoin(suppPoints(s, d))
       .where(expr(s"$DIST2 <= $R2"))
       .groupBy("s_suppkey")
@@ -391,7 +380,7 @@ object Geo {
     * brute-force DuckDB oracle; GeoSpec pins that the plan rewrote.
     */
   def gGridAutoVar(s: SparkSession, d: String): DataFrame = {
-    ensureRegistered(s)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(s)
     val supp = suppPoints(s, d)
       .withColumn("r2", expr(VarR2))
     custPoints(s, d).crossJoin(supp)
@@ -440,7 +429,7 @@ object Geo {
     * scoped hint; GeoSpec plan-pins both rewrite arms on it directly.
     */
   private[graft] def gGridHintFrame(s: SparkSession, d: String): DataFrame = {
-    ensureRegistered(s)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(s)
     val supp = suppPoints(s, d).withColumn("r2", expr(VarR2))
     custPoints(s, d).crossJoin(supp)
       .where(expr(s"$DIST2 <= r2"))

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.LongType
 /** Native as-of join — the whole-operator extension path the preference
   * order reserves for semantics Spark's relational algebra can't express
   * without a blow-up: a logical node, a planner strategy, and a physical
-  * sort-merge operator, registered per-session (`AsofJoin.ensureRegistered`)
+  * sort-merge operator, registered per-session (`GraftSql.ensureRegistered`)
   * or cluster-wide via `spark.sql.extensions` (GraftExtensions).
   *
   * Semantics (left outer, "backward" direction): for every left row, the
@@ -62,7 +62,7 @@ case class AsofJoinPlan(
     tiebreak: Seq[Expression],
     toleranceUs: Option[Long],
     forward: Boolean,
-    broadcastRight: Option[Boolean]) extends BinaryNode {
+    broadcastRight: Option[Boolean]) extends LeftPreservingJoin {
 
   override def output: Seq[Attribute] =
     left.output ++ right.output.map(_.withNullability(true))
@@ -71,6 +71,13 @@ case class AsofJoinPlan(
       newLeft: LogicalPlan, newRight: LogicalPlan): AsofJoinPlan =
     copy(left = newLeft, right = newRight)
 }
+
+/** A join node that emits exactly one row per left row, computed from
+  * that row and the right side alone — [[AsofJoinPlan]] and
+  * [[BandCountPlan]]. The soundness condition of
+  * [[PushLeftFilterThroughJoin]].
+  */
+trait LeftPreservingJoin extends BinaryNode
 
 /** Physical backward as-of join: co-partitioned on the equality keys,
   * per-partition two-pointer merge over (keys, time)-sorted inputs
@@ -445,8 +452,9 @@ case class AsofBroadcastJoinExec(
 }
 
 /** Plans [[AsofJoinPlan]] as [[AsofJoinExec]] (shuffled sort-merge) or
-  * [[AsofBroadcastJoinExec]] (small right side); everything below the
-  * node goes back through the normal planner (`planLater`).
+  * [[AsofBroadcastJoinExec]] (small right side), and [[BandCountPlan]]
+  * as [[BandCountExec]] or [[BandCountBroadcastExec]]; everything below
+  * the node goes back through the normal planner (`planLater`).
   *
   * Broadcast selection mirrors Spark's own JoinSelection: with no
   * caller override, the right side broadcasts when its planning-time
@@ -458,36 +466,39 @@ case class AsofBroadcastJoinExec(
   * override — e.g. force the shuffled exec when the dim is known to
   * grow, or force broadcast below a filter the estimator can't see.
   */
-object AsofJoinStrategy extends SparkStrategy {
-  private[graft] def autoBroadcast(r: LogicalPlan): Boolean = {
-    val thr = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
-    thr > 0 && r.stats.sizeInBytes <= thr
-  }
+object TimeJoinStrategy extends SparkStrategy {
+  private def broadcast(forced: Option[Boolean], r: LogicalPlan): Boolean =
+    forced.getOrElse {
+      val thr = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
+      thr > 0 && r.stats.sizeInBytes <= thr
+    }
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsofJoinPlan(l, r, lk, rk, lt, rt, tb, tol, fwd, bcast) =>
-      if (bcast.getOrElse(autoBroadcast(r)))
-        AsofBroadcastJoinExec(lk, rk, lt, rt, tb, tol, fwd,
-          planLater(l), planLater(r)) :: Nil
-      else
-        AsofJoinExec(lk, rk, lt, rt, tb, tol, fwd,
-          planLater(l), planLater(r)) :: Nil
+      val exec = if (broadcast(bcast, r)) AsofBroadcastJoinExec else AsofJoinExec
+      exec(lk, rk, lt, rt, tb, tol, fwd, planLater(l), planLater(r)) :: Nil
+    case BandCountPlan(l, r, lk, rk, lt, rt, win, out, bcast) =>
+      val exec = if (broadcast(bcast, r)) BandCountBroadcastExec else BandCountExec
+      exec(lk, rk, lt, rt, win, out, planLater(l), planLater(r)) :: Nil
     case _ => Nil
   }
 }
 
-/** Pushes left-side filters through [[AsofJoinPlan]] — without this,
-  * `joinAsOf(...).filter(<left predicate>)` leaves the filter above the
-  * custom node, the scan never sees it, and the 100 TB fact side is
-  * read whole (the optimizer's own PushDownPredicates knows nothing
-  * about foreign nodes). Sound because each left row's match depends
-  * only on that row and the right side: filtering left rows before the
-  * join emits exactly the surviving rows' outputs (left-outer keeps
-  * per-row null matches either way). RIGHT-side predicates must NOT
-  * push: filtering the right side before match selection changes which
-  * row is "latest" (e.g. `o_orderkey % 2 = 0` must drop matched rows,
-  * not re-match against the filtered history) — they stay above.
+/** Pushes left-side filters through a [[LeftPreservingJoin]] — without
+  * this, `joinAsOf(...).filter(<left predicate>)` or
+  * `bandCount(...).filter(...)` leaves the filter above the custom
+  * node, the scan never sees it, and the 100 TB fact side is read whole
+  * (the optimizer's own PushDownPredicates knows nothing about foreign
+  * nodes). Sound because each left row's output depends only on that
+  * row and the right side: filtering left rows before the join emits
+  * exactly the surviving rows' outputs (left-outer keeps per-row null
+  * matches either way). RIGHT-side predicates must NOT push: filtering
+  * the right side before match selection changes which row is "latest"
+  * (e.g. `o_orderkey % 2 = 0` must drop matched rows, not re-match
+  * against the filtered history) — they stay above, as do predicates
+  * on a band count's GENERATED count column.
   *
-  * Registration depth differs by path: via `spark.sql.extensions`
+  * Registration depth differs by path, though both install the one
+  * registry in `GraftSql`: via `spark.sql.extensions`
   * (GraftExtensions.injectOptimizerRule) the rule joins the operator-
   * optimization fixed point, so the pushed filter keeps sinking with
   * PushDownPredicates all the way into the scan's PushedFilters
@@ -498,41 +509,81 @@ object AsofJoinStrategy extends SparkStrategy {
   * the win — but cannot re-enter the earlier pushdown batch to reach
   * the scan.
   */
-object PushFilterThroughAsofJoin
+object PushLeftFilterThroughJoin
     extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]
     with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
   import org.apache.spark.sql.catalyst.expressions.And
   import org.apache.spark.sql.catalyst.plans.logical.Filter
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond, a: AsofJoinPlan) =>
+    case f @ Filter(cond, j: LeftPreservingJoin) =>
       val (push, keep) = splitConjunctivePredicates(cond).partition(p =>
-        p.deterministic && p.references.subsetOf(a.left.outputSet))
+        p.deterministic && p.references.subsetOf(j.left.outputSet))
       if (push.isEmpty) f
       else {
-        val pushed = a.copy(left = Filter(push.reduce(And), a.left))
+        val pushed = j.withNewChildren(Seq(Filter(push.reduce(And), j.left), j.right))
         keep.reduceOption(And).map(Filter(_, pushed)).getOrElse(pushed)
       }
   }
 }
 
+/** The argument handling [[AsofJoin]] and [[BandJoin]] share; `fn`
+  * names the public function in every error message.
+  */
+private[plans] object TimeJoinArgs {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.functions.{lit, pmod}
+  import org.apache.spark.sql.graft.GraftSql
+
+  def attr(fn: String, out: Seq[Attribute], n: String, side: String): Attribute =
+    out.find(_.name == n).getOrElse(throw new IllegalArgumentException(
+      s"$fn: no column '$n' on the $side side (has ${out.map(_.name).mkString(", ")})"))
+
+  /** Analyzed plans of both inputs plus their resolved time and key
+    * attributes, after the checks both node types need: LONG times,
+    * equal-length key lists of matching types, and no shared
+    * attribute ids. Empty key lists = a GLOBAL join (market-data
+    * shape): every left row meets the whole right series. Broadcast
+    * keeps the fact side fully parallel; the shuffled form degrades to
+    * a single-partition merge (AllTuples) — see
+    * AsofJoinExec.requiredChildDistribution.
+    */
+  def resolve(fn: String, left: DataFrame, right: DataFrame,
+      leftTime: String, rightTime: String,
+      leftBy: Seq[String], rightBy: Seq[String])
+      : (LogicalPlan, LogicalPlan, Attribute, Attribute, Seq[Attribute], Seq[Attribute]) = {
+    val lp = left.queryExecution.analyzed
+    val rp = right.queryExecution.analyzed
+    val lt = attr(fn, lp.output, leftTime, "left")
+    val rt = attr(fn, rp.output, rightTime, "right")
+    require(lt.dataType == LongType && rt.dataType == LongType,
+      s"$fn: time columns must be LONG (epoch µs); got ${lt.dataType} / ${rt.dataType}")
+    require(leftBy.length == rightBy.length,
+      s"$fn: key lists differ in length (${leftBy.length} vs ${rightBy.length})")
+    val lk = leftBy.map(attr(fn, lp.output, _, "left"))
+    val rk = rightBy.map(attr(fn, rp.output, _, "right"))
+    lk.zip(rk).foreach { case (a, b) =>
+      require(a.dataType == b.dataType,
+        s"$fn: key type mismatch ${a.name}:${a.dataType} vs ${b.name}:${b.dataType}")
+    }
+    require(lp.outputSet.intersect(rp.outputSet).isEmpty,
+      s"$fn: inputs share attribute ids (self-join) — alias the right side's columns first")
+    (lp, rp, lt, rt, lk, rk)
+  }
+
+  /** Time bucket of `t` for the salted forms: exact integer floorDiv —
+    * t - pmod(t, W) is an exact multiple of W (pmod >= 0 for positive
+    * W), so the integral divide is exact for negative times too; a
+    * double-division floor would round above 2^53.
+    */
+  def salt(t: Column, bucketUs: Long): Column =
+    GraftSql.column(org.apache.spark.sql.catalyst.expressions.IntegralDivide(
+      GraftSql.expression(t - pmod(t, lit(bucketUs))),
+      GraftSql.expression(lit(bucketUs))))
+}
+
 /** DataFrame-level API over [[AsofJoinPlan]]. */
 object AsofJoin {
-
-  /** Idempotent per-session registration via the public
-    * `ExperimentalMethods` hook — query functions receive the session
-    * from the driver and cannot assume `spark.sql.extensions` was set
-    * (mirrors GraftSql.ensureRegistered).
-    */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val em = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!em.extraStrategies.contains(AsofJoinStrategy))
-      em.extraStrategies = em.extraStrategies :+ AsofJoinStrategy
-    if (!em.extraOptimizations.contains(PushFilterThroughAsofJoin))
-      em.extraOptimizations = em.extraOptimizations :+ PushFilterThroughAsofJoin
-    if (!em.extraOptimizations.contains(SqlAsofRewrite))
-      em.extraOptimizations = em.extraOptimizations :+ SqlAsofRewrite
-  }
 
   /** As-of join (left outer). Backward (default): for each `left` row,
     * the latest `right` row with equal keys and `rightTimeUs <=
@@ -570,33 +621,11 @@ object AsofJoin {
     require(direction == "backward" || direction == "forward",
       s"joinAsOf: direction must be backward|forward, got '$direction'")
     val spark = left.sparkSession
-    ensureRegistered(spark)
-    val lp = left.queryExecution.analyzed
-    val rp = right.queryExecution.analyzed
-    def attr(out: Seq[Attribute], n: String, side: String): Attribute =
-      out.find(_.name == n).getOrElse(throw new IllegalArgumentException(
-        s"joinAsOf: no column '$n' on the $side side (has ${out.map(_.name).mkString(", ")})"))
-    val lt = attr(lp.output, leftTime, "left")
-    val rt = attr(rp.output, rightTime, "right")
-    require(lt.dataType == LongType && rt.dataType == LongType,
-      s"joinAsOf: time columns must be LONG (epoch µs); got ${lt.dataType} / ${rt.dataType}")
-    // empty key lists = GLOBAL as-of (market-data shape): every left
-    // row matches against the whole right series. Broadcast (the
-    // default for a threshold-sized dim) keeps the fact side fully
-    // parallel; the shuffled form degrades to a single-partition
-    // merge (AllTuples) — see AsofJoinExec.requiredChildDistribution.
-    require(leftBy.length == rightBy.length,
-      s"joinAsOf: key lists differ in length (${leftBy.length} vs ${rightBy.length})")
-    val lk = leftBy.map(attr(lp.output, _, "left"))
-    val rk = rightBy.map(attr(rp.output, _, "right"))
-    lk.zip(rk).foreach { case (a, b) =>
-      require(a.dataType == b.dataType,
-        s"joinAsOf: key type mismatch ${a.name}:${a.dataType} vs ${b.name}:${b.dataType}")
-    }
-    require(lp.outputSet.intersect(rp.outputSet).isEmpty,
-      "joinAsOf: inputs share attribute ids (self-join) — alias the right side's columns first")
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
+    val (lp, rp, lt, rt, lk, rk) = TimeJoinArgs.resolve("joinAsOf",
+      left, right, leftTime, rightTime, leftBy, rightBy)
     toleranceUs.foreach(t => require(t >= 0, s"joinAsOf: negative tolerance $t"))
-    val tb = tiebreak.map(attr(rp.output, _, "right"))
+    val tb = tiebreak.map(TimeJoinArgs.attr("joinAsOf", rp.output, _, "right"))
     org.apache.spark.sql.graft.GraftSql.ofRows(spark,
       AsofJoinPlan(lp, rp, lk, rk, lt, rt, tb, toleranceUs,
         forward = direction == "forward", broadcastRight = broadcast))
@@ -648,30 +677,20 @@ object AsofJoin {
       tiebreak: Seq[String] = Nil,
       toleranceUs: Option[Long] = None,
       direction: String = "backward"): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, max_by, min_by, pmod, struct}
+    import org.apache.spark.sql.functions.{col, lit, max_by, min_by, struct}
     require(bucketUs > 0, s"joinAsOfSalted: bucketUs must be positive, got $bucketUs")
     require(direction == "backward" || direction == "forward",
       s"joinAsOfSalted: direction must be backward|forward, got '$direction'")
     val fwd = direction == "forward"
-    val gs = org.apache.spark.sql.graft.GraftSql
     val Salt = "_asof_salt"
     val SaltR = "_asof_salt_r"
     val Bidx = "_asof_bidx"
     val BidxR = "_asof_bidx_r"
     require(!(left.columns ++ right.columns).exists(_.startsWith("_asof_")),
       "joinAsOfSalted: column names starting with _asof_ are reserved")
-    // exact integer floorDiv: t - pmod(t, W) is an exact multiple of W
-    // (pmod >= 0 for positive W), so the integral divide is exact for
-    // negative times too — a double-division floor would round above
-    // 2^53
-    def saltOf(t: org.apache.spark.sql.Column) =
-      gs.column(org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-        gs.expression(t - pmod(t, lit(bucketUs))),
-        gs.expression(lit(bucketUs))))
-
-    val leftS = left.withColumn(Salt, saltOf(col(leftTime)))
+    val leftS = left.withColumn(Salt, TimeJoinArgs.salt(col(leftTime), bucketUs))
     val rightOwn = right.filter(col(rightTime).isNotNull)
-      .withColumn(Salt, saltOf(col(rightTime)))
+      .withColumn(Salt, TimeJoinArgs.salt(col(rightTime), bucketUs))
     // best right row per (key, bucket): latest (time, tiebreak) for
     // backward, earliest for forward — a partial-aggregating groupBy,
     // so the hot key fans across buckets before any shuffle

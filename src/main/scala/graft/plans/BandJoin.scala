@@ -6,9 +6,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute,
   AttributeReference, Expression, GenericInternalRow,
   JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.LongType
 
@@ -42,7 +42,7 @@ case class BandCountPlan(
     rightTime: Expression,
     windowUs: Long,
     countAttr: AttributeReference,
-    broadcastRight: Option[Boolean]) extends BinaryNode {
+    broadcastRight: Option[Boolean]) extends LeftPreservingJoin {
 
   override def output: Seq[Attribute] = left.output :+ countAttr
 
@@ -274,65 +274,8 @@ case class BandCountBroadcastExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[BandCountPlan]] as [[BandCountExec]] (shuffled merge) or
-  * [[BandCountBroadcastExec]] (small right side). Broadcast selection
-  * is cost-based like Spark's JoinSelection — right-side
-  * `stats.sizeInBytes` vs `spark.sql.autoBroadcastJoinThreshold` —
-  * with the caller flag as the explicit override (see
-  * [[AsofJoinStrategy]] for the full contract).
-  */
-object BandJoinStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case BandCountPlan(l, r, lk, rk, lt, rt, win, out, bcast) =>
-      if (bcast.getOrElse(AsofJoinStrategy.autoBroadcast(r)))
-        BandCountBroadcastExec(lk, rk, lt, rt, win, out,
-          planLater(l), planLater(r)) :: Nil
-      else
-        BandCountExec(lk, rk, lt, rt, win, out,
-          planLater(l), planLater(r)) :: Nil
-    case _ => Nil
-  }
-}
-
-/** Pushes left-side filters through [[BandCountPlan]] — the band twin
-  * of [[PushFilterThroughAsofJoin]], and sound for the same reason:
-  * each left row's count depends only on that row and the right side,
-  * so pre-filtering left rows emits exactly the surviving rows'
-  * outputs. Without it, `bandCount(...).filter(<left predicate>)`
-  * scans the 100 TB fact side whole. Predicates referencing the
-  * GENERATED count column obviously cannot push (they need the
-  * operator's output) and stay above; right-side predicates would
-  * change the counts and there is no right output to reference, so
-  * only left-subset conjuncts move.
-  */
-object PushFilterThroughBandCount
-    extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]
-    with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
-  import org.apache.spark.sql.catalyst.expressions.And
-  import org.apache.spark.sql.catalyst.plans.logical.Filter
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond, b: BandCountPlan) =>
-      val (push, keep) = splitConjunctivePredicates(cond).partition(p =>
-        p.deterministic && p.references.subsetOf(b.left.outputSet))
-      if (push.isEmpty) f
-      else {
-        val pushed = b.copy(left = Filter(push.reduce(And), b.left))
-        keep.reduceOption(And).map(Filter(_, pushed)).getOrElse(pushed)
-      }
-  }
-}
-
 /** DataFrame-level API over [[BandCountPlan]]. */
 object BandJoin {
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val em = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!em.extraStrategies.contains(BandJoinStrategy))
-      em.extraStrategies = em.extraStrategies :+ BandJoinStrategy
-    if (!em.extraOptimizations.contains(PushFilterThroughBandCount))
-      em.extraOptimizations = em.extraOptimizations :+ PushFilterThroughBandCount
-  }
 
   /** Appends `countName` (LONG, never null) to `left`: the number of
     * `right` rows with equal keys and time in `(leftTime, leftTime +
@@ -354,28 +297,10 @@ object BandJoin {
       countName: String = "n_in_band",
       broadcast: Option[Boolean] = None): DataFrame = {
     val spark = left.sparkSession
-    ensureRegistered(spark)
-    val lp = left.queryExecution.analyzed
-    val rp = right.queryExecution.analyzed
-    def attr(out: Seq[Attribute], n: String, side: String): Attribute =
-      out.find(_.name == n).getOrElse(throw new IllegalArgumentException(
-        s"bandCount: no column '$n' on the $side side (has ${out.map(_.name).mkString(", ")})"))
-    val lt = attr(lp.output, leftTime, "left")
-    val rt = attr(rp.output, rightTime, "right")
-    require(lt.dataType == LongType && rt.dataType == LongType,
-      s"bandCount: time columns must be LONG (epoch µs); got ${lt.dataType} / ${rt.dataType}")
-    // empty key lists = GLOBAL band count (see joinAsOf's keyless note)
-    require(leftBy.length == rightBy.length,
-      s"bandCount: bad key lists (${leftBy.length} vs ${rightBy.length})")
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
+    val (lp, rp, lt, rt, lk, rk) = TimeJoinArgs.resolve("bandCount",
+      left, right, leftTime, rightTime, leftBy, rightBy)
     require(windowUs > 0, s"bandCount: window must be positive, got $windowUs")
-    val lk = leftBy.map(attr(lp.output, _, "left"))
-    val rk = rightBy.map(attr(rp.output, _, "right"))
-    lk.zip(rk).foreach { case (a, b) =>
-      require(a.dataType == b.dataType,
-        s"bandCount: key type mismatch ${a.name}:${a.dataType} vs ${b.name}:${b.dataType}")
-    }
-    require(lp.outputSet.intersect(rp.outputSet).isEmpty,
-      "bandCount: inputs share attribute ids (self-join) — alias the right side's columns first")
     val out = AttributeReference(countName, LongType, nullable = false)()
     org.apache.spark.sql.graft.GraftSql.ofRows(spark,
       BandCountPlan(lp, rp, lk, rk, lt, rt, windowUs, out,
@@ -407,22 +332,17 @@ object BandJoin {
       windowUs: Long,
       bucketUs: Long,
       countName: String = "n_in_band"): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, pmod}
+    import org.apache.spark.sql.functions.{col, lit}
     require(windowUs > 0, s"bandCountSalted: window must be positive, got $windowUs")
     require(bucketUs >= windowUs,
       s"bandCountSalted: bucketUs ($bucketUs) must be >= windowUs ($windowUs) " +
         "or a band could span more than two buckets")
-    val gs = org.apache.spark.sql.graft.GraftSql
     val Salt = "_band_salt"
     require(!(left.columns ++ right.columns).exists(_.startsWith("_band_")),
       "bandCountSalted: column names starting with _band_ are reserved")
-    def saltOf(t: org.apache.spark.sql.Column) =
-      gs.column(org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-        gs.expression(t - pmod(t, lit(bucketUs))),
-        gs.expression(lit(bucketUs))))
-    val leftS = left.withColumn(Salt, saltOf(col(leftTime)))
+    val leftS = left.withColumn(Salt, TimeJoinArgs.salt(col(leftTime), bucketUs))
     val rOwn = right.filter(col(rightTime).isNotNull)
-      .withColumn(Salt, saltOf(col(rightTime)))
+      .withColumn(Salt, TimeJoinArgs.salt(col(rightTime), bucketUs))
     val rightSalted = rOwn.unionByName(
       rOwn.withColumn(Salt, col(Salt) - lit(1L)))
     bandCount(leftS, rightSalted, leftTime, rightTime,

@@ -46,9 +46,11 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
   * commutative bit-for-bit, and (x−y)² ≡ (y−x)² exactly (negation is
   * exact), so the swap cannot move a bit.
   *
-  * Installed by [[org.apache.spark.sql.graft.GraftExtensions]] via
+  * Listed in the one registry, `GraftSql.rules`: installed by
+  * [[org.apache.spark.sql.graft.GraftExtensions]] via
   * `injectOptimizerRule` (config-driven, cluster-wide) — or per
-  * session through `spark.experimental.extraOptimizations`.
+  * session by [[org.apache.spark.sql.graft.GraftSql.ensureRegistered]]
+  * through `spark.experimental.extraOptimizations`.
   */
 object NativeVectorRewrite extends Rule[LogicalPlan] {
 

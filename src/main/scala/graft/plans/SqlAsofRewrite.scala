@@ -63,9 +63,10 @@ import org.apache.spark.sql.types.LongType
   * keeps the generic plan (exactness first; the DataFrame API's
   * [[AsofJoin.joinAsOf]] covers tolerance and direction explicitly).
   *
-  * Registered with the session like the other graft rules
-  * ([[AsofJoin.ensureRegistered]] via `experimental.extraOptimizations`,
-  * or cluster-wide via GraftExtensions.injectOptimizerRule).
+  * Registered with the session like the other graft rules, from the
+  * one registry `GraftSql.rules` (GraftSql.ensureRegistered via
+  * `experimental.extraOptimizations`, or cluster-wide via
+  * GraftExtensions.injectOptimizerRule).
   */
 object SqlAsofRewrite extends Rule[LogicalPlan] with PredicateHelper {
 

@@ -2,7 +2,10 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.SparkStrategy
 
 import graft.plans.{CharStats, DoubleSqDist, FloatDotProduct, FloatDoubleDot,
   FloatDoubleSqDist, FloatSqDist, PairExplode, ShingleHashSet, ShingleMinHash,
@@ -10,8 +13,9 @@ import graft.plans.{CharStats, DoubleSqDist, FloatDotProduct, FloatDoubleDot,
   SparseDotProduct}
 
 /** Bridge into Spark's private[sql] surface (hence the package): builds
-  * Columns from custom Catalyst Expressions and registers them as SQL
-  * functions on an arbitrary session.
+  * Columns from custom Catalyst Expressions, and holds the one registry
+  * of everything the engine adds to a session — SQL functions,
+  * optimizer rules and planner strategies.
   *
   * Registration is per-session and idempotent, so query functions can
   * call [[ensureRegistered]] defensively — they receive the session from
@@ -159,10 +163,10 @@ object GraftSql {
   def drainListenerBus(s: SparkSession): Unit =
     s.sparkContext.listenerBus.waitUntilEmpty(30000L)
 
-  // ------------------------------------------------- SQL function surface
-  // One shared description table drives BOTH registration paths
-  // (programmatic ensureRegistered and config-driven GraftExtensions),
-  // so the SQL surface can't drift between them.
+  // ------------------------------------------------------ the registry
+  // The function table, `rules` and `strategies` drive BOTH
+  // registration paths (programmatic ensureRegistered and config-driven
+  // GraftExtensions), so what a session carries can't drift between them.
 
   private def arity(fn: String, n: Int, es: Seq[Expression]): Unit =
     if (es.length != n) throw new IllegalArgumentException(
@@ -250,14 +254,36 @@ object GraftSql {
         builder)
     }
 
-  /** Expose every custom expression to SQL on an existing session:
-    * `SELECT simhash64(tokens), float_dot(a, b) …`. Idempotent.
+  /** Every custom optimizer rule: the HOF→native inner-product upgrade,
+    * the naive spatial/band join → grid equi-join rewrite, left-filter
+    * pushdown through the as-of and band-count nodes, and the SQL as-of
+    * shape → [[graft.plans.AsofJoinPlan]].
     */
-  def ensureRegistered(spark: SparkSession): Unit =
+  val rules: Seq[Rule[LogicalPlan]] = Seq(
+    graft.plans.NativeVectorRewrite,
+    graft.plans.GridJoinRewrite,
+    graft.plans.PushLeftFilterThroughJoin,
+    graft.plans.SqlAsofRewrite)
+
+  /** Every custom planner strategy. */
+  val strategies: Seq[SparkStrategy] = Seq(
+    graft.plans.TimeJoinStrategy)
+
+  /** Install the whole registry on an existing session: every custom
+    * expression as a SQL function (`SELECT simhash64(tokens),
+    * float_dot(a, b) …`), plus [[rules]] and [[strategies]] through the
+    * public `experimental` hooks. Idempotent — a rule or strategy
+    * already present is not added twice.
+    */
+  def ensureRegistered(spark: SparkSession): Unit = {
     functions.foreach { case (name, _, builder) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
     }
+    val em = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    em.extraOptimizations ++= rules.filterNot(em.extraOptimizations.contains)
+    em.extraStrategies ++= strategies.filterNot(em.extraStrategies.contains)
+  }
 }
 
 /** SparkSessionExtensions entry point — the config-driven registration
@@ -267,23 +293,17 @@ object GraftSql {
   * spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions
   * }}}
   *
-  * Injects the same functions [[GraftSql.ensureRegistered]] adds
-  * programmatically (one shared description table — the two paths
-  * cannot drift), plus the [[graft.plans.NativeVectorRewrite]]
-  * optimizer rule, which transparently upgrades user-written
-  * `aggregate(zip_with(...))` inner products to the fused native
-  * expressions where bit-exactness is provable. Query functions still
+  * Injects the same registry [[GraftSql.ensureRegistered]] installs
+  * programmatically — functions, optimizer rules and planner
+  * strategies read from the same lists, so the two paths cannot drift.
+  * Injected rules join the operator-optimization fixed point instead of
+  * the last batch `experimental` rules run in. Query functions still
   * call ensureRegistered defensively, so either path (or both) works.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftSql.functionDescriptions.foreach(e.injectFunction)
-    e.injectOptimizerRule(_ => graft.plans.NativeVectorRewrite)
-    e.injectOptimizerRule(_ => graft.plans.GridJoinRewrite)
-    e.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsofJoin)
-    e.injectOptimizerRule(_ => graft.plans.SqlAsofRewrite)
-    e.injectOptimizerRule(_ => graft.plans.PushFilterThroughBandCount)
-    e.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.BandJoinStrategy)
+    GraftSql.rules.foreach(r => e.injectOptimizerRule(_ => r))
+    GraftSql.strategies.foreach(st => e.injectPlannerStrategy(_ => st))
   }
 }

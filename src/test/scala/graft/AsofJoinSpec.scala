@@ -610,7 +610,7 @@ class AsofJoinSpec extends SparkSpec {
   }
 
   test("SQL front door: forward min_by rewrites; non-matching shapes stay generic") {
-    AsofJoin.ensureRegistered(spark)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
     (0 until 200).map(i => ((i % 7).toLong, i * 10L, i.toLong))
       .toDF("k", "t", "lid").createOrReplaceTempView("sqlasof_l")
     (0 until 300).map(i => ((i % 7).toLong, i * 7L, i.toLong))
@@ -669,7 +669,7 @@ class AsofJoinSpec extends SparkSpec {
     // inequality, and two max_bys sharing one ordering struct. The
     // rewrite and the rule-stripped identical text must agree as
     // multisets on every seed.
-    AsofJoin.ensureRegistered(spark)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
     val em = spark
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
     def plan(sql: String) =

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.Events
 import graft.plans.{BandCountExec, BandJoin}
 
-/** The native banded range-count join (BandCountPlan + BandJoinStrategy
+/** The native banded range-count join (BandCountPlan + TimeJoinStrategy
   * + BandCountExec): semantics pinned against the composed fan-out form
   * on the fixtures and against hand-computed window edges; plan pinned
   * to the merge shape (no Join, no Window); buffer boundedness

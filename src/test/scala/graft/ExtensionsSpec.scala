@@ -118,6 +118,21 @@ class ExtensionsSpec extends SparkSpec {
     val viaSql = spark.sql(scalarCallsSql).collect().map(_.toString).toSeq
     val viaCols = columnTwin(spark.sql(fixtureSql)).collect().map(_.toString).toSeq
     assert(viaSql === viaCols)
+
+    // the rules and strategies too: a fresh session holds exactly the
+    // registry after one call, with no duplicates after a second
+    val fresh = spark.newSession()
+    GraftSql.ensureRegistered(fresh)
+    GraftSql.ensureRegistered(fresh)
+    assert(fresh.experimental.extraOptimizations === GraftSql.rules)
+    assert(fresh.experimental.extraStrategies === GraftSql.strategies)
+    // and on that session alone the HOF inner product goes native
+    val df = fresh.range(4).select(
+      expr("transform(sequence(1, 3), i -> CAST(i + id AS FLOAT))").as("a"),
+      expr("transform(sequence(1, 3), i -> CAST(i * 2 - id AS FLOAT))").as("b"))
+    val p = df.select(graft.functions.Vectors.dotHof(col("a"), col("b")).as("d"))
+      .queryExecution.optimizedPlan.toString
+    assert(p.contains("float_dot") && !p.contains("aggregate(zip_with"), p.take(800))
   }
 
   test("optimizer rule rewrites HOF inner products to natives, bit-exact") {
@@ -268,7 +283,7 @@ object ExtensionsProbe {
     assert(n == 2, s"expected 2, got $n")
 
     // extensions-injected asof machinery: the strategy plans the node,
-    // and PushFilterThroughAsofJoin — sitting INSIDE the operator-
+    // and PushLeftFilterThroughJoin — sitting INSIDE the operator-
     // optimization fixed point on this path — sinks a post-join left
     // filter all the way into the parquet scan's PushedFilters.
     val dir = java.nio.file.Files.createTempDirectory("graft_asof_probe").toString

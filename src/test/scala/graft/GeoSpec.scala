@@ -214,7 +214,7 @@ class GeoSpec extends SparkSpec {
 
   test("GridJoinRewrite: fires on SQL-text queries and matches the brute result") {
     import spark.implicits._
-    Geo.ensureRegistered(spark)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
     val rnd = new scala.util.Random(7)
     (1 to 400).map(i => (i.toLong, rnd.nextDouble(), rnd.nextDouble()))
       .toDF("id", "x", "y").createOrReplaceTempView("grw_pts")
@@ -242,7 +242,7 @@ class GeoSpec extends SparkSpec {
 
   test("GridJoinRewrite: does NOT fire where it must not") {
     import spark.implicits._
-    Geo.ensureRegistered(spark)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
     def fired(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains("_gridx_")
     val a = Seq((1L, 0.1, 0.2, 0.3), (2L, 0.4, 0.5, 0.6))
@@ -511,7 +511,7 @@ class GeoSpec extends SparkSpec {
     // pairs from the unfiltered branch. The fixed matcher stops its
     // filter/alias collection at Union — the unprovable shape keeps
     // the naive plan, and the differential pins the RESULTS either way.
-    Geo.ensureRegistered(spark)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
     withoutHint {
       val probe = Tables.customer(spark, sf).limit(200).select(
         expr("CAST((c_custkey * 3) % 97 AS DOUBLE) / 97").as("x"),
@@ -544,7 +544,7 @@ class GeoSpec extends SparkSpec {
   }
 
   test("GridJoinRewrite: session hint unlocks unproven bounds; residual arm keeps it exact") {
-    Geo.ensureRegistered(spark)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
     val probe = Tables.customer(spark, sf).limit(300).select(
       expr("CAST((c_custkey * 3) % 97 AS DOUBLE) / 97").as("x"),
       expr("CAST((c_custkey * 5) % 89 AS DOUBLE) / 89").as("y"))
@@ -619,7 +619,7 @@ class GeoSpec extends SparkSpec {
     // maxIterations). The two-distinct-attribute marker pair must keep
     // exactly ONE split. spark.range-derived columns are non-nullable,
     // the exact shape that folds.
-    Geo.ensureRegistered(spark)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
     val key = "spark.graft.grid.maxBoundHint"
     val prev = spark.conf.getOption(key)
     try {
@@ -724,7 +724,7 @@ class GeoSpec extends SparkSpec {
     // relation, so the bound conjunct the matcher needs disappears —
     // on real sources it survives as a Filter above the scan. Hint
     // cleared: the session hint legitimately flips these.)
-    Geo.ensureRegistered(spark)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
     val a = Tables.customer(spark, sf).select(
       expr("CAST((c_custkey * 3) % 97 AS DOUBLE) / 97").as("x"),
       expr("CAST((c_custkey * 5) % 89 AS DOUBLE) / 89").as("y"))
@@ -760,7 +760,7 @@ class GeoSpec extends SparkSpec {
     // the union must not double-report the ordinary near-extreme
     // matches the grid already finds. Compared as sorted multisets.
     import spark.implicits._
-    Geo.ensureRegistered(spark)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
     withAnsiOff {
     val l = Seq((1L, Int.MaxValue), (2L, Int.MaxValue - 3), (3L, 100),
       (4L, Int.MinValue + 1), (5L, Int.MaxValue - 2)).toDF("lid", "lv")
@@ -783,7 +783,7 @@ class GeoSpec extends SparkSpec {
 
   test("GridJoinRewrite: long band wrap parity at the type extremes") {
     import spark.implicits._
-    Geo.ensureRegistered(spark)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
     withAnsiOff {
     val l = Seq((1L, Long.MaxValue), (2L, Long.MaxValue - 7), (3L, 4200L),
       (4L, Long.MinValue + 2), (5L, Long.MinValue + 9)).toDF("lid", "lv")
@@ -810,7 +810,7 @@ class GeoSpec extends SparkSpec {
     // organically; rewrite vs rule-stripped compared as sorted
     // multisets for <= and < bands, Long and Int
     import spark.implicits._
-    Geo.ensureRegistered(spark)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
     var wrapMatches = 0L
     withAnsiOff {
       for (seed <- 1 to 3) {
@@ -867,7 +867,7 @@ class GeoSpec extends SparkSpec {
     // orders of magnitude, random radius per base, rewrite vs
     // rule-stripped compared as sorted multisets
     import spark.implicits._
-    Geo.ensureRegistered(spark)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
     for ((base, spread, r2, seed) <- Seq(
         (0.0, 1.0, 0.0025, 11),
         (1.7e9, 40.0, 25.0, 12),       // epoch seconds, r = 5 s
@@ -901,7 +901,7 @@ class GeoSpec extends SparkSpec {
     // the naive plan bit-for-bit even with every point near a cell
     // boundary.
     import spark.implicits._
-    Geo.ensureRegistered(spark)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
     val base = 1.7e9
     val l = (0 until 400).map(i => (i.toLong, base + i * 0.26))
       .toDF("lid", "lx")
@@ -919,7 +919,7 @@ class GeoSpec extends SparkSpec {
 
   test("GridJoinRewrite: strict < bands fire; guarded shapes do not") {
     import spark.implicits._
-    Geo.ensureRegistered(spark)
+    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
     def fired(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains("_gridx_")
     val a = Seq((1L, 0.1, 7L, 3)).toDF("id", "x", "t", "iv")

@@ -5,9 +5,8 @@
 set -e
 SF=${1:-/root/testdata/sf0.1}
 OUT=${2:-bench_out.json}
-cd /root/repo
+cd "$(dirname "$0")/.."
 sbt -batch compile -warn >/dev/null
 . tools/env.sh
-SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-SPARK_GRAFT_BENCH_OUT="$OUT" java $ADD_OPENS -Xmx48g \
+SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_BENCH_OUT="$OUT" java $ADD_OPENS -Xmx$HEAP \
   -cp "$CP" graft.Bench

@@ -5,10 +5,10 @@
 set -e
 SF=${1:-/root/testdata/sf0.001}
 OUT=${2:-/tmp/graft_verify}
-cd /root/repo
+cd "$(dirname "$0")/.."
 sbt -batch compile -warn >/dev/null
 . tools/env.sh
 rm -rf "$OUT"
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} java $ADD_OPENS -Xmx8g \
+java $ADD_OPENS -Xmx$HEAP \
   -cp "$CP" graft.Verify "$SF" "$OUT" ${GRAFT_ONLY:+"$GRAFT_ONLY"}
 python3 tools/parity.py "$SF" "$OUT"
