@@ -7,9 +7,8 @@ import org.apache.spark.sql.types._
 import graft.Tables
 
 /** Batch analytics over the `events` fixture: time-bucketed aggregation,
-  * sessionization, and JSON-property extraction — the batch twins of the
-  * Structured Streaming pipelines in graft.streaming (same semantics,
-  * verified equivalent in StreamingSpec; these have DuckDB oracles).
+  * sessionization, and JSON-property extraction, each with a DuckDB
+  * oracle.
   *
   * Timestamp handling: events.ts is parquet TIMESTAMP(NANOS), which
   * Spark 4 refuses by default — we read it via
@@ -772,8 +771,7 @@ object Events {
       |GROUP BY a.event_id, a.event_type ORDER BY a.event_id""".stripMargin
 
   // --------------------------------------------------------- funnel
-  /** Batch conversion funnel — the driver-verified twin of the
-    * streaming `clickToPurchase` join: per day, how many clicks were
+  /** Batch conversion funnel: per day, how many clicks were
     * followed by a purchase from the same user within 30 minutes.
     * Computed join-free as one user-partitioned window pass over the
     * unioned click/purchase stream — "converted" is whether the NEXT
@@ -1838,11 +1836,10 @@ object Events {
     * later event time; its lateness is the gap to that running
     * maximum. The output — late counts, late rate, max and mean
     * lateness — is exactly the evidence a watermark delay is chosen
-    * from ([[graft.streaming.EventStreams]]'s `withWatermark`
-    * thresholds): pick the delay covering the lateness quantile you
-    * can afford to wait for, drop the rest. All lateness values are
-    * exact integer microseconds; the one rate divides once and
-    * rounds. Scale: one shuffle+sort per event type (the running-max
+    * from (a streaming `withWatermark` threshold): pick the delay
+    * covering the lateness quantile you can afford to wait for, drop
+    * the rest. All lateness values are exact integer microseconds;
+    * the one rate divides once and rounds. Scale: one shuffle+sort per event type (the running-max
     * semantic needs arrival order within type); at production volume
     * the same plan runs per (type, arrival-day) slice — the profile
     * is stable under day-slicing because watermark lateness beyond a
@@ -2841,11 +2838,9 @@ object Events {
     * conditional sums), one id-keyed aggregation for the duplicate
     * check, and a 1-row envelope broadcast. Counts are exact.
     */
-  /** The row-local audit counters, shared verbatim by the batch audit
-    * and the streaming observe gate
-    * ([[graft.streaming.EventStreams.dqGateMetrics]]) — one predicate
-    * set, two execution modes. All are driver-mergeable sums, so they
-    * satisfy `Dataset.observe`'s aggregate contract.
+  /** The row-local audit counters of [[eDqAudit]]. All are
+    * driver-mergeable sums, so they also satisfy `Dataset.observe`'s
+    * aggregate contract.
     *
     * bad_props: get_json_object(_, '$') is null exactly when the input
     * is NULL, blank, or MALFORMED — unlike from_json, whose PERMISSIVE
@@ -2855,7 +2850,7 @@ object Events {
     * 'null'/'5'/'"abc"', array, '{}'): the two predicates agree on
     * every one, including the JSON-null literal.
     */
-  private[graft] def dqRowMetrics: Seq[Column] = Seq(
+  private def dqRowMetrics: Seq[Column] = Seq(
     count(lit(1)).as("n"),
     sum(when(col("user_id").isNull, 1L).otherwise(0L)).as("null_user"),
     sum(when(col("event_type").isNull || col("event_type") === "", 1L)

@@ -123,15 +123,11 @@ object Multimodal {
     * constant regardless of corpus size, and the final report is a
     * doc-keyed aggregation that reuses the window's hash partitioning.
     */
-  /** Luma jump at or above this between consecutive frames is a cut —
-    * shared with the streaming detector ([[graft.streaming.MediaStreams]])
-    * so the two stay rule-identical.
-    */
+  /** Luma jump at or above this between consecutive frames is a cut. */
   val SceneCutThreshold = 20
 
   /** Frame stream reduced to the scalar per-frame feature: (doc_id,
-    * frame_idx, luma). Shared by the batch detector and the streaming
-    * spec's source builder.
+    * frame_idx, luma), the input of [[mSceneCut]].
     */
   def frameLuma(s: SparkSession, d: String): DataFrame =
     frames(s, d)

@@ -221,48 +221,6 @@ object Similarity {
       .select(col("vec_id"), col("embedding"), col("nrm"), col("m.v").as("cell"))
   }
 
-  /** Assign raw (vec_id, embedding) vectors to their nearest FITTED
-    * centroid — the public seam incremental index maintenance needs:
-    * a microbatch of new vectors is assigned against the frozen
-    * centroid frame (one broadcast cross, map-side argmax — zero
-    * shuffles of vector data) and appended into the store's cell
-    * partitions, extending the inverted lists without a re-fit.
-    * Output matches the postings layout: (vec_id, embedding, nrm,
-    * cell).
-    */
-  def assignVectors(vectors: DataFrame, cent: DataFrame): DataFrame =
-    ivfAssignment(
-      vectors.select(col("vec_id"), col("embedding"),
-        Vectors.norm(col("embedding")).as("nrm")),
-      cent)
-
-  /** Encode raw (vec_id, embedding) vectors against a FROZEN IVF-PQ
-    * model — the compressed-index twin of [[assignVectors]], the seam
-    * incremental maintenance needs: nearest frozen centroid gives the
-    * inverted list, per-subspace nearest frozen codebook entry gives
-    * the code (ties to the smallest cell id, the fit's own rule). Two
-    * broadcast model joins + one broadcast batch join, map-side
-    * argmin, zero shuffles of vector data. Output matches the codes
-    * store layout: (vec_id, m, cell, ivf_cell).
-    */
-  def encodeVectors(vectors: DataFrame, cent: DataFrame,
-      codebook: DataFrame): DataFrame = {
-    val ivf = assignVectors(vectors, cent)
-      .select(col("vec_id"), col("cell").as("ivf_cell"))
-    val sub = pqSubOf(vectors.select(col("vec_id"), col("embedding")))
-    // argmin as a partial-aggregating min(struct(d, cell)) — identical
-    // tie rule to the fit's rank window (smallest d, then smallest
-    // cell), but map-side combinable: the |batch|·M·K candidate rows
-    // reduce before any exchange, where a rank window would shuffle
-    // and sort them all — this is the streaming-upsert hot path
-    sub.join(broadcast(codebook), "m")
-      .groupBy("m", "vec_id")
-      .agg(org.apache.spark.sql.graft.GraftSql
-        .argMinDL(pqDist(col("sub"), col("c_emb")), col("cell")).as("b"))
-      .select(col("vec_id"), col("m"), col("b.v").as("cell"))
-      .join(broadcast(ivf), "vec_id")
-  }
-
   def annIvf(s: SparkSession, d: String, iters: Int,
       nProbe: Int = NumProbes): DataFrame = {
     val base = withNorm(s, d)

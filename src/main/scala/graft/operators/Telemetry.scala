@@ -17,12 +17,9 @@ import org.apache.spark.sql.functions._
   * style; no distinct, no order-dependent aggregates) — exactly the
   * shape the `Observation` helper enforces.
   *
-  * Batch: [[qualityGate]] attaches the standard document-corpus gate
-  * and returns the `Observation` handle; `get` blocks until the action
-  * that consumed the frame finishes. Streaming: the same `observe`
-  * call works per-microbatch with a `StreamingQueryListener`
-  * (`QueryProgressEvent.progress.observedMetrics`) — the batch spec
-  * pins the semantics shared by both.
+  * [[qualityGate]] attaches the standard document-corpus gate and
+  * returns the `Observation` handle; `get` blocks until the action
+  * that consumed the frame finishes.
   */
 object Telemetry {
 

@@ -41,10 +41,18 @@ object WordScore {
     * review); Catalyst does not push project expressions under a
     * Generate, so token-less reviews never evaluate it (pinned by
     * WordScoreSpec for both [[score]] and [[wordScoreSalted]]).
+    *
+    * A review with a missing or null `text` fails the job whatever its
+    * stars, like the reference's NPE on `value.get("text")`
+    * (`ComputeWordScore.java:116`). That check runs once per review,
+    * below the Generate: `explode(null)` would otherwise emit nothing
+    * and the job would succeed silently.
     */
   private def wordModifiers(reviews: DataFrame, stars: Column, text: Column): DataFrame =
     reviews
-      .select(stars.as("stars_in"), Text.explodedWord(text).as("word"))
+      .select(stars.as("stars_in"), Text.explodedWord(
+        when(text.isNull, raise_error(lit("review has a missing or null `text`")))
+          .otherwise(text)).as("word"))
       .select(Text.starsModifierStrict(col("stars_in")).as("modifier"), col("word"))
 
   /** (stars, text) → (word, score), sorted score desc, word asc (the

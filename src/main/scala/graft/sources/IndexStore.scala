@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, max, when}
+import org.apache.spark.sql.functions.col
 
 /** Persistence for the IVF similarity index — the build-once /
   * serve-many contract every production ANN deployment needs: the fit
@@ -27,177 +27,17 @@ import org.apache.spark.sql.functions.{col, lit, max, when}
   */
 object IndexStore {
 
-  // ------- versioned data dirs + pointer manifest (atomic compaction)
+  // ------- versioned data dirs + pointer manifest (atomic rebuilds)
   //
-  // A compacted component lives in `{name}_v{N}` with a tiny
-  // `CURRENT_{name}` pointer file naming the live version; an
-  // uncompacted store keeps the plain `{name}` directory (the layout
-  // `save*` writes), so existing stores read unchanged. Resolution
-  // order: pointer -> highest complete `{name}_v*` -> plain `{name}`.
-  // The compaction swap is crash-safe at every step (see
-  // [[compactComponent]]); the pre-round-11 delete-then-rename swap
-  // could lose the listing entirely if killed between its two steps.
+  // A rebuilt component lives in `{name}_v{N}` with a tiny
+  // `CURRENT_{name}` pointer file naming the live version; a store
+  // saved once keeps the plain `{name}` directory its first save
+  // writes. Resolution order: pointer -> highest complete `{name}_v*`
+  // -> plain `{name}`. The rebuild swap is crash-safe at every step
+  // (see [[publishComponent]]).
 
   private def fsOf(s: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  // ---- exactly-once streaming appends: the batch partition level
-  //
-  // Every data component carries a SECOND partition level under its
-  // clustering key: `{key}=X/batch=N`. Base saves and compactions
-  // write `batch=-1`; each streaming microbatch lands under its own
-  // `batch={batchId}` leaves AFTER deleting any leaves a prior attempt
-  // of the same batch left behind — so a retried microbatch (Structured
-  // Streaming replays the last uncommitted batch with the same id and
-  // the same rows) is an idempotent overwrite of exactly its own
-  // partition, never a duplicate append. The batch column never
-  // reaches a consumer: every load projects it away. Partition
-  // pruning on the clustering key is untouched (the key stays the
-  // first directory level), and the leaf count only grows by the
-  // number of live batch values — compaction folds every batch except
-  // the maximum back into `-1` (commits are ordered, so the only batch
-  // that can still be retried is the maximum one; folding it would
-  // re-open the duplication hole the batch level closes).
-
-  /** The second-level partition column for idempotent appends. */
-  private[graft] val BatchCol = "batch"
-
-  /** The batch value base saves and compaction-folded rows carry. */
-  private[graft] val BaseBatch = -1L
-
-  private def withBatch(df: DataFrame, batchId: Long): DataFrame =
-    df.withColumn(BatchCol, lit(batchId))
-
-  /** Fold every batch except the maximum into [[BaseBatch]] — the
-    * compaction step that keeps leaf-directory growth bounded without
-    * re-opening the retry-duplication hole: microbatch commits are
-    * ordered, so only the MAXIMUM batch id on disk can still be
-    * uncommitted (and hence replayed); its rows keep their partition
-    * so a replay's delete-then-write still targets exactly them.
-    */
-  private def foldSuperseded(df: DataFrame): DataFrame = {
-    val maxB = Option(df.agg(max(col(BatchCol))).head().get(0))
-      .map(_.asInstanceOf[Number].longValue).getOrElse(BaseBatch)
-    if (maxB == BaseBatch) df.withColumn(BatchCol, lit(BaseBatch))
-    else df.withColumn(BatchCol,
-      when(col(BatchCol) === lit(maxB), lit(maxB)).otherwise(lit(BaseBatch)))
-  }
-
-  /** Idempotent microbatch append: delete every `batch={batchId}` leaf
-    * a prior attempt of this batch wrote (retry = overwrite of exactly
-    * that partition), then land the batch under fresh
-    * `{key}=X/batch={batchId}` leaves. Refuses to run while a
-    * compaction holds the store's compaction lease — a mid-compaction
-    * append into the superseded version directory would be silently
-    * lost at cleanup.
-    */
-  private def appendBatch(s: SparkSession, dir: String, name: String,
-      clusterCol: String, df: DataFrame, batchId: Long): Unit = {
-    require(batchId >= BaseBatch + 1,
-      s"batchId must be >= 0 (got $batchId); $BaseBatch is the base-save marker")
-    requireNoCompaction(s, dir)
-    val live = resolvePath(s, dir, name)
-    val fs = fsOf(s, new org.apache.hadoop.fs.Path(live))
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-        s"$live/*/$BatchCol=$batchId"))).toSeq.flatten
-      .foreach(st => fs.delete(st.getPath, true))
-    withBatch(df, batchId).write.mode(SaveMode.Append)
-      .partitionBy(clusterCol, BatchCol).parquet(live)
-  }
-
-  // ---- upsert/compaction exclusion: lightweight lease markers
-  //
-  // A compaction stages from a snapshot read of the live version and
-  // then reaps the old version dirs — a streaming append that lands in
-  // the superseded dir mid-flight is silently lost. The two sides
-  // exclude each other through two marker files, both created with the
-  // filesystem's atomic create-if-absent:
-  //  - `LEASE_upsert` — written by the upsert-stream starters with the
-  //    query's runId; compaction refuses while the named query is
-  //    still active IN THIS SESSION, and auto-clears a stale lease
-  //    (query no longer active — stopped or crashed). Driver-local
-  //    best-effort: cross-session coordination needs an external lock.
-  //  - `LEASE_compact` — held for the duration of a compaction (always
-  //    released in-JVM via finally); appends refuse while it exists.
-  //    A hard-killed compaction leaves it behind — clear with
-  //    [[clearCompactionLease]] after confirming nothing is running.
-
-  private def leaseP(dir: String, kind: String) =
-    new org.apache.hadoop.fs.Path(s"$dir/LEASE_$kind")
-
-  private def createLease(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, content: String): Boolean =
-    try {
-      val out = fs.create(p, false) // atomic create-if-absent
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-      true
-    } catch { case _: java.io.IOException => false }
-
-  /** Record this store's active upsert stream. Called by the
-    * [[graft.streaming.IndexUpserts]] starters right after
-    * `.start()`; a leftover lease from a query this session no longer
-    * runs is cleared and replaced.
-    */
-  private[graft] def acquireUpsertLease(s: SparkSession, dir: String,
-      runId: String): Unit = {
-    val fs = fsOf(s, new org.apache.hadoop.fs.Path(dir))
-    val p = leaseP(dir, "upsert")
-    if (!createLease(fs, p, runId)) {
-      val held = readSmallFile(fs, p).trim
-      if (held != runId && s.streams.active.exists(_.runId.toString == held))
-        throw new IllegalStateException(
-          s"store $dir already has an active upsert stream (runId $held)")
-      fs.delete(p, false)
-      if (!createLease(fs, p, runId))
-        throw new IllegalStateException(s"upsert lease contention on $dir")
-    }
-  }
-
-  /** Drop the upsert lease (idempotent). Call after stopping the
-    * stream; a forgotten release is auto-cleared by the next
-    * compaction once the query is no longer active.
-    */
-  def releaseUpsertLease(s: SparkSession, dir: String): Unit =
-    fsOf(s, new org.apache.hadoop.fs.Path(dir))
-      .delete(leaseP(dir, "upsert"), false)
-
-  /** Clear a compaction lease a hard-killed compaction left behind.
-    * Only after confirming no compaction is actually running.
-    */
-  def clearCompactionLease(s: SparkSession, dir: String): Unit =
-    fsOf(s, new org.apache.hadoop.fs.Path(dir))
-      .delete(leaseP(dir, "compact"), false)
-
-  private def requireNoCompaction(s: SparkSession, dir: String): Unit =
-    if (fsOf(s, new org.apache.hadoop.fs.Path(dir))
-        .exists(leaseP(dir, "compact")))
-      throw new IllegalStateException(
-        s"store $dir is compacting — appends would be lost at version " +
-          "cleanup; retry after the compaction (or clearCompactionLease " +
-          "if one was hard-killed)")
-
-  /** Run `body` under the store's compaction lease, refusing if an
-    * upsert stream is live (stale leases — query no longer active in
-    * this session — are cleared first).
-    */
-  private def withCompactionLease[T](s: SparkSession, dir: String)
-      (body: => T): T = {
-    val fs = fsOf(s, new org.apache.hadoop.fs.Path(dir))
-    val up = leaseP(dir, "upsert")
-    if (fs.exists(up)) {
-      val held = readSmallFile(fs, up).trim
-      if (s.streams.active.exists(_.runId.toString == held))
-        throw new IllegalStateException(
-          s"store $dir has an active upsert stream (runId $held) — stop " +
-            "it before compacting; a mid-compaction append would be lost")
-      fs.delete(up, false) // stale: the query is gone
-    }
-    if (!createLease(fs, leaseP(dir, "compact"), "compact"))
-      throw new IllegalStateException(
-        s"store $dir is already compacting (or a hard-killed compaction " +
-          "left its lease — clearCompactionLease)")
-    try body finally fs.delete(leaseP(dir, "compact"), false)
-  }
 
   private def listVersions(fs: org.apache.hadoop.fs.FileSystem,
       dir: String, name: String): Seq[Int] =
@@ -222,7 +62,7 @@ object IndexStore {
     finally in.close()
   }
 
-  private[graft] def readManifest(fs: org.apache.hadoop.fs.FileSystem,
+  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
       dir: String): Option[Map[String, String]] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/MANIFEST")
     if (!fs.exists(p)) None
@@ -291,81 +131,46 @@ object IndexStore {
     fs.exists(new org.apache.hadoop.fs.Path(resolvePath(s, dir, name)))
   }
 
-  /** Rewrite component `name` as one file per partition directory and
-    * swap it live without any window in which the store is unreadable:
+  /** Publish `df` as the new live content of component `name` and swap
+    * it live without any window in which the store is unreadable:
     *
-    *  1. write the compacted copy to `{name}_staging` (crash here:
+    *  1. write the complete copy to `{name}_staging` (crash here:
     *     pointer and live data untouched — old version serves);
     *  2. rename the COMPLETE staging dir to `{name}_v{N+1}` (a single
     *     metadata op; crash before the pointer moves: a pointered
     *     store keeps serving the pointed old version with v{N+1}
-    *     dormant until the next compaction reaps it, while a legacy
+    *     dormant until the next publish reaps it, while a
     *     pointer-less store's resolution falls forward to v{N+1} —
     *     safe either way, because a version name only ever holds a
-    *     fully-written, content-identical copy);
+    *     fully-written copy);
     *  3. publish the pointer: write `CURRENT_{name}.tmp`, delete the
     *     old pointer, rename tmp into place (crash in the sub-instant
     *     between delete and rename: resolution falls back to the
     *     highest version dir — v{N+1}, complete by step 2);
-    *  4. delete stale version dirs and the legacy plain dir (crash
-    *     here: extra garbage, reaped by the next compaction).
+    *  4. delete stale version dirs and the plain dir beyond the
+    *     [[retainCount]] retained ones (crash here: extra garbage,
+    *     reaped by the next publish).
     *
-    * Readers that resolved the OLD path before step 4 can lose their
-    * scan mid-flight — same contract as the previous swap; production
-    * deployments defer step 4 by a read-grace period. Concurrent
-    * APPENDS are out of contract during compaction (rows appended to
-    * the old version after step 0's read would vanish at step 4) —
-    * stop the upsert stream first, as IndexStoreSpec's flow does.
+    * A killed rebuild leaves the previous version serving.
     *
-    * `onStep` is the crash-test seam: invoked with "staged",
-    * "versioned", "pointer", "cleaned" as each phase commits, so a
-    * spec can kill the swap at a named point and assert what serves.
+    * `onStep` is the crash-test seam: invoked with "staged:{name}",
+    * "versioned:{name}", "pointer", "cleaned" as each phase commits,
+    * so a spec can kill the swap at a named point and assert what
+    * serves.
     */
-  private[graft] def compactComponent(s: SparkSession, dir: String,
-      name: String, partCols: Seq[String],
-      project: DataFrame => DataFrame,
-      onStep: String => Unit): Unit = withCompactionLease(s, dir) {
-    val live0 = s.read.parquet(resolvePath(s, dir, name))
-    // legacy (pre-batch-level) stores read without the column: treat
-    // every row as base content so the compacted copy gains the level
-    val live = if (live0.columns.contains(BatchCol)) live0
-      else live0.withColumn(BatchCol, lit(BaseBatch))
-    publishComponent(s, dir, name, partCols,
-      foldSuperseded(project(live)), onStep)
-  }
-
-  /** Publish `df` as the new live content of component `name` via the
-    * staging → version → pointer protocol (steps and crash matrix in
-    * the scaladoc above). Compaction publishes a re-clustered read of
-    * the live version; a full SAVE publishes a fresh frame — both get
-    * the same crash-safety: a killed save leaves the previous version
-    * serving, where the old Overwrite-in-place save deleted the live
-    * directory before writing a byte (and paid that delete-first pass
-    * even on success).
-    */
-  private[graft] def publishComponent(s: SparkSession, dir: String,
+  private def publishComponent(s: SparkSession, dir: String,
       name: String, partCols: Seq[String], df: DataFrame,
       onStep: String => Unit): Unit = {
     val fs = fsOf(s, new org.apache.hadoop.fs.Path(dir))
     val prevServing = resolvePath(s, dir, name) // protect for pinned readers
     val next = stageAndVersion(s, fs, dir, name, partCols, df, onStep)
-    // a MANIFESTED store's single source of truth is the manifest —
-    // update its entry (one atomic swap, same crash matrix as the
-    // pointer); a pointer-protocol store keeps the per-component
-    // pointer. Either way, a crash before this step leaves the old
-    // version serving and v{next} dormant.
-    readManifest(fs, dir) match {
-      case Some(m) if m.contains(name) =>
-        writeManifest(fs, dir, m + (name -> s"v$next"))
-      case _ =>
-        val cur = new org.apache.hadoop.fs.Path(s"$dir/CURRENT_$name")
-        val tmp = new org.apache.hadoop.fs.Path(s"$dir/CURRENT_$name.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(s"v$next".getBytes("UTF-8")) finally out.close()
-        fs.delete(cur, false)
-        if (!fs.rename(tmp, cur))
-          throw new java.io.IOException(s"compaction: pointer swap failed for $dir/$name")
-    }
+    val cur = new org.apache.hadoop.fs.Path(s"$dir/CURRENT_$name")
+    val tmp = new org.apache.hadoop.fs.Path(s"$dir/CURRENT_$name.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(s"v$next".getBytes("UTF-8")) finally out.close()
+    fs.delete(cur, false)
+    if (!fs.rename(tmp, cur))
+      throw new java.io.IOException(s"publish: pointer swap failed for $dir/$name")
     onStep("pointer")
     cleanupComponent(fs, dir, name, next, retainCount(s), Some(prevServing))
     onStep("cleaned")
@@ -446,7 +251,7 @@ object IndexStore {
     * `versioned:{name}`, `manifest`, `cleaned`) for the
     * kill-at-every-step spec.
     */
-  private[graft] def publishStore(s: SparkSession, dir: String,
+  private def publishStore(s: SparkSession, dir: String,
       components: Seq[(String, Seq[String], DataFrame)],
       onStep: String => Unit): Unit = {
     val fs = fsOf(s, new org.apache.hadoop.fs.Path(dir))
@@ -480,63 +285,8 @@ object IndexStore {
       assign: DataFrame, onStep: String => Unit): Unit =
     publishStore(cent.sparkSession, dir, Seq(
       ("centroids", Nil, cent),
-      ("postings", Seq("cell", BatchCol),
-        withBatch(assign.select(col("vec_id"), col("embedding"),
-          col("nrm"), col("cell")), BaseBatch))),
-      onStep)
-
-  /** Incremental maintenance: append an already-assigned batch of new
-    * vectors into the postings store's cell partitions — the
-    * build-once/serve-many contract under a GROWING corpus: centroids
-    * stay frozen, each new vector lands in its inverted list's
-    * directory, and serving sessions pick the additions up on their
-    * next load with no re-fit and no rewrite of existing lists.
-    * Callers assign with [[graft.operators.Similarity.assignVectors]]
-    * against the store's own centroids (the streaming upsert sink in
-    * [[graft.streaming.IndexUpserts]] wires the two together).
-    *
-    * Delivery: EXACTLY-ONCE under retried microbatches when called
-    * with the foreachBatch `batchId` — the batch lands under its own
-    * `cell=X/batch={batchId}` leaves after any prior attempt's leaves
-    * are deleted, so a replay overwrites exactly itself (the upsert
-    * sink threads the id through). The id-less overload appends into
-    * the base `batch=-1` partition for caller-managed batch backfills
-    * — NOT idempotent; re-running it duplicates.
-    */
-  def appendIvf(dir: String, assigned: DataFrame, batchId: Long): Unit =
-    appendBatch(assigned.sparkSession, dir, "postings", "cell",
-      assigned.select(col("vec_id"), col("embedding"), col("nrm"),
-        col("cell")), batchId)
-
-  def appendIvf(dir: String, assigned: DataFrame): Unit =
-    withBatch(assigned.select(col("vec_id"), col("embedding"), col("nrm"),
-        col("cell")), BaseBatch)
-      .write.mode(SaveMode.Append).partitionBy("cell", BatchCol)
-      .parquet(resolvePath(assigned.sparkSession, dir, "postings"))
-
-  /** Compact the postings store: every [[appendIvf]] microbatch lands
-    * one new file per touched cell directory, so a long-running upsert
-    * stream degrades serve-time listing and scan granularity (hundreds
-    * of tiny row groups per inverted list). Compaction rewrites the
-    * postings with one shuffle keyed on `cell` — each cell's rows land
-    * in exactly one task, hence ONE file per cell directory — into a
-    * sibling directory, then swaps it in. Row content is untouched
-    * (IndexStoreSpec pins byte-identical serve results and the
-    * one-file-per-cell invariant).
-    *
-    * The swap is the versioned-dir + pointer-manifest protocol of
-    * [[compactComponent]] — crash-safe at every step, the
-    * filesystem-level equivalent of a transactional table format's
-    * manifest swap.
-    */
-  def compactIvf(s: SparkSession, dir: String): Unit =
-    compactIvf(s, dir, _ => ())
-
-  private[graft] def compactIvf(s: SparkSession, dir: String,
-      onStep: String => Unit): Unit =
-    compactComponent(s, dir, "postings", Seq("cell", BatchCol),
-      _.select(col("vec_id"), col("embedding"), col("nrm"), col("cell"),
-        col(BatchCol)),
+      ("postings", Seq("cell"), assign.select(col("vec_id"),
+        col("embedding"), col("nrm"), col("cell")))),
       onStep)
 
   /** Reload (centroids, postings) for [[graft.operators.Similarity
@@ -574,43 +324,7 @@ object IndexStore {
     publishStore(cent.sparkSession, dir, Seq(
       ("centroids", Nil, cent),
       ("codebook", Nil, codebook),
-      ("codes", Seq("ivf_cell", BatchCol), withBatch(codes, BaseBatch))),
-      onStep)
-
-  /** Incremental IVF-PQ maintenance — the compressed-index twin of
-    * [[appendIvf]]: a batch of already-encoded codes
-    * ([[graft.operators.Similarity.encodeVectors]] against the store's
-    * frozen centroids + codebook) lands in its inverted-list
-    * directories; the model frames never rewrite. Exactly-once under
-    * retried microbatches with the foreachBatch `batchId` (same
-    * delete-then-write of the batch's own leaves as [[appendIvf]]);
-    * the id-less overload is the non-idempotent base-partition
-    * backfill.
-    */
-  def appendIvfPq(dir: String, codes: DataFrame, batchId: Long): Unit =
-    appendBatch(codes.sparkSession, dir, "codes", "ivf_cell",
-      codes.select(col("vec_id"), col("m"), col("cell"), col("ivf_cell")),
-      batchId)
-
-  def appendIvfPq(dir: String, codes: DataFrame): Unit =
-    withBatch(codes.select(col("vec_id"), col("m"), col("cell"),
-        col("ivf_cell")), BaseBatch)
-      .write.mode(SaveMode.Append).partitionBy("ivf_cell", BatchCol)
-      .parquet(resolvePath(codes.sparkSession, dir, "codes"))
-
-  /** Compact the codes store after upsert fragmentation — one file per
-    * inverted-list directory, same crash-safe publish as
-    * [[compactIvf]]; on this (manifested) store the swap updates the
-    * store MANIFEST entry atomically.
-    */
-  def compactIvfPq(s: SparkSession, dir: String): Unit =
-    compactIvfPq(s, dir, _ => ())
-
-  private[graft] def compactIvfPq(s: SparkSession, dir: String,
-      onStep: String => Unit): Unit =
-    compactComponent(s, dir, "codes", Seq("ivf_cell", BatchCol),
-      _.select(col("vec_id"), col("m"), col("cell"), col("ivf_cell"),
-        col(BatchCol)),
+      ("codes", Seq("ivf_cell"), codes)),
       onStep)
 
   def loadIvfPq(s: SparkSession, dir: String)
@@ -647,17 +361,6 @@ object IndexStore {
   private def withCellZ(df: DataFrame): DataFrame =
     df.withColumn("cell_z", org.apache.spark.sql.functions.expr(CellZ))
 
-  /** Persist a point corpus as a SPATIAL grid store: rows land
-    * `partitionBy("cell_z")` — one directory per grid cell keyed by
-    * the Morton code ([[CellZ]]), the 2-D analog of the IVF
-    * inverted-list layout. A radius or kNN query over the store
-    * touches only the build side's 3x3 cell neighborhoods, so the
-    * scan reads 9·|sites| cell directories via partition pruning,
-    * never the whole corpus — spatial data skipping as a directory
-    * layout. `cell_x`/`cell_y` remain ordinary data columns inside
-    * the files, so serve-time joins and exactness predicates read
-    * them without de-interleaving.
-    */
   /** First save of a component writes the plain `{name}` directory
     * (nothing exists to preserve — a killed first save heals on
     * re-run); a REBUILD over an existing store goes through the
@@ -671,12 +374,12 @@ object IndexStore {
     * |cells| small files, measured 2× slower to write and list).
     */
   private def saveOrPublish(s: SparkSession, dir: String, name: String,
-      partCols: Seq[String], df: DataFrame): Unit = {
+      partCols: Seq[String], df: DataFrame, onStep: String => Unit): Unit = {
     val fs = fsOf(s, new org.apache.hadoop.fs.Path(dir))
     val exists = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/CURRENT_$name")) ||
       fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$name")) ||
       listVersions(fs, dir, name).nonEmpty
-    if (exists) publishComponent(s, dir, name, partCols, df, _ => ())
+    if (exists) publishComponent(s, dir, name, partCols, df, onStep)
     else clusterForWrite(df, partCols)
       .write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
       .parquet(s"$dir/$name")
@@ -699,10 +402,27 @@ object IndexStore {
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
       partCols.map(col): _*)
 
+  /** Persist a point corpus as a SPATIAL grid store: rows land
+    * `partitionBy("cell_z")` — one directory per grid cell keyed by
+    * the Morton code ([[CellZ]]), the 2-D analog of the IVF
+    * inverted-list layout. A radius or kNN query over the store
+    * touches only the build side's 3x3 cell neighborhoods, so the
+    * scan reads 9·|sites| cell directories via partition pruning,
+    * never the whole corpus — spatial data skipping as a directory
+    * layout. `cell_x`/`cell_y` remain ordinary data columns inside
+    * the files, so serve-time joins and exactness predicates read
+    * them without de-interleaving.
+    */
   def saveGrid(dir: String, pointsWithCells: DataFrame): Unit =
+    saveGrid(dir, pointsWithCells, _ => ())
+
+  /** [[saveGrid]] with the [[publishComponent]] crash-test seam: a
+    * rebuild calls `onStep` as each publish phase commits.
+    */
+  private[graft] def saveGrid(dir: String, pointsWithCells: DataFrame,
+      onStep: String => Unit): Unit =
     saveOrPublish(pointsWithCells.sparkSession, dir, "cells",
-      Seq("cell_z", BatchCol),
-      withBatch(withCellZ(pointsWithCells), BaseBatch))
+      Seq("cell_z"), withCellZ(pointsWithCells), onStep)
 
   /** Reload the grid store for [[graft.operators.Geo]] serving; column
     * order restored to the build-time shape (the `cell_z` partition
@@ -713,36 +433,7 @@ object IndexStore {
   def loadGrid(s: SparkSession, dir: String): DataFrame = {
     val df = s.read.parquet(resolvePath(s, dir, "cells"))
     val dataCols = df.columns.filterNot(c =>
-      c == "cell_x" || c == "cell_y" || c == "cell_z" || c == BatchCol)
+      c == "cell_x" || c == "cell_y" || c == "cell_z")
     df.select((dataCols :+ "cell_x" :+ "cell_y" :+ "cell_z").map(col).toSeq: _*)
   }
-
-  /** Incremental grid maintenance — the spatial twin of [[appendIvf]]:
-    * new points land in their cell directories, serving sessions pick
-    * them up on the next [[loadGrid]], the grid itself never rewrites.
-    * Exactly-once under retried microbatches with the foreachBatch
-    * `batchId`, same protocol as [[appendIvf]]; the id-less overload
-    * is the non-idempotent base-partition backfill.
-    */
-  def appendGrid(dir: String, pointsWithCells: DataFrame,
-      batchId: Long): Unit =
-    appendBatch(pointsWithCells.sparkSession, dir, "cells", "cell_z",
-      withCellZ(pointsWithCells), batchId)
-
-  def appendGrid(dir: String, pointsWithCells: DataFrame): Unit =
-    withBatch(withCellZ(pointsWithCells), BaseBatch)
-      .write.mode(SaveMode.Append).partitionBy("cell_z", BatchCol)
-      .parquet(resolvePath(pointsWithCells.sparkSession, dir, "cells"))
-
-  /** Compact the grid store after upsert fragmentation — one file per
-    * cell directory, same one-shuffle mechanism and same crash-safe
-    * versioned swap as [[compactIvf]].
-    */
-  def compactGrid(s: SparkSession, dir: String): Unit =
-    compactGrid(s, dir, _ => ())
-
-  private[graft] def compactGrid(s: SparkSession, dir: String,
-      onStep: String => Unit): Unit =
-    compactComponent(s, dir, "cells", Seq("cell_z", BatchCol), identity,
-      onStep)
 }

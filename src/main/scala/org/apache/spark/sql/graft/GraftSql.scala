@@ -155,14 +155,6 @@ object GraftSql {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }
 
-  /** Block until every queued listener event has been delivered —
-    * `listenerBus.waitUntilEmpty` is `private[spark]`, so the metrics
-    * specs (task-grain skew bounds, scan-pruning counters) reach it
-    * through this bridge instead of sleeping and hoping.
-    */
-  def drainListenerBus(s: SparkSession): Unit =
-    s.sparkContext.listenerBus.waitUntilEmpty(30000L)
-
   // ------------------------------------------------------ the registry
   // The function table, `rules` and `strategies` drive BOTH
   // registration paths (programmatic ensureRegistered and config-driven

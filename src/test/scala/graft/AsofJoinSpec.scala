@@ -278,7 +278,7 @@ class AsofJoinSpec extends SparkSpec {
       .toSet
     assert(out === Set((n.toLong + 5, Some(n.toLong)), (3L, Some(3L))))
     // the exec's own metrics: every left row emitted, both matched
-    org.apache.spark.sql.graft.GraftSql.drainListenerBus(spark)
+    org.apache.spark.sql.graft.ListenerBus.drain(spark)
     val exec = allNodes(df.queryExecution.executedPlan)
       .collectFirst { case e: AsofJoinExec => e }.get
     assert(exec.metrics("numOutputRows").value === 2L)

@@ -90,7 +90,7 @@ class BandJoinSpec extends SparkSpec {
     }
     // the buffer bound, MEASURED from the exec's own metric (one key →
     // one task holds the whole stream; W in-band timestamps, never 50k)
-    org.apache.spark.sql.graft.GraftSql.drainListenerBus(spark)
+    org.apache.spark.sql.graft.ListenerBus.drain(spark)
     val exec = allNodes(df.queryExecution.executedPlan)
       .collectFirst { case e: BandCountExec => e }.get
     val buffered = exec.metrics("maxBandBuffer").value

@@ -272,80 +272,6 @@ class GeoSpec extends SparkSpec {
       .where(expr("(x - bx) * (x - bx) + (y - by) * (y - by) <= 0.01"))))
   }
 
-  test("grid upserts: served results after 3 microbatches == from-scratch; compaction clean") {
-    import graft.sources.IndexStore
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_grid_upsert").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_grid_ckpt").toString
-    try {
-      def pts(df: org.apache.spark.sql.DataFrame) = df
-        .withColumn("c_acctbal", lit(1.0))
-        .withColumn("cx", expr("CAST((c_custkey * 2654435761) % 100003 AS DOUBLE) / 100003.0"))
-        .withColumn("cy", expr("CAST((c_custkey * 2246822519) % 100019 AS DOUBLE) / 100019.0"))
-      val all = pts(spark.range(1, 2001).toDF("c_custkey"))
-      IndexStore.saveGrid(dir, Geo.withCells(all.filter(col("c_custkey") % 5 =!= 0)))
-
-      // stream the late fifth in 3 microbatches through the upsert sink
-      val input = MemoryStream[Long](spark)
-      val q = graft.streaming.IndexUpserts.startGridUpserts(
-        pts(input.toDF().toDF("c_custkey")), dir, ckpt)
-      try {
-        val late = (1L to 2000L).filter(_ % 5 == 0)
-        late.grouped(late.size / 3 + 1).foreach { g =>
-          input.addData(g); q.processAllAvailable()
-        }
-      } finally q.stop()
-
-      val sites = Seq((1L, 0.31, 0.47), (2L, 0.83, 0.12), (3L, 0.52, 0.52))
-        .toDF("s_suppkey", "sx", "sy")
-      def agg(cand: org.apache.spark.sql.DataFrame) = cand
-        .groupBy("s_suppkey").agg(count(lit(1)).as("n"))
-        .orderBy("s_suppkey").collect().toSeq
-      def serve() = agg(Geo.servedCandidates(IndexStore.loadGrid(spark, dir), sites))
-      val grown = serve()
-      val want = agg(Geo.gridCandidates(all, sites))
-      assert(grown == want && grown.nonEmpty)
-      assert(IndexStore.loadGrid(spark, dir).count() == 2000L)
-
-      // appends fragmented at least one cell; compaction restores one
-      // file per leaf dir and serve results are unchanged
-      def cellDirs = Option(new java.io.File(
-          IndexStore.resolvePath(spark, dir, "cells")).listFiles()).toSeq.flatten
-        .filter(f => f.isDirectory && f.getName.startsWith("cell_z="))
-      // leaves are cell/batch pairs: each microbatch lands under its
-      // own batch= subdir (the exactly-once layout), so fragmentation
-      // shows as many files per CELL dir counted recursively
-      def files(d: java.io.File): Seq[java.io.File] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-          else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
-        walk(d)
-      }
-      assert(cellDirs.exists(files(_).size > 1), "appends never fragmented a cell")
-      IndexStore.compactGrid(spark, dir)
-      def leaves(d: java.io.File) = d.listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-      assert(cellDirs.nonEmpty && cellDirs.forall(leaves(_).forall(
-          files(_).size == 1)),
-        "compaction left a multi-file leaf")
-      val batchVals = cellDirs.flatMap(leaves).map(
-        _.getName.stripPrefix("batch=").toLong).toSet
-      assert(batchVals.subsetOf(Set(-1L, batchVals.max)),
-        s"compaction left folded batches behind: $batchVals")
-      assert(!new java.io.File(s"$dir/cells_staging").exists())
-      assert(new java.io.File(s"$dir/CURRENT_cells").exists(),
-        "pointer manifest missing after grid compaction")
-      assert(serve() == grown, "serve drifted across compaction")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete()
-      }
-      rm(new java.io.File(dir)); rm(new java.io.File(ckpt))
-    }
-  }
-
   test("g_zbox_served: Morton z-range prunes the store scan to the box quadrant") {
     import graft.sources.IndexStore
     val dir = java.nio.file.Files.createTempDirectory("graft_grid_box").toString
@@ -491,7 +417,7 @@ class GeoSpec extends SparkSpec {
     val live = graft.sources.IndexStore.resolvePath(spark, dir, "cells")
     val allCells = Option(new java.io.File(live).listFiles()).toSeq.flatten
       .count(f => f.isDirectory && f.getName.startsWith("cell_z="))
-    org.apache.spark.sql.graft.GraftSql.drainListenerBus(spark)
+    org.apache.spark.sql.graft.ListenerBus.drain(spark)
     val storeScans =
       (res.queryExecution.executedPlan +:
         captured.map(_.queryExecution.executedPlan))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
-import graft.operators.{Materialize, Similarity}
+import graft.operators.{Geo, Materialize, Similarity}
 import graft.sources.IndexStore
 
 /** The build-once / serve-many contract: a fitted IVF index persisted
@@ -168,170 +168,21 @@ class IndexStoreSpec extends SparkSpec {
     }
   }
 
-  test("streaming upserts: served top-k after N microbatches == from-scratch union build") {
-    // build-once/serve-many under a GROWING corpus: fit + save on a
-    // base slice, stream the held-out vectors in 3 microbatches
-    // through the foreachBatch upsert sink (assign against FROZEN
-    // centroids, append into cell partitions), then prove the RELOADED
-    // index serves exactly what a from-scratch assignment of the full
-    // union against the same centroids serves.
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_upsert")
-      .toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ivf_ckpt")
-      .toString
-    try {
-      val all = Tables.embeddings(spark, sf)
-        .select(col("vec_id"), col("embedding"))
-      val baseIds = all.filter(col("vec_id") % 5 =!= 0)
-      val lateIds = all.filter(col("vec_id") % 5 === 0)
-      // initial offline build. buildIvfIndex fits on the full fixture
-      // — for this spec the FROZEN-CENTROID contract is what matters,
-      // not which slice fed the fit — so reuse the fitted frame and
-      // assign only the base slice into the initial store.
-      val (centFit, _) = Similarity.buildIvfIndex(spark, sf)
-      IndexStore.saveIvf(dir, centFit,
-        Similarity.assignVectors(baseIds, centFit))
-      Materialize.releaseAll(spark)
-      val (centFrozen, _) = IndexStore.loadIvf(spark, dir)
-
-      // stream the late vectors in 3 microbatches
-      val input = MemoryStream[(Long, Array[Float])](spark)
-      val q = graft.streaming.IndexUpserts.startIvfUpserts(
-        input.toDF().toDF("vec_id", "embedding"), dir, ckpt)
-      try {
-        val late = lateIds.as[(Long, Array[Float])].collect().toSeq
-        late.grouped(math.max(1, late.size / 3)).foreach { g =>
-          input.addData(g); q.processAllAvailable()
-        }
-      } finally q.stop()
-
-      // serve from the grown store
-      val queries = Tables.embeddings(spark, sf)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          Vectors.norm(col("embedding")).as("q_nrm"))
-        .filter(col("q_id") < Similarity.NumQueries)
-      val (cent2, assign2) = IndexStore.loadIvf(spark, dir)
-      val got = Similarity.annIvfServe(queries, cent2, assign2)
-        .as[(Long, Long, Int, Double)].collect().toSeq
-      // from-scratch reference: the UNION assigned against the same
-      // frozen centroids, served in-session
-      val want = Similarity.annIvfServe(queries, centFrozen,
-          Similarity.assignVectors(all, centFrozen))
-        .as[(Long, Long, Int, Double)].collect().toSeq
-      assert(got === want)
-      assert(got.nonEmpty)
-      // every appended vector actually landed in a cell partition
-      val totalPostings = spark.read
-        .parquet(IndexStore.resolvePath(spark, dir, "postings")).count()
-      assert(totalPostings === all.count())
-    } finally {
-      Materialize.releaseAll(spark)
-      rmTree(dir); rmTree(ckpt)
-    }
-  }
-
-  test("ivf-pq streaming upserts + codes compaction: served == from-scratch encode") {
-    // the compressed-index growth contract: fit + save on a base
-    // slice, stream held-out RAW vectors through the PQ upsert sink
-    // (encode against the FROZEN centroids + codebook, append codes
-    // only), then prove the reloaded store serves exactly what a
-    // from-scratch encode of the full union against the same frozen
-    // model serves — and that compaction restores one file per
-    // inverted list while updating the store MANIFEST atomically.
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_upsert")
-      .toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ivfpq_ckpt")
-      .toString
-    try {
-      val all = Tables.embeddings(spark, sf)
-        .select(col("vec_id"), col("embedding"))
-      val (cent, codebook, codesAll) = Similarity.buildIvfPqIndex(spark, sf)
-      IndexStore.saveIvfPq(dir, cent, codebook,
-        codesAll.filter(col("vec_id") % 5 =!= 0))
-      Materialize.releaseAll(spark)
-      val (centF, cbF, _) = IndexStore.loadIvfPq(spark, dir)
-
-      val late = all.filter(col("vec_id") % 5 === 0)
-        .as[(Long, Array[Float])].collect().toSeq
-      val input = MemoryStream[(Long, Array[Float])](spark)
-      val q = graft.streaming.IndexUpserts.startIvfPqUpserts(
-        input.toDF().toDF("vec_id", "embedding"), dir, ckpt)
-      try {
-        late.grouped(math.max(1, late.size / 3)).foreach { g =>
-          input.addData(g); q.processAllAvailable()
-        }
-      } finally q.stop()
-
-      val queries = Tables.embeddings(spark, sf)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          graft.functions.Vectors.norm(col("embedding")).as("q_nrm"))
-        .filter(col("q_id") < Similarity.NumQueries)
-      def serve(): Seq[(Long, Long, Int, Double)] = {
-        val (c, cb, codes) = IndexStore.loadIvfPq(spark, dir)
-        Similarity.annIvfPqServe(queries, c, cb, codes)
-          .as[(Long, Long, Int, Double)].collect().toSeq
-      }
-      val got = serve()
-      val want = Similarity.annIvfPqServe(queries, centF, cbF,
-          Similarity.encodeVectors(all, centF, cbF))
-        .as[(Long, Long, Int, Double)].collect().toSeq
-      assert(got === want && got.nonEmpty,
-        "grown store drifted from the from-scratch encode")
-      // no raw vectors leaked into the grown codes
-      def codesLive = IndexStore.resolvePath(spark, dir, "codes")
-      assert(!spark.read.parquet(codesLive).schema
-        .exists(_.dataType.typeName == "array"))
-      val rowsBefore = spark.read.parquet(codesLive).count()
-      assert(rowsBefore === all.count() * Similarity.PqM)
-
-      // compaction: one file per inverted-list dir, manifest advanced,
-      // serve byte-identical
-      IndexStore.compactIvfPq(spark, dir)
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(IndexStore.readManifest(fs, dir)
-        .exists(_.get("codes").contains("v2")), "manifest not advanced")
-      val cellDirs = new java.io.File(codesLive).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("ivf_cell="))
-      // leaves are cell/batch pairs now: compaction folds every batch
-      // except the max (the only replayable one) into -1 and leaves
-      // ONE file per remaining leaf
-      def leaves(d: java.io.File) = d.listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-      assert(cellDirs.nonEmpty && cellDirs.forall(leaves(_).forall(
-        _.listFiles().count(_.getName.endsWith(".parquet")) === 1)),
-        "compaction left a multi-file leaf")
-      val batchVals = cellDirs.flatMap(leaves).map(
-        _.getName.stripPrefix("batch=").toLong).toSet
-      assert(batchVals.subsetOf(Set(-1L, batchVals.max)),
-        s"compaction left folded batches behind: $batchVals")
-      assert(spark.read.parquet(codesLive).count() === rowsBefore)
-      assert(serve() === got, "compaction drifted serve results")
-    } finally {
-      Materialize.releaseAll(spark)
-      rmTree(dir); rmTree(ckpt)
-    }
-  }
-
   test("compaction: one file per cell, serve results byte-identical") {
+    // The store has no separate compaction step: a rebuild from the
+    // store's own contents is what rewrites a fragmented store into
+    // one file per cell. The fixture is a legacy plain store written
+    // WITHOUT clustering, so every write task leaves a file in every
+    // cell it touches.
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_compact")
       .toString
     try {
-      val all = Tables.embeddings(spark, sf)
-        .select(col("vec_id"), col("embedding"))
-      val (centFit, _) = Similarity.buildIvfIndex(spark, sf)
-      // base build + 3 appends: each append adds a file per touched cell
-      IndexStore.saveIvf(dir, centFit,
-        Similarity.assignVectors(all.filter(col("vec_id") % 4 === 0), centFit))
-      (1 to 3).foreach { r =>
-        IndexStore.appendIvf(dir, Similarity.assignVectors(
-          all.filter(col("vec_id") % 4 === r), centFit))
-      }
+      val (centFit, assignFit) = Similarity.buildIvfIndex(spark, sf)
+      centFit.write.parquet(s"$dir/centroids")
+      assignFit.select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
+        .repartition(4).write.partitionBy("cell").parquet(s"$dir/postings")
+      Materialize.releaseAll(spark)
       def livePostings = IndexStore.resolvePath(spark, dir, "postings")
       def cellDirs = new java.io.File(livePostings).listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("cell="))
@@ -341,8 +192,9 @@ class IndexStoreSpec extends SparkSpec {
           else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
         walk(d)
       }
+      assert(livePostings === s"$dir/postings")
       assert(cellDirs.exists(parquetFiles(_).length > 1),
-        "fixture never fragmented — appends landed in one file?")
+        "fixture never fragmented — the write landed in one file per cell?")
 
       val queries = Tables.embeddings(spark, sf)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -353,32 +205,43 @@ class IndexStoreSpec extends SparkSpec {
         Similarity.annIvfServe(queries, c, a)
           .as[(Long, Long, Int, Double)].collect().toSeq
       }
+      def compact(): Unit = {
+        val (c, a) = IndexStore.loadIvf(spark, dir)
+        IndexStore.saveIvf(dir, c, a)
+      }
       val before = serve()
+      assert(before.nonEmpty)
       val rowsBefore = spark.read.parquet(livePostings).count()
-      IndexStore.compactIvf(spark, dir)
+      compact()
+      assert(livePostings === s"$dir/postings_v1", s"unexpected live dir $livePostings")
       assert(cellDirs.nonEmpty &&
         cellDirs.forall(parquetFiles(_).length === 1),
         "compaction left a multi-file cell directory")
       assert(!new java.io.File(s"$dir/postings_staging").exists(),
         "staging directory survived the swap")
-      // the store is manifest-protocol (multi-component save): the
-      // MANIFEST names the compacted version, no per-component pointer
+      // a multi-component save publishes through the store MANIFEST,
+      // which names the compacted version; no per-component pointer
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(IndexStore.readManifest(fs, dir)
-          .exists(_.get("postings").contains("v2")),
-        "store manifest missing/stale after compaction")
+      val manifest = fs.open(new org.apache.hadoop.fs.Path(s"$dir/MANIFEST"))
+      val manifestText =
+        try scala.io.Source.fromInputStream(manifest, "UTF-8").mkString
+        finally manifest.close()
+      assert(manifestText.contains("postings=v1"),
+        s"store manifest missing/stale after compaction: $manifestText")
       assert(!new java.io.File(s"$dir/CURRENT_postings").exists(),
-        "superseded per-component pointer survived on a manifested store")
-      assert(!new java.io.File(s"$dir/postings").exists(),
-        "legacy plain dir survived cleanup")
+        "per-component pointer written on a manifested store")
       assert(spark.read.parquet(livePostings).count() === rowsBefore)
       assert(serve() === before, "serve results drifted across compaction")
 
       // SECOND compaction over the already-versioned store: the version
-      // counter advances, exactly one version dir remains, serve stable
-      IndexStore.compactIvf(spark, dir)
-      assert(livePostings.endsWith("postings_v3"), s"unexpected live dir $livePostings")
+      // counter advances, the legacy plain dir is reaped once it is no
+      // longer the retained previous copy, serve stable
+      compact()
+      assert(livePostings === s"$dir/postings_v2", s"unexpected live dir $livePostings")
+      assert(cellDirs.forall(parquetFiles(_).length === 1))
+      assert(!new java.io.File(s"$dir/postings").exists(),
+        "legacy plain dir survived cleanup")
       assert(serve() === before)
     } finally {
       Materialize.releaseAll(spark)
@@ -387,67 +250,73 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("compaction killed mid-swap: old version serves; re-run completes to the new") {
+    // The versioned publish a grid-store REBUILD runs (staging ->
+    // version -> pointer -> retained cleanup), killed at each step
+    // before the pointer moves. Build A holds four fifths of the
+    // points, build B all of them, so what serves tells them apart.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_crash")
+    val dir = java.nio.file.Files.createTempDirectory("graft_grid_crash")
       .toString
     try {
-      val all = Tables.embeddings(spark, sf)
-        .select(col("vec_id"), col("embedding"))
-      val (centFit, _) = Similarity.buildIvfIndex(spark, sf)
-      IndexStore.saveIvf(dir, centFit,
-        Similarity.assignVectors(all.filter(col("vec_id") % 2 === 0), centFit))
-      IndexStore.appendIvf(dir, Similarity.assignVectors(
-        all.filter(col("vec_id") % 2 === 1), centFit))
-      val queries = Tables.embeddings(spark, sf)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          Vectors.norm(col("embedding")).as("q_nrm"))
-        .filter(col("q_id") < Similarity.NumQueries)
-      def serve(): Seq[(Long, Long, Int, Double)] = {
-        val (c, a) = IndexStore.loadIvf(spark, dir)
-        Similarity.annIvfServe(queries, c, a)
-          .as[(Long, Long, Int, Double)].collect().toSeq
-      }
+      val all = spark.range(1, 2001).toDF("c_custkey")
+        .withColumn("c_acctbal", lit(1.0))
+        .withColumn("cx", expr("CAST((c_custkey * 2654435761) % 100003 AS DOUBLE) / 100003.0"))
+        .withColumn("cy", expr("CAST((c_custkey * 2246822519) % 100019 AS DOUBLE) / 100019.0"))
+      val buildA = Geo.withCells(all.filter(col("c_custkey") % 5 =!= 0))
+      val buildB = Geo.withCells(all)
+      // the first save writes the plain dir; the first rebuild
+      // publishes cells_v1 behind the CURRENT_cells pointer
+      IndexStore.saveGrid(dir, buildA)
+      IndexStore.saveGrid(dir, buildA)
+      assert(IndexStore.resolvePath(spark, dir, "cells") === s"$dir/cells_v1")
+      val sites = Seq((1L, 0.31, 0.47), (2L, 0.83, 0.12), (3L, 0.52, 0.52))
+        .toDF("s_suppkey", "sx", "sy")
+      def agg(cand: org.apache.spark.sql.DataFrame) = cand
+        .groupBy("s_suppkey").agg(count(lit(1)).as("n"))
+        .orderBy("s_suppkey").collect().toSeq
+      def serve() = agg(Geo.servedCandidates(IndexStore.loadGrid(spark, dir), sites))
       val before = serve()
+      val want = agg(Geo.gridCandidates(all, sites))
+      assert(before.nonEmpty && before != want, "builds A and B serve alike")
 
       // kill after the staging write, BEFORE the version rename: the
-      // manifest/live data are untouched — the store must serve the
-      // old content unchanged (saveIvf published postings_v1 under the
-      // store manifest)
+      // pointer/live data are untouched — the store must serve the
+      // old content unchanged
       class Killed extends RuntimeException("injected crash")
       intercept[Killed] {
-        IndexStore.compactIvf(spark, dir,
-          step => if (step == "staged:postings") throw new Killed)
+        IndexStore.saveGrid(dir, buildB,
+          step => if (step == "staged:cells") throw new Killed)
       }
-      assert(IndexStore.resolvePath(spark, dir, "postings") === s"$dir/postings_v1",
-        "crash before the version rename must leave the manifested v1 live")
+      assert(IndexStore.resolvePath(spark, dir, "cells") === s"$dir/cells_v1",
+        "crash before the version rename must leave the pointed v1 live")
       assert(serve() === before, "mid-swap crash changed what serves")
 
-      // kill after the version rename, BEFORE the manifest update: the
-      // complete v2 sits dormant, the manifest still names v1 — the
-      // store keeps serving the old version (content-identical here,
-      // compaction never changes rows)
+      // kill after the version rename, BEFORE the pointer update: the
+      // complete v2 sits dormant, the pointer still names v1 — the
+      // store keeps serving the old version
       intercept[Killed] {
-        IndexStore.compactIvf(spark, dir,
-          step => if (step == "versioned:postings") throw new Killed)
+        IndexStore.saveGrid(dir, buildB,
+          step => if (step == "versioned:cells") throw new Killed)
       }
-      assert(IndexStore.resolvePath(spark, dir, "postings") === s"$dir/postings_v1",
-        "pre-manifest crash must keep the manifested old version live")
-      assert(new java.io.File(s"$dir/postings_v2").exists(),
+      assert(IndexStore.resolvePath(spark, dir, "cells") === s"$dir/cells_v1",
+        "pre-pointer crash must keep the pointed old version live")
+      assert(new java.io.File(s"$dir/cells_v2").exists(),
         "the complete new version should sit dormant after the crash")
-      assert(serve() === before, "pre-manifest crash changed what serves")
+      assert(serve() === before, "pre-pointer crash changed what serves")
 
-      // re-run to completion: the new version serves, byte-identical
-      // content, dormant crash debris reaped, one file per cell
-      IndexStore.compactIvf(spark, dir)
-      val live = IndexStore.resolvePath(spark, dir, "postings")
-      assert(live != s"$dir/postings" && new java.io.File(live).exists())
-      assert(serve() === before, "completed compaction drifted serve results")
+      // re-run to completion: a new version serves build B, dormant
+      // crash debris reaped, one file per cell
+      IndexStore.saveGrid(dir, buildB)
+      val live = IndexStore.resolvePath(spark, dir, "cells")
+      assert(live === s"$dir/cells_v3" && new java.io.File(live).exists(),
+        "rebuild over a live store must publish a new version")
+      assert(serve() === want, "completed rebuild does not serve build B")
       // cleanup retains the version that WAS serving (v1, for readers
       // still pinned on it) and reaps the dormant crash debris (v2)
       val versionDirs = Option(new java.io.File(dir).listFiles()).toSeq.flatten
-        .filter(f => f.isDirectory && f.getName.startsWith("postings_v"))
+        .filter(f => f.isDirectory && f.getName.startsWith("cells_v"))
         .map(_.getName).sorted
-      assert(versionDirs === Seq("postings_v1", live.split('/').last),
+      assert(versionDirs === Seq("cells_v1", live.split('/').last),
         s"expected retained v1 + live, got: $versionDirs")
       def leafFiles(d: java.io.File): Seq[java.io.File] = {
         def walk(f: java.io.File): Seq[java.io.File] =
@@ -456,23 +325,9 @@ class IndexStoreSpec extends SparkSpec {
         walk(d)
       }
       assert(new java.io.File(live).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("cell="))
+        .filter(f => f.isDirectory && f.getName.startsWith("cell_z="))
         .forall(leafFiles(_).size === 1))
-
-      // a full REBUILD over the live versioned store also goes through
-      // the publish protocol: the version advances (no unlisted window,
-      // no delete-first pass over the live dir) and serve is unchanged
-      // (same inputs -> same content)
-      val vBefore = live.split("_v").last.toInt
-      IndexStore.saveIvf(dir, centFit, Similarity.assignVectors(all, centFit))
-      assert(IndexStore.resolvePath(spark, dir, "postings")
-          .endsWith(s"postings_v${vBefore + 1}"),
-        "rebuild over a live store must publish a new version")
-      assert(serve() === before, "rebuild drifted serve results")
-    } finally {
-      Materialize.releaseAll(spark)
-      rmTree(dir)
-    }
+    } finally rmTree(dir)
   }
 
   test("multi-component publish killed at EVERY step serves one consistent tuple") {
@@ -547,136 +402,6 @@ class IndexStoreSpec extends SparkSpec {
       assert(IndexStore.resolvePath(spark, dir, "postings") === s"$dir/postings_v7",
         "stale manifest entry must fall back to the highest complete version")
     } finally rmTree(dir)
-  }
-
-  test("exactly-once upserts: replaying a batchId overwrites, never duplicates") {
-    // The retry contract: foreachBatch replays a FAILED batch with the
-    // same id and the same rows. The sink must converge to the same
-    // store content whether the first attempt wrote nothing, part of
-    // the batch, or all of it. Simulated here by invoking the sink's
-    // own batch function directly: a PARTIAL first attempt (half the
-    // rows — a crash mid-write), then the full replay, then a second
-    // full replay; after each replay the store must hold exactly
-    // base + batch, and serve exactly the from-scratch assignment.
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_replay")
-      .toString
-    try {
-      val all = Tables.embeddings(spark, sf)
-        .select(col("vec_id"), col("embedding"))
-      val base = all.filter(col("vec_id") % 5 =!= 0)
-      val batch = all.filter(col("vec_id") % 5 === 0)
-      val (centFit, _) = Similarity.buildIvfIndex(spark, sf)
-      IndexStore.saveIvf(dir, centFit,
-        Similarity.assignVectors(base, centFit))
-      Materialize.releaseAll(spark)
-      val upsert = graft.streaming.IndexUpserts.upsertIvfBatch(dir) _
-
-      upsert(batch.filter(col("vec_id") % 10 === 0), 0L) // partial attempt
-      upsert(batch, 0L) // the replay: full batch, same id
-      def postings = spark.read
-        .parquet(IndexStore.resolvePath(spark, dir, "postings"))
-      assert(postings.count() === all.count(),
-        "replay after a partial attempt must overwrite, not append")
-      assert(postings.select("vec_id").distinct().count() === all.count())
-      upsert(batch, 0L) // replay of a COMPLETE attempt: still idempotent
-      assert(postings.count() === all.count(),
-        "replay of a complete batch duplicated rows")
-
-      val queries = Tables.embeddings(spark, sf)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          Vectors.norm(col("embedding")).as("q_nrm"))
-        .filter(col("q_id") < Similarity.NumQueries)
-      def serve(): Seq[(Long, Long, Int, Double)] = {
-        val (c, a) = IndexStore.loadIvf(spark, dir)
-        Similarity.annIvfServe(queries, c, a)
-          .as[(Long, Long, Int, Double)].collect().toSeq
-      }
-      val want = {
-        val (c, _) = IndexStore.loadIvf(spark, dir)
-        Similarity.annIvfServe(queries, c, Similarity.assignVectors(all, c))
-          .as[(Long, Long, Int, Double)].collect().toSeq
-      }
-      assert(serve() === want && want.nonEmpty)
-
-      // compaction preserves the property for the one batch that can
-      // still be replayed (the MAX id — commits are ordered): append
-      // batch 1, compact (folds batch 0 into the base partition,
-      // keeps batch 1 under its own), replay batch 1 — still no dup
-      val batch1 = base.filter(col("vec_id") % 7 === 0)
-      upsert(batch1, 1L) // deliberate re-add of existing ids via a new batch
-      val afterB1 = postings.count()
-      assert(afterB1 === all.count() + batch1.count())
-      IndexStore.compactIvf(spark, dir)
-      assert(postings.count() === afterB1, "compaction changed row count")
-      val batchesOnDisk = postings.select(col("batch")).distinct()
-        .collect().map(_.getAs[Number](0).longValue).toSet
-      assert(batchesOnDisk === Set(-1L, 1L),
-        s"fold should leave base + max batch, got $batchesOnDisk")
-      upsert(batch1, 1L) // the replay, post-compaction
-      assert(postings.count() === afterB1,
-        "post-compaction replay of the max batch duplicated rows")
-    } finally {
-      Materialize.releaseAll(spark)
-      rmTree(dir)
-    }
-  }
-
-  test("leases: compaction refuses under a live upsert stream; appends refuse mid-compaction") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_lease")
-      .toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_lease_ckpt")
-      .toString
-    try {
-      val all = Tables.embeddings(spark, sf)
-        .select(col("vec_id"), col("embedding"))
-      val (centFit, _) = Similarity.buildIvfIndex(spark, sf)
-      IndexStore.saveIvf(dir, centFit,
-        Similarity.assignVectors(all.filter(col("vec_id") % 2 === 0), centFit))
-      Materialize.releaseAll(spark)
-
-      val input = MemoryStream[(Long, Array[Float])](spark)
-      val q = graft.streaming.IndexUpserts.startIvfUpserts(
-        input.toDF().toDF("vec_id", "embedding"), dir, ckpt)
-      try {
-        // the stream holds the upsert lease: compaction must refuse
-        // (a mid-compaction append would vanish at version cleanup)
-        val e = intercept[IllegalStateException] {
-          IndexStore.compactIvf(spark, dir)
-        }
-        assert(e.getMessage.contains("active upsert stream"))
-      } finally q.stop()
-      // stopped stream -> stale lease: the next compaction clears it
-      // and proceeds
-      IndexStore.compactIvf(spark, dir)
-      assert(!new java.io.File(s"$dir/LEASE_upsert").exists(),
-        "stale upsert lease survived compaction")
-
-      // a (hard-killed) compaction's lease blocks batch appends
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$dir/LEASE_compact"), "compact")
-      // assign against the store's own persisted centroids (centFit's
-      // localCheckpoint blocks were released above)
-      val centStore = spark.read
-        .parquet(IndexStore.resolvePath(spark, dir, "centroids"))
-        .select(col("c_id"), col("c_emb"), col("c_nrm"))
-      val assigned = Similarity.assignVectors(
-        all.filter(col("vec_id") % 2 === 1), centStore)
-      val e2 = intercept[IllegalStateException] {
-        IndexStore.appendIvf(dir, assigned, 0L)
-      }
-      assert(e2.getMessage.contains("compacting"))
-      IndexStore.clearCompactionLease(spark, dir)
-      IndexStore.appendIvf(dir, assigned, 0L) // now lands
-      assert(spark.read
-        .parquet(IndexStore.resolvePath(spark, dir, "postings"))
-        .count() === all.count())
-    } finally {
-      Materialize.releaseAll(spark)
-      rmTree(dir); rmTree(ckpt)
-    }
   }
 
   test("store writes cluster at a PINNED partition count (AQE must not coalesce)") {

@@ -31,7 +31,7 @@ trait SparkSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     val out = try {
       val r = body
-      org.apache.spark.sql.graft.GraftSql.drainListenerBus(spark)
+      org.apache.spark.sql.graft.ListenerBus.drain(spark)
       r
     } finally spark.sparkContext.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._

@@ -62,7 +62,9 @@ class WordScoreSpec extends SparkSpec {
   test("tokenizer parity with java.util.StringTokenizer (property)") {
     val genText: Gen[String] =
       Gen.listOf(Gen.oneOf(Gen.alphaNumStr.suchThat(_.nonEmpty),
-        Gen.oneOf(" ", "\t", "\n", "\r", "\f", "  ", " \t"),
+        Gen.oneOf(" ", "\t", "\n", "\r", "\f", "  ", " \t",
+          // not StringTokenizer delimiters: these must never split
+          "\u000B", "\u0085", "\u00A0", "\u2028", "\u3000"),
         Gen.const("a.b,c!"))).map(_.mkString)
     // 500 deterministic samples, checked in ONE Spark job.
     val samples = (1 to 500).flatMap(i =>
@@ -124,6 +126,24 @@ class WordScoreSpec extends SparkSpec {
       val out = scoreFn(bad, col("stars"), col("text"))
         .as[(String, Long)].collect().toMap
       assert(out === Map("fine" -> 2L, "words" -> 2L), name)
+    }
+  }
+
+  test("missing or null text fails the job like the reference's NPE") {
+    // the reference NPEs on value.get("text") (:116) whatever the stars
+    for ((line, i) <- Seq("{\"stars\": 5.0}",
+        "{\"stars\": 5.0, \"text\": null}").zipWithIndex) {
+      val dir = Files.createTempDirectory(s"notext$i").toFile
+      Files.writeString(new java.io.File(dir, "r.json").toPath, line + "\n")
+      val bad = ReviewSource.reviews(spark, dir.getAbsolutePath)
+      for ((name, scoreFn) <- scorers) {
+        val e = intercept[Exception] {
+          scoreFn(bad, col("stars"), col("text")).collect()
+        }
+        assert(e.getMessage.contains("`text`") ||
+          Option(e.getCause).exists(_.getMessage.contains("`text`")),
+          s"$name on $line")
+      }
     }
   }
 

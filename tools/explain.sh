@@ -1,0 +1,30 @@
+#!/bin/bash
+# Plan dump for plan-identity checks: run graft.Explain on a fixture dir
+# (one <query>.txt of explain("formatted") per query), then mask the
+# tokens that change from run to run, so that `diff -r` of two dumps
+# shows only real plan changes.
+# Usage: tools/explain.sh <sfDir> <outDir> [query,query,...]
+set -e
+if [ $# -lt 2 ] || [ $# -gt 3 ]; then
+  echo "Usage: tools/explain.sh <sfDir> <outDir> [query,query,...]" >&2
+  exit 2
+fi
+SF=$(realpath -m "$1")
+OUT=$(realpath -m "$2")
+cd "$(dirname "$0")/.."
+sbt -batch compile -warn >/dev/null
+. tools/env.sh
+rm -rf "$OUT"
+java $ADD_OPENS -Xmx$HEAP \
+  -cp "$CP" graft.Explain "$SF" "$OUT" ${3:+"$3"}
+# Masked: expression ids (#12), plan ids (plan_id=3), the local-<millis>
+# application id in temp table and path names (local_<millis> once
+# sanitized), lambda class names, numbered lambda variables (x_632) and
+# object hash codes (…@1b2c3d4).
+find "$OUT" -name '*.txt' -exec sed -i -E \
+  -e 's/#[0-9]+/#N/g' \
+  -e 's/plan_id=[0-9]+/plan_id=N/g' \
+  -e 's/local([-_])[0-9]+/local\1N/g' \
+  -e 's/\$\$Lambda[^ ,)@]*/$$Lambda/g' \
+  -e 's/(lambda [a-z]+)_[0-9]+/\1_N/g' \
+  -e 's/@[0-9a-f]{4,}\b/@H/g' {} +
