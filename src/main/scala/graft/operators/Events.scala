@@ -969,7 +969,6 @@ object Events {
     val w = Window.partitionBy("user_id").orderBy(col("ts_ns"), col("event_id"))
       .rowsBetween(-(AnomalyWin - 1), Window.currentRow)
     val n = lit(AnomalyWin.toDouble)
-    val mean = col("ws") / n
     val vr = col("wss") / n - (col("ws") / n) * (col("ws") / n)
     val z = round((col("vd") - col("ws") / n) / sqrt(vr), 6)
     load(s, d)

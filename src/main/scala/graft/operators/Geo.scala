@@ -166,20 +166,8 @@ object Geo {
     * z-code plant on the partition column — metric-asserted in
     * GeoSpec); the store's other cells are never opened.
     */
-  // keyed by (dataset, applicationId): two concurrent sessions on
-  // the same dataset (e.g. Verify and Bench) each get their own
-  // store, so one session's Overwrite can never delete files out
-  // from under the other's in-flight scan. Registered with
-  // [[graft.sources.TmpStores]] — a JVM shutdown hook removes the
-  // app-scoped copy on exit instead of leaking one per run.
-  private def servedStoreDir(s: SparkSession, d: String): String =
-    graft.sources.TmpStores.register(new java.io.File(
-      new java.io.File(System.getProperty("java.io.tmpdir")),
-      "graft_index_grid_" + d.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + s.sparkContext.applicationId).getPath)
-
   def gGridServed(s: SparkSession, d: String): DataFrame = {
-    val dir = servedStoreDir(s, d)
+    val dir = graft.sources.TmpStores.dir(s, "grid", d)
     graft.sources.IndexStore.saveGrid(dir, withCells(custPoints(s, d)))
     val loaded = graft.sources.IndexStore.loadGrid(s, dir)
     radiusAgg(servedCandidates(loaded, suppPoints(s, d)))
@@ -193,12 +181,11 @@ object Geo {
     * whichever query runs first produces the same bytes.
     */
   private def ensureGridStore(s: SparkSession, d: String): String = {
-    val dir = servedStoreDir(s, d)
-    // IndexStore's own resolution (manifest -> pointer -> version ->
-    // plain) through the Hadoop FileSystem API: a store left in the
+    val dir = graft.sources.TmpStores.dir(s, "grid", d)
+    // IndexStore's own resolution (manifest -> highest complete
+    // version) through the Hadoop FileSystem API: a store left in the
     // versions-only crash state, or on a non-local filesystem, is
-    // correctly detected — a java.io.File check on the plain dir saw
-    // neither and triggered a spurious rebuild
+    // correctly detected
     if (!graft.sources.IndexStore.componentExists(s, dir, "cells"))
       graft.sources.IndexStore.saveGrid(dir, withCells(custPoints(s, d)))
     dir

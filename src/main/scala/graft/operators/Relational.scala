@@ -170,6 +170,8 @@ object Relational {
     // app-scoped and TmpStores-registered (same lifecycle as the index
     // stores — the previous shape keyed only on the dataset and leaked
     // a copy per run forever), so nothing persists across driver runs.
+    // not TmpStores.dir: this suffix also names the catalog tables
+    // below, so a different form would change the query's plan
     val suffix = (d + "_" + s.sparkContext.applicationId)
       .replaceAll("[^A-Za-z0-9_]", "_")
     val scratch = graft.sources.TmpStores.register(new java.io.File(

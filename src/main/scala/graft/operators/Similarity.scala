@@ -228,19 +228,6 @@ object Similarity {
     annIvfFrom(base, cent, ivfAssignment(base, cent), nProbe)
   }
 
-  /** Build the servable IVF index for a corpus: the fitted K-row
-    * centroid frame and the corpus cell assignment (vec_id, embedding,
-    * nrm, cell) — the two frames [[graft.sources.IndexStore]] persists
-    * and [[annIvfServe]] serves from. Public so a deployment can build
-    * once and serve many times without re-fitting.
-    */
-  def buildIvfIndex(s: SparkSession, d: String,
-      iters: Int = LloydIters): (DataFrame, DataFrame) = {
-    val base = withNorm(s, d)
-    val cent = fittedCentroids(base, iters)
-    (cent, ivfAssignment(base, cent))
-  }
-
   /** IVF search over ALREADY-BUILT index frames — callers that sweep a
     * parameter ([[sProbeCurve]]'s nProbe arms) pass pinned cent/assign
     * so the fit and the corpus assignment run once, not once per arm.
@@ -250,12 +237,10 @@ object Similarity {
     annIvfServe(base.filter(col("vec_id") < NumQueries)
       .toDF("q_id", "q_emb", "q_nrm"), cent, assign, nProbe)
 
-  /** Serve IVF queries from index frames (built in-session or reloaded
-    * via [[graft.sources.IndexStore.loadIvf]]): `queries` carries
-    * (q_id, q_emb, q_nrm). When the postings frame comes from the
-    * cell-partitioned store, the `probes.join(assign, "cell")` below
-    * is what partition pruning keys on — only probed cells' files are
-    * read at serve time.
+  /** Serve IVF queries from in-session index frames: `queries`
+    * carries (q_id, q_emb, q_nrm). Only probed cells' postings join
+    * the queries — the same probe rule and static cell filter
+    * [[annIvfPqServe]] uses to prune the persisted `ivf_cell=` store.
     */
   def annIvfServe(queries: DataFrame, cent: DataFrame,
       assign: DataFrame, nProbe: Int = NumProbes): DataFrame = {
@@ -283,8 +268,9 @@ object Similarity {
     // matches because InsertWindowGroupLimit rewrites it after capture;
     // the planner inserts the filter and then silently degrades it to
     // dynamicpruningexpression(true), reading ALL K inverted lists
-    // (measured — the executed-scan metric assertion in IndexStoreSpec
-    // now pins the static filter's partition count instead). Cost: the
+    // (measured — IndexStoreSpec's executed-scan metric assertion pins
+    // the same static filter's partition count on the IVF-PQ codes
+    // store, see annIvfPqServe). Cost: the
     // probe pipeline (a |Q|·K broadcast cross, map-side) runs once
     // extra to produce the literal list.
     val probedCells = probes.select("cell").distinct()
@@ -372,26 +358,16 @@ object Similarity {
   val LshPlanes = 8     // sign-random-projection hyperplanes
   val LshBands = 2      // 2 bands × 4 bits → 16 buckets per band
 
-  /** Signed projection of `emb` onto deterministic ±1 hyperplane j —
-    * the weights come from pure integer arithmetic (a Knuth-style
+  /** Signed projection of `embedding` onto deterministic ±1 hyperplane
+    * j — the weights come from pure integer arithmetic (a Knuth-style
     * multiplicative mix mod 97), so both engines derive bit-identical
     * planes with no lookup table and no crypto in the per-row loop.
     */
-  private def planeDot(emb: Column, j: Int): Column =
-    aggregate(sequence(lit(1), lit(64)), lit(0.0), (acc, i) =>
-      acc + element_at(emb, i).cast("double") *
-        when(pmod(pmod(i.cast("long") * 2654435761L + lit(j * 40503L), lit(97L)), lit(2L)) === 0,
-          lit(1.0)).otherwise(lit(-1.0)))
-
   private def planeDotSql(j: Int): String =
     s"""list_reduce(list_transform(range(1, 65), i ->
        |        CAST(embedding[i] AS DOUBLE) *
        |        (CASE WHEN ((i * 2654435761 + ${j * 40503}) % 97) % 2 = 0
        |              THEN 1.0 ELSE -1.0 END)), (a, b) -> a + b)""".stripMargin
-
-  private def bandBucket(emb: Column, b: Int): Column =
-    concat((4 * b until 4 * b + 4).map(j =>
-      when(planeDot(emb, j) >= 0, "1").otherwise("0")): _*)
 
   private def bandBucketSql(b: Int): String =
     (4 * b until 4 * b + 4).map(j =>
@@ -1175,8 +1151,8 @@ object Similarity {
   /** Driver-gated persistence proof: [[sIvfPq]]'s exact pipeline, but
     * the index frames ROUND-TRIP THROUGH PARQUET between build and
     * serve — [[graft.sources.IndexStore.saveIvfPq]] to a deterministic
-    * scratch dir (keyed by the fixture dir so SF variants never
-    * collide; Overwrite, like any index rebuild), then `loadIvfPq`,
+    * scratch dir ([[graft.sources.TmpStores.dir]]; published through
+    * the store's manifest swap, like any index rebuild), then `loadIvfPq`,
     * then [[annIvfPqServe]] over the RELOADED frames only. The oracle
     * is byte-for-byte [[sIvfPqSql]] — the round-trip is lossless by
     * construction — so the DuckDB hash gate now certifies the
@@ -1197,14 +1173,7 @@ object Similarity {
     */
   def sIvfPqServed(s: SparkSession, d: String): DataFrame = {
     val (cent, codebook, codes) = buildIvfPqIndex(s, d)
-    // keyed by (dataset, applicationId) so concurrent sessions on the
-    // same dataset can't race a reader against the Overwrite's delete;
-    // registered with TmpStores so the app-scoped copy is removed on
-    // JVM exit instead of leaking one per run
-    val dir = graft.sources.TmpStores.register(new java.io.File(
-      new java.io.File(System.getProperty("java.io.tmpdir")),
-      "graft_index_ivfpq_" + d.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + s.sparkContext.applicationId).getPath)
+    val dir = graft.sources.TmpStores.dir(s, "ivfpq", d)
     IndexStore.saveIvfPq(dir, cent, codebook, codes)
     val (lCent, lCodebook, lCodes) = IndexStore.loadIvfPq(s, dir)
     val queries = withNorm(s, d).filter(col("vec_id") < NumQueries)

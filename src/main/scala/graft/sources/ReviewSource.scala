@@ -41,10 +41,40 @@ object ReviewSource {
   * (no `coalesce(1)`): the range exchange already orders part files
   * within and across each other, so the sorted output is the
   * lexicographic concatenation of parts.
+  *
+  * An existing output directory is REPLACED, atomically: the job writes
+  * a hidden sibling `.{name}.staging-{uuid}` and only a successful job
+  * swaps it in (old output renamed aside, new renamed in, old
+  * deleted). A failed job deletes its sibling and leaves the previous
+  * output untouched; Spark's own overwrite mode deletes the old
+  * directory before the write job runs, so a failure inside that job
+  * would lose the last good result. The reference's `FileOutputFormat`
+  * refuses an existing output directory instead.
   */
 object TsvSink {
-  def write(scored: DataFrame, path: String): Unit =
-    scored.select(
+  def write(scored: DataFrame, path: String): Unit = {
+    val conf = scored.sparkSession.sparkContext.hadoopConfiguration
+    val out = new org.apache.hadoop.fs.Path(path)
+    val fs = out.getFileSystem(conf)
+    val target = fs.makeQualified(out)
+    def sibling(tag: String) = new org.apache.hadoop.fs.Path(target.getParent,
+      s".${target.getName}.$tag-${java.util.UUID.randomUUID()}")
+    val staging = sibling("staging")
+    try scored.select(
         concat_ws("\t", col("score").cast("string"), col("word")).as("value"))
-      .coalesce(1).write.mode("overwrite").text(path)
+      .coalesce(1).write.text(staging.toString)
+    catch { case e: Throwable => fs.delete(staging, true); throw e }
+    val old = sibling("old")
+    val hadOld = fs.exists(target)
+    if (hadOld && !fs.rename(target, old)) {
+      fs.delete(staging, true)
+      throw new java.io.IOException(s"cannot move the previous output $target aside")
+    }
+    if (!fs.rename(staging, target)) {
+      if (hadOld) fs.rename(old, target)
+      fs.delete(staging, true)
+      throw new java.io.IOException(s"cannot move the new output into $target")
+    }
+    if (hadOld) fs.delete(old, true)
+  }
 }

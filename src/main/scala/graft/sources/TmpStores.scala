@@ -17,6 +17,20 @@ object TmpStores {
   private val dirs = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
   private val hooked = new java.util.concurrent.atomic.AtomicBoolean(false)
 
+  /** The app-scoped tmp directory of index store `kind` over fixture
+    * dir `sfDir`, registered:
+    * `java.io.tmpdir/graft_index_{kind}_{sanitized sfDir}_{appId}`.
+    * Keyed by (dataset, applicationId), so two concurrent sessions on
+    * the same dataset (e.g. Verify and Bench) each get their own store
+    * and one session's rebuild never deletes files out from under the
+    * other's in-flight scan.
+    */
+  def dir(s: org.apache.spark.sql.SparkSession, kind: String, sfDir: String): String =
+    register(new java.io.File(
+      new java.io.File(System.getProperty("java.io.tmpdir")),
+      s"graft_index_${kind}_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_") +
+        "_" + s.sparkContext.applicationId).getPath)
+
   def register(dir: String): String = {
     dirs.put(dir, true)
     if (hooked.compareAndSet(false, true))

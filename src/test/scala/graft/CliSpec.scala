@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** End-to-end CLI contract (`WordScoreMain` in a forked JVM, like a real
   * submission): usage → exit 2 with no Spark startup; a good run → exit
   * 0, tab-delimited `score\tword` output sorted by score descending,
-  * with `-D` conf overrides accepted ToolRunner-style.
+  * with `-D` conf overrides accepted ToolRunner-style; a failed rerun →
+  * exit 1 with the previous output intact.
   */
 class CliSpec extends AnyFunSuite {
 
@@ -57,5 +58,40 @@ class CliSpec extends AnyFunSuite {
       "great" -> 2L, "food" -> 2L, "awful" -> -2L, "service" -> -2L))
     val scores = parsed.map(_._2)
     assert(scores.sliding(2).forall { case Array(a, b) => a >= b; case _ => true })
+  }
+
+  test("failed rerun exits 1 and keeps the previous output byte-identical") {
+    val dir = Files.createTempDirectory("cli_in").toFile
+    val input = new java.io.File(dir, "reviews.json").toPath
+    Files.writeString(input, "{\"stars\": 5.0, \"text\": \"great food\"}\n")
+    val parent = Files.createTempDirectory("cli_out").toFile
+    val out = parent.getAbsolutePath + "/scores"
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete()
+    }
+    try {
+      def partFiles = Option(new java.io.File(out).listFiles()).toSeq.flatten
+        .filter(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
+      val (code, log) = runMain(Seq(dir.getAbsolutePath, out))
+      assert(code === 0, log.takeRight(1500))
+      assert(partFiles.size === 1, s"expected one part file in $out")
+      val golden = Files.readAllBytes(partFiles.head.toPath)
+      assert(golden.nonEmpty)
+      // the rerun into the SAME output fails on a malformed JSON line.
+      // With AQE off the whole job runs inside the write command, so the
+      // failure comes after the point where an overwrite-mode write has
+      // already deleted the old output (with AQE on, the scan's shuffle
+      // stage fails before the write command starts).
+      Files.writeString(input, "{\"stars\": 1.0, \"text\": \"awful\"}\n{not json\n")
+      val (code2, log2) = runMain(Seq(
+        "-Dspark.sql.adaptive.enabled=false", dir.getAbsolutePath, out))
+      assert(code2 === 1, log2.takeRight(1500))
+      assert(partFiles.size === 1, "failed rerun deleted the previous output")
+      assert(java.util.Arrays.equals(Files.readAllBytes(partFiles.head.toPath), golden),
+        "failed rerun changed the previous output")
+      // and no partial output or staging sibling is left behind
+      assert(parent.list().toSeq === Seq("scores"),
+        s"leftovers beside the output: ${parent.list().toSeq}")
+    } finally { rm(dir); rm(parent) }
   }
 }

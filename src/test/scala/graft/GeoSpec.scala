@@ -156,7 +156,7 @@ class GeoSpec extends SparkSpec {
         .withColumn("cy", expr("CAST((c_custkey * 2246822519) % 100019 AS DOUBLE) / 100019.0"))
       IndexStore.saveGrid(dir, Geo.withCells(probe))
       // single-level Morton layout: one cell_z= dir per occupied cell
-      val allCells = Option(new java.io.File(s"$dir/cells").listFiles())
+      val allCells = Option(new java.io.File(s"$dir/cells_v1").listFiles())
         .toSeq.flatten.count(f => f.isDirectory && f.getName.startsWith("cell_z="))
       import spark.implicits._
       val sites = Seq((1L, 0.31, 0.47), (2L, 0.83, 0.12))
@@ -166,7 +166,7 @@ class GeoSpec extends SparkSpec {
         .orderBy("s_suppkey")
       served.collect()
       val scans = scansUnder(served.queryExecution.executedPlan)
-        .filter(_.relation.location.rootPaths.exists(_.toString.endsWith("/cells")))
+        .filter(_.relation.location.rootPaths.exists(_.toString.endsWith("/cells_v1")))
       assert(scans.nonEmpty, "grid store scan not found")
       // numPartitions counts leaf cell_z= directories read
       val read = scans.map(_.metrics("numPartitions").value).max
@@ -281,7 +281,7 @@ class GeoSpec extends SparkSpec {
         .withColumn("cx", expr("CAST((c_custkey * 2654435761) % 100003 AS DOUBLE) / 100003.0"))
         .withColumn("cy", expr("CAST((c_custkey * 2246822519) % 100019 AS DOUBLE) / 100019.0"))
       IndexStore.saveGrid(dir, Geo.withCells(probe))
-      val allCells = Option(new java.io.File(s"$dir/cells").listFiles())
+      val allCells = Option(new java.io.File(s"$dir/cells_v1").listFiles())
         .toSeq.flatten.count(f => f.isDirectory && f.getName.startsWith("cell_z="))
       val agg = Geo.boxAgg(IndexStore.loadGrid(spark, dir))
       val got = agg.collect().toSeq
@@ -296,7 +296,7 @@ class GeoSpec extends SparkSpec {
       // executed scan must read at most those 16 cell dirs, never the
       // ~400-dir store
       val scans = scansUnder(agg.queryExecution.executedPlan)
-        .filter(_.relation.location.rootPaths.exists(_.toString.endsWith("/cells")))
+        .filter(_.relation.location.rootPaths.exists(_.toString.endsWith("/cells_v1")))
       assert(scans.nonEmpty, "grid store scan not found")
       val read = scans.map(_.metrics("numPartitions").value).max
       assert(read <= 16, s"read $read cell dirs for the box (expected <= 16)")
@@ -411,9 +411,7 @@ class GeoSpec extends SparkSpec {
     // partitions than the store holds (the brute-fallback arm
     // legitimately scans everything, but its site set is empty at
     // fixture scale)
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_index_grid_" + sf.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + spark.sparkContext.applicationId).getPath
+    val dir = graft.sources.TmpStores.dir(spark, "grid", sf)
     val live = graft.sources.IndexStore.resolvePath(spark, dir, "cells")
     val allCells = Option(new java.io.File(live).listFiles()).toSeq.flatten
       .count(f => f.isDirectory && f.getName.startsWith("cell_z="))
@@ -602,9 +600,7 @@ class GeoSpec extends SparkSpec {
     val res = Geo.gZboxMulti(spark, sf)
     val row = res.collect().head
     assert(row.getLong(0) > 0)
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_index_grid_" + sf.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + spark.sparkContext.applicationId).getPath
+    val dir = graft.sources.TmpStores.dir(spark, "grid", sf)
     val live = graft.sources.IndexStore.resolvePath(spark, dir, "cells")
     val onDisk = Option(new java.io.File(live).listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.startsWith("cell_z="))

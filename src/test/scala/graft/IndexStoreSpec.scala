@@ -6,55 +6,17 @@ import graft.functions.Vectors
 import graft.operators.{Geo, Materialize, Similarity}
 import graft.sources.IndexStore
 
-/** The build-once / serve-many contract: a fitted IVF index persisted
-  * by IndexStore and reloaded in a (conceptually) different session
-  * must serve EXACTLY the results the in-session build serves — and
-  * the cell-partitioned postings layout must actually exist on disk,
+/** The build-once / serve-many contract: a fitted IVF-PQ index
+  * persisted by IndexStore and reloaded in a (conceptually) different
+  * session must serve EXACTLY the results the in-session build serves —
+  * and the cell-partitioned codes layout must actually exist on disk,
   * because that layout is the 100 TB serving story (only probed cells'
-  * directories are read).
+  * directories are read). Every save, of either store, publishes
+  * through one staged, versioned MANIFEST swap, killed here at each
+  * step.
   */
 class IndexStoreSpec extends SparkSpec {
   import spark.implicits._
-
-  test("ivf index round-trips through parquet and serves identical results") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_index")
-      .toString
-    try {
-      val (cent, assign) = Similarity.buildIvfIndex(spark, sf)
-      IndexStore.saveIvf(dir, cent, assign)
-      // the reference answer from the same in-memory index frames
-      val queries = Tables.embeddings(spark, sf)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          Vectors.norm(col("embedding")).as("q_nrm"))
-        .filter(col("q_id") < Similarity.NumQueries)
-      val want = Similarity.annIvfServe(queries, cent, assign)
-        .as[(Long, Long, Int, Double)].collect().toSeq
-      Materialize.releaseAll(spark) // in-memory fit dropped: reload must stand alone
-      // serve from the RELOADED index — no re-fit, no corpus-side Lloyd
-      val (cent2, assign2) = IndexStore.loadIvf(spark, dir)
-      val got = Similarity.annIvfServe(queries, cent2, assign2)
-        .as[(Long, Long, Int, Double)].collect().toSeq
-      assert(got === want)
-      assert(got.nonEmpty && got.map(_._1).distinct.size.toLong ===
-        Similarity.NumQueries)
-      // the inverted-list layout is real: one directory per cell
-      // (resolvePath: saves publish versioned dirs under a manifest)
-      val cells = Option(new java.io.File(
-          IndexStore.resolvePath(spark, dir, "postings")).listFiles())
-        .toSeq.flatten.filter(f => f.isDirectory &&
-          f.getName.startsWith("cell="))
-      assert(cells.nonEmpty && cells.size <= Similarity.IvfK,
-        s"expected cell=* partition dirs, found ${cells.map(_.getName)}")
-      // and the served rows match the oracle-checked s_ann_ivf query
-      // (same fit parameters), tying the persisted path to the gate
-      val oracleChecked = Similarity.sAnnIvf(spark, sf)
-        .as[(Long, Long, Int, Double)].collect().toSeq
-      assert(got === oracleChecked)
-    } finally {
-      Materialize.releaseAll(spark)
-      rmTree(dir)
-    }
-  }
 
   test("ivf-pq index round-trips as codes only and serves == s_ivf_pq") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_index")
@@ -112,25 +74,25 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("scan metrics: a served query READS only the probed cells, counted") {
-    // The DPP pin above checks the PLAN SHAPE; this pins the effect
-    // with executed-scan METRICS: the partition count the postings
-    // scan actually read must equal the number of DISTINCT PROBED
-    // cells (nProbe-bounded), strictly fewer than the K cell
-    // directories on disk. A regression that keeps the plan string
-    // ("dynamicpruning") but stops pruning files (e.g. a filter pushed
-    // to the wrong side) now fails on the measured count.
+    // The round-trip test checks pruning happened; this pins the effect
+    // with executed-scan METRICS: the partition count the codes scan
+    // actually read must equal the number of DISTINCT PROBED cells
+    // (nProbe-bounded), strictly fewer than the K cell directories on
+    // disk. A regression that keeps the plan shape but stops pruning
+    // files (e.g. a filter pushed to the wrong side) fails on the
+    // measured count.
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_metrics")
       .toString
     try {
-      val (cent, assign) = Similarity.buildIvfIndex(spark, sf)
-      IndexStore.saveIvf(dir, cent, assign)
+      val (cent, codebook, codes) = Similarity.buildIvfPqIndex(spark, sf)
+      IndexStore.saveIvfPq(dir, cent, codebook, codes)
       Materialize.releaseAll(spark)
-      val (cent2, assign2) = IndexStore.loadIvf(spark, dir)
+      val (cent2, cb2, codes2) = IndexStore.loadIvfPq(spark, dir)
       val queries = Tables.embeddings(spark, sf)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
           Vectors.norm(col("embedding")).as("q_nrm"))
         .filter(col("q_id") < Similarity.NumQueries)
-      val served = Similarity.annIvfServe(queries, cent2, assign2)
+      val served = Similarity.annIvfPqServe(queries, cent2, cb2, codes2)
       assert(served.collect().nonEmpty)
 
       // expected: the distinct probed cells, recomputed with the serve
@@ -146,17 +108,17 @@ class IndexStoreSpec extends SparkSpec {
         .withColumn("prn", row_number().over(wP))
         .filter(col("prn") <= Similarity.NumProbes)
         .select("c_id").distinct().count()
-      val postingsLive = IndexStore.resolvePath(spark, dir, "postings")
-      val cellsOnDisk = Option(new java.io.File(postingsLive)
+      val codesLive = IndexStore.resolvePath(spark, dir, "codes")
+      val cellsOnDisk = Option(new java.io.File(codesLive)
         .listFiles()).toSeq.flatten
-        .count(f => f.isDirectory && f.getName.startsWith("cell="))
+        .count(f => f.isDirectory && f.getName.startsWith("ivf_cell="))
 
-      // the executed postings scan, dug out of the adaptive plan
-      val postingsScan = scansUnder(served.queryExecution.executedPlan)
+      // the executed codes scan, dug out of the adaptive plan
+      val codesScan = scansUnder(served.queryExecution.executedPlan)
         .filter(_.relation.location.rootPaths
-          .exists(_.toString.endsWith(postingsLive.split('/').last)))
-      assert(postingsScan.nonEmpty, "postings scan not found in plan")
-      val readPartitions = postingsScan
+          .exists(_.toString.endsWith(codesLive.split('/').last)))
+      assert(codesScan.nonEmpty, "codes scan not found in plan")
+      val readPartitions = codesScan
         .map(_.metrics("numPartitions").value).max
       assert(readPartitions === probedCells,
         s"scan read $readPartitions cell dirs; probes cover $probedCells")
@@ -171,28 +133,31 @@ class IndexStoreSpec extends SparkSpec {
   test("compaction: one file per cell, serve results byte-identical") {
     // The store has no separate compaction step: a rebuild from the
     // store's own contents is what rewrites a fragmented store into
-    // one file per cell. The fixture is a legacy plain store written
-    // WITHOUT clustering, so every write task leaves a file in every
-    // cell it touches.
+    // one file per cell. The fixture is a v1 store whose codes were
+    // written WITHOUT clustering, so every write task leaves a file in
+    // every cell it touches, named live by a hand-written MANIFEST.
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_compact")
       .toString
     try {
-      val (centFit, assignFit) = Similarity.buildIvfIndex(spark, sf)
-      centFit.write.parquet(s"$dir/centroids")
-      assignFit.select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
-        .repartition(4).write.partitionBy("cell").parquet(s"$dir/postings")
+      val (centFit, cbFit, codesFit) = Similarity.buildIvfPqIndex(spark, sf)
+      centFit.write.parquet(s"$dir/centroids_v1")
+      cbFit.write.parquet(s"$dir/codebook_v1")
+      codesFit.repartition(4).write.partitionBy("ivf_cell")
+        .parquet(s"$dir/codes_v1")
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/MANIFEST"),
+        "centroids=v1\ncodebook=v1\ncodes=v1\n")
       Materialize.releaseAll(spark)
-      def livePostings = IndexStore.resolvePath(spark, dir, "postings")
-      def cellDirs = new java.io.File(livePostings).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("cell="))
+      def liveCodes = IndexStore.resolvePath(spark, dir, "codes")
+      def cellDirs = new java.io.File(liveCodes).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("ivf_cell="))
       def parquetFiles(d: java.io.File): Seq[java.io.File] = {
         def walk(f: java.io.File): Seq[java.io.File] =
           if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
           else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
         walk(d)
       }
-      assert(livePostings === s"$dir/postings")
+      assert(liveCodes === s"$dir/codes_v1")
       assert(cellDirs.exists(parquetFiles(_).length > 1),
         "fixture never fragmented — the write landed in one file per cell?")
 
@@ -201,47 +166,41 @@ class IndexStoreSpec extends SparkSpec {
           Vectors.norm(col("embedding")).as("q_nrm"))
         .filter(col("q_id") < Similarity.NumQueries)
       def serve(): Seq[(Long, Long, Int, Double)] = {
-        val (c, a) = IndexStore.loadIvf(spark, dir)
-        Similarity.annIvfServe(queries, c, a)
+        val (c, cb, codes) = IndexStore.loadIvfPq(spark, dir)
+        Similarity.annIvfPqServe(queries, c, cb, codes)
           .as[(Long, Long, Int, Double)].collect().toSeq
       }
       def compact(): Unit = {
-        val (c, a) = IndexStore.loadIvf(spark, dir)
-        IndexStore.saveIvf(dir, c, a)
+        val (c, cb, codes) = IndexStore.loadIvfPq(spark, dir)
+        IndexStore.saveIvfPq(dir, c, cb, codes)
       }
+      def manifestText: String =
+        new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(s"$dir/MANIFEST")), "UTF-8")
       val before = serve()
       assert(before.nonEmpty)
-      val rowsBefore = spark.read.parquet(livePostings).count()
+      val rowsBefore = spark.read.parquet(liveCodes).count()
       compact()
-      assert(livePostings === s"$dir/postings_v1", s"unexpected live dir $livePostings")
+      assert(liveCodes === s"$dir/codes_v2", s"unexpected live dir $liveCodes")
       assert(cellDirs.nonEmpty &&
         cellDirs.forall(parquetFiles(_).length === 1),
         "compaction left a multi-file cell directory")
-      assert(!new java.io.File(s"$dir/postings_staging").exists(),
+      assert(!new java.io.File(s"$dir/codes_staging").exists(),
         "staging directory survived the swap")
-      // a multi-component save publishes through the store MANIFEST,
-      // which names the compacted version; no per-component pointer
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val manifest = fs.open(new org.apache.hadoop.fs.Path(s"$dir/MANIFEST"))
-      val manifestText =
-        try scala.io.Source.fromInputStream(manifest, "UTF-8").mkString
-        finally manifest.close()
-      assert(manifestText.contains("postings=v1"),
+      // the store MANIFEST names the compacted version
+      assert(manifestText.contains("codes=v2"),
         s"store manifest missing/stale after compaction: $manifestText")
-      assert(!new java.io.File(s"$dir/CURRENT_postings").exists(),
-        "per-component pointer written on a manifested store")
-      assert(spark.read.parquet(livePostings).count() === rowsBefore)
+      assert(spark.read.parquet(liveCodes).count() === rowsBefore)
       assert(serve() === before, "serve results drifted across compaction")
 
-      // SECOND compaction over the already-versioned store: the version
-      // counter advances, the legacy plain dir is reaped once it is no
-      // longer the retained previous copy, serve stable
+      // SECOND compaction: the version counter advances, the
+      // fragmented v1 is reaped once it is no longer the retained
+      // previous copy, serve stable
       compact()
-      assert(livePostings === s"$dir/postings_v2", s"unexpected live dir $livePostings")
+      assert(liveCodes === s"$dir/codes_v3", s"unexpected live dir $liveCodes")
       assert(cellDirs.forall(parquetFiles(_).length === 1))
-      assert(!new java.io.File(s"$dir/postings").exists(),
-        "legacy plain dir survived cleanup")
+      assert(!new java.io.File(s"$dir/codes_v1").exists(),
+        "fragmented v1 survived cleanup")
       assert(serve() === before)
     } finally {
       Materialize.releaseAll(spark)
@@ -250,10 +209,10 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("compaction killed mid-swap: old version serves; re-run completes to the new") {
-    // The versioned publish a grid-store REBUILD runs (staging ->
-    // version -> pointer -> retained cleanup), killed at each step
-    // before the pointer moves. Build A holds four fifths of the
-    // points, build B all of them, so what serves tells them apart.
+    // The publish a grid-store save runs (staging -> version ->
+    // manifest -> retained cleanup), killed at each step. Build A
+    // holds four fifths of the points, build B all of them, so what
+    // serves tells them apart.
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_grid_crash")
       .toString
@@ -264,9 +223,16 @@ class IndexStoreSpec extends SparkSpec {
         .withColumn("cy", expr("CAST((c_custkey * 2246822519) % 100019 AS DOUBLE) / 100019.0"))
       val buildA = Geo.withCells(all.filter(col("c_custkey") % 5 =!= 0))
       val buildB = Geo.withCells(all)
-      // the first save writes the plain dir; the first rebuild
-      // publishes cells_v1 behind the CURRENT_cells pointer
-      IndexStore.saveGrid(dir, buildA)
+      class Killed extends RuntimeException("injected crash")
+
+      // a killed FIRST save leaves no readable store; the re-run
+      // publishes cells_v1
+      intercept[Killed] {
+        IndexStore.saveGrid(dir, buildA,
+          step => if (step == "staged:cells") throw new Killed)
+      }
+      assert(!IndexStore.componentExists(spark, dir, "cells"),
+        "a first save killed before its version rename left a readable store")
       IndexStore.saveGrid(dir, buildA)
       assert(IndexStore.resolvePath(spark, dir, "cells") === s"$dir/cells_v1")
       val sites = Seq((1L, 0.31, 0.47), (2L, 0.83, 0.12), (3L, 0.52, 0.52))
@@ -280,44 +246,53 @@ class IndexStoreSpec extends SparkSpec {
       assert(before.nonEmpty && before != want, "builds A and B serve alike")
 
       // kill after the staging write, BEFORE the version rename: the
-      // pointer/live data are untouched — the store must serve the
-      // old content unchanged
-      class Killed extends RuntimeException("injected crash")
+      // manifest and live data are untouched — the store must serve
+      // the old content unchanged
       intercept[Killed] {
         IndexStore.saveGrid(dir, buildB,
           step => if (step == "staged:cells") throw new Killed)
       }
       assert(IndexStore.resolvePath(spark, dir, "cells") === s"$dir/cells_v1",
-        "crash before the version rename must leave the pointed v1 live")
+        "crash before the version rename must leave the manifested v1 live")
       assert(serve() === before, "mid-swap crash changed what serves")
 
-      // kill after the version rename, BEFORE the pointer update: the
-      // complete v2 sits dormant, the pointer still names v1 — the
+      // kill after the version rename, BEFORE the manifest swap: the
+      // complete v2 sits dormant, the manifest still names v1 — the
       // store keeps serving the old version
       intercept[Killed] {
         IndexStore.saveGrid(dir, buildB,
           step => if (step == "versioned:cells") throw new Killed)
       }
       assert(IndexStore.resolvePath(spark, dir, "cells") === s"$dir/cells_v1",
-        "pre-pointer crash must keep the pointed old version live")
+        "pre-manifest crash must keep the manifested old version live")
       assert(new java.io.File(s"$dir/cells_v2").exists(),
         "the complete new version should sit dormant after the crash")
-      assert(serve() === before, "pre-pointer crash changed what serves")
+      assert(serve() === before, "pre-manifest crash changed what serves")
+
+      // kill right after the manifest swap, before cleanup: the new
+      // version serves build B, the old and dormant dirs still exist
+      intercept[Killed] {
+        IndexStore.saveGrid(dir, buildB,
+          step => if (step == "manifest") throw new Killed)
+      }
+      assert(IndexStore.resolvePath(spark, dir, "cells") === s"$dir/cells_v3",
+        "a crash after the manifest swap must leave the new version live")
+      assert(serve() === want, "post-manifest crash does not serve build B")
 
       // re-run to completion: a new version serves build B, dormant
       // crash debris reaped, one file per cell
       IndexStore.saveGrid(dir, buildB)
       val live = IndexStore.resolvePath(spark, dir, "cells")
-      assert(live === s"$dir/cells_v3" && new java.io.File(live).exists(),
+      assert(live === s"$dir/cells_v4" && new java.io.File(live).exists(),
         "rebuild over a live store must publish a new version")
       assert(serve() === want, "completed rebuild does not serve build B")
-      // cleanup retains the version that WAS serving (v1, for readers
-      // still pinned on it) and reaps the dormant crash debris (v2)
+      // cleanup retains the version that WAS serving (v3, for readers
+      // still pinned on it) and reaps the crash debris (v1, v2)
       val versionDirs = Option(new java.io.File(dir).listFiles()).toSeq.flatten
         .filter(f => f.isDirectory && f.getName.startsWith("cells_v"))
         .map(_.getName).sorted
-      assert(versionDirs === Seq("cells_v1", live.split('/').last),
-        s"expected retained v1 + live, got: $versionDirs")
+      assert(versionDirs === Seq("cells_v3", live.split('/').last),
+        s"expected retained v3 + live, got: $versionDirs")
       def leafFiles(d: java.io.File): Seq[java.io.File] = {
         def walk(f: java.io.File): Seq[java.io.File] =
           if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
@@ -332,35 +307,41 @@ class IndexStoreSpec extends SparkSpec {
 
   test("multi-component publish killed at EVERY step serves one consistent tuple") {
     // The store-level manifest contract: a rebuild over a live
-    // (centroids, postings) store, killed at each named phase of the
-    // publish protocol, must leave the store serving EITHER the old
+    // (centroids, codebook, codes) store, killed at each named phase of
+    // the publish protocol, must leave the store serving EITHER the old
     // tuple or the new tuple — never a new model over old lists, never
-    // postings without centroids. Content markers: build A has 2
-    // centroids + 4 postings, build B has 3 centroids + 6 postings.
+    // codes without centroids. Content markers: build A has 2
+    // centroids + 3 codebook rows + 4 codes, build B 3 + 4 + 6.
     import spark.implicits._
-    def cents(k: Int) = (0 until k)
-      .map(i => (i.toLong, Array(i.toFloat, 1f), 1.0))
-      .toDF("c_id", "c_emb", "c_nrm")
-    def posts(n: Int) = (0 until n)
-      .map(i => (i.toLong, Array(i.toFloat, 1f), 1.0, i % 2))
-      .toDF("vec_id", "embedding", "nrm", "cell")
-    val tuples = Map("A" -> (2L, 4L), "B" -> (3L, 6L))
-    def servedTuple(dir: String): (Long, Long) = {
-      val (c, a) = IndexStore.loadIvf(spark, dir)
-      (c.count(), a.count())
+    val tuples = Map("A" -> (2L, 3L, 4L), "B" -> (3L, 4L, 6L))
+    def save(dir: String, build: String,
+        onStep: String => Unit = _ => ()): Unit = {
+      val (k, nCb, nCodes) = tuples(build)
+      IndexStore.saveIvfPq(dir = dir,
+        cent = (0 until k.toInt).map(i => (i.toLong, Array(i.toFloat, 1f), 1.0))
+          .toDF("c_id", "c_emb", "c_nrm"),
+        codebook = (0 until nCb.toInt).map(i => (0, i, Array(i.toFloat, 1f)))
+          .toDF("m", "cell", "c_emb"),
+        codes = (0 until nCodes.toInt).map(i => (i.toLong, 0, i % 3, i % 2))
+          .toDF("vec_id", "m", "cell", "ivf_cell"),
+        onStep = onStep)
+    }
+    def servedTuple(dir: String): (Long, Long, Long) = {
+      val (c, cb, codes) = IndexStore.loadIvfPq(spark, dir)
+      (c.count(), cb.count(), codes.count())
     }
     class Killed extends RuntimeException("injected crash")
     val steps = Seq("staged:centroids", "versioned:centroids",
-      "staged:postings", "versioned:postings", "manifest", "cleaned")
+      "staged:codebook", "versioned:codebook",
+      "staged:codes", "versioned:codes", "manifest", "cleaned")
     for (killAt <- steps) {
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft_manifest_kill").toString
       try {
-        IndexStore.saveIvf(dir, cents(2), posts(4)) // complete build A
+        save(dir, "A") // complete build A
         assert(servedTuple(dir) === tuples("A"))
         intercept[Killed] { // build B, killed at `killAt`
-          IndexStore.saveIvf(dir, cents(3), posts(6),
-            step => if (step == killAt) throw new Killed)
+          save(dir, "B", step => if (step == killAt) throw new Killed)
         }
         val got = servedTuple(dir)
         assert(tuples.values.toSet.contains(got),
@@ -372,7 +353,7 @@ class IndexStoreSpec extends SparkSpec {
         assert(got === tuples(wantKey),
           s"kill at '$killAt' should leave build $wantKey serving, got $got")
         // and a re-run always completes to B
-        IndexStore.saveIvf(dir, cents(3), posts(6))
+        save(dir, "B")
         assert(servedTuple(dir) === tuples("B"),
           s"re-run after kill at '$killAt' failed to converge")
       } finally rmTree(dir)
@@ -383,23 +364,13 @@ class IndexStoreSpec extends SparkSpec {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_resolve").toString
     try {
-      val df = Seq((1L, "x")).toDF("vec_id", "v")
-      // legacy PLAIN store (the pre-versioning save layout)
-      df.write.parquet(s"$dir/postings")
-      assert(IndexStore.resolvePath(spark, dir, "postings") === s"$dir/postings")
-      // a pointer naming a MISSING version dir (external cleanup /
+      // a manifest naming a MISSING version dir (external cleanup /
       // tampering) must not strand readers on a nonexistent path:
-      // resolution falls back to the highest complete version, then
-      // the plain dir
-      df.write.parquet(s"$dir/postings_v7")
+      // resolution falls back to the highest complete version
+      Seq((1L, "x")).toDF("vec_id", "v").write.parquet(s"$dir/codes_v7")
       java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$dir/CURRENT_postings"), "v99")
-      assert(IndexStore.resolvePath(spark, dir, "postings") === s"$dir/postings_v7",
-        "stale pointer must fall back to the highest complete version")
-      // a manifest naming a missing version falls back the same way
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$dir/MANIFEST"), "postings=v42\n")
-      assert(IndexStore.resolvePath(spark, dir, "postings") === s"$dir/postings_v7",
+        java.nio.file.Paths.get(s"$dir/MANIFEST"), "codes=v42\n")
+      assert(IndexStore.resolvePath(spark, dir, "codes") === s"$dir/codes_v7",
         "stale manifest entry must fall back to the highest complete version")
     } finally rmTree(dir)
   }
@@ -430,47 +401,38 @@ class IndexStoreSpec extends SparkSpec {
 
   test("version retention: a reader pinned on the old version survives one publish") {
     // The reader contract: publish keeps the previously-serving
-    // directory for `spark.graft.store.retainVersions` (default 1)
-    // more publishes, so a scan that resolved just before a publish
-    // completes instead of losing its files mid-flight; the publish
-    // after that reaps it (retention bounded).
+    // directory for one more publish, so a scan that resolved just
+    // before a publish completes instead of losing its files
+    // mid-flight; the publish after that reaps it (retention bounded).
     import spark.implicits._
-    def posts(n: Int) = (0 until n)
-      .map(i => (i.toLong, Array(i.toFloat, 1f), 1.0, i % 2))
-      .toDF("vec_id", "embedding", "nrm", "cell")
-    def cents(k: Int) = (0 until k)
-      .map(i => (i.toLong, Array(i.toFloat, 1f), 1.0))
-      .toDF("c_id", "c_emb", "c_nrm")
+    def publish(dir: String, n: Int): Unit = IndexStore.saveIvfPq(dir,
+      Seq((0L, Array(0f, 1f), 1.0)).toDF("c_id", "c_emb", "c_nrm"),
+      Seq((0, 0, Array(0f, 1f))).toDF("m", "cell", "c_emb"),
+      (0 until n).map(i => (i.toLong, 0, 0, i % 2))
+        .toDF("vec_id", "m", "cell", "ivf_cell"))
     val dir = java.nio.file.Files.createTempDirectory("graft_retain").toString
     try {
-      IndexStore.saveIvf(dir, cents(2), posts(4)) // postings_v1 serves
-      val pinnedPath = IndexStore.resolvePath(spark, dir, "postings")
-      assert(pinnedPath.endsWith("postings_v1"))
+      publish(dir, 4) // codes_v1 serves
+      val pinnedPath = IndexStore.resolvePath(spark, dir, "codes")
+      assert(pinnedPath.endsWith("codes_v1"))
       val pinned = spark.read.parquet(pinnedPath) // resolved, not yet run
-      IndexStore.saveIvf(dir, cents(2), posts(6)) // v2 publishes
-      assert(IndexStore.resolvePath(spark, dir, "postings")
-        .endsWith("postings_v2"))
+      publish(dir, 6) // v2 publishes
+      assert(IndexStore.resolvePath(spark, dir, "codes")
+        .endsWith("codes_v2"))
       // the pinned reader's directory survived the publish: the scan
       // completes with the OLD content
       assert(pinned.count() === 4L,
         "pinned reader lost its version directory across a publish")
-      assert(new java.io.File(s"$dir/postings_v1").exists())
+      assert(new java.io.File(s"$dir/codes_v1").exists())
       // the next publish reaps v1 (bounded retention: newest superseded
       // only), keeps v2 for ITS pinned readers
-      IndexStore.saveIvf(dir, cents(2), posts(8))
-      assert(!new java.io.File(s"$dir/postings_v1").exists(),
+      publish(dir, 8)
+      assert(!new java.io.File(s"$dir/codes_v1").exists(),
         "retention unbounded: v1 survived two publishes")
-      assert(new java.io.File(s"$dir/postings_v2").exists(),
+      assert(new java.io.File(s"$dir/codes_v2").exists(),
         "previously-serving v2 should be retained")
       assert(spark.read.parquet(
-        IndexStore.resolvePath(spark, dir, "postings")).count() === 8L)
-      // retainVersions=0 restores immediate reaping
-      spark.conf.set("spark.graft.store.retainVersions", "0")
-      try {
-        IndexStore.saveIvf(dir, cents(2), posts(10))
-        assert(!new java.io.File(s"$dir/postings_v3").exists(),
-          "retainVersions=0 must reap the superseded version immediately")
-      } finally spark.conf.unset("spark.graft.store.retainVersions")
+        IndexStore.resolvePath(spark, dir, "codes")).count() === 8L)
     } finally rmTree(dir)
   }
 
