@@ -19,7 +19,7 @@ import graft.sources.{ReviewSource, TsvSink}
   * malformed records, like the reference). Output: one tab-delimited
   * `score<TAB>word` file sorted by score descending — byte-compatible
   * with the reference's TextOutputFormat result (`:192,206-216`),
-  * produced by a parallel range sort instead of its single reducer.
+  * sorted in one partition like its single reducer.
   */
 object WordScoreMain {
 

@@ -12,11 +12,10 @@ import org.apache.spark.sql.functions._
   * there is NO case folding or punctuation stripping.
   *
   * `split` on the delimiter-class regex can produce ONE leading empty
-  * string (when the text starts with a delimiter) and — unlike
-  * StringTokenizer — a trailing empty string is already suppressed by
-  * Java's split semantics only for trailing case; we therefore filter
-  * empties explicitly after exploding. Everything here stays inside
-  * whole-stage codegen (built-in functions only).
+  * string (when the text starts with a delimiter) and, with Spark's
+  * `limit = -1`, one trailing empty string (when it ends with one);
+  * [[tokens]] therefore removes empties from the array before it is
+  * exploded.
   */
 object Text {
 
@@ -42,11 +41,13 @@ object Text {
     (0 until n).map(k => s"$toks[$idx+$k]").mkString(" || ' ' || ")
 
   /** `text` → array<string> of tokens, empties removed.
-    * filter(..) is a higher-order function, codegen-friendly, and keeps
-    * the empty-drop INSIDE the array (no row explosion needed first).
+    * `array_remove` is exact here: `split` never yields a null element,
+    * and a null `text` gives null either way. Unlike a `filter` lambda
+    * (`ArrayFilter` is interpreted, a `CodegenFallback`), it compiles
+    * inside the whole-stage codegen span.
     */
   def tokens(text: Column): Column =
-    filter(split(text, DelimRegex), t => length(t) > 0)
+    array_remove(split(text, DelimRegex), lit(""))
 
   /** One row per token. Use after selecting the carry-along columns. */
   def explodedWord(text: Column): Column = explode(tokens(text))

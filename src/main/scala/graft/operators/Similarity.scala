@@ -239,8 +239,7 @@ object Similarity {
 
   /** Serve IVF queries from in-session index frames: `queries`
     * carries (q_id, q_emb, q_nrm). Only probed cells' postings join
-    * the queries — the same probe rule and static cell filter
-    * [[annIvfPqServe]] uses to prune the persisted `ivf_cell=` store.
+    * the queries — the same probe rule [[annIvfPqServe]] uses.
     */
   def annIvfServe(queries: DataFrame, cent: DataFrame,
       assign: DataFrame, nProbe: Int = NumProbes): DataFrame = {
@@ -255,32 +254,14 @@ object Similarity {
       .filter(col("prn") <= nProbe)
       .select(col("q_id"), col("q_emb"), col("q_nrm"), col("c_id").as("cell"))
 
-    // search only the probed cells. probes is |Q|·nProbe rows ALWAYS —
-    // broadcast for the pairing join — and the cell restriction is
-    // pushed as a STATIC partition filter: the distinct probed cells
-    // (≤ K values, bounded by the INDEX, never the corpus or the query
-    // batch) are collected once driver-side and planted as a literal
-    // isin, so a cell-partitioned postings store prunes at FILE
-    // LISTING time, deterministically. Dynamic partition pruning is
-    // structurally unavailable here — Spark's DPP-reuse match compares
-    // the captured subquery plan against the join's build side, and a
-    // window-derived build side (the top-nProbe rank filter) never
-    // matches because InsertWindowGroupLimit rewrites it after capture;
-    // the planner inserts the filter and then silently degrades it to
-    // dynamicpruningexpression(true), reading ALL K inverted lists
-    // (measured — IndexStoreSpec's executed-scan metric assertion pins
-    // the same static filter's partition count on the IVF-PQ codes
-    // store, see annIvfPqServe). Cost: the
-    // probe pipeline (a |Q|·K broadcast cross, map-side) runs once
-    // extra to produce the literal list.
-    val probedCells = probes.select("cell").distinct()
-      .collect().map(_.get(0)).toSeq
+    // search only the probed cells: probes is |Q|·nProbe rows ALWAYS,
+    // broadcast for the pairing join on cell, which keeps only the
+    // postings of probed cells
     val cos = round(
       Vectors.cosineWithNorms(Vectors.dot(col("q_emb"), col("embedding")),
         col("q_nrm"), col("nrm")), 6)
     val wRank = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    assign.filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(probes), "cell")
+    assign.join(broadcast(probes), "cell")
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id").as("n_id"), cos.as("cos"))
       .withColumn("rnk", row_number().over(wRank))
@@ -1010,8 +991,8 @@ object Similarity {
     // the codes side: ≤ K values collected once driver-side (bounded
     // by the index), pruning a cell-partitioned codes store at file
     // listing. DPP cannot do this here — its broadcast-reuse match
-    // fails against window-derived build sides (see annIvfServe) and
-    // degrades to dynamicpruningexpression(true), reading all K lists.
+    // fails against window-derived build sides and degrades to
+    // dynamicpruningexpression(true), reading all K lists.
     val probedCells = probes.select("ivf_cell").distinct()
       .collect().map(_.get(0)).toSeq
     val dtab = pqSubOf(queries.select(col("q_id").as("vec_id"),
@@ -2690,12 +2671,11 @@ object Similarity {
     val cent = fittedCentroids(base, LloydIters)
     val assign = ivfAssignment(base, cent)
     // ONE pass for all three probe depths instead of three sequential
-    // annIvf arms (each with its own probe window, driver-side
-    // probed-cell collect, corpus join and rank window): probe ranks
-    // are computed once to depth 3, and a candidate reached through
-    // its query's rank-r cell participates in every arm p >= r (cells
-    // are disjoint — a corpus vector has exactly one cell — so the
-    // explode can never duplicate a (q, n) pair within an arm). The
+    // annIvf arms (each with its own probe window, corpus join and rank
+    // window): probe ranks are computed once to depth 3, and a candidate
+    // reached through its query's rank-r cell participates in every arm
+    // p >= r (cells are disjoint — a corpus vector has exactly one cell —
+    // so the explode can never duplicate a (q, n) pair within an arm). The
     // per-arm rank window and recall join then key on the arm column.
     // Per-arm shortlists are provably the old ones: arm p's candidate
     // set {prn <= p} and rank order (cos desc, n_id) are unchanged.
@@ -2713,18 +2693,14 @@ object Similarity {
       .filter(col("prn") <= maxP)
       .select(col("q_id"), col("q_emb"), col("q_nrm"),
         col("c_id").as("cell"), col("prn"))
-    // static partition-filter plant, same contract as annIvfServe: the
-    // depth-3 cell set is a superset of every arm's; arm membership is
-    // enforced exactly by the prn-derived arm column below
-    val probedCells = probes.select("cell").distinct()
-      .collect().map(_.get(0)).toSeq
+    // the depth-3 cell set is a superset of every arm's; arm membership
+    // is enforced exactly by the prn-derived arm column below
     val cos = round(
       Vectors.cosineWithNorms(Vectors.dot(col("q_emb"), col("embedding")),
         col("q_nrm"), col("nrm")), 6)
     val wRank = Window.partitionBy("nprobe", "q_id")
       .orderBy(col("cos").desc, col("n_id"))
-    val approx = assign.filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(probes), "cell")
+    val approx = assign.join(broadcast(probes), "cell")
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id").as("n_id"), cos.as("cos"),
         explode(sequence(col("prn"), lit(maxP))).as("nprobe"))

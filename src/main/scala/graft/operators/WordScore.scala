@@ -13,21 +13,22 @@ import graft.functions.Text
   * output sorted by score descending (`:54-56`, job 2 at `:187-216`).
   *
   * The reference's two MapReduce jobs + materialized SequenceFile
-  * (`:170-176`) collapse into ONE lazy DAG with two exchanges:
+  * (`:170-176`) collapse into ONE lazy DAG with one exchange:
   *   scan → project → generate(explode) → partial sum → shuffle(word)
-  *   → final sum → range-partitioned parallel sort.
+  *   → final sum → one-partition sort.
   * The hand-written combiner (`:180-181`) is Spark's automatic partial
-  * HashAggregate; the single-reducer total order (`:209-213`) becomes a
-  * parallel SortExec over a range exchange — same total order, no
-  * single-node bottleneck at 100 TB.
+  * HashAggregate. The sort is the reference's single reducer
+  * (`:209-213`): `coalesce(1)` is a narrow dependency, so one task reads
+  * the vocabulary-sized shuffle, finishes the sums and sorts them. The
+  * output is the one file the sink writes anyway, so a range exchange
+  * (and the sampling job that plans it) would buy nothing.
   *
-  * Scale notes: the vocabulary is tiny relative to the corpus, so the
-  * partial aggregate collapses virtually all rows map-side; the final
-  * shuffle moves only |vocab| × shufflePartitions rows. Hot words ("the")
-  * are therefore NOT a skew problem post-combine; see
-  * [[wordScoreSalted]] for the explicit two-phase pattern used when the
-  * grouped value state is too big to pre-aggregate (kept for the 100 TB
-  * design discussion and exercised by the bench).
+  * The vocabulary is tiny relative to the corpus, so the partial
+  * aggregate collapses virtually all rows map-side; the shuffle moves
+  * only |vocab| × shufflePartitions rows. Hot words ("the") are
+  * therefore NOT a skew problem post-combine; see [[wordScoreSalted]]
+  * for the explicit two-phase pattern used when the grouped value state
+  * is too big to pre-aggregate.
   */
 object WordScore {
 
@@ -55,14 +56,17 @@ object WordScore {
           .otherwise(text)).as("word"))
       .select(Text.starsModifierStrict(col("stars_in")).as("modifier"), col("word"))
 
-  /** (stars, text) → (word, score), sorted score desc, word asc (the
+  /** (word, score) → one partition sorted score desc, word asc (the
     * deterministic tie-break the reference explicitly allows, `:56`).
     */
+  private def sortedOnePartition(scores: DataFrame): DataFrame =
+    scores.coalesce(1).sortWithinPartitions(col("score").desc, col("word"))
+
+  /** (stars, text) → (word, score), sorted score desc, word asc. */
   def score(reviews: DataFrame, stars: Column, text: Column): DataFrame =
-    wordModifiers(reviews, stars, text)
+    sortedOnePartition(wordModifiers(reviews, stars, text)
       .groupBy("word")
-      .agg(sum("modifier").as("score"))
-      .orderBy(col("score").desc, col("word"))
+      .agg(sum("modifier").as("score")))
 
   /** Flagship over the `documents` fixture: the fixture has no ratings,
     * so a deterministic star rating is derived from `doc_id`
@@ -81,7 +85,7 @@ object WordScore {
 
   /** Same result via the explicit two-phase (salted) aggregation.
     *
-    * Pattern for 100 TB skew: salt the hot key space, partially
+    * Pattern for key skew: salt the hot key space, partially
     * aggregate per (word, salt), then de-salt and finish. For a plain
     * `sum` Spark's map-side partial agg already does this implicitly;
     * the salted form is the drop-in shape for aggregations whose
@@ -90,11 +94,10 @@ object WordScore {
     */
   def wordScoreSalted(reviews: DataFrame, stars: Column, text: Column,
                       saltBuckets: Int = 16): DataFrame =
-    wordModifiers(reviews, stars, text)
+    sortedOnePartition(wordModifiers(reviews, stars, text)
       .withColumn("salt", pmod(spark_partition_id(), lit(saltBuckets)))
       .groupBy("word", "salt")
       .agg(sum("modifier").as("partial"))
       .groupBy("word")
-      .agg(sum("partial").as("score"))
-      .orderBy(col("score").desc, col("word"))
+      .agg(sum("partial").as("score")))
 }

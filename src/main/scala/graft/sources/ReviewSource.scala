@@ -33,14 +33,10 @@ object ReviewSource {
   * (TextOutputFormat after the KV inversion, `ComputeWordScore.java:
   * 192,206-216`), one file (1 reducer, `:209-213`).
   *
-  * The single file reproduces the reference's one-file contract — and,
-  * like its single reducer, serializes the FINAL sort stage:
-  * `coalesce(1)` is a narrow dependency, so one task merges all range
-  * partitions. All upstream work (scan, tokenize, aggregate, shuffle)
-  * stays distributed. At 100 TB drop the single-file requirement
-  * (no `coalesce(1)`): the range exchange already orders part files
-  * within and across each other, so the sorted output is the
-  * lexicographic concatenation of parts.
+  * `coalesce(1)` guarantees the one file for any frame. On the word-score
+  * path it does nothing: `WordScore` already sorts in one partition,
+  * like the reference's single reducer. All upstream work (scan,
+  * tokenize, aggregate, shuffle) stays distributed.
   *
   * An existing output directory is REPLACED, atomically: the job writes
   * a hidden sibling `.{name}.staging-{uuid}` and only a successful job

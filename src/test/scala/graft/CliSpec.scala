@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs.withTempDir
+
 /** End-to-end CLI contract (`WordScoreMain` in a forked JVM, like a real
   * submission): usage → exit 2 with no Spark startup; a good run → exit
   * 0, tab-delimited `score\tword` output sorted by score descending,
@@ -39,59 +41,59 @@ class CliSpec extends AnyFunSuite {
   }
 
   test("golden run: exit 0, sorted score\\tword output, -D accepted") {
-    val dir = Files.createTempDirectory("cli_in").toFile
-    Files.writeString(new java.io.File(dir, "reviews.json").toPath,
-      """{"stars": 5.0, "text": "great great food"}
-        |{"stars": 1.0, "text": "great awful service"}
-        |""".stripMargin)
-    val out = Files.createTempDirectory("cli_out").toFile.getAbsolutePath + "/scores"
-    val (code, log) = runMain(Seq(
-      "-Dspark.sql.shuffle.partitions=2", dir.getAbsolutePath, out))
-    assert(code === 0, log.takeRight(1500))
-    val files = new java.io.File(out).listFiles()
-      .filter(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
-    assert(files.length === 1, s"expected one part file in $out")
-    val lines = Files.readAllLines(files.head.toPath).toArray.map(_.toString)
-    // great = 2·(+2) + (−2) = 2, food = +2 (tied); awful = service = −2
-    val parsed = lines.map { l => val Array(sc, w) = l.split("\t"); (w, sc.toLong) }
-    assert(parsed.toMap === Map(
-      "great" -> 2L, "food" -> 2L, "awful" -> -2L, "service" -> -2L))
-    val scores = parsed.map(_._2)
-    assert(scores.sliding(2).forall { case Array(a, b) => a >= b; case _ => true })
+    withTempDir("cli_in") { dir =>
+      withTempDir("cli_out") { parent =>
+        Files.writeString(new java.io.File(dir, "reviews.json").toPath,
+          """{"stars": 5.0, "text": "great great food"}
+            |{"stars": 1.0, "text": "great awful service"}
+            |""".stripMargin)
+        val out = parent.getAbsolutePath + "/scores"
+        val (code, log) = runMain(Seq(
+          "-Dspark.sql.shuffle.partitions=2", dir.getAbsolutePath, out))
+        assert(code === 0, log.takeRight(1500))
+        val files = new java.io.File(out).listFiles()
+          .filter(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
+        assert(files.length === 1, s"expected one part file in $out")
+        val lines = Files.readAllLines(files.head.toPath).toArray.map(_.toString)
+        // great = 2·(+2) + (−2) = 2, food = +2 (tied); awful = service = −2
+        val parsed = lines.map { l => val Array(sc, w) = l.split("\t"); (w, sc.toLong) }
+        assert(parsed.toMap === Map(
+          "great" -> 2L, "food" -> 2L, "awful" -> -2L, "service" -> -2L))
+        val scores = parsed.map(_._2)
+        assert(scores.sliding(2).forall { case Array(a, b) => a >= b; case _ => true })
+      }
+    }
   }
 
   test("failed rerun exits 1 and keeps the previous output byte-identical") {
-    val dir = Files.createTempDirectory("cli_in").toFile
-    val input = new java.io.File(dir, "reviews.json").toPath
-    Files.writeString(input, "{\"stars\": 5.0, \"text\": \"great food\"}\n")
-    val parent = Files.createTempDirectory("cli_out").toFile
-    val out = parent.getAbsolutePath + "/scores"
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete()
+    withTempDir("cli_in") { dir =>
+      withTempDir("cli_out") { parent =>
+        val input = new java.io.File(dir, "reviews.json").toPath
+        Files.writeString(input, "{\"stars\": 5.0, \"text\": \"great food\"}\n")
+        val out = parent.getAbsolutePath + "/scores"
+        def partFiles = Option(new java.io.File(out).listFiles()).toSeq.flatten
+          .filter(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
+        val (code, log) = runMain(Seq(dir.getAbsolutePath, out))
+        assert(code === 0, log.takeRight(1500))
+        assert(partFiles.size === 1, s"expected one part file in $out")
+        val golden = Files.readAllBytes(partFiles.head.toPath)
+        assert(golden.nonEmpty)
+        // the rerun into the SAME output fails on a malformed JSON line.
+        // With AQE off the whole job runs inside the write command, so the
+        // failure comes after the point where an overwrite-mode write has
+        // already deleted the old output (with AQE on, the scan's shuffle
+        // stage fails before the write command starts).
+        Files.writeString(input, "{\"stars\": 1.0, \"text\": \"awful\"}\n{not json\n")
+        val (code2, log2) = runMain(Seq(
+          "-Dspark.sql.adaptive.enabled=false", dir.getAbsolutePath, out))
+        assert(code2 === 1, log2.takeRight(1500))
+        assert(partFiles.size === 1, "failed rerun deleted the previous output")
+        assert(java.util.Arrays.equals(Files.readAllBytes(partFiles.head.toPath), golden),
+          "failed rerun changed the previous output")
+        // and no partial output or staging sibling is left behind
+        assert(parent.list().toSeq === Seq("scores"),
+          s"leftovers beside the output: ${parent.list().toSeq}")
+      }
     }
-    try {
-      def partFiles = Option(new java.io.File(out).listFiles()).toSeq.flatten
-        .filter(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
-      val (code, log) = runMain(Seq(dir.getAbsolutePath, out))
-      assert(code === 0, log.takeRight(1500))
-      assert(partFiles.size === 1, s"expected one part file in $out")
-      val golden = Files.readAllBytes(partFiles.head.toPath)
-      assert(golden.nonEmpty)
-      // the rerun into the SAME output fails on a malformed JSON line.
-      // With AQE off the whole job runs inside the write command, so the
-      // failure comes after the point where an overwrite-mode write has
-      // already deleted the old output (with AQE on, the scan's shuffle
-      // stage fails before the write command starts).
-      Files.writeString(input, "{\"stars\": 1.0, \"text\": \"awful\"}\n{not json\n")
-      val (code2, log2) = runMain(Seq(
-        "-Dspark.sql.adaptive.enabled=false", dir.getAbsolutePath, out))
-      assert(code2 === 1, log2.takeRight(1500))
-      assert(partFiles.size === 1, "failed rerun deleted the previous output")
-      assert(java.util.Arrays.equals(Files.readAllBytes(partFiles.head.toPath), golden),
-        "failed rerun changed the previous output")
-      // and no partial output or staging sibling is left behind
-      assert(parent.list().toSeq === Seq("scores"),
-        s"leftovers beside the output: ${parent.list().toSeq}")
-    } finally { rm(dir); rm(parent) }
   }
 }

@@ -173,10 +173,7 @@ class GeoSpec extends SparkSpec {
       assert(read <= 18, s"read $read cell dirs for 2 sites (expected <= 18)")
       assert(allCells > 18, s"store only has $allCells cell dirs; test vacuous")
     } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete()
-      }
-      rm(new java.io.File(dir))
+      TempDirs.rm(new java.io.File(dir))
     }
   }
 
@@ -302,10 +299,7 @@ class GeoSpec extends SparkSpec {
       assert(read <= 16, s"read $read cell dirs for the box (expected <= 16)")
       assert(allCells > 100, s"store only has $allCells cell dirs; test vacuous")
     } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete()
-      }
-      rm(new java.io.File(dir))
+      TempDirs.rm(new java.io.File(dir))
     }
   }
 

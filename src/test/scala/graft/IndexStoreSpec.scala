@@ -455,10 +455,5 @@ class IndexStoreSpec extends SparkSpec {
     self ++ kids.flatMap(scansUnder)
   }
 
-  private def rmTree(dir: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete()
-    }
-    rm(new java.io.File(dir))
-  }
+  private def rmTree(dir: String): Unit = TempDirs.rm(new java.io.File(dir))
 }

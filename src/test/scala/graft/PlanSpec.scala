@@ -50,13 +50,18 @@ class PlanSpec extends SparkSpec {
     val p = plan(WordScore.flagship(Tables.documents(spark, sf)))
     // AQE final plans mark WholeStageCodegen stages as "*(n)"
     assert(p.contains("WholeStageCodegen") || "\\*\\(\\d+\\)".r.findFirstIn(p).isDefined)
-    // exactly the two semantic exchanges (agg shuffle + sort range
-    // exchange) plus the deliberate scan-spread — no accidental extras.
-    // (AQE dumps repeat the initial plan below the final one — count
-    // only the final section.)
-    val finalSection = p.split("== Initial Plan ==").head
+    // exactly the one semantic exchange (agg shuffle) plus the
+    // deliberate scan-spread: the final sort runs in one partition, like
+    // the reference's single reducer, so no range exchange. (AQE dumps
+    // repeat the initial plan below the final one — count only the
+    // final section.)
+    val finalSection = finalOnly(p)
     val exchanges = "Exchange ".r.findAllIn(finalSection).length
-    assert(exchanges <= 3, s"unexpected exchange count $exchanges:\n" + finalSection.take(1200))
+    assert(exchanges === 2, s"unexpected exchange count $exchanges:\n" + finalSection.take(1200))
+    assert(!finalSection.contains("rangepartitioning"), finalSection.take(1200))
+    // the tokenizer is a built-in with generated code, not an
+    // interpreted higher-order lambda
+    assert(!finalSection.contains("lambdafunction"), finalSection.take(1200))
   }
 
   test("tfidf tokenizes once: both consumers scan the pinned tf table") {

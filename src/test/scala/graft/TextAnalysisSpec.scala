@@ -101,10 +101,7 @@ class TextAnalysisSpec extends SparkSpec {
           s"recall floor broken for $l: $recall — cells: $cells")
       }
     } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete()
-      }
-      rm(new java.io.File(dir))
+      TempDirs.rm(new java.io.File(dir))
     }
   }
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
+import graft.TempDirs.withTempDir
 import graft.functions.Text
 import graft.operators.WordScore
 import graft.sources.{ReviewSource, TsvSink}
@@ -23,40 +24,57 @@ class WordScoreSpec extends SparkSpec {
     Iterator.continually(it).takeWhile(_.hasMoreTokens).map(_.nextToken()).toList
   }
 
+  // both scoring forms must keep the reference's semantics
+  private val scorers = Seq[(String, (DataFrame, Column, Column) => DataFrame)](
+    "score" -> (WordScore.score(_, _, _)),
+    "wordScoreSalted" -> (WordScore.wordScoreSalted(_, _, _)))
+
   test("golden corpus: hand-computed scores, reference semantics") {
-    val dir = Files.createTempDirectory("reviews").toFile
-    val json =
-      """{"stars": 5.0, "text": "great great food"}
-        |{"stars": 1.0, "text": "great awful\tservice"}
-        |{"stars": 3.0, "text": "neutral words ignored"}
-        |{"stars": 4.7, "text": "  padded tokens  "}
-        |{"stars": 2.0, "text": ""}
-        |""".stripMargin
-    Files.writeString(new java.io.File(dir, "reviews.json").toPath, json)
+    withTempDir("reviews") { dir =>
+      val json =
+        """{"stars": 5.0, "text": "great great food"}
+          |{"stars": 1.0, "text": "great awful\tservice"}
+          |{"stars": 3.0, "text": "neutral words ignored"}
+          |{"stars": 4.7, "text": "  padded tokens  "}
+          |{"stars": 2.0, "text": ""}
+          |""".stripMargin
+      Files.writeString(new java.io.File(dir, "reviews.json").toPath, json)
 
-    val reviews = ReviewSource.reviews(spark, dir.getAbsolutePath)
-    val got = WordScore.score(reviews, col("stars"), col("text"))
-      .as[(String, Long)].collect().toMap
+      val reviews = ReviewSource.reviews(spark, dir.getAbsolutePath)
+      val got = WordScore.score(reviews, col("stars"), col("text"))
+        .as[(String, Long)].collect().toMap
 
-    // 4.7★ truncates to 4 (reference Number.intValue, :113) → modifier +1.
-    assert(got === Map(
-      "great" -> 2L, "food" -> 2L, "awful" -> -2L, "service" -> -2L,
-      "neutral" -> 0L, "words" -> 0L, "ignored" -> 0L,
-      "padded" -> 1L, "tokens" -> 1L))
+      // 4.7★ truncates to 4 (reference Number.intValue, :113) → modifier +1.
+      assert(got === Map(
+        "great" -> 2L, "food" -> 2L, "awful" -> -2L, "service" -> -2L,
+        "neutral" -> 0L, "words" -> 0L, "ignored" -> 0L,
+        "padded" -> 1L, "tokens" -> 1L))
+    }
   }
 
   test("output is sorted by score descending") {
-    val scores = SparkEntry.entry(spark).select("score").as[Long].collect()
-    assert(scores.nonEmpty && scores.sameElements(scores.sortBy(-_)))
+    // the full (score desc, word asc) order, ties included, in the one
+    // partition the sink writes as one file — for both scoring forms
+    val docs = Tables.documents(spark, sf)
+    for ((name, scoreFn) <- scorers) {
+      val scored = scoreFn(docs, col("doc_id") % 5 + 1, col("text"))
+      val rows = scored.as[(String, Long)].collect().toSeq
+      assert(rows.nonEmpty, name)
+      assert(rows.map(_._2).distinct.size < rows.size, s"$name: no tied scores")
+      assert(rows === rows.sortBy { case (w, s) => (-s, w) }, name)
+      assert(scored.rdd.getNumPartitions === 1, name)
+    }
   }
 
   test("tsv sink writes score<TAB>word lines in order") {
-    val out = Files.createTempDirectory("tsv").toFile.getAbsolutePath + "/out"
-    TsvSink.write(SparkEntry.entry(spark), out)
-    val lines = spark.read.text(out).as[String].collect()
-    assert(lines.nonEmpty && lines.forall(_.matches("-?\\d+\\t\\S+")))
-    val scores = lines.map(_.split("\t")(0).toLong)
-    assert(scores.sameElements(scores.sortBy(-_)))
+    withTempDir("tsv") { dir =>
+      val out = dir.getAbsolutePath + "/out"
+      TsvSink.write(SparkEntry.entry(spark), out)
+      val lines = spark.read.text(out).as[String].collect()
+      assert(lines.nonEmpty && lines.forall(_.matches("-?\\d+\\t\\S+")))
+      val scores = lines.map(_.split("\t")(0).toLong)
+      assert(scores.sameElements(scores.sortBy(-_)))
+    }
   }
 
   test("tokenizer parity with java.util.StringTokenizer (property)") {
@@ -98,22 +116,18 @@ class WordScoreSpec extends SparkSpec {
     assert(WordScoreMain.parseArgs(Array("in", "out", "-D")) === None)
   }
 
-  // both scoring forms must keep the reference's stars semantics
-  private val scorers = Seq[(String, (DataFrame, Column, Column) => DataFrame)](
-    "score" -> (WordScore.score(_, _, _)),
-    "wordScoreSalted" -> (WordScore.wordScoreSalted(_, _, _)))
-
   test("out-of-domain stars fail the job like the reference's NPE") {
-    val dir = Files.createTempDirectory("badstars").toFile
-    Files.writeString(new java.io.File(dir, "r.json").toPath,
-      "{\"stars\": 7.0, \"text\": \"off the scale\"}\n")
-    val bad = ReviewSource.reviews(spark, dir.getAbsolutePath)
-    for ((name, scoreFn) <- scorers) {
-      val e = intercept[Exception] {
-        scoreFn(bad, col("stars"), col("text")).collect()
+    withTempDir("badstars") { dir =>
+      Files.writeString(new java.io.File(dir, "r.json").toPath,
+        "{\"stars\": 7.0, \"text\": \"off the scale\"}\n")
+      val bad = ReviewSource.reviews(spark, dir.getAbsolutePath)
+      for ((name, scoreFn) <- scorers) {
+        val e = intercept[Exception] {
+          scoreFn(bad, col("stars"), col("text")).collect()
+        }
+        assert(e.getMessage.contains("out of domain") ||
+          Option(e.getCause).exists(_.getMessage.contains("out of domain")), name)
       }
-      assert(e.getMessage.contains("out of domain") ||
-        Option(e.getCause).exists(_.getMessage.contains("out of domain")), name)
     }
   }
 
@@ -133,27 +147,29 @@ class WordScoreSpec extends SparkSpec {
     // the reference NPEs on value.get("text") (:116) whatever the stars
     for ((line, i) <- Seq("{\"stars\": 5.0}",
         "{\"stars\": 5.0, \"text\": null}").zipWithIndex) {
-      val dir = Files.createTempDirectory(s"notext$i").toFile
-      Files.writeString(new java.io.File(dir, "r.json").toPath, line + "\n")
-      val bad = ReviewSource.reviews(spark, dir.getAbsolutePath)
-      for ((name, scoreFn) <- scorers) {
-        val e = intercept[Exception] {
-          scoreFn(bad, col("stars"), col("text")).collect()
+      withTempDir(s"notext$i") { dir =>
+        Files.writeString(new java.io.File(dir, "r.json").toPath, line + "\n")
+        val bad = ReviewSource.reviews(spark, dir.getAbsolutePath)
+        for ((name, scoreFn) <- scorers) {
+          val e = intercept[Exception] {
+            scoreFn(bad, col("stars"), col("text")).collect()
+          }
+          assert(e.getMessage.contains("`text`") ||
+            Option(e.getCause).exists(_.getMessage.contains("`text`")),
+            s"$name on $line")
         }
-        assert(e.getMessage.contains("`text`") ||
-          Option(e.getCause).exists(_.getMessage.contains("`text`")),
-          s"$name on $line")
       }
     }
   }
 
   test("malformed JSON fails fast like the reference") {
-    val dir = Files.createTempDirectory("badjson").toFile
-    Files.writeString(new java.io.File(dir, "bad.json").toPath,
-      "{\"stars\": 5.0, \"text\": \"ok\"}\n{not json at all\n")
-    val bad = ReviewSource.reviews(spark, dir.getAbsolutePath)
-    assertThrows[org.apache.spark.SparkException] {
-      WordScore.score(bad, col("stars"), col("text")).collect()
+    withTempDir("badjson") { dir =>
+      Files.writeString(new java.io.File(dir, "bad.json").toPath,
+        "{\"stars\": 5.0, \"text\": \"ok\"}\n{not json at all\n")
+      val bad = ReviewSource.reviews(spark, dir.getAbsolutePath)
+      assertThrows[org.apache.spark.SparkException] {
+        WordScore.score(bad, col("stars"), col("text")).collect()
+      }
     }
   }
 }

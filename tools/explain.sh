@@ -19,12 +19,14 @@ java $ADD_OPENS -Xmx$HEAP \
   -cp "$CP" graft.Explain "$SF" "$OUT" ${3:+"$3"}
 # Masked: expression ids (#12), plan ids (plan_id=3), the local-<millis>
 # application id in temp table and path names (local_<millis> once
-# sanitized), lambda class names, numbered lambda variables (x_632) and
-# object hash codes (…@1b2c3d4).
+# sanitized), lambda class names, numbered lambda variables (x_632),
+# object hash codes (…@1b2c3d4) and RDD ids (MapPartitionsRDD[551], which
+# count the RDDs earlier queries in the same run created).
 find "$OUT" -name '*.txt' -exec sed -i -E \
   -e 's/#[0-9]+/#N/g' \
   -e 's/plan_id=[0-9]+/plan_id=N/g' \
   -e 's/local([-_])[0-9]+/local\1N/g' \
   -e 's/\$\$Lambda[^ ,)@]*/$$Lambda/g' \
   -e 's/(lambda [a-z]+)_[0-9]+/\1_N/g' \
-  -e 's/@[0-9a-f]{4,}\b/@H/g' {} +
+  -e 's/@[0-9a-f]{4,}\b/@H/g' \
+  -e 's/RDD\[[0-9]+\]/RDD[N]/g' {} +
