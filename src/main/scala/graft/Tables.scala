@@ -15,55 +15,16 @@ import org.apache.spark.sql.functions.col
   * every CPU-heavy per-row derivation (shingling, MinHash, cosine)
   * runs on one core. [[spread]] hash-repartitions on the row key right
   * after the scan: a sub-millisecond shuffle of kilobytes that unlocks
-  * full parallelism. The repartition is GATED on the scan's actual
-  * split count: on a real multi-file/100 TB layout the scan already
-  * produces thousands of splits and an unconditional repartition would
-  * be a gratuitous full shuffle of corpus bodies — there spread is a
-  * no-op. Results are identical either way because every downstream
-  * computation is a deterministic function of the rows, never of
-  * their placement.
+  * full parallelism. Results are identical either way because every
+  * downstream computation is a deterministic function of the rows,
+  * never of their placement.
   */
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
-  /** Pre-AQE scan split count per (session, fixture file), computed
-    * once: `df.rdd.getNumPartitions` runs no job but forces full
-    * physical planning, and table() is called per query — uncached it
-    * re-planned the same scan on every access. Keyed on the session
-    * OBJECT via a weak-keys map because split planning depends on
-    * session conf (maxPartitionBytes, parallelism): a JVM-wide key
-    * would let one session's count mis-gate another's repartition,
-    * and an identityHashCode key (the previous shape) can collide
-    * between live sessions or be reused after GC — same mis-gating,
-    * plus unbounded growth in JVMs that create many sessions. Weak
-    * keys let entries die with their session.
-    */
-  private val splitCache =
-    new java.util.WeakHashMap[SparkSession, java.util.HashMap[String, Integer]]()
-
-  private def spread(s: SparkSession, d: String, name: String, key: String): DataFrame = {
-    val df = table(s, d, name)
-    val target = s.sparkContext.defaultParallelism
-    // getNumPartitions runs FULL physical planning (hundreds of ms on a
-    // cold entry) — never hold the module-wide lock across it, or every
-    // concurrent session/table first-touch serializes behind one
-    // monitor. Racing threads may plan the same scan twice; they write
-    // the same value, so last-put-wins is benign.
-    val inner = splitCache.synchronized {
-      splitCache.computeIfAbsent(s, _ => new java.util.HashMap[String, Integer]())
-    }
-    val cacheKey = s"$d/$name"
-    val cached = inner.synchronized(inner.get(cacheKey))
-    val splits = if (cached != null) cached.intValue
-    else {
-      val v = df.rdd.getNumPartitions
-      inner.synchronized(inner.put(cacheKey, Integer.valueOf(v)))
-      v
-    }
-    if (splits >= target) df
-    else df.repartition(target, col(key))
-  }
+  private def spread(s: SparkSession, d: String, name: String, key: String): DataFrame =
+    table(s, d, name).repartition(s.sparkContext.defaultParallelism, col(key))
 
   def region(s: SparkSession, d: String)    = table(s, d, "region")
   def nation(s: SparkSession, d: String)    = table(s, d, "nation")

@@ -54,9 +54,9 @@ object WordScoreMain {
     val (confs, positional) = parsed.get
     val (input, output) = (positional(0), positional(1))
     // everything after arg validation — session startup (an invalid -D
-    // VALUE fails conf validation here), conf application, and the
-    // pipeline — lands in the documented exit-1 failure path; compute
-    // the exit code first, stop the session, THEN exit.
+    // VALUE fails conf validation here) and the pipeline — lands in the
+    // documented exit-1 failure path; compute the exit code first, stop
+    // the session, THEN exit.
     var spark: SparkSession = null
     val code =
       try {
@@ -64,15 +64,10 @@ object WordScoreMain {
           .appName("word-score")
           .config("spark.sql.adaptive.enabled", "true")
           .config("spark.sql.session.timeZone", "UTC")
+        // the main runs in its own JVM, so getOrCreate always builds a
+        // new session and the builder applies every pair
         spark = confs.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
           .getOrCreate()
-        // an already-running session (tests) won't pick builder confs
-        // up — apply runtime-settable ones directly as well (static
-        // confs can't be set here; the builder above already took them)
-        confs.foreach { case (k, v) =>
-          try spark.conf.set(k, v)
-          catch { case _: org.apache.spark.sql.AnalysisException => }
-        }
         val scored = WordScore.score(
           ReviewSource.reviews(spark, input), col("stars"), col("text"))
         TsvSink.write(scored, output)

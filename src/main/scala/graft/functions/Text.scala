@@ -19,18 +19,18 @@ import org.apache.spark.sql.functions._
   */
 object Text {
 
-  /** Regex class matching StringTokenizer's default delimiters. */
+  /** Regex class matching StringTokenizer's default delimiters, in
+    * Spark's `split` and in the DuckDB oracle SQL alike (the same
+    * pattern in Java regex and RE2).
+    */
   val DelimRegex = "[ \\t\\n\\r\\f]+"
-
-  /** DuckDB-side equivalent used in oracle SQL (same RE2 pattern). */
-  val DelimRegexSql = "[ \\t\\n\\r\\f]+"
 
   /** DuckDB fragment producing the same empty-filtered token list as
     * [[tokens]] — the single source of truth for oracle-side
     * tokenization (referenced by every oracle that tokenizes).
     */
   val ToksSql: String =
-    s"list_filter(string_split_regex(text, '$DelimRegexSql'), x -> length(x) > 0)"
+    s"list_filter(string_split_regex(text, '$DelimRegex'), x -> length(x) > 0)"
 
   /** DuckDB fragment: the space-joined n-gram starting at list index
     * `$idx` of token list `$toks` — the single source of truth for

@@ -375,11 +375,8 @@ object Curation {
     * idiom as [[sample]]/[[pSplit]]), a NEW permutation per epoch by
     * changing the seed, and at scale the final ORDER BY is one range
     * exchange over (16-byte key, id) pairs — document bodies are
-    * fetched per shard afterwards, or equivalently the key feeds
-    * [[graft.sources.ShardSink]] directly as the total order, which
-    * then writes the epoch's fixed-size shards. The full md5 key is
-    * collision-free for practical corpus sizes and emitted for
-    * auditability.
+    * fetched per shard afterwards. The full md5 key is collision-free
+    * for practical corpus sizes and emitted for auditability.
     */
   def pShuffle(s: SparkSession, d: String): DataFrame = {
     val key = md5(concat(lit("epoch1|"), col("doc_id").cast("string"))
@@ -596,9 +593,7 @@ object Curation {
     * seeded-digest permutation idiom as [[pShuffle]], so the schedule
     * is reproducible on any cluster and re-drawable per epoch by
     * reseeding. The total consumption order is (stage,
-    * curriculum_key, doc_id) — exactly the `orderCols` contract
-    * [[graft.sources.ShardSink]] consumes, which is how the schedule
-    * becomes shards without any global window here.
+    * curriculum_key, doc_id), with no global window here.
     *
     * Scale: the quality score is a per-row map (tQuality's one-pass
     * metrics); the quartile cutoffs are ONE exact ordered-set

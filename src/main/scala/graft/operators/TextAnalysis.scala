@@ -2212,9 +2212,9 @@ object TextAnalysis {
   private[graft] def bpeWords(docs: DataFrame): DataFrame =
     docs.select(explode(Text.tokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
-      // filter the trailing "" that split-with-limit -1 emits
+      // drop the trailing "" of split(-1), which yields no null element
       .select(col("word"),
-        filter(split(col("word"), ""), x => x =!= "").as("syms"), col("cnt"))
+        array_remove(split(col("word"), ""), lit("")).as("syms"), col("cnt"))
 
   /** The merge loop over a caller-supplied word table — see
     * [[bpeLearnBatched]]'s scaladoc for the batching contract.

@@ -77,11 +77,14 @@ object WordScore {
 
   def flagshipOracle(): String =
     s"""SELECT word, CAST(SUM(CAST(doc_id % 5 + 1 AS INT) - 3) AS BIGINT) AS score
-       |FROM (SELECT doc_id, unnest(string_split_regex(text, '${Text.DelimRegexSql}')) AS word
+       |FROM (SELECT doc_id, unnest(string_split_regex(text, '${Text.DelimRegex}')) AS word
        |      FROM documents)
        |WHERE length(word) > 0
        |GROUP BY word
        |ORDER BY score DESC, word""".stripMargin
+
+  /** Salt buckets of [[wordScoreSalted]]'s first aggregation. */
+  private val SaltBuckets = 16
 
   /** Same result via the explicit two-phase (salted) aggregation.
     *
@@ -92,10 +95,9 @@ object WordScore {
     * partial state is per-row (e.g. collect-type aggs) where one hot
     * word would otherwise pin a single reducer.
     */
-  def wordScoreSalted(reviews: DataFrame, stars: Column, text: Column,
-                      saltBuckets: Int = 16): DataFrame =
+  def wordScoreSalted(reviews: DataFrame, stars: Column, text: Column): DataFrame =
     sortedOnePartition(wordModifiers(reviews, stars, text)
-      .withColumn("salt", pmod(spark_partition_id(), lit(saltBuckets)))
+      .withColumn("salt", pmod(spark_partition_id(), lit(SaltBuckets)))
       .groupBy("word", "salt")
       .agg(sum("modifier").as("partial"))
       .groupBy("word")

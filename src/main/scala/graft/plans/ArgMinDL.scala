@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.dsl.expressions._
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, CreateNamedStruct, EqualTo, Expression, If, IsNotNull, IsNull, LessThan, Literal, Or}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike

@@ -17,8 +17,7 @@ import org.apache.spark.sql.types.LongType
 /** Native as-of join — the whole-operator extension path the preference
   * order reserves for semantics Spark's relational algebra can't express
   * without a blow-up: a logical node, a planner strategy, and a physical
-  * sort-merge operator, registered per-session (`GraftSql.ensureRegistered`)
-  * or cluster-wide via `spark.sql.extensions` (GraftExtensions).
+  * sort-merge operator, registered per-session (`GraftSql.ensureRegistered`).
   *
   * Semantics (left outer, "backward" direction): for every left row, the
   * single right row with equal keys and the LARGEST right time that is
@@ -497,17 +496,11 @@ object TimeJoinStrategy extends SparkStrategy {
   * against the filtered history) — they stay above, as do predicates
   * on a band count's GENERATED count column.
   *
-  * Registration depth differs by path, though both install the one
-  * registry in `GraftSql`: via `spark.sql.extensions`
-  * (GraftExtensions.injectOptimizerRule) the rule joins the operator-
-  * optimization fixed point, so the pushed filter keeps sinking with
-  * PushDownPredicates all the way into the scan's PushedFilters
-  * (proven in the forked-JVM ExtensionsProbe). Via the public
-  * `experimental.extraOptimizations` hook (ensureRegistered) user
-  * rules run in the LAST batch, so the filter lands below the join —
-  * eliminating the filtered rows' shuffle/sort/merge cost, the bulk of
-  * the win — but cannot re-enter the earlier pushdown batch to reach
-  * the scan.
+  * Installed through the public `experimental.extraOptimizations` hook
+  * (`GraftSql.ensureRegistered`), where user rules run in the LAST
+  * batch: the filter lands below the join — eliminating the filtered
+  * rows' shuffle/sort/merge cost, the bulk of the win — but cannot
+  * re-enter the earlier pushdown batch to reach the scan.
   */
 object PushLeftFilterThroughJoin
     extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]

@@ -97,10 +97,8 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   * so constant folding in the shared operator-optimization batch
   * cannot erase the guard), both of which the matcher rejects.
   *
-  * Listed in the one registry, `GraftSql.rules`: installed cluster-wide
-  * by [[org.apache.spark.sql.graft.GraftExtensions]]
-  * (`injectOptimizerRule`) or per session by
-  * [[org.apache.spark.sql.graft.GraftSql.ensureRegistered]]
+  * Listed in the one registry, `GraftSql.rules`: installed per session
+  * by [[org.apache.spark.sql.graft.GraftSql.ensureRegistered]]
   * (`spark.experimental.extraOptimizations`).
   */
 object GridJoinRewrite extends Rule[LogicalPlan] {

@@ -46,11 +46,9 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
   * commutative bit-for-bit, and (x−y)² ≡ (y−x)² exactly (negation is
   * exact), so the swap cannot move a bit.
   *
-  * Listed in the one registry, `GraftSql.rules`: installed by
-  * [[org.apache.spark.sql.graft.GraftExtensions]] via
-  * `injectOptimizerRule` (config-driven, cluster-wide) — or per
-  * session by [[org.apache.spark.sql.graft.GraftSql.ensureRegistered]]
-  * through `spark.experimental.extraOptimizations`.
+  * Listed in the one registry, `GraftSql.rules`: installed per session
+  * by [[org.apache.spark.sql.graft.GraftSql.ensureRegistered]] through
+  * `spark.experimental.extraOptimizations`.
   */
 object NativeVectorRewrite extends Rule[LogicalPlan] {
 

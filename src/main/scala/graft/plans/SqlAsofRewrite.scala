@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute,
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute,
   AttributeReference, CreateNamedStruct, EqualTo, Expression,
   GreaterThanOrEqual, LessThanOrEqual, NamedExpression, PredicateHelper}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
@@ -65,8 +65,7 @@ import org.apache.spark.sql.types.LongType
   *
   * Registered with the session like the other graft rules, from the
   * one registry `GraftSql.rules` (GraftSql.ensureRegistered via
-  * `experimental.extraOptimizations`, or cluster-wide via
-  * GraftExtensions.injectOptimizerRule).
+  * `experimental.extraOptimizations`).
   */
 object SqlAsofRewrite extends Rule[LogicalPlan] with PredicateHelper {
 

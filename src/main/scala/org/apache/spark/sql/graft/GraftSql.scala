@@ -17,9 +17,9 @@ import graft.plans.{CharStats, DoubleSqDist, FloatDotProduct, FloatDoubleDot,
   * of everything the engine adds to a session — SQL functions,
   * optimizer rules and planner strategies.
   *
-  * Registration is per-session and idempotent, so query functions can
-  * call [[ensureRegistered]] defensively — they receive the session from
-  * the driver and cannot assume SparkSessionExtensions were installed.
+  * [[ensureRegistered]] is the one registration path. It is per-session
+  * and idempotent, so query functions can call it defensively: they
+  * receive the session from the driver and cannot assume it was called.
   */
 object GraftSql {
 
@@ -156,9 +156,8 @@ object GraftSql {
     }
 
   // ------------------------------------------------------ the registry
-  // The function table, `rules` and `strategies` drive BOTH
-  // registration paths (programmatic ensureRegistered and config-driven
-  // GraftExtensions), so what a session carries can't drift between them.
+  // The function table, `rules` and `strategies` are everything
+  // ensureRegistered installs on a session.
 
   private def arity(fn: String, n: Int, es: Seq[Expression]): Unit =
     if (es.length != n) throw new IllegalArgumentException(
@@ -183,7 +182,7 @@ object GraftSql {
       s"$fn: argument ${pos + 1} must be a foldable INT literal, got ${e.sql}")
   }
 
-  /** (name, implementing class, builder) for every native expression.
+  /** (name, builder) for every native expression.
     * shingle_minhash(toks, n, k) uses the LSH signature salt convention
     * ("0|", "1|", …) — bit-identical to dMinhashLsh and the bench. The
     * one exception: the k=1 Jaccard BLOCKING key (sizedShinglePairs)
@@ -191,60 +190,49 @@ object GraftSql {
     * that key through this function; use shingle_hash_set + a manual
     * min over the hashes if blocking-key parity is needed.
     */
-  private val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("float_dot", classOf[FloatDotProduct].getName,
+  private val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("float_dot",
       es => { arity("float_dot", 2, es); FloatDotProduct(es(0), es(1)) }),
-    ("float_sqdist", classOf[FloatSqDist].getName,
+    ("float_sqdist",
       es => { arity("float_sqdist", 2, es); FloatSqDist(es(0), es(1)) }),
-    ("double_sqdist", classOf[DoubleSqDist].getName,
+    ("double_sqdist",
       es => { arity("double_sqdist", 2, es); DoubleSqDist(es(0), es(1)) }),
-    ("fd_dot", classOf[FloatDoubleDot].getName,
+    ("fd_dot",
       es => { arity("fd_dot", 2, es); FloatDoubleDot(es(0), es(1)) }),
-    ("fd_sqdist", classOf[FloatDoubleSqDist].getName,
+    ("fd_sqdist",
       es => { arity("fd_sqdist", 2, es); FloatDoubleSqDist(es(0), es(1)) }),
-    ("shingle_minhash", classOf[ShingleMinHash].getName,
+    ("shingle_minhash",
       es => { arity("shingle_minhash", 3, es)
         val k = intArg("shingle_minhash", 2, es)
         ShingleMinHash(es(0), intArg("shingle_minhash", 1, es),
           (0 until k).map(j => s"$j|")) }),
-    ("shingle_set", classOf[ShingleSet].getName,
+    ("shingle_set",
       es => { arity("shingle_set", 2, es)
         ShingleSet(es(0), intArg("shingle_set", 1, es)) }),
-    ("shingle_hash_set", classOf[ShingleHashSet].getName,
+    ("shingle_hash_set",
       es => { arity("shingle_hash_set", 2, es)
         ShingleHashSet(es(0), intArg("shingle_hash_set", 1, es)) }),
-    ("sorted_intersect_count", classOf[SortedIntersectCount].getName,
+    ("sorted_intersect_count",
       es => { arity("sorted_intersect_count", 2, es)
         SortedIntersectCount(es(0), es(1)) }),
-    ("simhash64", classOf[SimHash64Expr].getName,
+    ("simhash64",
       es => { arity("simhash64", 1, es); SimHash64Expr(es(0)) }),
-    ("simhash16", classOf[SimHash16Expr].getName,
+    ("simhash16",
       es => { arity("simhash16", 1, es); SimHash16Expr(es(0)) }),
-    ("sign_bands", classOf[SignBands].getName,
+    ("sign_bands",
       es => { arity("sign_bands", 4, es)
         SignBands(es(0), intArg("sign_bands", 1, es),
           intArg("sign_bands", 2, es), intArg("sign_bands", 3, es)) }),
-    ("char_stats", classOf[CharStats].getName,
+    ("char_stats",
       es => { arity("char_stats", 1, es); CharStats(es(0)) }),
-    ("pair_explode", classOf[PairExplode].getName,
+    ("pair_explode",
       es => { arity("pair_explode", 1, es); PairExplode(es(0)) }),
-    ("sparse_dot", classOf[SparseDotProduct].getName,
+    ("sparse_dot",
       es => { arity("sparse_dot", 2, es); SparseDotProduct(es(0), es(1)) }),
-    ("assert_dense", classOf[graft.plans.KnownDenseArray].getName,
+    ("assert_dense",
       es => { arity("assert_dense", 1, es)
         graft.plans.KnownDenseArray(es(0)) }),
   )
-
-  /** The injectFunction-shaped descriptions for [[GraftExtensions]]. */
-  private[graft] def functionDescriptions: Seq[(
-      org.apache.spark.sql.catalyst.FunctionIdentifier,
-      org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      Seq[Expression] => Expression)] =
-    functions.map { case (name, cls, builder) =>
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(cls, name),
-        builder)
-    }
 
   /** Every custom optimizer rule: the HOF→native inner-product upgrade,
     * the naive spatial/band join → grid equi-join rewrite, left-filter
@@ -268,34 +256,12 @@ object GraftSql {
     * already present is not added twice.
     */
   def ensureRegistered(spark: SparkSession): Unit = {
-    functions.foreach { case (name, _, builder) =>
+    functions.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
     }
     val em = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
     em.extraOptimizations ++= rules.filterNot(em.extraOptimizations.contains)
     em.extraStrategies ++= strategies.filterNot(em.extraStrategies.contains)
-  }
-}
-
-/** SparkSessionExtensions entry point — the config-driven registration
-  * path for clusters the library doesn't construct sessions for:
-  *
-  * {{{
-  * spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions
-  * }}}
-  *
-  * Injects the same registry [[GraftSql.ensureRegistered]] installs
-  * programmatically — functions, optimizer rules and planner
-  * strategies read from the same lists, so the two paths cannot drift.
-  * Injected rules join the operator-optimization fixed point instead of
-  * the last batch `experimental` rules run in. Query functions still
-  * call ensureRegistered defensively, so either path (or both) works.
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    GraftSql.functionDescriptions.foreach(e.injectFunction)
-    GraftSql.rules.foreach(r => e.injectOptimizerRule(_ => r))
-    GraftSql.strategies.foreach(st => e.injectPlannerStrategy(_ => st))
   }
 }

@@ -1,8 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
+
+import graft.TempDirs.withTempDir
 
 /** Bucketing: the co-located-join strategy for repeated fact-fact joins
   * at scale. Writing both join sides bucketed by the join key lets Spark
@@ -17,11 +17,13 @@ class BucketingSpec extends SparkSpec {
     // conf) stays untouched; only the metastore records the tables.
     // Broadcast is disabled so the join takes the fact-fact (sort-merge)
     // path this spec is about — at real scale neither side broadcasts.
-    val wh = Files.createTempDirectory("graft_warehouse").toFile.getAbsolutePath
-    val oldThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try bucketedJoinBody(wh)
-    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThreshold)
+    withTempDir("graft_warehouse") { tmp =>
+      val wh = tmp.getAbsolutePath
+      val oldThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try bucketedJoinBody(wh)
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThreshold)
+    }
   }
 
   test("gated q_join_bucketed: bucketed scans feed the join with no exchange") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.TempDirs.withTempDir
 import graft.operators.Curation
 
 /** Spark-side semantics for the corpus-curation pipeline operators
@@ -184,6 +185,26 @@ class CurationSpec extends SparkSpec {
     } finally split.unpersist()
   }
 
+  test("curate -> split(train) -> shuffle order") {
+    // the operators chain the way a training run consumes them: the
+    // train split keeps a non-empty strict subset of the curated docs,
+    // and the epoch shuffle emits every document once, in
+    // (shuffle_key, doc_id) order, as a real permutation of the ids
+    val kept = Curation.curate(spark, sf).select("doc_id").as[Long].collect().toSet
+    val train = Curation.pSplit(spark, sf).filter(col("split") === "train")
+      .select("doc_id").as[Long].collect().toSet
+    val curatedTrain = kept.intersect(train)
+    assert(curatedTrain.nonEmpty && curatedTrain.size < kept.size,
+      s"split must drop some of the ${kept.size} curated docs, kept ${curatedTrain.size}")
+    val epoch = Curation.pShuffle(spark, sf).select("shuffle_key", "doc_id")
+      .as[(String, Long)].collect().toSeq
+    val ids = Tables.documents(spark, sf).select("doc_id").as[Long].collect().sorted.toSeq
+    assert(epoch.map(_._2).sorted === ids)
+    assert(epoch.map(_._1).distinct.size === epoch.size, "shuffle keys collide")
+    assert(epoch === epoch.sorted, "not emitted in (shuffle_key, doc_id) order")
+    assert(epoch.map(_._2) !== ids, "the shuffle left the id order unchanged")
+  }
+
   test("weighted sample: length >= 400 chars is always kept, and the gate is deterministic") {
     val docs = Tables.documents(spark, sf)
     val kept = Curation.pSampleWeighted(spark, sf).select("doc_id").as[Long].collect().toSet
@@ -215,17 +236,19 @@ class CurationSpec extends SparkSpec {
     // anti-entropy: flip ONE document -> exactly the affected bucket
     // digests change (1 or 2: old bucket loses the leaf, new gains it),
     // every other bucket digest is untouched, and the root moves
-    val dir = java.nio.file.Files.createTempDirectory("merkle").toString
-    val docs = Tables.documents(spark, sf)
-    docs.withColumn("text",
-        when(col("doc_id") === 0, lit("MUTATED CONTENT")).otherwise(col("text")))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val mut = Curation.pMerkle(spark, dir).as[(Int, Int, Long, String)].collect()
-    val mutL0 = mut.filter(_._1 == 0).map(r => r._2 -> (r._3, r._4)).toMap
-    val changed = (gotL0.keySet ++ mutL0.keySet)
-      .filter(b => gotL0.get(b) != mutL0.get(b))
-    assert(changed.nonEmpty && changed.size <= 2, s"buckets changed: $changed")
-    assert(mut.filter(_._1 == 1).head._4 !== wantRoot)
+    withTempDir("merkle") { tmp =>
+      val dir = tmp.toString
+      val docs = Tables.documents(spark, sf)
+      docs.withColumn("text",
+          when(col("doc_id") === 0, lit("MUTATED CONTENT")).otherwise(col("text")))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val mut = Curation.pMerkle(spark, dir).as[(Int, Int, Long, String)].collect()
+      val mutL0 = mut.filter(_._1 == 0).map(r => r._2 -> (r._3, r._4)).toMap
+      val changed = (gotL0.keySet ++ mutL0.keySet)
+        .filter(b => gotL0.get(b) != mutL0.get(b))
+      assert(changed.nonEmpty && changed.size <= 2, s"buckets changed: $changed")
+      assert(mut.filter(_._1 == 1).head._4 !== wantRoot)
+    }
   }
 
   test("keep-best: one keeper per component, and it is the quality argmax") {

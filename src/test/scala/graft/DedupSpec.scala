@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.TempDirs.withTempDir
 import graft.operators.Dedup
 
 /** Semantics checks for the dedup suite (cross-engine parity is the
@@ -395,17 +396,18 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connected components uses reliable checkpoints when dir is set") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
-    spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
-    try {
-      val pairs = (1L until 6L).map(i => (i, i + 1)).toDF("a", "b")
-      val got = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
-      (1L to 6L).foreach(i => assert(got(i) === 1L))
-      // the loop's frontiers actually went to the reliable store
-      def files(f: java.io.File): Seq[java.io.File] =
-        Option(f.listFiles()).toSeq.flatten.flatMap(c => c +: files(c))
-      assert(files(dir).exists(_.isFile), "no reliable checkpoint written")
-    } finally spark.sparkContext.setCheckpointDir(null)
+    withTempDir("graft-ckpt") { dir =>
+      spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
+      try {
+        val pairs = (1L until 6L).map(i => (i, i + 1)).toDF("a", "b")
+        val got = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
+        (1L to 6L).foreach(i => assert(got(i) === 1L))
+        // the loop's frontiers actually went to the reliable store
+        def files(f: java.io.File): Seq[java.io.File] =
+          Option(f.listFiles()).toSeq.flatten.flatMap(c => c +: files(c))
+        assert(files(dir).exists(_.isFile), "no reliable checkpoint written")
+      } finally spark.sparkContext.setCheckpointDir(null)
+    }
   }
 
   test("overlap coefficient dominates jaccard on the same blocked pairs") {

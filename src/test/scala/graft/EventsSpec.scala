@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.TempDirs.withTempDir
 import graft.operators.Events
 
 /** Semantic checks for the windowed event analytics that the DuckDB
@@ -196,18 +197,20 @@ class EventsSpec extends SparkSpec {
     // the output must be the floored 2 (DuckDB's `//` floors too).
     // Also pin the output TYPE: LongType, matching the oracle's
     // CAST(... AS BIGINT) — the r6 hash miss was this dtype drifting.
-    val dir = java.nio.file.Files.createTempDirectory("graft_gap").toFile.getAbsolutePath
-    spark.createDataFrame(Seq(
-      (1L, java.sql.Timestamp.from(java.time.Instant.EPOCH), 7L),
-      (2L, java.sql.Timestamp.from(java.time.Instant.EPOCH.plusNanos(3000L)), 7L),
-      (3L, java.sql.Timestamp.from(java.time.Instant.EPOCH.plusNanos(5000L)), 7L)))
-      .toDF("event_id", "ts", "user_id")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = Events.eInterarrival(spark, dir)
-    assert(out.schema("avg_gap_us").dataType === org.apache.spark.sql.types.LongType)
-    val row = out.as[(Long, Long, Long, Long, Long)].collect()
-    assert(row === Array((7L, 2L, 2L, 2L, 3L)),
-      "expected floor(5/2)=2 mean, min 2, max 3: " + row.mkString(","))
+    withTempDir("graft_gap") { tmp =>
+      val dir = tmp.getAbsolutePath
+      spark.createDataFrame(Seq(
+        (1L, java.sql.Timestamp.from(java.time.Instant.EPOCH), 7L),
+        (2L, java.sql.Timestamp.from(java.time.Instant.EPOCH.plusNanos(3000L)), 7L),
+        (3L, java.sql.Timestamp.from(java.time.Instant.EPOCH.plusNanos(5000L)), 7L)))
+        .toDF("event_id", "ts", "user_id")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val out = Events.eInterarrival(spark, dir)
+      assert(out.schema("avg_gap_us").dataType === org.apache.spark.sql.types.LongType)
+      val row = out.as[(Long, Long, Long, Long, Long)].collect()
+      assert(row === Array((7L, 2L, 2L, 2L, 3L)),
+        "expected floor(5/2)=2 mean, min 2, max 3: " + row.mkString(","))
+    }
   }
 
   test("e_dq_audit: every check fires on a deliberately dirty fixture") {
@@ -218,53 +221,59 @@ class EventsSpec extends SparkSpec {
     // catch NaN, negatives, AND +Infinity (the ADVICE r7 gap).
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dq").toFile.getAbsolutePath
-    val t0 = java.sql.Timestamp.from(java.time.Instant.EPOCH)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    val rows = Seq(
-      Row(1L, t0, 1L, "click", 1.0, """{"k":1}"""),
-      Row(1L, t0, 2L, "view", 2.0, "{}"), // duplicate event_id
-      Row(2L, t0, null, "click", 1.0, """{"k":2}"""), // null user
-      Row(3L, t0, 3L, "", 1.0, "[1,2]"), // blank type; array props OK
-      Row(4L, t0, 4L, "click", Double.NaN, "null"), // NaN; 'null' props OK
-      Row(5L, t0, 5L, "click", -1.0, "5"), // negative; '5' props OK
-      Row(6L, t0, 6L, "click", Double.PositiveInfinity, """{"k":3}"""),
-      Row(7L, t0, 7L, "click", 1.0, "{malformed"), // malformed props
-      Row(8L, t0, 8L, "click", 1.0, null), // NULL props
-      Row(9L, t0, 9L, "click", 1.0, "  ")) // whitespace props
-    spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = Events.eDqAudit(spark, dir)
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(out("duplicate_event_id") === ((1L, 10L)))
-    assert(out("null_user") === ((1L, 10L)))
-    assert(out("blank_type") === ((1L, 10L)))
-    assert(out("bad_value") === ((3L, 10L)), "NaN + negative + Infinity")
-    assert(out("ts_oob") === ((0L, 10L)))
-    assert(out("bad_props") === ((3L, 10L)),
-      "malformed + NULL + whitespace flagged; 'null'/'5'/array/'{}' not")
+    withTempDir("graft_dq") { tmp =>
+      val dir = tmp.getAbsolutePath
+      val t0 = java.sql.Timestamp.from(java.time.Instant.EPOCH)
+      val schema = StructType(Seq(
+        StructField("event_id", LongType), StructField("ts", TimestampType),
+        StructField("user_id", LongType), StructField("event_type", StringType),
+        StructField("value", DoubleType), StructField("props", StringType)))
+      val rows = Seq(
+        Row(1L, t0, 1L, "click", 1.0, """{"k":1}"""),
+        Row(1L, t0, 2L, "view", 2.0, "{}"), // duplicate event_id
+        Row(2L, t0, null, "click", 1.0, """{"k":2}"""), // null user
+        Row(3L, t0, 3L, "", 1.0, "[1,2]"), // blank type; array props OK
+        Row(4L, t0, 4L, "click", Double.NaN, "null"), // NaN; 'null' props OK
+        Row(5L, t0, 5L, "click", -1.0, "5"), // negative; '5' props OK
+        Row(6L, t0, 6L, "click", Double.PositiveInfinity, """{"k":3}"""),
+        Row(7L, t0, 7L, "click", 1.0, "{malformed"), // malformed props
+        Row(8L, t0, 8L, "click", 1.0, null), // NULL props
+        Row(9L, t0, 9L, "click", 1.0, "  ")) // whitespace props
+      spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val out = Events.eDqAudit(spark, dir)
+        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(out("duplicate_event_id") === ((1L, 10L)))
+      assert(out("null_user") === ((1L, 10L)))
+      assert(out("blank_type") === ((1L, 10L)))
+      assert(out("bad_value") === ((3L, 10L)), "NaN + negative + Infinity")
+      assert(out("ts_oob") === ((0L, 10L)))
+      assert(out("bad_props") === ((3L, 10L)),
+        "malformed + NULL + whitespace flagged; 'null'/'5'/array/'{}' not")
+    }
   }
 
   test("e_holt/e_holtwinters: degenerate series yield no rows (oracle contract)") {
     // The oracle CTEs' base cases need 2 (holt) / 1 (holt-winters)
     // days; the Spark side must match on short and empty series.
-    val dir = java.nio.file.Files.createTempDirectory("graft_deg").toFile.getAbsolutePath
-    spark.createDataFrame(Seq(
-      (1L, java.sql.Timestamp.from(java.time.Instant.EPOCH), 7L)))
-      .toDF("event_id", "ts", "user_id")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    assert(Events.eHolt(spark, dir).count() === 0L, "1-day series: holt")
-    assert(Events.eHoltWinters(spark, dir).count() === 7L,
-      "1-day series: holt-winters forecasts from the burn-in day")
-    val empty = java.nio.file.Files.createTempDirectory("graft_deg0").toFile.getAbsolutePath
-    spark.createDataFrame(Seq.empty[(Long, java.sql.Timestamp, Long)])
-      .toDF("event_id", "ts", "user_id")
-      .write.mode("overwrite").parquet(s"$empty/events.parquet")
-    assert(Events.eHolt(spark, empty).count() === 0L, "empty: holt")
-    assert(Events.eHoltWinters(spark, empty).count() === 0L, "empty: holt-winters")
+    withTempDir("graft_deg") { tmp =>
+      val dir = tmp.getAbsolutePath
+      spark.createDataFrame(Seq(
+        (1L, java.sql.Timestamp.from(java.time.Instant.EPOCH), 7L)))
+        .toDF("event_id", "ts", "user_id")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      assert(Events.eHolt(spark, dir).count() === 0L, "1-day series: holt")
+      assert(Events.eHoltWinters(spark, dir).count() === 7L,
+        "1-day series: holt-winters forecasts from the burn-in day")
+      withTempDir("graft_deg0") { tmp =>
+        val empty = tmp.getAbsolutePath
+        spark.createDataFrame(Seq.empty[(Long, java.sql.Timestamp, Long)])
+          .toDF("event_id", "ts", "user_id")
+          .write.mode("overwrite").parquet(s"$empty/events.parquet")
+        assert(Events.eHolt(spark, empty).count() === 0L, "empty: holt")
+        assert(Events.eHoltWinters(spark, empty).count() === 0L, "empty: holt-winters")
+      }
+    }
   }
 
   test("e_holt: fixed-point recursion matches a hand-computed series") {
@@ -274,19 +283,21 @@ class EventsSpec extends SparkSpec {
     //   y₄=6e6: e=−2.5e6; l=⌊14.5e6/2⌋=7.25e6; b=⌊1.75e6/2⌋=875000
     // → level 7250000, trend 875000, forecast 8125000,
     //   mae = ⌊12.5e6/2⌋ = 6250000. Exercises the odd-sum floors.
-    val dir = java.nio.file.Files.createTempDirectory("graft_holt").toFile.getAbsolutePath
-    val day = 86400L * 1000000000L
-    val rows = Seq(0 -> 4, 1 -> 8, 2 -> 2, 3 -> 6).flatMap { case (d, n) =>
-      (0 until n).map(i =>
-        (d * 100L + i,
-          java.sql.Timestamp.from(java.time.Instant.EPOCH.plusNanos(d * day + i * 1000L)),
-          1L))
+    withTempDir("graft_holt") { tmp =>
+      val dir = tmp.getAbsolutePath
+      val day = 86400L * 1000000000L
+      val rows = Seq(0 -> 4, 1 -> 8, 2 -> 2, 3 -> 6).flatMap { case (d, n) =>
+        (0 until n).map(i =>
+          (d * 100L + i,
+            java.sql.Timestamp.from(java.time.Instant.EPOCH.plusNanos(d * day + i * 1000L)),
+            1L))
+      }
+      spark.createDataFrame(rows).toDF("event_id", "ts", "user_id")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val out = Events.eHolt(spark, dir).as[(Long, Long, Long, Long, Long)].collect()
+      assert(out === Array((4L, 7250000L, 875000L, 8125000L, 6250000L)),
+        out.mkString(","))
     }
-    spark.createDataFrame(rows).toDF("event_id", "ts", "user_id")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = Events.eHolt(spark, dir).as[(Long, Long, Long, Long, Long)].collect()
-    assert(out === Array((4L, 7250000L, 875000L, 8125000L, 6250000L)),
-      out.mkString(","))
   }
 
   test("e_holtwinters: fixed-point recursion and forecasts match a hand-computed series") {
@@ -296,24 +307,26 @@ class EventsSpec extends SparkSpec {
     //   t3: l=4.5e6 b=-250000 s[2]=-1250000 sae=9e6
     //   t4: l=5125000 b=187500 s[3]=437500 sae=10750000
     // mae=⌊10750000/3⌋=3583333; forecasts h=1..7 use s[(3+h)%7].
-    val dir = java.nio.file.Files.createTempDirectory("graft_hw").toFile.getAbsolutePath
-    val day = 86400L * 1000000000L
-    val rows = Seq(0 -> 4, 1 -> 8, 2 -> 2, 3 -> 6).flatMap { case (dd, n) =>
-      (0 until n).map(i =>
-        (dd * 100L + i,
-          java.sql.Timestamp.from(java.time.Instant.EPOCH.plusNanos(dd * day + i * 1000L)),
-          1L))
-    }
-    spark.createDataFrame(rows).toDF("event_id", "ts", "user_id")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = Events.eHoltWinters(spark, dir)
-      .as[(Int, Long, Long, Long, Long, Long)].collect()
-    val f = Map(1 -> 5312500L, 2 -> 5500000L, 3 -> 5687500L, 4 -> 5875000L,
-      5 -> 7062500L, 6 -> 5000000L, 7 -> 6875000L)
-    assert(out.length === 7)
-    out.foreach { case (h, fc, l, b, n, mae) =>
-      assert(fc === f(h), s"h=$h forecast")
-      assert((l, b, n, mae) === ((5125000L, 187500L, 4L, 3583333L)))
+    withTempDir("graft_hw") { tmp =>
+      val dir = tmp.getAbsolutePath
+      val day = 86400L * 1000000000L
+      val rows = Seq(0 -> 4, 1 -> 8, 2 -> 2, 3 -> 6).flatMap { case (dd, n) =>
+        (0 until n).map(i =>
+          (dd * 100L + i,
+            java.sql.Timestamp.from(java.time.Instant.EPOCH.plusNanos(dd * day + i * 1000L)),
+            1L))
+      }
+      spark.createDataFrame(rows).toDF("event_id", "ts", "user_id")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val out = Events.eHoltWinters(spark, dir)
+        .as[(Int, Long, Long, Long, Long, Long)].collect()
+      val f = Map(1 -> 5312500L, 2 -> 5500000L, 3 -> 5687500L, 4 -> 5875000L,
+        5 -> 7062500L, 6 -> 5000000L, 7 -> 6875000L)
+      assert(out.length === 7)
+      out.foreach { case (h, fc, l, b, n, mae) =>
+        assert(fc === f(h), s"h=$h forecast")
+        assert((l, b, n, mae) === ((5125000L, 187500L, 4L, 3583333L)))
+      }
     }
   }
 

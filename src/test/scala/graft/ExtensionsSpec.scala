@@ -2,46 +2,24 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{GraftExtensions, GraftSql}
+import org.apache.spark.sql.graft.GraftSql
 
 /** The SQL function surface: every native Catalyst expression must be
-  * reachable from plain SQL through BOTH registration paths — the
-  * extensions injector (`spark.sql.extensions=…GraftExtensions`, the
-  * cluster deployment story) and the programmatic
-  * `GraftSql.ensureRegistered` — and return bit-identical results to
-  * the Column API. The two paths share one description table in
-  * GraftSql, so this spec mostly guards the plumbing: builder arity,
-  * literal-argument extraction, generator registration, and the
-  * extensions class being loadable by name from conf.
-  *
-  * `spark.sql.extensions` is a STATIC conf — honored only at
-  * SparkContext creation — so the conf-driven path runs in a forked
-  * JVM ([[ExtensionsProbe]]); the in-JVM tests exercise the same
-  * injector through `Builder.withExtensions` on a fresh session over
-  * the suite's shared context.
+  * reachable from plain SQL once `GraftSql.ensureRegistered` has run on
+  * a session, and return bit-identical results to the Column API. This
+  * spec mostly guards the plumbing: builder arity, literal-argument
+  * extraction, generator registration, and the optimizer rules the
+  * registry installs.
   */
 class ExtensionsSpec extends SparkSpec {
 
-  /** A fresh session with the injector applied (sharing the suite's
-    * SparkContext), the suite session restored after.
+  /** A fresh session over the suite's SparkContext, with the registry
+    * installed the way every engine session gets it.
     */
-  private def withExtensionsSession[T](f: SparkSession => T): T = {
-    val orig = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[8]")
-        .withExtensions(new GraftExtensions)
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      f(s2)
-    } finally {
-      SparkSession.setDefaultSession(orig)
-      SparkSession.setActiveSession(orig)
-    }
+  private def withRegisteredSession[T](f: SparkSession => T): T = {
+    val s2 = spark.newSession()
+    GraftSql.ensureRegistered(s2)
+    f(s2)
   }
 
   private val fixtureSql =
@@ -84,7 +62,7 @@ class ExtensionsSpec extends SparkSpec {
       |FROM fixture""".stripMargin
 
   test("injector session answers SQL == Column API, all scalar functions") {
-    withExtensionsSession { s2 =>
+    withRegisteredSession { s2 =>
       s2.sql(fixtureSql).createOrReplaceTempView("fixture")
       val viaSql = s2.sql(scalarCallsSql).collect().map(_.toString).toSeq
       val viaCols = columnTwin(s2.sql(fixtureSql)).collect().map(_.toString).toSeq
@@ -94,7 +72,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("pair_explode generator is SQL-callable and yields i<j pairs") {
-    withExtensionsSession { s2 =>
+    withRegisteredSession { s2 =>
       val rows = s2.sql("SELECT x, y FROM (SELECT pair_explode(array(1, 2, 3)))")
         .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
       assert(rows === Seq((1, 2), (1, 3), (2, 3)))
@@ -102,7 +80,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("shape parameters must be foldable int literals") {
-    withExtensionsSession { s2 =>
+    withRegisteredSession { s2 =>
       val err = intercept[Exception] {
         s2.sql("SELECT shingle_set(array('a', 'b'), CAST(id AS INT)) FROM range(2)")
           .collect()
@@ -136,7 +114,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("optimizer rule rewrites HOF inner products to natives, bit-exact") {
-    withExtensionsSession { s2 =>
+    withRegisteredSession { s2 =>
       import graft.functions.Vectors
       // transform-derived arrays carry containsNull = false (non-null
       // lambda over non-null elements): the soundness precondition the
@@ -175,7 +153,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("optimizer rule also installs via spark.experimental.extraOptimizations") {
-    // the per-session path for sessions built without the injector —
+    // the rule alone through the public hook ensureRegistered uses —
     // extraOptimizations run in their own post-optimization batch, so
     // the rule must match the already-cast-simplified shapes too
     import graft.functions.Vectors
@@ -197,7 +175,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("optimizer rule leaves nullable-element arrays on the HOF path") {
-    withExtensionsSession { s2 =>
+    withRegisteredSession { s2 =>
       import graft.functions.Vectors
       // parquet arrays default to containsNull = true — the HOF nulls
       // out on a null element where the natives read primitive buffers,
@@ -212,7 +190,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("assertDense unlocks the rewrite on parquet-sourced frames") {
-    withExtensionsSession { s2 =>
+    withRegisteredSession { s2 =>
       import graft.functions.Vectors
       // the on-ramp for the rule's real audience: read data. The user
       // asserts the embedding column dense (zero-cost retyping, no
@@ -234,7 +212,6 @@ class ExtensionsSpec extends SparkSpec {
         .collect().map(_.toString).toSeq
       assert(got === want && got.nonEmpty)
       // and the SQL spelling reaches the same expression
-      GraftSql.ensureRegistered(s2)
       Tables.embeddings(s2, sf).limit(2).createOrReplaceTempView("emb_ad")
       val viaSql = s2.sql(
         """SELECT aggregate(zip_with(assert_dense(embedding),
@@ -246,65 +223,5 @@ class ExtensionsSpec extends SparkSpec {
         .contains("float_dot"))
       assert(viaSql.collect().map(_.getDouble(0)).forall(_ > 0.0))
     }
-  }
-
-  test("conf path: spark.sql.extensions resolves the injector in a fresh JVM") {
-    val java = sys.props("java.home") + "/bin/java"
-    val addOpens = Seq(
-      "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-      "java.net", "java.nio", "java.util", "java.util.concurrent",
-      "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-      "sun.security.action", "sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-    val cmd = Seq(java) ++ addOpens ++ Seq(
-      "-Dspark.ui.enabled=false", "-Dspark.master=local[2]",
-      "-Dspark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions",
-      "-Xmx2g", "-cp", sys.props("java.class.path"), "graft.ExtensionsProbe")
-    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-    val out = new String(proc.getInputStream.readAllBytes())
-    assert(proc.waitFor() === 0, out.takeRight(1500))
-    assert(out.contains("EXTENSIONS_OK"), out.takeRight(1500))
-  }
-}
-
-/** Forked-JVM probe for the conf-driven extensions path: builds a
-  * session purely from `spark.*` system properties (SparkConf loads
-  * them), so `spark.sql.extensions` is honored at context creation —
-  * then proves a native function resolves from SQL.
-  */
-object ExtensionsProbe {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().getOrCreate()
-    val n = spark.sql(
-      "SELECT sorted_intersect_count(shingle_hash_set(array('a','b','c'), 2), " +
-        "shingle_hash_set(array('a','b','c'), 2)) AS n")
-      .collect().head.getInt(0)
-    // two distinct 2-shingles intersected with themselves
-    assert(n == 2, s"expected 2, got $n")
-
-    // extensions-injected asof machinery: the strategy plans the node,
-    // and PushLeftFilterThroughJoin — sitting INSIDE the operator-
-    // optimization fixed point on this path — sinks a post-join left
-    // filter all the way into the parquet scan's PushedFilters.
-    val dir = java.nio.file.Files.createTempDirectory("graft_asof_probe").toString
-    spark.range(100).selectExpr("id AS k", "id * 10 AS t", "id AS payload")
-      .write.mode("overwrite").parquet(s"$dir/l")
-    val l = spark.read.parquet(s"$dir/l")
-    val r = spark.range(10).selectExpr("id AS rk", "id * 100 AS rt", "id AS rid")
-    val j = graft.plans.AsofJoin.joinAsOf(l, r, "t", "rt", Seq("k"), Seq("rk"),
-        tiebreak = Seq("rid"))
-      .filter(org.apache.spark.sql.functions.col("payload") < 50)
-    assert(j.count() == 50, "asof probe row count")
-    val plan = j.queryExecution.executedPlan.toString
-    // cost-based selection in a conf-driven fresh JVM: the 10-row dim
-    // sits under autoBroadcastJoinThreshold, so with no caller flag
-    // the strategy must auto-plan the BROADCAST exec
-    assert(plan.contains("AsofBroadcastJoin"),
-      "auto-broadcast asof exec missing:\n" + plan.take(1200))
-    assert(plan.contains("PushedFilters: [IsNotNull(payload), LessThan(payload,50)]")
-        || plan.contains("PushedFilters: [LessThan(payload,50)"),
-      "filter did not reach the scan:\n" + plan.take(2000))
-    println("EXTENSIONS_OK")
-    spark.stop()
   }
 }

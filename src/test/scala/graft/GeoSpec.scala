@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.TempDirs.withTempDir
 import graft.operators.Geo
 
 /** Grid spatial join family: exactness vs brute force, salted-form
@@ -140,8 +141,8 @@ class GeoSpec extends SparkSpec {
 
   test("grid store round-trip serves identically; scan reads only touched cells") {
     import graft.sources.IndexStore
-    val dir = java.nio.file.Files.createTempDirectory("graft_grid_store").toString
-    try {
+    withTempDir("graft_grid_store") { tmp =>
+      val dir = tmp.toString
       // gated path: save -> reload -> serve equals the in-session join
       assert(Geo.gGridServed(spark, sf).collect().toSeq ==
         Geo.gGridJoin(spark, sf).collect().toSeq)
@@ -172,8 +173,6 @@ class GeoSpec extends SparkSpec {
       val read = scans.map(_.metrics("numPartitions").value).max
       assert(read <= 18, s"read $read cell dirs for 2 sites (expected <= 18)")
       assert(allCells > 18, s"store only has $allCells cell dirs; test vacuous")
-    } finally {
-      TempDirs.rm(new java.io.File(dir))
     }
   }
 
@@ -271,8 +270,8 @@ class GeoSpec extends SparkSpec {
 
   test("g_zbox_served: Morton z-range prunes the store scan to the box quadrant") {
     import graft.sources.IndexStore
-    val dir = java.nio.file.Files.createTempDirectory("graft_grid_box").toString
-    try {
+    withTempDir("graft_grid_box") { tmp =>
+      val dir = tmp.toString
       val probe = spark.range(1, 5001).toDF("c_custkey")
         .withColumn("c_acctbal", lit(1.0))
         .withColumn("cx", expr("CAST((c_custkey * 2654435761) % 100003 AS DOUBLE) / 100003.0"))
@@ -298,8 +297,6 @@ class GeoSpec extends SparkSpec {
       val read = scans.map(_.metrics("numPartitions").value).max
       assert(read <= 16, s"read $read cell dirs for the box (expected <= 16)")
       assert(allCells > 100, s"store only has $allCells cell dirs; test vacuous")
-    } finally {
-      TempDirs.rm(new java.io.File(dir))
     }
   }
 

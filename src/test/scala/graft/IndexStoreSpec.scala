@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.TempDirs.withTempDir
 import graft.functions.Vectors
 import graft.operators.{Geo, Materialize, Similarity}
 import graft.sources.IndexStore
@@ -19,57 +20,55 @@ class IndexStoreSpec extends SparkSpec {
   import spark.implicits._
 
   test("ivf-pq index round-trips as codes only and serves == s_ivf_pq") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_index")
-      .toString
-    try {
-      val (cent, codebook, codes) = Similarity.buildIvfPqIndex(spark, sf)
-      IndexStore.saveIvfPq(dir, cent, codebook, codes)
-      Materialize.releaseAll(spark) // reload must stand alone — no re-fit
-      val (cent2, cb2, codes2) = IndexStore.loadIvfPq(spark, dir)
-      val queries = Tables.embeddings(spark, sf)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          Vectors.norm(col("embedding")).as("q_nrm"))
-        .filter(col("q_id") < Similarity.NumQueries)
-      val served = Similarity.annIvfPqServe(queries, cent2, cb2, codes2)
-      val got = served.as[(Long, Long, Int, Double)].collect().toSeq
-      // the layout pays off: the serve path plants the probed cells as
-      // a STATIC literal partition filter, so only probed ivf_cell=
-      // directories are read — asserted on the EXECUTED scan's metric,
-      // not the plan string (round 9 pinned the string "dynamicpruning",
-      // which also matches the degraded dynamicpruningexpression(true)
-      // no-op Spark actually planned — a metric can't lie)
-      val codesLive = IndexStore.resolvePath(spark, dir, "codes")
-      val codesScans = scansUnder(served.queryExecution.executedPlan)
-        .filter(_.relation.location.rootPaths
-          .exists(_.toString.endsWith(codesLive.split('/').last)))
-      assert(codesScans.nonEmpty, "codes scan not found")
-      val readCells = codesScans.map(_.metrics("numPartitions").value).max
-      val allCells = Option(new java.io.File(codesLive).listFiles())
-        .toSeq.flatten
-        .count(f => f.isDirectory && f.getName.startsWith("ivf_cell="))
-      assert(readCells < allCells,
-        s"partition pruning lost on the loaded codes scan: " +
-          s"read $readCells of $allCells cells")
-      // the oracle-checked query IS the serve path over the in-session
-      // build — reload must reproduce it exactly
-      val want = Similarity.sIvfPq(spark, sf)
-        .as[(Long, Long, Int, Double)].collect().toSeq
-      assert(got === want)
-      assert(got.nonEmpty)
-      // the compressed-index property: the persisted codes carry NO
-      // raw vector column (storage = M small ints + a list id)
-      val codesSchema = spark.read.parquet(codesLive).schema
-      assert(!codesSchema.exists(_.dataType.typeName == "array"),
-        s"raw vectors leaked into the codes store: $codesSchema")
-      // inverted-list layout on disk
-      val cells = Option(new java.io.File(codesLive).listFiles())
-        .toSeq.flatten.filter(f => f.isDirectory &&
-          f.getName.startsWith("ivf_cell="))
-      assert(cells.nonEmpty && cells.size <= Similarity.IvfK,
-        s"expected ivf_cell=* dirs, found ${cells.map(_.getName)}")
-    } finally {
-      Materialize.releaseAll(spark)
-      rmTree(dir)
+    withTempDir("graft_ivfpq_index") { tmp =>
+      val dir = tmp.toString
+      try {
+        val (cent, codebook, codes) = Similarity.buildIvfPqIndex(spark, sf)
+        IndexStore.saveIvfPq(dir, cent, codebook, codes)
+        Materialize.releaseAll(spark) // reload must stand alone — no re-fit
+        val (cent2, cb2, codes2) = IndexStore.loadIvfPq(spark, dir)
+        val queries = Tables.embeddings(spark, sf)
+          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+            Vectors.norm(col("embedding")).as("q_nrm"))
+          .filter(col("q_id") < Similarity.NumQueries)
+        val served = Similarity.annIvfPqServe(queries, cent2, cb2, codes2)
+        val got = served.as[(Long, Long, Int, Double)].collect().toSeq
+        // the layout pays off: the serve path plants the probed cells as
+        // a STATIC literal partition filter, so only probed ivf_cell=
+        // directories are read — asserted on the EXECUTED scan's metric,
+        // not the plan string (round 9 pinned the string "dynamicpruning",
+        // which also matches the degraded dynamicpruningexpression(true)
+        // no-op Spark actually planned — a metric can't lie)
+        val codesLive = IndexStore.resolvePath(spark, dir, "codes")
+        val codesScans = scansUnder(served.queryExecution.executedPlan)
+          .filter(_.relation.location.rootPaths
+            .exists(_.toString.endsWith(codesLive.split('/').last)))
+        assert(codesScans.nonEmpty, "codes scan not found")
+        val readCells = codesScans.map(_.metrics("numPartitions").value).max
+        val allCells = Option(new java.io.File(codesLive).listFiles())
+          .toSeq.flatten
+          .count(f => f.isDirectory && f.getName.startsWith("ivf_cell="))
+        assert(readCells < allCells,
+          s"partition pruning lost on the loaded codes scan: " +
+            s"read $readCells of $allCells cells")
+        // the oracle-checked query IS the serve path over the in-session
+        // build — reload must reproduce it exactly
+        val want = Similarity.sIvfPq(spark, sf)
+          .as[(Long, Long, Int, Double)].collect().toSeq
+        assert(got === want)
+        assert(got.nonEmpty)
+        // the compressed-index property: the persisted codes carry NO
+        // raw vector column (storage = M small ints + a list id)
+        val codesSchema = spark.read.parquet(codesLive).schema
+        assert(!codesSchema.exists(_.dataType.typeName == "array"),
+          s"raw vectors leaked into the codes store: $codesSchema")
+        // inverted-list layout on disk
+        val cells = Option(new java.io.File(codesLive).listFiles())
+          .toSeq.flatten.filter(f => f.isDirectory &&
+            f.getName.startsWith("ivf_cell="))
+        assert(cells.nonEmpty && cells.size <= Similarity.IvfK,
+          s"expected ivf_cell=* dirs, found ${cells.map(_.getName)}")
+      } finally Materialize.releaseAll(spark)
     }
   }
 
@@ -81,52 +80,50 @@ class IndexStoreSpec extends SparkSpec {
     // disk. A regression that keeps the plan shape but stops pruning
     // files (e.g. a filter pushed to the wrong side) fails on the
     // measured count.
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_metrics")
-      .toString
-    try {
-      val (cent, codebook, codes) = Similarity.buildIvfPqIndex(spark, sf)
-      IndexStore.saveIvfPq(dir, cent, codebook, codes)
-      Materialize.releaseAll(spark)
-      val (cent2, cb2, codes2) = IndexStore.loadIvfPq(spark, dir)
-      val queries = Tables.embeddings(spark, sf)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          Vectors.norm(col("embedding")).as("q_nrm"))
-        .filter(col("q_id") < Similarity.NumQueries)
-      val served = Similarity.annIvfPqServe(queries, cent2, cb2, codes2)
-      assert(served.collect().nonEmpty)
+    withTempDir("graft_ivf_metrics") { tmp =>
+      val dir = tmp.toString
+      try {
+        val (cent, codebook, codes) = Similarity.buildIvfPqIndex(spark, sf)
+        IndexStore.saveIvfPq(dir, cent, codebook, codes)
+        Materialize.releaseAll(spark)
+        val (cent2, cb2, codes2) = IndexStore.loadIvfPq(spark, dir)
+        val queries = Tables.embeddings(spark, sf)
+          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+            Vectors.norm(col("embedding")).as("q_nrm"))
+          .filter(col("q_id") < Similarity.NumQueries)
+        val served = Similarity.annIvfPqServe(queries, cent2, cb2, codes2)
+        assert(served.collect().nonEmpty)
 
-      // expected: the distinct probed cells, recomputed with the serve
-      // path's own probe rule (top-nProbe rounded cosine, c_id ties)
-      import org.apache.spark.sql.expressions.Window
-      val wP = Window.partitionBy("q_id")
-        .orderBy(col("ccos").desc, col("c_id"))
-      val probedCells = queries.crossJoin(broadcast(cent2))
-        .select(col("q_id"), col("c_id"),
-          round(Vectors.cosineWithNorms(
-            Vectors.dot(col("q_emb"), col("c_emb")),
-            col("q_nrm"), col("c_nrm")), 6).as("ccos"))
-        .withColumn("prn", row_number().over(wP))
-        .filter(col("prn") <= Similarity.NumProbes)
-        .select("c_id").distinct().count()
-      val codesLive = IndexStore.resolvePath(spark, dir, "codes")
-      val cellsOnDisk = Option(new java.io.File(codesLive)
-        .listFiles()).toSeq.flatten
-        .count(f => f.isDirectory && f.getName.startsWith("ivf_cell="))
+        // expected: the distinct probed cells, recomputed with the serve
+        // path's own probe rule (top-nProbe rounded cosine, c_id ties)
+        import org.apache.spark.sql.expressions.Window
+        val wP = Window.partitionBy("q_id")
+          .orderBy(col("ccos").desc, col("c_id"))
+        val probedCells = queries.crossJoin(broadcast(cent2))
+          .select(col("q_id"), col("c_id"),
+            round(Vectors.cosineWithNorms(
+              Vectors.dot(col("q_emb"), col("c_emb")),
+              col("q_nrm"), col("c_nrm")), 6).as("ccos"))
+          .withColumn("prn", row_number().over(wP))
+          .filter(col("prn") <= Similarity.NumProbes)
+          .select("c_id").distinct().count()
+        val codesLive = IndexStore.resolvePath(spark, dir, "codes")
+        val cellsOnDisk = Option(new java.io.File(codesLive)
+          .listFiles()).toSeq.flatten
+          .count(f => f.isDirectory && f.getName.startsWith("ivf_cell="))
 
-      // the executed codes scan, dug out of the adaptive plan
-      val codesScan = scansUnder(served.queryExecution.executedPlan)
-        .filter(_.relation.location.rootPaths
-          .exists(_.toString.endsWith(codesLive.split('/').last)))
-      assert(codesScan.nonEmpty, "codes scan not found in plan")
-      val readPartitions = codesScan
-        .map(_.metrics("numPartitions").value).max
-      assert(readPartitions === probedCells,
-        s"scan read $readPartitions cell dirs; probes cover $probedCells")
-      assert(readPartitions < cellsOnDisk,
-        s"no pruning: read $readPartitions of $cellsOnDisk cells")
-    } finally {
-      Materialize.releaseAll(spark)
-      rmTree(dir)
+        // the executed codes scan, dug out of the adaptive plan
+        val codesScan = scansUnder(served.queryExecution.executedPlan)
+          .filter(_.relation.location.rootPaths
+            .exists(_.toString.endsWith(codesLive.split('/').last)))
+        assert(codesScan.nonEmpty, "codes scan not found in plan")
+        val readPartitions = codesScan
+          .map(_.metrics("numPartitions").value).max
+        assert(readPartitions === probedCells,
+          s"scan read $readPartitions cell dirs; probes cover $probedCells")
+        assert(readPartitions < cellsOnDisk,
+          s"no pruning: read $readPartitions of $cellsOnDisk cells")
+      } finally Materialize.releaseAll(spark)
     }
   }
 
@@ -137,74 +134,72 @@ class IndexStoreSpec extends SparkSpec {
     // written WITHOUT clustering, so every write task leaves a file in
     // every cell it touches, named live by a hand-written MANIFEST.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_compact")
-      .toString
-    try {
-      val (centFit, cbFit, codesFit) = Similarity.buildIvfPqIndex(spark, sf)
-      centFit.write.parquet(s"$dir/centroids_v1")
-      cbFit.write.parquet(s"$dir/codebook_v1")
-      codesFit.repartition(4).write.partitionBy("ivf_cell")
-        .parquet(s"$dir/codes_v1")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/MANIFEST"),
-        "centroids=v1\ncodebook=v1\ncodes=v1\n")
-      Materialize.releaseAll(spark)
-      def liveCodes = IndexStore.resolvePath(spark, dir, "codes")
-      def cellDirs = new java.io.File(liveCodes).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("ivf_cell="))
-      def parquetFiles(d: java.io.File): Seq[java.io.File] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-          else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
-        walk(d)
-      }
-      assert(liveCodes === s"$dir/codes_v1")
-      assert(cellDirs.exists(parquetFiles(_).length > 1),
-        "fixture never fragmented — the write landed in one file per cell?")
+    withTempDir("graft_ivf_compact") { tmp =>
+      val dir = tmp.toString
+      try {
+        val (centFit, cbFit, codesFit) = Similarity.buildIvfPqIndex(spark, sf)
+        centFit.write.parquet(s"$dir/centroids_v1")
+        cbFit.write.parquet(s"$dir/codebook_v1")
+        codesFit.repartition(4).write.partitionBy("ivf_cell")
+          .parquet(s"$dir/codes_v1")
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/MANIFEST"),
+          "centroids=v1\ncodebook=v1\ncodes=v1\n")
+        Materialize.releaseAll(spark)
+        def liveCodes = IndexStore.resolvePath(spark, dir, "codes")
+        def cellDirs = new java.io.File(liveCodes).listFiles()
+          .filter(f => f.isDirectory && f.getName.startsWith("ivf_cell="))
+        def parquetFiles(d: java.io.File): Seq[java.io.File] = {
+          def walk(f: java.io.File): Seq[java.io.File] =
+            if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+            else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
+          walk(d)
+        }
+        assert(liveCodes === s"$dir/codes_v1")
+        assert(cellDirs.exists(parquetFiles(_).length > 1),
+          "fixture never fragmented — the write landed in one file per cell?")
 
-      val queries = Tables.embeddings(spark, sf)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          Vectors.norm(col("embedding")).as("q_nrm"))
-        .filter(col("q_id") < Similarity.NumQueries)
-      def serve(): Seq[(Long, Long, Int, Double)] = {
-        val (c, cb, codes) = IndexStore.loadIvfPq(spark, dir)
-        Similarity.annIvfPqServe(queries, c, cb, codes)
-          .as[(Long, Long, Int, Double)].collect().toSeq
-      }
-      def compact(): Unit = {
-        val (c, cb, codes) = IndexStore.loadIvfPq(spark, dir)
-        IndexStore.saveIvfPq(dir, c, cb, codes)
-      }
-      def manifestText: String =
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(s"$dir/MANIFEST")), "UTF-8")
-      val before = serve()
-      assert(before.nonEmpty)
-      val rowsBefore = spark.read.parquet(liveCodes).count()
-      compact()
-      assert(liveCodes === s"$dir/codes_v2", s"unexpected live dir $liveCodes")
-      assert(cellDirs.nonEmpty &&
-        cellDirs.forall(parquetFiles(_).length === 1),
-        "compaction left a multi-file cell directory")
-      assert(!new java.io.File(s"$dir/codes_staging").exists(),
-        "staging directory survived the swap")
-      // the store MANIFEST names the compacted version
-      assert(manifestText.contains("codes=v2"),
-        s"store manifest missing/stale after compaction: $manifestText")
-      assert(spark.read.parquet(liveCodes).count() === rowsBefore)
-      assert(serve() === before, "serve results drifted across compaction")
+        val queries = Tables.embeddings(spark, sf)
+          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+            Vectors.norm(col("embedding")).as("q_nrm"))
+          .filter(col("q_id") < Similarity.NumQueries)
+        def serve(): Seq[(Long, Long, Int, Double)] = {
+          val (c, cb, codes) = IndexStore.loadIvfPq(spark, dir)
+          Similarity.annIvfPqServe(queries, c, cb, codes)
+            .as[(Long, Long, Int, Double)].collect().toSeq
+        }
+        def compact(): Unit = {
+          val (c, cb, codes) = IndexStore.loadIvfPq(spark, dir)
+          IndexStore.saveIvfPq(dir, c, cb, codes)
+        }
+        def manifestText: String =
+          new String(java.nio.file.Files.readAllBytes(
+            java.nio.file.Paths.get(s"$dir/MANIFEST")), "UTF-8")
+        val before = serve()
+        assert(before.nonEmpty)
+        val rowsBefore = spark.read.parquet(liveCodes).count()
+        compact()
+        assert(liveCodes === s"$dir/codes_v2", s"unexpected live dir $liveCodes")
+        assert(cellDirs.nonEmpty &&
+          cellDirs.forall(parquetFiles(_).length === 1),
+          "compaction left a multi-file cell directory")
+        assert(!new java.io.File(s"$dir/codes_staging").exists(),
+          "staging directory survived the swap")
+        // the store MANIFEST names the compacted version
+        assert(manifestText.contains("codes=v2"),
+          s"store manifest missing/stale after compaction: $manifestText")
+        assert(spark.read.parquet(liveCodes).count() === rowsBefore)
+        assert(serve() === before, "serve results drifted across compaction")
 
-      // SECOND compaction: the version counter advances, the
-      // fragmented v1 is reaped once it is no longer the retained
-      // previous copy, serve stable
-      compact()
-      assert(liveCodes === s"$dir/codes_v3", s"unexpected live dir $liveCodes")
-      assert(cellDirs.forall(parquetFiles(_).length === 1))
-      assert(!new java.io.File(s"$dir/codes_v1").exists(),
-        "fragmented v1 survived cleanup")
-      assert(serve() === before)
-    } finally {
-      Materialize.releaseAll(spark)
-      rmTree(dir)
+        // SECOND compaction: the version counter advances, the
+        // fragmented v1 is reaped once it is no longer the retained
+        // previous copy, serve stable
+        compact()
+        assert(liveCodes === s"$dir/codes_v3", s"unexpected live dir $liveCodes")
+        assert(cellDirs.forall(parquetFiles(_).length === 1))
+        assert(!new java.io.File(s"$dir/codes_v1").exists(),
+          "fragmented v1 survived cleanup")
+        assert(serve() === before)
+      } finally Materialize.releaseAll(spark)
     }
   }
 
@@ -214,9 +209,8 @@ class IndexStoreSpec extends SparkSpec {
     // holds four fifths of the points, build B all of them, so what
     // serves tells them apart.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_grid_crash")
-      .toString
-    try {
+    withTempDir("graft_grid_crash") { tmp =>
+      val dir = tmp.toString
       val all = spark.range(1, 2001).toDF("c_custkey")
         .withColumn("c_acctbal", lit(1.0))
         .withColumn("cx", expr("CAST((c_custkey * 2654435761) % 100003 AS DOUBLE) / 100003.0"))
@@ -302,7 +296,7 @@ class IndexStoreSpec extends SparkSpec {
       assert(new java.io.File(live).listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("cell_z="))
         .forall(leafFiles(_).size === 1))
-    } finally rmTree(dir)
+    }
   }
 
   test("multi-component publish killed at EVERY step serves one consistent tuple") {
@@ -335,9 +329,8 @@ class IndexStoreSpec extends SparkSpec {
       "staged:codebook", "versioned:codebook",
       "staged:codes", "versioned:codes", "manifest", "cleaned")
     for (killAt <- steps) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_manifest_kill").toString
-      try {
+      withTempDir("graft_manifest_kill") { tmp =>
+        val dir = tmp.toString
         save(dir, "A") // complete build A
         assert(servedTuple(dir) === tuples("A"))
         intercept[Killed] { // build B, killed at `killAt`
@@ -356,14 +349,14 @@ class IndexStoreSpec extends SparkSpec {
         save(dir, "B")
         assert(servedTuple(dir) === tuples("B"),
           s"re-run after kill at '$killAt' failed to converge")
-      } finally rmTree(dir)
+      }
     }
   }
 
   test("resolution: stale pointer falls back; legacy plain store still reads") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_resolve").toString
-    try {
+    withTempDir("graft_resolve") { tmp =>
+      val dir = tmp.toString
       // a manifest naming a MISSING version dir (external cleanup /
       // tampering) must not strand readers on a nonexistent path:
       // resolution falls back to the highest complete version
@@ -372,7 +365,7 @@ class IndexStoreSpec extends SparkSpec {
         java.nio.file.Paths.get(s"$dir/MANIFEST"), "codes=v42\n")
       assert(IndexStore.resolvePath(spark, dir, "codes") === s"$dir/codes_v7",
         "stale manifest entry must fall back to the highest complete version")
-    } finally rmTree(dir)
+    }
   }
 
   test("store writes cluster at a PINNED partition count (AQE must not coalesce)") {
@@ -410,8 +403,8 @@ class IndexStoreSpec extends SparkSpec {
       Seq((0, 0, Array(0f, 1f))).toDF("m", "cell", "c_emb"),
       (0 until n).map(i => (i.toLong, 0, 0, i % 2))
         .toDF("vec_id", "m", "cell", "ivf_cell"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_retain").toString
-    try {
+    withTempDir("graft_retain") { tmp =>
+      val dir = tmp.toString
       publish(dir, 4) // codes_v1 serves
       val pinnedPath = IndexStore.resolvePath(spark, dir, "codes")
       assert(pinnedPath.endsWith("codes_v1"))
@@ -433,7 +426,7 @@ class IndexStoreSpec extends SparkSpec {
         "previously-serving v2 should be retained")
       assert(spark.read.parquet(
         IndexStore.resolvePath(spark, dir, "codes")).count() === 8L)
-    } finally rmTree(dir)
+    }
   }
 
   /** Every FileSourceScanExec in an executed plan, descending through
@@ -454,6 +447,4 @@ class IndexStoreSpec extends SparkSpec {
     }
     self ++ kids.flatMap(scansUnder)
   }
-
-  private def rmTree(dir: String): Unit = TempDirs.rm(new java.io.File(dir))
 }

@@ -1,9 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
+import graft.TempDirs.withTempDir
 import graft.operators.Events
 
 /** Sink-side coverage: partitioned parquet layout with partition pruning
@@ -13,21 +12,23 @@ import graft.operators.Events
 class SinksSpec extends SparkSpec {
 
   test("partitionBy write + partition-pruned read-back") {
-    val out = Files.createTempDirectory("graft_part").toFile.getAbsolutePath + "/events"
-    val ev = Events.load(spark, sf)
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
+    withTempDir("graft_part") { tmp =>
+      val out = tmp.getAbsolutePath + "/events"
+      val ev = Events.load(spark, sf)
+        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
+      ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
 
-    val back = spark.read.parquet(out).filter(col("event_type") === "click")
-    back.collect()
-    val plan = back.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(event_type"),
-      "partition pruning missing:\n" + plan.take(800))
-    assert(back.count() === ev.filter(col("event_type") === "click").count())
+      val back = spark.read.parquet(out).filter(col("event_type") === "click")
+      back.collect()
+      val plan = back.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters: [isnotnull(event_type"),
+        "partition pruning missing:\n" + plan.take(800))
+      assert(back.count() === ev.filter(col("event_type") === "click").count())
 
-    // round-trip fidelity over all partitions
-    val total = spark.read.parquet(out).count()
-    assert(total === ev.count())
+      // round-trip fidelity over all partitions
+      val total = spark.read.parquet(out).count()
+      assert(total === ev.count())
+    }
   }
 
   test("dynamic partition overwrite: backfill replaces only its partitions") {
@@ -35,78 +36,39 @@ class SinksSpec extends SparkSpec {
     // job must replace THAT day's partitions and leave every other
     // partition untouched — static overwrite mode would truncate the
     // whole table first
-    val out = Files.createTempDirectory("graft_dynpart").toFile.getAbsolutePath + "/ev"
-    val ev = Events.load(spark, sf)
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
-    // materialize every before-state number NOW — the frame is lazy
-    // and would re-list the rewritten files after the backfill
-    val before = spark.read.parquet(out)
-    val clicksBefore = before.filter(col("event_type") === "click").count()
-    val othersBefore = before.filter(col("event_type") =!= "click").count()
-    val sumBefore = before.filter(col("event_type") === "click")
-      .agg(sum(col("value"))).collect()(0).getDouble(0)
+    withTempDir("graft_dynpart") { tmp =>
+      val out = tmp.getAbsolutePath + "/ev"
+      val ev = Events.load(spark, sf)
+        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
+      ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
+      // materialize every before-state number NOW — the frame is lazy
+      // and would re-list the rewritten files after the backfill
+      val before = spark.read.parquet(out)
+      val clicksBefore = before.filter(col("event_type") === "click").count()
+      val othersBefore = before.filter(col("event_type") =!= "click").count()
+      val sumBefore = before.filter(col("event_type") === "click")
+        .agg(sum(col("value"))).collect()(0).getDouble(0)
 
-    val old = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // "backfill" the click partition with a corrected (halved) value
-      ev.filter(col("event_type") === "click")
-        .withColumn("value", col("value") / 2)
-        .write.mode("overwrite").partitionBy("event_type").parquet(out)
-    } finally old match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+      val old = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      try {
+        // "backfill" the click partition with a corrected (halved) value
+        ev.filter(col("event_type") === "click")
+          .withColumn("value", col("value") / 2)
+          .write.mode("overwrite").partitionBy("event_type").parquet(out)
+      } finally old match {
+        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
+        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      }
 
-    val after = spark.read.parquet(out)
-    assert(after.filter(col("event_type") === "click").count() === clicksBefore)
-    assert(after.filter(col("event_type") =!= "click").count() === othersBefore,
-      "non-click partitions must survive the backfill untouched")
-    // the backfilled partition really carries the new values
-    val sumAfter = after.filter(col("event_type") === "click")
-      .agg(sum(col("value"))).collect()(0).getDouble(0)
-    assert(math.abs(sumAfter - sumBefore / 2) < 1e-6)
-  }
-
-  test("shard sink: fixed-size shards hold exact rank ranges; manifest agrees") {
-    import spark.implicits._
-    import graft.sources.ShardSink
-    val out = Files.createTempDirectory("graft_shard").toFile.getAbsolutePath + "/docs"
-    val docs = Tables.documents(spark, sf).select("doc_id", "lang", "text")
-    val n = docs.count()
-    val per = 128L
-    ShardSink.writeShards(docs, out, per, Seq("doc_id"))
-
-    // shard k must hold exactly ranks [k*per, (k+1)*per) of the doc_id order
-    val ids = docs.select("doc_id").as[Long].collect().sorted
-    val expected = ids.grouped(per.toInt).toSeq
-    val back = spark.read.parquet(out)
-    assert(back.count() === n)
-    expected.zipWithIndex.foreach { case (want, k) =>
-      val got = back.filter(col("shard") === k)
-        .select("doc_id").as[Long].collect().sorted
-      assert(got.toSeq === want.toSeq, s"shard $k membership")
+      val after = spark.read.parquet(out)
+      assert(after.filter(col("event_type") === "click").count() === clicksBefore)
+      assert(after.filter(col("event_type") =!= "click").count() === othersBefore,
+        "non-click partitions must survive the backfill untouched")
+      // the backfilled partition really carries the new values
+      val sumAfter = after.filter(col("event_type") === "click")
+        .agg(sum(col("value"))).collect()(0).getDouble(0)
+      assert(math.abs(sumAfter - sumBefore / 2) < 1e-6)
     }
-    // one data file per shard: the pre-write repartition on shard id
-    // puts each shard in one task
-    val shardDirs = new java.io.File(out).listFiles().filter(_.getName.startsWith("shard="))
-    assert(shardDirs.length === expected.length)
-    shardDirs.foreach { d =>
-      assert(d.listFiles().count(_.getName.endsWith(".parquet")) === 1,
-        s"${d.getName} not a single file")
-    }
-    // manifest: row counts and key ranges per shard, readable on its own
-    val man = spark.read.parquet(s"$out/_manifest")
-      .select("shard", "rows", "first_key", "last_key")
-      .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
-    assert(man.length === expected.length)
-    man.foreach { case (k, rows, first, last) =>
-      val want = expected(k.toInt)
-      assert(rows === want.length && first === want.head && last === want.last,
-        s"manifest shard $k")
-    }
-    // _manifest must be invisible to a plain read of the shard path
-    assert(!back.columns.contains("rows"))
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.TempDirs.withTempDir
 import graft.operators.TextAnalysis
 
 /** Spark-side semantics for the text-analysis operators (value parity
@@ -86,11 +87,10 @@ class TextAnalysisSpec extends SparkSpec {
         .mkString(" ")
       (i.toLong, lang, body)
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_langid_floor").toString
-    docs.toDF("doc_id", "lang", "text").write.mode("overwrite")
-      .parquet(s"$dir/documents.parquet")
-    try {
+    withTempDir("graft_langid_floor") { tmp =>
+      val dir = tmp.toString
+      docs.toDF("doc_id", "lang", "text").write.mode("overwrite")
+        .parquet(s"$dir/documents.parquet")
       val cells = TextAnalysis.tLangIdEval(spark, dir)
         .as[(String, String, Long, Double)].collect().toSeq
       assert(cells.nonEmpty)
@@ -100,8 +100,6 @@ class TextAnalysisSpec extends SparkSpec {
         assert(recall >= 0.95,
           s"recall floor broken for $l: $recall — cells: $cells")
       }
-    } finally {
-      TempDirs.rm(new java.io.File(dir))
     }
   }
 
