@@ -45,6 +45,15 @@ object WordScoreMain {
     Some((confs.result(), positional.result()))
   }
 
+  /** The messages of `e`'s cause chain, outermost first: a session that
+    * fails to start on a bad `-D` value names the key and value only in
+    * a cause.
+    */
+  private def causes(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
+      .map(c => Option(c.getMessage).getOrElse(c.getClass.getName)).toSeq.distinct
+      .mkString(" <- ")
+
   def main(args: Array[String]): Unit = {
     val parsed = parseArgs(args).filter(_._2.length == 2)
     if (parsed.isEmpty) {
@@ -74,7 +83,7 @@ object WordScoreMain {
         0
       } catch {
         case e: Throwable =>
-          System.err.println(s"word-score failed: ${e.getMessage}")
+          System.err.println(s"word-score failed: ${causes(e)}")
           1
       }
     if (spark != null) spark.stop()

@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions._
   * Tokenization reproduces the reference's `java.util.StringTokenizer`
   * defaults (reference `ComputeWordScore.java:116-120`): delimiters are
   * exactly {space, \t, \n, \r, \f}, empty tokens are never emitted, and
-  * there is NO case folding or punctuation stripping.
+  * there is NO case folding or punctuation stripping. The word-score
+  * job tokenizes with the same rule in its combiner's byte scan
+  * (`graft.plans.WordScoreCombine`); [[tokens]] serves everything else.
   *
   * `split` on the delimiter-class regex can produce ONE leading empty
   * string (when the text starts with a delimiter) and, with Spark's
@@ -48,9 +50,6 @@ object Text {
     */
   def tokens(text: Column): Column =
     array_remove(split(text, DelimRegex), lit(""))
-
-  /** One row per token. Use after selecting the carry-along columns. */
-  def explodedWord(text: Column): Column = explode(tokens(text))
 
   /** Word-level n-gram shingles of size n as space-joined strings.
     * Documents shorter than n yield an empty array — guarded

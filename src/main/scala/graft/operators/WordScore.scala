@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
+import graft.plans.WordScoreCombine
 
 /** The reference's entire computation, Spark-first.
   *
@@ -14,17 +15,21 @@ import graft.functions.Text
   *
   * The reference's two MapReduce jobs + materialized SequenceFile
   * (`:170-176`) collapse into ONE lazy DAG with one exchange:
-  *   scan → project → generate(explode) → partial sum → shuffle(word)
+  *   scan → project → combine → partial sum → shuffle(word)
   *   → final sum → one-partition sort.
-  * The hand-written combiner (`:180-181`) is Spark's automatic partial
-  * HashAggregate. The sort is the reference's single reducer
+  * The hand-written combiner (`:180-181`) is in-mapper combining:
+  * [[graft.plans.WordScoreCombine]] scans each review's UTF-8 bytes and
+  * sums per word within the partition, so the partial HashAggregate
+  * above it sees one row per distinct word per partition (and per
+  * flush of the combiner's bounded map), not one row per token. The
+  * sort is the reference's single reducer
   * (`:209-213`): `coalesce(1)` is a narrow dependency, so one task reads
   * the vocabulary-sized shuffle, finishes the sums and sorts them. The
   * output is the one file the sink writes anyway, so a range exchange
   * (and the sampling job that plans it) would buy nothing.
   *
-  * The vocabulary is tiny relative to the corpus, so the partial
-  * aggregate collapses virtually all rows map-side; the shuffle moves
+  * The vocabulary is tiny relative to the corpus, so the combiner
+  * collapses virtually all tokens map-side; the shuffle moves
   * only |vocab| × shufflePartitions rows. Hot words ("the") are
   * therefore NOT a skew problem post-combine; see [[wordScoreSalted]]
   * for the explicit two-phase pattern used when the grouped value state
@@ -32,29 +37,28 @@ import graft.functions.Text
   */
 object WordScore {
 
-  /** (stars, text) → one (modifier, word) row per token. Fail-fast on
-    * stars outside {1..5}, matching the reference's NPE task failure
+  /** (stars, text) → one (word, partial) row per distinct word per
+    * partition: [[graft.plans.WordScoreCombine]] tokenizes, scores and
+    * pre-sums each partition. Fail-fast on stars outside {1..5},
+    * matching the reference's NPE task failure
     * (`ComputeWordScore.java:113`) EXACTLY: the reference unboxes the
     * modifier at `context.write`, i.e. once per emitted token — a
     * bad-stars review whose text tokenizes to zero words never reaches
-    * the write and succeeds. The strict modifier is therefore evaluated
-    * in the projection ABOVE the Generate (per word), not below it (per
-    * review); Catalyst does not push project expressions under a
-    * Generate, so token-less reviews never evaluate it (pinned by
-    * WordScoreSpec for both [[score]] and [[wordScoreSalted]]).
+    * the write and succeeds. The combiner therefore evaluates the strict
+    * modifier at a review's first token, never for a token-less review
+    * (pinned by WordScoreSpec for both [[score]] and
+    * [[wordScoreSalted]]).
     *
     * A review with a missing or null `text` fails the job whatever its
     * stars, like the reference's NPE on `value.get("text")`
-    * (`ComputeWordScore.java:116`). That check runs once per review,
-    * below the Generate: `explode(null)` would otherwise emit nothing
-    * and the job would succeed silently.
+    * (`ComputeWordScore.java:116`). The combiner evaluates that guard
+    * once per review.
     */
-  private def wordModifiers(reviews: DataFrame, stars: Column, text: Column): DataFrame =
-    reviews
-      .select(stars.as("stars_in"), Text.explodedWord(
-        when(text.isNull, raise_error(lit("review has a missing or null `text`")))
-          .otherwise(text)).as("word"))
-      .select(Text.starsModifierStrict(col("stars_in")).as("modifier"), col("word"))
+  private def partials(reviews: DataFrame, stars: Column, text: Column): DataFrame =
+    WordScoreCombine.combine(reviews.select(stars.as("stars"), text.as("text")),
+      Text.starsModifierStrict(col("stars")),
+      when(col("text").isNull, raise_error(lit("review has a missing or null `text`")))
+        .otherwise(col("text")))
 
   /** (word, score) → one partition sorted score desc, word asc (the
     * deterministic tie-break the reference explicitly allows, `:56`).
@@ -64,9 +68,9 @@ object WordScore {
 
   /** (stars, text) → (word, score), sorted score desc, word asc. */
   def score(reviews: DataFrame, stars: Column, text: Column): DataFrame =
-    sortedOnePartition(wordModifiers(reviews, stars, text)
+    sortedOnePartition(partials(reviews, stars, text)
       .groupBy("word")
-      .agg(sum("modifier").as("score")))
+      .agg(sum("partial").as("score")))
 
   /** Flagship over the `documents` fixture: the fixture has no ratings,
     * so a deterministic star rating is derived from `doc_id`
@@ -96,10 +100,10 @@ object WordScore {
     * word would otherwise pin a single reducer.
     */
   def wordScoreSalted(reviews: DataFrame, stars: Column, text: Column): DataFrame =
-    sortedOnePartition(wordModifiers(reviews, stars, text)
+    sortedOnePartition(partials(reviews, stars, text)
       .withColumn("salt", pmod(spark_partition_id(), lit(SaltBuckets)))
       .groupBy("word", "salt")
-      .agg(sum("modifier").as("partial"))
+      .agg(sum("partial").as("partial"))
       .groupBy("word")
       .agg(sum("partial").as("score")))
 }

@@ -247,7 +247,8 @@ object GraftSql {
 
   /** Every custom planner strategy. */
   val strategies: Seq[SparkStrategy] = Seq(
-    graft.plans.TimeJoinStrategy)
+    graft.plans.TimeJoinStrategy,
+    graft.plans.WordScoreCombineStrategy)
 
   /** Install the whole registry on an existing session: every custom
     * expression as a SQL function (`SELECT simhash64(tokens),

@@ -9,8 +9,9 @@ import graft.TempDirs.withTempDir
 /** End-to-end CLI contract (`WordScoreMain` in a forked JVM, like a real
   * submission): usage → exit 2 with no Spark startup; a good run → exit
   * 0, tab-delimited `score\tword` output sorted by score descending,
-  * with `-D` conf overrides accepted ToolRunner-style; a failed rerun →
-  * exit 1 with the previous output intact.
+  * with `-D` conf overrides accepted ToolRunner-style; an invalid `-D`
+  * value → exit 1 with a message naming it; a failed rerun → exit 1
+  * with the previous output intact.
   */
 class CliSpec extends AnyFunSuite {
 
@@ -38,6 +39,20 @@ class CliSpec extends AnyFunSuite {
     assert(out.contains("Usage:"))
     val (code2, _) = runMain(Seq("-Dbad", "in", "out"))
     assert(code2 === 2)
+  }
+
+  test("an invalid -D value exits 1 with a message naming the value") {
+    withTempDir("cli_in") { dir =>
+      withTempDir("cli_out") { parent =>
+        Files.writeString(new java.io.File(dir, "reviews.json").toPath,
+          "{\"stars\": 5.0, \"text\": \"great food\"}\n")
+        val (code, log) = runMain(Seq("-Dspark.sql.shuffle.partitions=abc",
+          dir.getAbsolutePath, parent.getAbsolutePath + "/scores"))
+        assert(code === 1, log.takeRight(1500))
+        val failed = log.linesIterator.find(_.startsWith("word-score failed:"))
+        assert(failed.exists(_.contains("abc")), log.takeRight(1500))
+      }
+    }
   }
 
   test("golden run: exit 0, sorted score\\tword output, -D accepted") {

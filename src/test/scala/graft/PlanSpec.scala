@@ -59,8 +59,12 @@ class PlanSpec extends SparkSpec {
     val exchanges = "Exchange ".r.findAllIn(finalSection).length
     assert(exchanges === 2, s"unexpected exchange count $exchanges:\n" + finalSection.take(1200))
     assert(!finalSection.contains("rangepartitioning"), finalSection.take(1200))
-    // the tokenizer is a built-in with generated code, not an
-    // interpreted higher-order lambda
+    // in-mapper combining: one combine node tokenizes, scores and
+    // pre-sums in place of the Generate, under a partial+final aggregate
+    assert(!finalSection.contains("Generate"), finalSection.take(1200))
+    assert("WordScoreCombine".r.findAllIn(finalSection).length === 1, finalSection.take(1200))
+    assert("HashAggregate".r.findAllIn(finalSection).length === 2, finalSection.take(1200))
+    assert(finalSection.contains("partial_sum"), finalSection.take(1200))
     assert(!finalSection.contains("lambdafunction"), finalSection.take(1200))
   }
 

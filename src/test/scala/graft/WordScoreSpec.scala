@@ -3,20 +3,24 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.metric.SQLMetric
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.rng.Seed
 
 import graft.TempDirs.withTempDir
 import graft.functions.Text
 import graft.operators.WordScore
+import graft.plans.{WordScoreCombineExec, WordScoreCombiner}
 import graft.sources.{ReviewSource, TsvSink}
 
 /** Reference-semantics tests (golden corpus from FIXTURES.md §A) and
   * tokenizer-parity properties vs java.util.StringTokenizer — the exact
   * ground truth the reference uses (`ComputeWordScore.java:116-120`).
   */
-class WordScoreSpec extends SparkSpec {
+class WordScoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def stringTokenizerTokens(s: String): List[String] = {
@@ -83,7 +87,7 @@ class WordScoreSpec extends SparkSpec {
         Gen.oneOf(" ", "\t", "\n", "\r", "\f", "  ", " \t",
           // not StringTokenizer delimiters: these must never split
           "\u000B", "\u0085", "\u00A0", "\u2028", "\u3000"),
-        Gen.const("a.b,c!"))).map(_.mkString)
+        Gen.const("a.b,c!"), Gen.const("naïve😀"))).map(_.mkString)
     // 500 deterministic samples, checked in ONE Spark job.
     val samples = (1 to 500).flatMap(i =>
       genText.apply(Gen.Parameters.default, Seed(i.toLong))).distinct
@@ -93,6 +97,65 @@ class WordScoreSpec extends SparkSpec {
     samples.foreach { s =>
       assert(got(s).toList === stringTokenizerTokens(s), s"input=${s.replace("\n","\\n")}")
     }
+    // the word-score path tokenizes in its combiner's byte scan: at 5★
+    // every StringTokenizer token must add +2, for both scoring forms
+    val expected = samples.flatMap(stringTokenizerTokens)
+      .groupMapReduce(identity)(_ => 2L)(_ + _)
+    for ((name, scoreFn) <- scorers) {
+      val scored = scoreFn(samples.toDF("text"), lit(5), col("text"))
+        .as[(String, Long)].collect().toMap
+      assert(scored === expected, name)
+    }
+  }
+
+  test("combiner: a small bound grows and flushes the map, partials sum exactly") {
+    // texts with a long tail of distinct words, multi-byte characters, a
+    // word longer than the map's initial arena, and token-less reviews
+    // whose modifier must never be evaluated
+    val rnd = new scala.util.Random(11)
+    val reviews = (1 to 3000).map { i =>
+      val words = Seq.fill(rnd.nextInt(12))(
+        if (rnd.nextInt(2) == 0) s"w${rnd.nextInt(5000)}" else Seq("the", "a", "é", "日本", "😀")(rnd.nextInt(5)))
+      val text = words.mkString(Seq(" ", "\t", "\n\r", "\f ", "\u000B")(i % 5))
+      if (i % 37 == 0) ("  \t\n", 99)
+      else if (i == 200) ("x" * 20000 + " tail", 1)
+      else (text, i % 5 - 2)
+    }
+    val expected = reviews.flatMap { case (t, m) => stringTokenizerTokens(t).map(_ -> m.toLong) }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    // one reused row buffer, as a scan hands rows on
+    val toRow = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
+      Array[org.apache.spark.sql.types.DataType](
+        org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.IntegerType))
+    for (bound <- Seq(3, 700)) {
+      val tokens = new SQLMetric("sum", 0L)
+      val rows = new SQLMetric("sum", 0L)
+      val input = reviews.iterator.map { case (t, m) =>
+        toRow(org.apache.spark.sql.catalyst.InternalRow(UTF8String.fromString(t), m))
+      }
+      val out = new WordScoreCombiner(input, _.getUTF8String(0),
+        r => { assert(r.getInt(1) != 99, "modifier of a token-less review"); r.getInt(1).toLong },
+        bound, tokens, rows).map(r => (r.getUTF8String(0).toString, r.getLong(1))).toList
+      assert(out.groupMapReduce(_._1)(_._2)(_ + _) === expected, s"bound $bound")
+      // 700 makes the map grow past its initial 512 words; both bounds
+      // flush several times, so a frequent word is emitted once per flush
+      assert(expected.size > 3 * bound && out.count(_._1 == "the") >= 3, s"bound $bound")
+      assert(tokens.value === reviews.map(r => stringTokenizerTokens(r._1).size.toLong).sum)
+      assert(rows.value === out.size.toLong)
+    }
+  }
+
+  test("combiner metrics: tokens scanned equals the exploded Text.tokens") {
+    val docs = Tables.documents(spark, sf)
+    val scored = WordScore.flagship(docs)
+    val words = scored.collect().length
+    org.apache.spark.sql.graft.ListenerBus.drain(spark)
+    val execs = collect(scored.queryExecution.executedPlan) { case e: WordScoreCombineExec => e }
+    assert(execs.size === 1)
+    val tokens = docs.select(explode(Text.tokens(col("text")))).count()
+    assert(execs.head.metrics("numTokens").value === tokens)
+    val rows = execs.head.metrics("numOutputRows").value
+    assert(rows >= words && rows < tokens, s"$rows combined rows for $words words, $tokens tokens")
   }
 
   test("permutation invariance: shuffling input rows never changes scores") {
