@@ -81,12 +81,13 @@ object Text {
     * (Number.intValue) is `cast("int")` (both truncate toward zero).
     * Stars outside {1..5} kill the job, as in the reference (its
     * `SCORE_MODIFIERS.get` returns null there and the unboxing NPE
-    * fails the task, `ComputeWordScore.java:113`).
+    * fails the task, `ComputeWordScore.java:113`); so does a missing or
+    * null `stars`, whose message says `null`.
     */
   def starsModifierStrict(stars: Column): Column = {
     val t = stars.cast("int")
     when(t.between(1, 5), t - lit(3))
-      .otherwise(raise_error(concat(
-        lit("stars out of domain {1..5}: "), stars.cast("string"))))
+      .otherwise(raise_error(concat(lit("review `stars` out of domain {1..5}: "),
+        coalesce(stars.cast("string"), lit("null")))))
   }
 }

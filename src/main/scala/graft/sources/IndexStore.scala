@@ -227,11 +227,11 @@ object IndexStore {
 
   def loadIvfPq(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val cent = s.read.parquet(resolvePath(s, dir, "centroids"))
+    val cent = graft.Tables.parquet(s, resolvePath(s, dir, "centroids"))
       .select(col("c_id"), col("c_emb"), col("c_nrm"))
-    val codebook = s.read.parquet(resolvePath(s, dir, "codebook"))
+    val codebook = graft.Tables.parquet(s, resolvePath(s, dir, "codebook"))
       .select(col("m"), col("cell"), col("c_emb"))
-    val codes = s.read.parquet(resolvePath(s, dir, "codes"))
+    val codes = graft.Tables.parquet(s, resolvePath(s, dir, "codes"))
       .select(col("vec_id"), col("m"), col("cell"), col("ivf_cell"))
     (cent, codebook, codes)
   }
@@ -309,7 +309,7 @@ object IndexStore {
     * wrote).
     */
   def loadGrid(s: SparkSession, dir: String): DataFrame = {
-    val df = s.read.parquet(resolvePath(s, dir, "cells"))
+    val df = graft.Tables.parquet(s, resolvePath(s, dir, "cells"))
     val dataCols = df.columns.filterNot(c =>
       c == "cell_x" || c == "cell_y" || c == "cell_z")
     df.select((dataCols :+ "cell_x" :+ "cell_y" :+ "cell_z").map(col).toSeq: _*)

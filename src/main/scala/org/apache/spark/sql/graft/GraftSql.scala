@@ -253,13 +253,16 @@ object GraftSql {
   /** Install the whole registry on an existing session: every custom
     * expression as a SQL function (`SELECT simhash64(tokens),
     * float_dot(a, b) …`), plus [[rules]] and [[strategies]] through the
-    * public `experimental` hooks. Idempotent — a rule or strategy
-    * already present is not added twice.
+    * public `experimental` hooks. Idempotent — a function, rule or
+    * strategy already present is not added again (re-registering a
+    * function would replace it and log a warning per name).
     */
   def ensureRegistered(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
     val em = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
     em.extraOptimizations ++= rules.filterNot(em.extraOptimizations.contains)

@@ -113,6 +113,21 @@ class ExtensionsSpec extends SparkSpec {
     assert(p.contains("float_dot") && !p.contains("aggregate(zip_with"), p.take(800))
   }
 
+  test("a second ensureRegistered call leaves the function registry unchanged") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val fresh = spark.newSession()
+    GraftSql.ensureRegistered(fresh)
+    val registry = fresh.sessionState.functionRegistry
+    val before = registry.listFunction().map(id => id -> registry.lookupFunction(id).get)
+    assert(before.exists(_._1 == FunctionIdentifier("sparse_dot")))
+    GraftSql.ensureRegistered(fresh)
+    assert(registry.listFunction().toSet === before.map(_._1).toSet)
+    // a re-registration would store a fresh ExpressionInfo under the name
+    before.foreach { case (id, info) =>
+      assert(registry.lookupFunction(id).get eq info, id)
+    }
+  }
+
   test("optimizer rule rewrites HOF inner products to natives, bit-exact") {
     withRegisteredSession { s2 =>
       import graft.functions.Vectors

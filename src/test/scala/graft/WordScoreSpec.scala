@@ -194,6 +194,22 @@ class WordScoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("missing stars fails the job with a message that names `stars`") {
+    withTempDir("nostars") { dir =>
+      Files.writeString(new java.io.File(dir, "r.json").toPath, "{\"text\": \"a b\"}\n")
+      val bad = ReviewSource.reviews(spark, dir.getAbsolutePath)
+      for ((name, scoreFn) <- scorers) {
+        val e = intercept[Exception] {
+          scoreFn(bad, col("stars"), col("text")).collect()
+        }
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(t => String.valueOf(t.getMessage)).toSeq
+        assert(msgs.exists(m => m.contains("`stars`") && m.contains("out of domain")),
+          s"$name: ${msgs.head}")
+      }
+    }
+  }
+
   test("bad-stars review with zero tokens succeeds (reference NPEs only at write)") {
     // the reference unboxes the modifier at context.write — per emitted
     // token; a whitespace-only text emits nothing, so stars=7 passes
