@@ -46,9 +46,11 @@ object Bench {
       // query is pre-run, every query starts from identically-warm
       // tables. toRdd (not count()) forces all column pages — count()
       // over parquet reads only metadata.
-      // events.parquet carries TIMESTAMP(NANOS) — readable only with
-      // nanosAsLong, exactly how Events.load reads it; set it before
-      // the loop. And warm each file under its OWN try: one unreadable
+      // read every file with nanosAsLong set, exactly as Events.load
+      // reads events.parquet: a TIMESTAMP(NANOS) ts is readable only
+      // with it (every fixture's events.ts is TIMESTAMP(MICROS), which
+      // reads either way); set it before the loop. And warm each file
+      // under its OWN try: one unreadable
       // file must not silently leave every alphabetically-later table
       // cold (the round-4 shape did exactly that — events aborted the
       // loop and lineitem..supplier stayed unwarmed).

@@ -69,12 +69,18 @@ object WordScoreMain {
     var spark: SparkSession = null
     val code =
       try {
+        // no UI port and no INFO chatter, as SparkEntry.localSession
+        // has it; `spark.log.level` takes effect while the context
+        // starts, so its own INFO lines go too
         val builder = SparkSession.builder()
           .appName("word-score")
           .config("spark.sql.adaptive.enabled", "true")
           .config("spark.sql.session.timeZone", "UTC")
+          .config("spark.ui.enabled", "false")
+          .config("spark.log.level", "WARN")
         // the main runs in its own JVM, so getOrCreate always builds a
-        // new session and the builder applies every pair
+        // new session and the builder applies every pair, after (and so
+        // over) the defaults above
         spark = confs.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
           .getOrCreate()
         val scored = WordScore.score(

@@ -10,10 +10,12 @@ import graft.Tables
   * sessionization, and JSON-property extraction, each with a DuckDB
   * oracle.
   *
-  * Timestamp handling: events.ts is parquet TIMESTAMP(NANOS), which
-  * Spark 4 refuses by default — we read it via
-  * `spark.sql.legacy.parquet.nanosAsLong` as epoch-nanos LONG and
-  * convert to a microsecond TimestampType column explicitly. All oracle
+  * Timestamp handling: every fixture's events.ts is parquet
+  * TIMESTAMP(MICROS), read as a timestamp. [[load]] also accepts a
+  * TIMESTAMP(NANOS) encoding, which Spark 4 refuses by default: it sets
+  * `spark.sql.legacy.parquet.nanosAsLong`, so such a file reads as
+  * epoch-nanos LONG, and [[normalizeTs]] converts either encoding to a
+  * microsecond TimestampType column explicitly. All oracle
   * outputs are epoch-second BIGINTs (never raw timestamps), so Spark's
   * µs truncation vs DuckDB's native ns can't skew the compare.
   */

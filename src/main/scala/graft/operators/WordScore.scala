@@ -15,25 +15,28 @@ import graft.plans.WordScoreCombine
   *
   * The reference's two MapReduce jobs + materialized SequenceFile
   * (`:170-176`) collapse into ONE lazy DAG with one exchange:
-  *   scan → project → combine → partial sum → shuffle(word)
-  *   → final sum → one-partition sort.
+  *   scan → project → combine → shuffle(single partition)
+  *   → partial + final sum → sort.
   * The hand-written combiner (`:180-181`) is in-mapper combining:
   * [[graft.plans.WordScoreCombine]] scans each review's UTF-8 bytes and
-  * sums per word within the partition, so the partial HashAggregate
-  * above it sees one row per distinct word per partition (and per
-  * flush of the combiner's bounded map), not one row per token. The
-  * sort is the reference's single reducer
-  * (`:209-213`): `coalesce(1)` is a narrow dependency, so one task reads
-  * the vocabulary-sized shuffle, finishes the sums and sorts them. The
-  * output is the one file the sink writes anyway, so a range exchange
-  * (and the sampling job that plans it) would buy nothing.
+  * sums per word within the partition, emitting one row per distinct
+  * word per partition (and per flush of its bounded map), not one row
+  * per token. It IS the map-side aggregate, so no partial
+  * HashAggregate runs above it in the map stage: its rows shuffle
+  * straight into one partition, the reference's single reducer
+  * (`:209-213`), where one task sums them per word and sorts the
+  * result. The output is the one file the sink writes anyway, so a hash
+  * exchange on `word` (whose width is `spark.sql.shuffle.partitions`,
+  * a conf this plan never reads) or a range exchange (and the sampling
+  * job that plans it) would buy nothing.
   *
   * The vocabulary is tiny relative to the corpus, so the combiner
-  * collapses virtually all tokens map-side; the shuffle moves
-  * only |vocab| × shufflePartitions rows. Hot words ("the") are
-  * therefore NOT a skew problem post-combine; see [[wordScoreSalted]]
-  * for the explicit two-phase pattern used when the grouped value state
-  * is too big to pre-aggregate.
+  * collapses virtually all tokens map-side: the shuffle moves about
+  * |distinct words per partition| × map tasks rows (more when a
+  * partition's vocabulary outgrows the combiner's map and it flushes).
+  * Hot words ("the") are therefore NOT a skew problem post-combine;
+  * see [[wordScoreSalted]] for the explicit two-phase pattern used when
+  * the grouped value state is too big to pre-aggregate.
   */
 object WordScore {
 
@@ -60,15 +63,17 @@ object WordScore {
       when(col("text").isNull, raise_error(lit("review has a missing or null `text`")))
         .otherwise(col("text")))
 
-  /** (word, score) → one partition sorted score desc, word asc (the
-    * deterministic tie-break the reference explicitly allows, `:56`).
+  /** (word, score) → sorted score desc, word asc (the deterministic
+    * tie-break the reference explicitly allows, `:56`) within the one
+    * partition its caller produces.
     */
-  private def sortedOnePartition(scores: DataFrame): DataFrame =
-    scores.coalesce(1).sortWithinPartitions(col("score").desc, col("word"))
+  private def sortedWithin(scores: DataFrame): DataFrame =
+    scores.sortWithinPartitions(col("score").desc, col("word"))
 
   /** (stars, text) → (word, score), sorted score desc, word asc. */
   def score(reviews: DataFrame, stars: Column, text: Column): DataFrame =
-    sortedOnePartition(partials(reviews, stars, text)
+    sortedWithin(partials(reviews, stars, text)
+      .repartition(1)
       .groupBy("word")
       .agg(sum("partial").as("score")))
 
@@ -94,16 +99,20 @@ object WordScore {
     *
     * Pattern for key skew: salt the hot key space, partially
     * aggregate per (word, salt), then de-salt and finish. For a plain
-    * `sum` Spark's map-side partial agg already does this implicitly;
-    * the salted form is the drop-in shape for aggregations whose
-    * partial state is per-row (e.g. collect-type aggs) where one hot
-    * word would otherwise pin a single reducer.
+    * `sum` the combiner's per-partition pre-sum already does this
+    * implicitly, which is why [[score]] needs no second phase; the
+    * salted form is the drop-in shape for aggregations whose partial
+    * state is per-row (e.g. collect-type aggs) where one hot word would
+    * otherwise pin a single reducer. It keeps its own plan: a partial
+    * aggregate per (word, salt), hash exchanges and a final
+    * `coalesce(1)` before the sort.
     */
   def wordScoreSalted(reviews: DataFrame, stars: Column, text: Column): DataFrame =
-    sortedOnePartition(partials(reviews, stars, text)
+    sortedWithin(partials(reviews, stars, text)
       .withColumn("salt", pmod(spark_partition_id(), lit(SaltBuckets)))
       .groupBy("word", "salt")
       .agg(sum("partial").as("partial"))
       .groupBy("word")
-      .agg(sum("partial").as("score")))
+      .agg(sum("partial").as("score"))
+      .coalesce(1))
 }

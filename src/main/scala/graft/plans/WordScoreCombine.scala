@@ -19,10 +19,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * Text Processing with MapReduce*, 2010, §3.1): one node that tokenizes
   * each review, scores every token by the review's modifier and pre-sums
   * per word within a partition. It stands where the reference's
-  * hand-written combiner does (`ComputeWordScore.java:180-181`), so the
-  * plan above it — partial and final `HashAggregate`, the exchange and
-  * the one-partition sort — receives one `(word, partial)` row per
-  * distinct word per partition instead of one row per token.
+  * hand-written combiner does (`ComputeWordScore.java:180-181`) and is
+  * the map stage's only aggregate: its `(word, partial)` rows, one per
+  * distinct word per partition (and per flush of its bounded map)
+  * instead of one per token, shuffle straight into one partition, where
+  * the partial and final `HashAggregate` and the sort run in the one
+  * reduce task, like the reference's single reducer.
   *
   * The contract of the composed form it replaces (tokenize, explode,
   * modifier projection) holds exactly:

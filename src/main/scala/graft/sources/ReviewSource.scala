@@ -35,8 +35,8 @@ object ReviewSource {
   *
   * `coalesce(1)` guarantees the one file for any frame. On the word-score
   * path it does nothing: `WordScore` already sorts in one partition,
-  * like the reference's single reducer. All upstream work (scan,
-  * tokenize, aggregate, shuffle) stays distributed.
+  * like the reference's single reducer. The map-side work (scan,
+  * tokenize, combine) stays distributed.
   *
   * An existing output directory is REPLACED, atomically: the job writes
   * a hidden sibling `.{name}.staging-{uuid}` and only a successful job

@@ -9,9 +9,11 @@ import graft.TempDirs.withTempDir
 /** End-to-end CLI contract (`WordScoreMain` in a forked JVM, like a real
   * submission): usage → exit 2 with no Spark startup; a good run → exit
   * 0, tab-delimited `score\tword` output sorted by score descending,
-  * with `-D` conf overrides accepted ToolRunner-style; an invalid `-D`
-  * value → exit 1 with a message naming it; a failed rerun → exit 1
-  * with the previous output intact.
+  * with `-D` conf overrides accepted ToolRunner-style and no INFO log
+  * lines from the jobs; the same bytes whatever
+  * `spark.sql.shuffle.partitions` is; an invalid `-D` value → exit 1
+  * with a message naming it; a failed rerun → exit 1 with the previous
+  * output intact.
   */
 class CliSpec extends AnyFunSuite {
 
@@ -32,6 +34,10 @@ class CliSpec extends AnyFunSuite {
     val out = new String(proc.getInputStream.readAllBytes())
     (proc.waitFor(), out)
   }
+
+  private def partFiles(out: String): Seq[java.io.File] =
+    Option(new java.io.File(out).listFiles()).toSeq.flatten
+      .filter(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
 
   test("no/misused args exit 2 with usage, before any Spark startup") {
     val (code, out) = runMain(Seq())
@@ -66,8 +72,9 @@ class CliSpec extends AnyFunSuite {
         val (code, log) = runMain(Seq(
           "-Dspark.sql.shuffle.partitions=2", dir.getAbsolutePath, out))
         assert(code === 0, log.takeRight(1500))
-        val files = new java.io.File(out).listFiles()
-          .filter(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
+        // WARN by default: no per-job INFO chatter from the scheduler
+        assert(!log.contains("INFO DAGScheduler"), log.take(1500))
+        val files = partFiles(out)
         assert(files.length === 1, s"expected one part file in $out")
         val lines = Files.readAllLines(files.head.toPath).toArray.map(_.toString)
         // great = 2·(+2) + (−2) = 2, food = +2 (tied); awful = service = −2
@@ -80,18 +87,43 @@ class CliSpec extends AnyFunSuite {
     }
   }
 
+  test("output is byte-identical whatever spark.sql.shuffle.partitions is") {
+    withTempDir("cli_in") { dir =>
+      withTempDir("cli_out") { parent =>
+        // three files, so several map tasks' partial sums meet in the reducer
+        Seq(
+          """{"stars": 5.0, "text": "great great food\tand friendly staff"}""",
+          """{"stars": 1.0, "text": "great  awful service and\ncold food"}""",
+          """{"stars": 3.0, "text": "ok food"}
+            |{"stars": 4.0, "text": "friendly and fast"}""".stripMargin,
+        ).zipWithIndex.foreach { case (lines, i) =>
+          Files.writeString(new java.io.File(dir, s"reviews$i.json").toPath, lines + "\n")
+        }
+        def partBytes(args: String*): Array[Byte] = {
+          val out = parent.getAbsolutePath + "/scores" + args.length
+          val (code, log) = runMain(args ++ Seq(dir.getAbsolutePath, out))
+          assert(code === 0, log.takeRight(1500))
+          val files = partFiles(out)
+          assert(files.length === 1, s"expected one part file in $out")
+          Files.readAllBytes(files.head.toPath)
+        }
+        val default = partBytes()
+        assert(new String(default).linesIterator.size === 10)
+        assert(java.util.Arrays.equals(partBytes("-Dspark.sql.shuffle.partitions=7"), default))
+      }
+    }
+  }
+
   test("failed rerun exits 1 and keeps the previous output byte-identical") {
     withTempDir("cli_in") { dir =>
       withTempDir("cli_out") { parent =>
         val input = new java.io.File(dir, "reviews.json").toPath
         Files.writeString(input, "{\"stars\": 5.0, \"text\": \"great food\"}\n")
         val out = parent.getAbsolutePath + "/scores"
-        def partFiles = Option(new java.io.File(out).listFiles()).toSeq.flatten
-          .filter(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
         val (code, log) = runMain(Seq(dir.getAbsolutePath, out))
         assert(code === 0, log.takeRight(1500))
-        assert(partFiles.size === 1, s"expected one part file in $out")
-        val golden = Files.readAllBytes(partFiles.head.toPath)
+        assert(partFiles(out).size === 1, s"expected one part file in $out")
+        val golden = Files.readAllBytes(partFiles(out).head.toPath)
         assert(golden.nonEmpty)
         // the rerun into the SAME output fails on a malformed JSON line.
         // With AQE off the whole job runs inside the write command, so the
@@ -102,8 +134,8 @@ class CliSpec extends AnyFunSuite {
         val (code2, log2) = runMain(Seq(
           "-Dspark.sql.adaptive.enabled=false", dir.getAbsolutePath, out))
         assert(code2 === 1, log2.takeRight(1500))
-        assert(partFiles.size === 1, "failed rerun deleted the previous output")
-        assert(java.util.Arrays.equals(Files.readAllBytes(partFiles.head.toPath), golden),
+        assert(partFiles(out).size === 1, "failed rerun deleted the previous output")
+        assert(java.util.Arrays.equals(Files.readAllBytes(partFiles(out).head.toPath), golden),
           "failed rerun changed the previous output")
         // and no partial output or staging sibling is left behind
         assert(parent.list().toSeq === Seq("scores"),

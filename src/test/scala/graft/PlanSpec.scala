@@ -50,11 +50,11 @@ class PlanSpec extends SparkSpec {
     val p = plan(WordScore.flagship(Tables.documents(spark, sf)))
     // AQE final plans mark WholeStageCodegen stages as "*(n)"
     assert(p.contains("WholeStageCodegen") || "\\*\\(\\d+\\)".r.findFirstIn(p).isDefined)
-    // exactly the one semantic exchange (agg shuffle) plus the
-    // deliberate scan-spread: the final sort runs in one partition, like
-    // the reference's single reducer, so no range exchange. (AQE dumps
-    // repeat the initial plan below the final one — count only the
-    // final section.)
+    // exactly the one semantic exchange (into the single reducer) plus
+    // the deliberate scan-spread: the final sort runs in one partition,
+    // like the reference's single reducer, so no range exchange. (AQE
+    // dumps repeat the initial plan below the final one — count only
+    // the final section.)
     val finalSection = finalOnly(p)
     val exchanges = "Exchange ".r.findAllIn(finalSection).length
     assert(exchanges === 2, s"unexpected exchange count $exchanges:\n" + finalSection.take(1200))
@@ -66,6 +66,26 @@ class PlanSpec extends SparkSpec {
     assert("HashAggregate".r.findAllIn(finalSection).length === 2, finalSection.take(1200))
     assert(finalSection.contains("partial_sum"), finalSection.take(1200))
     assert(!finalSection.contains("lambdafunction"), finalSection.take(1200))
+  }
+
+  test("flagship word-score: the combiner's rows shuffle straight into one reducer") {
+    val p = finalOnly(plan(WordScore.flagship(Tables.documents(spark, sf))))
+    // the plan is one chain, so the lines before the combiner's are
+    // its ancestors and the lines after it its inputs
+    val (above, below) = p.linesIterator.toSeq.span(!_.contains("WordScoreCombine"))
+    assert(below.nonEmpty, p.take(1500))
+    def count(lines: Seq[String], s: String) = lines.count(_.contains(s))
+    assert(count(above, "Exchange SinglePartition") === 1, p.take(1500))
+    assert(count(above, "Exchange ") === 1, p.take(1500))
+    assert(!p.contains("hashpartitioning(word"), p.take(1500))
+    assert(count(above, "HashAggregate") === 2, p.take(1500))
+    assert(count(below, "HashAggregate") === 0, p.take(1500))
+    // nothing in the plan reads spark.sql.shuffle.partitions
+    def masked(n: Int) = withSQLConf("spark.sql.shuffle.partitions" -> n.toString) {
+      plan(WordScore.flagship(Tables.documents(spark, sf)))
+        .replaceAll("#\\d+", "#N").replaceAll("plan_id=\\d+", "plan_id=N")
+    }
+    assert(masked(1) === masked(200))
   }
 
   test("tfidf tokenizes once: both consumers scan the pinned tf table") {
