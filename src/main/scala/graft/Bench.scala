@@ -46,32 +46,20 @@ object Bench {
       // query is pre-run, every query starts from identically-warm
       // tables. toRdd (not count()) forces all column pages — count()
       // over parquet reads only metadata.
-      // read every file with nanosAsLong set, exactly as Events.load
-      // reads events.parquet: a TIMESTAMP(NANOS) ts is readable only
-      // with it (every fixture's events.ts is TIMESTAMP(MICROS), which
-      // reads either way); set it before the loop. And warm each file
-      // under its OWN try: one unreadable
+      // read every file as the queries do, through Tables.parquet (a
+      // TIMESTAMP(NANOS) ts reads as LONG there, with no session flag).
+      // And warm each file under its OWN try: one unreadable
       // file must not silently leave every alphabetically-later table
       // cold (the round-4 shape did exactly that — events aborted the
       // loop and lineitem..supplier stayed unwarmed).
-      // scope the flag to the warmup loop (save/restore, the SinksSpec
-      // partitionOverwriteMode pattern): leaving it set would silently
-      // change parquet timestamp decoding for every query that runs
-      // after — Events.load sets it itself when it needs it
-      val prevNanos = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      try Option(new java.io.File(sfDir).listFiles()).toSeq.flatten
+      Option(new java.io.File(sfDir).listFiles()).toSeq.flatten
         .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
         .foreach { f =>
-          try spark.read.parquet(f.getAbsolutePath)
+          try Tables.parquet(spark, f.getAbsolutePath)
             .queryExecution.toRdd.foreach(_ => ())
           catch { case e: Throwable => System.err.println(
             s"[bench] warmup scan failed for ${f.getName}: ${e.getMessage}") }
         }
-      finally prevNanos match {
-        case Some(v) => spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-        case None => spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-      }
     } catch { case e: Throwable =>
       // a silently-aborted warmup would put the JIT cost back on the
       // first sorted queries and taint every cross-round comparison —

@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md).
   *
@@ -39,8 +40,11 @@ object Tables {
     * first leaf data file of a directory Spark wrote (`_*` and `.*`
     * names skipped, as Spark's listing does; all parts of one write
     * share a schema), converted as the inference job converts it under
-    * the session's current conf. A path with no data file reads as a
-    * bare `spark.read.parquet`, so Spark raises its own error.
+    * the session's conf with `spark.sql.legacy.parquet.nanosAsLong`
+    * set. So a TIMESTAMP(NANOS) column reads as epoch-nanosecond LONG,
+    * which a read with that schema decodes without the flag, and the
+    * session's conf is never changed. A path with no data file reads as
+    * a bare `spark.read.parquet`, so Spark raises its own error.
     */
   def parquet(s: SparkSession, path: String): DataFrame = {
     val conf = s.sessionState.newHadoopConf()
@@ -55,7 +59,8 @@ object Tables {
       val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
         ParquetMetadataConverter.SKIP_ROW_GROUPS)
       ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
-        new ParquetToSparkSchemaConverter(s.sessionState.conf))
+        new ParquetToSparkSchemaConverter(
+          s.sessionState.conf.copy(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG -> true)))
     }.fold(s.read.parquet(path))(s.read.schema(_).parquet(path))
   }
 

@@ -78,10 +78,16 @@ object WordScoreMain {
           .config("spark.sql.session.timeZone", "UTC")
           .config("spark.ui.enabled", "false")
           .config("spark.log.level", "WARN")
+        // a plain `java` launch runs locally on every core, as the
+        // reference's `hadoop jar` does; spark-submit passes its master
+        // as the `spark.master` system property, which a builder
+        // option would override, so the default yields to it
+        val withMaster =
+          if (sys.props.contains("spark.master")) builder else builder.master("local[*]")
         // the main runs in its own JVM, so getOrCreate always builds a
         // new session and the builder applies every pair, after (and so
         // over) the defaults above
-        spark = confs.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+        spark = confs.foldLeft(withMaster) { case (b, (k, v)) => b.config(k, v) }
           .getOrCreate()
         val scored = WordScore.score(
           ReviewSource.reviews(spark, input), col("stars"), col("text"))

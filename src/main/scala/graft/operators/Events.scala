@@ -12,10 +12,10 @@ import graft.Tables
   *
   * Timestamp handling: every fixture's events.ts is parquet
   * TIMESTAMP(MICROS), read as a timestamp. [[load]] also accepts a
-  * TIMESTAMP(NANOS) encoding, which Spark 4 refuses by default: it sets
-  * `spark.sql.legacy.parquet.nanosAsLong`, so such a file reads as
-  * epoch-nanos LONG, and [[normalizeTs]] converts either encoding to a
-  * microsecond TimestampType column explicitly. All oracle
+  * TIMESTAMP(NANOS) encoding, which Spark 4 refuses by default:
+  * `Tables.parquet` reads such a file as epoch-nanos LONG without
+  * touching the session's conf, and [[normalizeTs]] converts either
+  * encoding to a microsecond TimestampType column explicitly. All oracle
   * outputs are epoch-second BIGINTs (never raw timestamps), so Spark's
   * µs truncation vs DuckDB's native ns can't skew the compare.
   */
@@ -25,18 +25,15 @@ object Events {
     * as `ts_ns`, whatever the fixture's physical encoding.
     *
     * The fixture has shipped both ways across rounds: parquet
-    * TIMESTAMP(NANOS) (readable only via the nanosAsLong legacy flag,
-    * arriving as epoch-nano LONG) and TIMESTAMP(MICROS) (arriving as a
+    * TIMESTAMP(NANOS) (arriving as epoch-nano LONG, see
+    * `Tables.parquet`) and TIMESTAMP(MICROS) (arriving as a
     * timestamp — NTZ under Spark 4's inferTimestampNTZ default).
     * Normalizing on the READ side keeps every downstream query and
     * oracle identical: fixture wall times are UTC instants and every
     * runner pins the session timezone to UTC, so the NTZ→instant cast
     * is shift-free, mirroring DuckDB's naive-timestamp `epoch_ns`.
     */
-  def load(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(Tables.events(s, d))
-  }
+  def load(s: SparkSession, d: String): DataFrame = normalizeTs(Tables.events(s, d))
 
   /** See [[load]]: LONG `ts` (nanos fixture) or timestamp `ts` (micros
     * fixture) → (`ts` TimestampType µs, `ts_ns` epoch-nano long).

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
-import graft.plans.WordScoreCombine
+import graft.plans.{WordScoreCombine, WordScoreReduce}
 
 /** The reference's entire computation, Spark-first.
   *
@@ -15,20 +15,21 @@ import graft.plans.WordScoreCombine
   *
   * The reference's two MapReduce jobs + materialized SequenceFile
   * (`:170-176`) collapse into ONE lazy DAG with one exchange:
-  *   scan → project → combine → shuffle(single partition)
-  *   → partial + final sum → sort.
-  * The hand-written combiner (`:180-181`) is in-mapper combining:
+  *   scan → project → combine → shuffle(single partition) → reduce.
+  * Like the reference's `IntSumReducer`, one map serves as combiner
+  * (`:180-181`) and reducer (`:209-213`):
   * [[graft.plans.WordScoreCombine]] scans each review's UTF-8 bytes and
   * sums per word within the partition, emitting one row per distinct
   * word per partition (and per flush of its bounded map), not one row
-  * per token. It IS the map-side aggregate, so no partial
-  * HashAggregate runs above it in the map stage: its rows shuffle
-  * straight into one partition, the reference's single reducer
-  * (`:209-213`), where one task sums them per word and sorts the
-  * result. The output is the one file the sink writes anyway, so a hash
-  * exchange on `word` (whose width is `spark.sql.shuffle.partitions`,
-  * a conf this plan never reads) or a range exchange (and the sampling
-  * job that plans it) would buy nothing.
+  * per token. Its rows shuffle straight into one partition, the
+  * reference's single reducer, where [[graft.plans.WordScoreReduce]]
+  * sums them per word in the same kind of map and sorts the result
+  * with a primitive sort: no HashAggregate, no Sort, no codegen in the
+  * reduce task. The output is the one file the sink writes anyway, so a
+  * hash exchange on `word` (whose width is
+  * `spark.sql.shuffle.partitions`, a conf this plan never reads) or a
+  * range exchange (and the sampling job that plans it) would buy
+  * nothing.
   *
   * The vocabulary is tiny relative to the corpus, so the combiner
   * collapses virtually all tokens map-side: the shuffle moves about
@@ -63,19 +64,13 @@ object WordScore {
       when(col("text").isNull, raise_error(lit("review has a missing or null `text`")))
         .otherwise(col("text")))
 
-  /** (word, score) → sorted score desc, word asc (the deterministic
-    * tie-break the reference explicitly allows, `:56`) within the one
-    * partition its caller produces.
+  /** (stars, text) → (word, score), sorted score desc, word asc (the
+    * deterministic tie-break the reference explicitly allows, `:56`) in
+    * one partition: [[graft.plans.WordScoreReduce]] sums the partials
+    * and sorts the result in the one reduce task.
     */
-  private def sortedWithin(scores: DataFrame): DataFrame =
-    scores.sortWithinPartitions(col("score").desc, col("word"))
-
-  /** (stars, text) → (word, score), sorted score desc, word asc. */
   def score(reviews: DataFrame, stars: Column, text: Column): DataFrame =
-    sortedWithin(partials(reviews, stars, text)
-      .repartition(1)
-      .groupBy("word")
-      .agg(sum("partial").as("score")))
+    WordScoreReduce.reduce(partials(reviews, stars, text))
 
   /** Flagship over the `documents` fixture: the fixture has no ratings,
     * so a deterministic star rating is derived from `doc_id`
@@ -108,11 +103,12 @@ object WordScore {
     * `coalesce(1)` before the sort.
     */
   def wordScoreSalted(reviews: DataFrame, stars: Column, text: Column): DataFrame =
-    sortedWithin(partials(reviews, stars, text)
+    partials(reviews, stars, text)
       .withColumn("salt", pmod(spark_partition_id(), lit(SaltBuckets)))
       .groupBy("word", "salt")
       .agg(sum("partial").as("partial"))
       .groupBy("word")
       .agg(sum("partial").as("score"))
-      .coalesce(1))
+      .coalesce(1)
+      .sortWithinPartitions(col("score").desc, col("word"))
 }

@@ -36,6 +36,29 @@ object GraftSql {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Sorts `a` in place by `cmp` with Spark's TimSort
+    * (`util.collection.Sorter` is private[spark]) over a primitive
+    * index array: TimSort reads keys into holders it reuses, so nothing
+    * is boxed.
+    */
+  def sortInts(a: Array[Int], cmp: (Int, Int) => Int): Unit =
+    new org.apache.spark.util.collection.Sorter(IntsFormat).sort(a, 0, a.length,
+      (x: IntKey, y: IntKey) => cmp(x.v, y.v))
+
+  private final class IntKey { var v = 0 }
+
+  private object IntsFormat
+      extends org.apache.spark.util.collection.SortDataFormat[IntKey, Array[Int]] {
+    override def newKey(): IntKey = new IntKey
+    override def getKey(a: Array[Int], i: Int): IntKey = { val k = new IntKey; k.v = a(i); k }
+    override def getKey(a: Array[Int], i: Int, reuse: IntKey): IntKey = { reuse.v = a(i); reuse }
+    override def swap(a: Array[Int], i: Int, j: Int): Unit = { val t = a(i); a(i) = a(j); a(j) = t }
+    override def copyElement(src: Array[Int], i: Int, dst: Array[Int], j: Int): Unit = dst(j) = src(i)
+    override def copyRange(src: Array[Int], i: Int, dst: Array[Int], j: Int, n: Int): Unit =
+      System.arraycopy(src, i, dst, j, n)
+    override def allocate(n: Int): Array[Int] = new Array[Int](n)
+  }
+
   /** Codegen'd float-array dot product (see graft.plans.FloatDotProduct). */
   def floatDot(a: Column, b: Column): Column =
     column(FloatDotProduct(expression(a), expression(b)))

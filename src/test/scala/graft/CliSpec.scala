@@ -11,13 +11,17 @@ import graft.TempDirs.withTempDir
   * 0, tab-delimited `score\tword` output sorted by score descending,
   * with `-D` conf overrides accepted ToolRunner-style and no INFO log
   * lines from the jobs; the same bytes whatever
-  * `spark.sql.shuffle.partitions` is; an invalid `-D` value → exit 1
-  * with a message naming it; a failed rerun → exit 1 with the previous
-  * output intact.
+  * `spark.sql.shuffle.partitions` is; a plain `java` launch with no
+  * master set runs locally; an invalid `-D` value → exit 1 with a
+  * message naming it; a failed rerun → exit 1 with the previous output
+  * intact.
   */
 class CliSpec extends AnyFunSuite {
 
-  private def runMain(args: Seq[String]): (Int, String) = {
+  /** Runs the main in a new JVM; `master` is its `spark.master` system
+    * property, as spark-submit passes it (none for a plain launch).
+    */
+  private def runMain(args: Seq[String], master: Option[String] = Some("local[2]")): (Int, String) = {
     val java = sys.props("java.home") + "/bin/java"
     val addOpens = Seq(
       "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
@@ -26,7 +30,7 @@ class CliSpec extends AnyFunSuite {
       "sun.security.action", "sun.util.calendar",
     ).flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
     val cmd = Seq(java) ++ addOpens ++ Seq(
-      "-Dspark.ui.enabled=false", "-Dspark.master=local[2]",
+      "-Dspark.ui.enabled=false") ++ master.map(m => s"-Dspark.master=$m") ++ Seq(
       "-Dspark.sql.session.timeZone=UTC", "-Xmx2g",
       "-cp", sys.props("java.class.path"), "graft.WordScoreMain") ++ args
     val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
@@ -83,6 +87,25 @@ class CliSpec extends AnyFunSuite {
           "great" -> 2L, "food" -> 2L, "awful" -> -2L, "service" -> -2L))
         val scores = parsed.map(_._2)
         assert(scores.sliding(2).forall { case Array(a, b) => a >= b; case _ => true })
+      }
+    }
+  }
+
+  test("a plain java launch runs locally; a spark.master property still wins") {
+    withTempDir("cli_in") { dir =>
+      withTempDir("cli_out") { parent =>
+        Files.writeString(new java.io.File(dir, "reviews.json").toPath,
+          "{\"stars\": 5.0, \"text\": \"great food\"}\n")
+        val out = parent.getAbsolutePath + "/scores"
+        val (code, log) = runMain(Seq(dir.getAbsolutePath, out), master = None)
+        assert(code === 0, log.takeRight(1500))
+        assert(Files.readAllLines(partFiles(out).head.toPath).toArray.toSeq ===
+          Seq("2\tfood", "2\tgreat"))
+        // the default yields to the master spark-submit would pass
+        val (code2, log2) = runMain(Seq(dir.getAbsolutePath, out + "2"), master = Some("bogus://x"))
+        assert(code2 === 1, log2.takeRight(1500))
+        assert(log2.linesIterator.exists(l => l.startsWith("word-score failed:") &&
+          l.contains("bogus://x")), log2.takeRight(1500))
       }
     }
   }

@@ -51,7 +51,7 @@ class PlanSpec extends SparkSpec {
     // AQE final plans mark WholeStageCodegen stages as "*(n)"
     assert(p.contains("WholeStageCodegen") || "\\*\\(\\d+\\)".r.findFirstIn(p).isDefined)
     // exactly the one semantic exchange (into the single reducer) plus
-    // the deliberate scan-spread: the final sort runs in one partition,
+    // the deliberate scan-spread: the reducer sorts in one partition,
     // like the reference's single reducer, so no range exchange. (AQE
     // dumps repeat the initial plan below the final one — count only
     // the final section.)
@@ -60,11 +60,12 @@ class PlanSpec extends SparkSpec {
     assert(exchanges === 2, s"unexpected exchange count $exchanges:\n" + finalSection.take(1200))
     assert(!finalSection.contains("rangepartitioning"), finalSection.take(1200))
     // in-mapper combining: one combine node tokenizes, scores and
-    // pre-sums in place of the Generate, under a partial+final aggregate
+    // pre-sums in place of the Generate; one reduce node sums and sorts
+    // in place of Spark's aggregates and sort
     assert(!finalSection.contains("Generate"), finalSection.take(1200))
     assert("WordScoreCombine".r.findAllIn(finalSection).length === 1, finalSection.take(1200))
-    assert("HashAggregate".r.findAllIn(finalSection).length === 2, finalSection.take(1200))
-    assert(finalSection.contains("partial_sum"), finalSection.take(1200))
+    assert("WordScoreReduce".r.findAllIn(finalSection).length === 1, finalSection.take(1200))
+    assert(!finalSection.contains("HashAggregate"), finalSection.take(1200))
     assert(!finalSection.contains("lambdafunction"), finalSection.take(1200))
   }
 
@@ -75,10 +76,14 @@ class PlanSpec extends SparkSpec {
     val (above, below) = p.linesIterator.toSeq.span(!_.contains("WordScoreCombine"))
     assert(below.nonEmpty, p.take(1500))
     def count(lines: Seq[String], s: String) = lines.count(_.contains(s))
+    assert(count(above, "WordScoreReduce") === 1, p.take(1500))
     assert(count(above, "Exchange SinglePartition") === 1, p.take(1500))
     assert(count(above, "Exchange ") === 1, p.take(1500))
     assert(!p.contains("hashpartitioning(word"), p.take(1500))
-    assert(count(above, "HashAggregate") === 2, p.take(1500))
+    // the reduce task runs no Spark aggregate, no sort and no codegen
+    assert(count(above, "HashAggregate") === 0, p.take(1500))
+    assert(count(above, "Sort") === 0, p.take(1500))
+    assert(!above.exists(l => "\\*\\(\\d+\\)".r.findFirstIn(l).isDefined), p.take(1500))
     assert(count(below, "HashAggregate") === 0, p.take(1500))
     // nothing in the plan reads spark.sql.shuffle.partitions
     def masked(n: Int) = withSQLConf("spark.sql.shuffle.partitions" -> n.toString) {

@@ -64,23 +64,31 @@ class TablesSpec extends SparkSpec {
     finally w.close()
   }
 
-  test("nanosecond timestamps follow nanosAsLong as Spark's inference does") {
+  test("nanosecond timestamps read as epoch-nanosecond LONG with no session flag") {
     withTempDir("tables_nanos") { dir =>
       val p = s"$dir/events.parquet"
       writeNanosEvents(p)
-      withConf(NanosAsLong, Some("true")) {
-        assertSameSchema(p)
-        assert(Tables.parquet(spark, p).schema("ts").dataType ===
-          org.apache.spark.sql.types.LongType)
-        assert(Tables.parquet(spark, p).select("ts").collect().map(_.getLong(0)).toSeq ===
-          Seq(1000000000L, 2000000000L, 3000000000L))
+      for (nanos <- Seq(None, Some("false"), Some("true"));
+           vectorized <- Seq("true", "false")) withConf(NanosAsLong, nanos) {
+        withConf("spark.sql.parquet.enableVectorizedReader", Some(vectorized)) {
+          val flag = spark.conf.getOption(NanosAsLong)
+          val t = Tables.parquet(spark, p)
+          assert(t.schema("ts").dataType === org.apache.spark.sql.types.LongType)
+          assert(t.select("ts").collect().map(_.getLong(0)).toSeq ===
+            Seq(1000000000L, 2000000000L, 3000000000L), s"$nanos, vectorized $vectorized")
+          assert(spark.conf.getOption(NanosAsLong) === flag)
+        }
       }
-      withConf(NanosAsLong, None) {
-        val ours = intercept[org.apache.spark.sql.AnalysisException](Tables.parquet(spark, p))
-        val spark_ = intercept[org.apache.spark.sql.AnalysisException](spark.read.parquet(p))
-        assert(ours.getCondition === spark_.getCondition)
-        assert(ours.getMessage === spark_.getMessage)
-      }
+      // the schema is the one Spark infers under the flag
+      withConf(NanosAsLong, Some("true"))(assertSameSchema(p))
+    }
+  }
+
+  test("an events query leaves the session conf as it found it") {
+    withConf(NanosAsLong, None) {
+      val before = spark.conf.getAll
+      SparkEntry.queries("e_tumbling")(spark, sf).collect()
+      assert(spark.conf.getAll === before)
     }
   }
 

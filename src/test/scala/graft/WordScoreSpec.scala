@@ -4,16 +4,18 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.metric.SQLMetric
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.rng.Seed
 
 import graft.TempDirs.withTempDir
 import graft.functions.Text
 import graft.operators.WordScore
-import graft.plans.{WordScoreCombineExec, WordScoreCombiner}
+import graft.plans.{WordMap, WordScoreCombineExec, WordScoreCombiner, WordScoreReduceExec,
+  WordScoreReducer}
 import graft.sources.{ReviewSource, TsvSink}
 
 /** Reference-semantics tests (golden corpus from FIXTURES.md §A) and
@@ -143,6 +145,175 @@ class WordScoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(tokens.value === reviews.map(r => stringTokenizerTokens(r._1).size.toLong).sum)
       assert(rows.value === out.size.toLong)
     }
+  }
+
+  /** Spark's own word score of (stars, text) reviews: tokens exploded,
+    * summed by `groupBy` and ordered by `orderBy` — the order the reduce
+    * node must reproduce row for row.
+    */
+  private def sparkOrder(reviews: DataFrame): Seq[(String, Long)] =
+    reviews.select((col("stars").cast("int") - 3).as("m"), explode(Text.tokens(col("text"))).as("word"))
+      .groupBy("word").agg(sum("m").as("score"))
+      .orderBy(col("score").desc, col("word"))
+      .as[(String, Long)].collect().toSeq
+
+  test("reduce order equals Spark's groupBy/orderBy row for row") {
+    val rnd = new scala.util.Random(5)
+    // many ties, scores negative, zero and positive
+    val ties = Seq.fill(400)((1 + rnd.nextInt(5)).toDouble ->
+      Seq.fill(1 + rnd.nextInt(6))(s"t${rnd.nextInt(60)}").mkString(" "))
+    // one score, so bytes alone order: >= 0x80 after 'z' (a signed byte
+    // compare puts it first), prefixes first, and words that share their
+    // first 8 bytes
+    val bytes = Seq(5.0 -> Seq("z", "é", "ésprit", "zoo", "Z", "日本", "😀", "a", "ab", "abc",
+      "a\u0000", "abcdefgh", "abcdefghi", "abcdefgh\u0000", "abcdefghé", "abcdefgh1",
+      "abcdéfgh", "abcdefgé", "~", "\u007f").mkString(" "))
+    val inputs = Seq("ties" -> ties, "bytes" -> bytes,
+      "mixed" -> (ties.take(50) ++ bytes ++ Seq(1.0 -> "é a ab", 2.0 -> "abcdefghi z")))
+    for ((input, rows) <- inputs; (name, scoreFn) <- scorers) {
+      val reviews = rows.toDF("stars", "text")
+      val expected = sparkOrder(reviews)
+      assert(expected.map(_._2).distinct.size < expected.size, input)
+      assert(scoreFn(reviews, col("stars"), col("text")).as[(String, Long)].collect().toSeq ===
+        expected, s"$name on $input")
+    }
+  }
+
+  test("reduce on empty input: zero rows and one empty output file") {
+    val empty = Seq.empty[(Double, String)].toDF("stars", "text")
+    for ((name, scoreFn) <- scorers) withTempDir("empty") { dir =>
+      val scored = scoreFn(empty, col("stars"), col("text"))
+      assert(scored.collect().isEmpty, name)
+      val out = s"$dir/out"
+      TsvSink.write(scored, out)
+      val parts = new java.io.File(out).listFiles().filter(_.getName.startsWith("part-"))
+        .filterNot(_.getName.endsWith(".crc"))
+      assert(parts.length === 1 && parts.head.length() === 0, s"$name: ${parts.toSeq}")
+    }
+  }
+
+  test("reduce order holds when the combiner's map flushes: a word in several rows") {
+    // 200k distinct words in one partition, past the combiner's bound of
+    // 131,072, each word twice and 200k rows apart, so it reaches the
+    // reducer in two rows
+    val words = 200000
+    val reviews = spark.range(0, 2L * words, 1, 1).select(
+      (col("id") % 5 + 1).cast("double").as("stars"),
+      concat(lit("w"), (col("id") % words).cast("string")).as("text"))
+    assert(words > WordScoreCombiner.MaxWords)
+    val expected = sparkOrder(reviews)
+    for ((name, scoreFn) <- scorers) {
+      val scored = scoreFn(reviews, col("stars"), col("text"))
+      assert(scored.collect().toSeq.map(r => (r.getString(0), r.getLong(1))) === expected, name)
+      if (name == "score") {
+        org.apache.spark.sql.graft.ListenerBus.drain(spark)
+        val reduce = collect(scored.queryExecution.executedPlan) { case e: WordScoreReduceExec => e }
+        assert(reduce.head.metrics("numInputRows").value > words, name)
+        assert(reduce.head.metrics("numOutputRows").value === words, name)
+      }
+    }
+  }
+
+  test("combiner with a small bound into the reducer: Spark's order, row for row") {
+    // the reducer as its exec runs it, over a combiner that flushes
+    // every 3 or 700 distinct words, so most words arrive in many rows
+    val rnd = new scala.util.Random(3)
+    val reviews = Seq.fill(2000)((1 + rnd.nextInt(5)).toDouble -> Seq.fill(rnd.nextInt(9))(
+      Seq(s"w${rnd.nextInt(900)}", "the", "é", "z", "abcdefgh", "abcdefghé")(rnd.nextInt(6)))
+      .mkString(" "))
+    val expected = sparkOrder(reviews.toDF("stars", "text"))
+    val toRow = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
+      Array[org.apache.spark.sql.types.DataType](
+        org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.IntegerType))
+    for (bound <- Seq(3, 700)) {
+      val combined = new SQLMetric("sum", 0L)
+      val (in, out) = (new SQLMetric("sum", 0L), new SQLMetric("sum", 0L))
+      val partials = new WordScoreCombiner(reviews.iterator.map { case (st, t) =>
+          toRow(org.apache.spark.sql.catalyst.InternalRow(UTF8String.fromString(t), st.toInt - 3))
+        }, _.getUTF8String(0), _.getInt(1).toLong, bound, new SQLMetric("sum", 0L), combined)
+      val got = WordScoreReducer(partials, 1 << 20, Long.MaxValue, reduceSorts, in, out)
+        .map(r => (r.getUTF8String(0).toString, r.getLong(1))).toList
+      assert(got === expected, s"bound $bound")
+      assert(in.value === combined.value && in.value > expected.size, s"bound $bound")
+      assert(out.value === expected.size.toLong, s"bound $bound")
+    }
+  }
+
+  private def reduceSorts = {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.types.{LongType, StringType}
+    WordScoreReducer.sorts(
+      Seq(AttributeReference("word", StringType, nullable = false)(),
+        AttributeReference("partial", LongType, nullable = false)()),
+      Seq(AttributeReference("word", StringType, nullable = false)(),
+        AttributeReference("score", LongType, nullable = false)()))
+  }
+
+  test("reducer past its bound sorts on Spark's external sorter: Spark's order, row for row") {
+    // (word, partial) rows as the combiners emit them, words repeated
+    // across rows, in one task, with bounds the map crosses at once
+    val rnd = new scala.util.Random(9)
+    val partials = Seq.fill(3000)(Seq("é", "z", "a", "ab", "abcdefgh", "abcdefghé", "日本",
+      s"w${rnd.nextInt(400)}")(rnd.nextInt(8)) -> (rnd.nextInt(9) - 4).toLong)
+    val expected = partials.toDF("word", "partial").groupBy("word").agg(sum("partial").as("score"))
+      .orderBy(col("score").desc, col("word")).as[(String, Long)].collect().toSeq
+    val sorts = reduceSorts
+    // a word bound, a byte bound and, for contrast, no bound at all
+    for ((maxWords, maxBytes) <- Seq((4, Long.MaxValue), (1 << 20, 40L), (1 << 20, Long.MaxValue))) {
+      val in = SQLMetrics.createMetric(spark.sparkContext, "in")
+      val out = SQLMetrics.createMetric(spark.sparkContext, "out")
+      val got = spark.sparkContext.parallelize(partials, 1).mapPartitions { it =>
+        val toRow = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
+          Array[org.apache.spark.sql.types.DataType](
+            org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.LongType))
+        WordScoreReducer(it.map { case (w, p) =>
+            toRow(org.apache.spark.sql.catalyst.InternalRow(UTF8String.fromString(w), p))
+          }, maxWords, maxBytes, sorts, in, out)
+          .map(r => (r.getUTF8String(0).toString, r.getLong(1)))
+      }.collect().toSeq
+      assert(got === expected, s"$maxWords words, $maxBytes bytes")
+      assert(in.value === partials.size && out.value === expected.size, s"$maxWords words")
+    }
+    assert(WordScoreReducer.bound(2L << 30) === ((1 << 23, 128L << 20)))
+  }
+
+  test("word map: grows up to an injected arena cap, then fails naming the count and the cap") {
+    val map = new WordMap(Int.MaxValue, Long.MaxValue, arenaCap = 20000)
+    def add(w: String, delta: Long): Boolean = {
+      val b = w.getBytes("UTF-8")
+      map.add(b, Platform.BYTE_ARRAY_OFFSET, b.length,
+        WordMap.hash(b, Platform.BYTE_ARRAY_OFFSET, b.length), delta)
+    }
+    // 2000 words of 10 bytes: the slots, the entries and the arena all
+    // grow several times, the arena last to exactly its cap
+    val words = (0 until 2000).map(i => f"word$i%06d")
+    for (delta <- Seq(1L, 2L); w <- words) assert(add(w, delta), w)
+    assert(map.size === 2000)
+    val e = intercept[IllegalStateException](add("x", 1L))
+    assert(e.getMessage.contains("2000 distinct words") && e.getMessage.contains("20000 bytes"),
+      e.getMessage)
+    // a word already in the map still adds at the cap
+    assert(add("word000007", 4L))
+    val rows = map.sortedByScore().toSeq.map { i =>
+      val r = map.row(i); (r.getUTF8String(0).toString, r.getLong(1))
+    }
+    assert(rows.head === ("word000007" -> 7L))
+    assert(rows.tail === words.filter(_ != "word000007").map(_ -> 3L))
+  }
+
+  test("reduce counters: input is the combiner's output, output the distinct words") {
+    val docs = Tables.documents(spark, sf)
+    val scored = WordScore.flagship(docs)
+    val words = scored.collect().length
+    org.apache.spark.sql.graft.ListenerBus.drain(spark)
+    val plan = scored.queryExecution.executedPlan
+    val combine = collect(plan) { case e: WordScoreCombineExec => e }
+    val reduce = collect(plan) { case e: WordScoreReduceExec => e }
+    assert(combine.size === 1 && reduce.size === 1, plan)
+    // Hadoop's "Reduce input records" and "Reduce output records"
+    assert(reduce.head.metrics("numInputRows").value === combine.head.metrics("numOutputRows").value)
+    assert(reduce.head.metrics("numOutputRows").value === words)
+    assert(words === docs.select(explode(Text.tokens(col("text")))).distinct().count())
   }
 
   test("combiner metrics: tokens scanned equals the exploded Text.tokens") {
