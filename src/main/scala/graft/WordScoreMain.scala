@@ -20,6 +20,12 @@ import graft.sources.{ReviewSource, TsvSink}
   * `score<TAB>word` file sorted by score descending — byte-compatible
   * with the reference's TextOutputFormat result (`:192,206-216`),
   * sorted in one partition like its single reducer.
+  *
+  * Known divergence from the single failure code: a job that runs out
+  * of heap exits 52, not 1. Spark's executor thread handler
+  * (`SparkUncaughtExceptionHandler`) halts the JVM on an
+  * `OutOfMemoryError`, after `main` has printed `word-score failed: …
+  * OutOfMemoryError`.
   */
 object WordScoreMain {
 

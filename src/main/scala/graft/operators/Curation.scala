@@ -829,7 +829,6 @@ object Curation {
        |FROM lab JOIN q USING (doc_id) ORDER BY doc_id""".stripMargin
 
   // --------------------------------------------------- corpus merkle
-  val MerkleBuckets = 256   // fan-out; at 100 TB size this up (65k) or add a level
 
   /** Hierarchical corpus digest (a 2-level Merkle tree over content
     * digests): leaf = md5 of each document's text; level 0 = per-bucket
@@ -841,9 +840,9 @@ object Curation {
     * rsync/Dynamo anti-entropy shape for training-data snapshots.
     *
     * Scale shape: one scan computes leaves; the only shuffle is the
-    * bucket aggregation ([[MerkleBuckets]] groups; per-bucket state is
-    * the sorted digest list, N/buckets × 32 hex chars — size the
-    * fan-out, or add a level, to bound it); the root folds 256 rows.
+    * bucket aggregation into 256 buckets, one per first digest byte
+    * (per-bucket state is the sorted digest list, N/256 × 32 hex
+    * chars); the root folds those 256 rows.
     * Determinism: digests are md5 hex (engine-identical), bucket
     * concatenation is explicitly sorted, so partitioning can never
     * reach any digest.

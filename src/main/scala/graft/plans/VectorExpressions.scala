@@ -17,7 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `aggregate(zip_with(...))` higher-order pipeline (interpreted, one
   * allocation per pair). Summation order is identical to the
   * higher-order form and to DuckDB's list_reduce fold (see
-  * graft.functions.Vectors), so swapping implementations is bit-exact.
+  * graft.functions.Vectors), so the two are bit-exact; VectorExprSpec
+  * checks the natives against the higher-order forms.
   *
   * Precondition: array elements are non-null (embedding vectors). A
   * null ARRAY (either side) yields null via BinaryExpression's default
@@ -537,47 +538,4 @@ object SparseDotProduct {
     }
     acc.doubleValue()
   }
-}
-
-/** Zero-cost element-nullability assertion: re-types an `ArrayType`
-  * child to `containsNull = false` without touching the data — the
-  * documented on-ramp that lets [[NativeVectorRewrite]] fire on
-  * PARQUET-SOURCED frames. Parquet scans always report array elements
-  * nullable (the format can't promise otherwise), so the rewrite's
-  * soundness gate keeps read-path HOF queries on the interpreted form
-  * even when the caller KNOWS the column is a dense embedding; this
-  * node is how the caller states that knowledge. Exposed as
-  * `Vectors.assertDense(col)` and SQL `assert_dense(col)`.
-  *
-  * Modeled on Spark's own `KnownNotNull` (an unchecked retyping
-  * pass-through, not a runtime check): `genCode`/`eval` delegate to
-  * the child verbatim, so the assertion costs nothing in the hot
-  * path. UNCHECKED means exactly that — if the caller lies and a null
-  * element slips through, downstream natives read primitive buffer
-  * slots whose content for a null element is undefined (garbage
-  * values, not an error). Assert only what ingestion enforces.
-  */
-case class KnownDenseArray(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: ArrayType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"assert_dense expects an array input, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType =
-    child.dataType.asInstanceOf[ArrayType].copy(containsNull = false)
-
-  override def nullable: Boolean = child.nullable
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    child.eval(input)
-
-  override def genCode(ctx: CodegenContext): ExprCode = child.genCode(ctx)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    throw new IllegalStateException("genCode delegates to the child")
-
-  override protected def withNewChildInternal(newChild: Expression): KnownDenseArray =
-    copy(child = newChild)
 }

@@ -14,8 +14,8 @@ import graft.plans.{CharStats, DoubleSqDist, FloatDotProduct, FloatDoubleDot,
 
 /** Bridge into Spark's private[sql] surface (hence the package): builds
   * Columns from custom Catalyst Expressions, and holds the one registry
-  * of everything the engine adds to a session — SQL functions,
-  * optimizer rules and planner strategies.
+  * of everything the engine adds to a session — optimizer rules and
+  * planner strategies.
   *
   * [[ensureRegistered]] is the one registration path. It is per-session
   * and idempotent, so query functions can call it defensively: they
@@ -179,91 +179,13 @@ object GraftSql {
     }
 
   // ------------------------------------------------------ the registry
-  // The function table, `rules` and `strategies` are everything
-  // ensureRegistered installs on a session.
 
-  private def arity(fn: String, n: Int, es: Seq[Expression]): Unit =
-    if (es.length != n) throw new IllegalArgumentException(
-      s"$fn expects $n argument(s), got ${es.length}")
-
-  /** Scalar literal extraction for the shape parameters (shingle width,
-    * signature length, plane counts): these pick a CODE SHAPE at plan
-    * time — per-row values can't, so anything non-foldable is rejected
-    * at analysis rather than mis-planned.
-    */
-  private def intArg(fn: String, pos: Int, es: Seq[Expression]): Int = {
-    val e = es(pos)
-    if (e.foldable && e.dataType == org.apache.spark.sql.types.IntegerType) {
-      // eval once and reject a foldable NULL (e.g. CAST(NULL AS INT))
-      // here: null.asInstanceOf[Int] would silently unbox to 0 and
-      // plan a shape parameter of 0 instead of failing analysis
-      val v = e.eval()
-      if (v == null) throw new IllegalArgumentException(
-        s"$fn: argument ${pos + 1} must be a non-NULL INT literal, got ${e.sql}")
-      v.asInstanceOf[Int]
-    } else throw new IllegalArgumentException(
-      s"$fn: argument ${pos + 1} must be a foldable INT literal, got ${e.sql}")
-  }
-
-  /** (name, builder) for every native expression.
-    * shingle_minhash(toks, n, k) uses the LSH signature salt convention
-    * ("0|", "1|", …) — bit-identical to dMinhashLsh and the bench. The
-    * one exception: the k=1 Jaccard BLOCKING key (sizedShinglePairs)
-    * salts with "" rather than "0|", so SQL callers cannot reproduce
-    * that key through this function; use shingle_hash_set + a manual
-    * min over the hashes if blocking-key parity is needed.
-    */
-  private val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    ("float_dot",
-      es => { arity("float_dot", 2, es); FloatDotProduct(es(0), es(1)) }),
-    ("float_sqdist",
-      es => { arity("float_sqdist", 2, es); FloatSqDist(es(0), es(1)) }),
-    ("double_sqdist",
-      es => { arity("double_sqdist", 2, es); DoubleSqDist(es(0), es(1)) }),
-    ("fd_dot",
-      es => { arity("fd_dot", 2, es); FloatDoubleDot(es(0), es(1)) }),
-    ("fd_sqdist",
-      es => { arity("fd_sqdist", 2, es); FloatDoubleSqDist(es(0), es(1)) }),
-    ("shingle_minhash",
-      es => { arity("shingle_minhash", 3, es)
-        val k = intArg("shingle_minhash", 2, es)
-        ShingleMinHash(es(0), intArg("shingle_minhash", 1, es),
-          (0 until k).map(j => s"$j|")) }),
-    ("shingle_set",
-      es => { arity("shingle_set", 2, es)
-        ShingleSet(es(0), intArg("shingle_set", 1, es)) }),
-    ("shingle_hash_set",
-      es => { arity("shingle_hash_set", 2, es)
-        ShingleHashSet(es(0), intArg("shingle_hash_set", 1, es)) }),
-    ("sorted_intersect_count",
-      es => { arity("sorted_intersect_count", 2, es)
-        SortedIntersectCount(es(0), es(1)) }),
-    ("simhash64",
-      es => { arity("simhash64", 1, es); SimHash64Expr(es(0)) }),
-    ("simhash16",
-      es => { arity("simhash16", 1, es); SimHash16Expr(es(0)) }),
-    ("sign_bands",
-      es => { arity("sign_bands", 4, es)
-        SignBands(es(0), intArg("sign_bands", 1, es),
-          intArg("sign_bands", 2, es), intArg("sign_bands", 3, es)) }),
-    ("char_stats",
-      es => { arity("char_stats", 1, es); CharStats(es(0)) }),
-    ("pair_explode",
-      es => { arity("pair_explode", 1, es); PairExplode(es(0)) }),
-    ("sparse_dot",
-      es => { arity("sparse_dot", 2, es); SparseDotProduct(es(0), es(1)) }),
-    ("assert_dense",
-      es => { arity("assert_dense", 1, es)
-        graft.plans.KnownDenseArray(es(0)) }),
-  )
-
-  /** Every custom optimizer rule: the HOF→native inner-product upgrade,
-    * the naive spatial/band join → grid equi-join rewrite, left-filter
-    * pushdown through the as-of and band-count nodes, and the SQL as-of
-    * shape → [[graft.plans.AsofJoinPlan]].
+  /** Every custom optimizer rule: the naive spatial/band join → grid
+    * equi-join rewrite, left-filter pushdown through the as-of and
+    * band-count nodes, and the SQL as-of shape →
+    * [[graft.plans.AsofJoinPlan]].
     */
   val rules: Seq[Rule[LogicalPlan]] = Seq(
-    graft.plans.NativeVectorRewrite,
     graft.plans.GridJoinRewrite,
     graft.plans.PushLeftFilterThroughJoin,
     graft.plans.SqlAsofRewrite)
@@ -273,20 +195,13 @@ object GraftSql {
     graft.plans.TimeJoinStrategy,
     graft.plans.WordScoreCombineStrategy)
 
-  /** Install the whole registry on an existing session: every custom
-    * expression as a SQL function (`SELECT simhash64(tokens),
-    * float_dot(a, b) …`), plus [[rules]] and [[strategies]] through the
-    * public `experimental` hooks. Idempotent — a function, rule or
-    * strategy already present is not added again (re-registering a
-    * function would replace it and log a warning per name).
+  /** Install [[rules]] and [[strategies]] on an existing session
+    * through the public `experimental` hooks. Idempotent — a rule or
+    * strategy already present is not added again. Adds no SQL function:
+    * the native expressions are reached through the Column wrappers
+    * above.
     */
   def ensureRegistered(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    functions.foreach { case (name, builder) =>
-      if (!registry.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        registry.createOrReplaceTempFunction(name, builder, "built-in")
-    }
     val em = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
     em.extraOptimizations ++= rules.filterNot(em.extraOptimizations.contains)
     em.extraStrategies ++= strategies.filterNot(em.extraStrategies.contains)

@@ -13,21 +13,10 @@ import graft.functions.Vectors
 class VectorExprSpec extends SparkSpec {
   import spark.implicits._
 
-  // The HOF forms are the reference here. NativeVectorRewrite, which
-  // every GraftSql.ensureRegistered installs on the shared session,
-  // would turn a HOF over non-null arrays into the very native under
-  // test, so those comparisons run with the rule stripped.
-  private def withoutRewrite[T](body: => T): T = {
-    val em = spark.experimental
-    val saved = em.extraOptimizations
-    em.extraOptimizations = saved.filterNot(_ == graft.plans.NativeVectorRewrite)
-    try body finally em.extraOptimizations = saved
-  }
-
   test("native dot == HOF dot, bit-exact, on fixture embeddings") {
     val diff = Tables.embeddings(spark, sf)
       .select(Vectors.dot(col("embedding"), col("embedding")).as("fast"),
-        Vectors.dotHof(col("embedding"), col("embedding")).as("ref"))
+        VectorHof.dot(col("embedding"), col("embedding")).as("ref"))
       .filter(col("fast") =!= col("ref"))
     assert(diff.count() === 0)
   }
@@ -40,10 +29,10 @@ class VectorExprSpec extends SparkSpec {
         b <- genVec(Gen.Parameters.default, Seed(-i.toLong))
       } yield (a, b)
     }
-    val rows = withoutRewrite(pairs.toDF("a", "b")
+    val rows = pairs.toDF("a", "b")
       .select(Vectors.dot(col("a"), col("b")).as("fast"),
-        Vectors.dotHof(col("a"), col("b")).as("ref"))
-      .as[(Double, Double)].collect())
+        VectorHof.dot(col("a"), col("b")).as("ref"))
+      .as[(Double, Double)].collect()
     rows.foreach { case (fast, ref) =>
       assert(java.lang.Double.doubleToLongBits(fast) ===
         java.lang.Double.doubleToLongBits(ref))
@@ -56,7 +45,7 @@ class VectorExprSpec extends SparkSpec {
     val diff = base.toDF("q_id", "q_emb").filter(col("q_id") < 5)
       .crossJoin(base)
       .select(Vectors.sqDist(col("q_emb"), col("embedding")).as("fast"),
-        Vectors.sqDistHof(col("q_emb"), col("embedding")).as("ref"))
+        VectorHof.sqDist(col("q_emb"), col("embedding")).as("ref"))
       .filter(col("fast") =!= col("ref"))
     assert(diff.count() === 0)
     // property: random float arrays, bit-level equality
@@ -67,10 +56,10 @@ class VectorExprSpec extends SparkSpec {
         b <- genVec(Gen.Parameters.default, Seed(-7 * i.toLong))
       } yield (a, b)
     }
-    val rows = withoutRewrite(pairs.toDF("a", "b")
+    val rows = pairs.toDF("a", "b")
       .select(Vectors.sqDist(col("a"), col("b")).as("fast"),
-        Vectors.sqDistHof(col("a"), col("b")).as("ref"))
-      .as[(Double, Double)].collect())
+        VectorHof.sqDist(col("a"), col("b")).as("ref"))
+      .as[(Double, Double)].collect()
     rows.foreach { case (fast, ref) =>
       assert(java.lang.Double.doubleToLongBits(fast) ===
         java.lang.Double.doubleToLongBits(ref))
@@ -80,7 +69,7 @@ class VectorExprSpec extends SparkSpec {
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       val r = Tables.embeddings(spark, sf)
         .select(Vectors.sqDist(col("embedding"), col("embedding")).as("d"),
-          Vectors.sqDistHof(col("embedding"), col("embedding")).as("ref"))
+          VectorHof.sqDist(col("embedding"), col("embedding")).as("ref"))
         .filter(col("d") =!= col("ref") || col("d") =!= 0.0)
       assert(r.count() === 0)
     }
@@ -135,28 +124,13 @@ class VectorExprSpec extends SparkSpec {
     }
   }
 
-  test("float_sqdist is registered and callable from SQL") {
-    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
-    val got = spark.sql(
-      "SELECT float_sqdist(array(CAST(1 AS FLOAT), CAST(2 AS FLOAT)), " +
-        "array(CAST(3 AS FLOAT), CAST(0 AS FLOAT)))").as[Double].head()
-    assert(got === 8.0)
-  }
-
-  test("float_dot is registered and callable from SQL") {
-    org.apache.spark.sql.graft.GraftSql.ensureRegistered(spark)
-    val r = spark.sql("SELECT float_dot(array(CAST(1.5 AS FLOAT), CAST(2 AS FLOAT)), " +
-      "array(CAST(2 AS FLOAT), CAST(3 AS FLOAT))) AS d").as[Double].head()
-    assert(r === 9.0)
-  }
-
   test("interpreted eval path (nullSafeEval) matches codegen") {
     // force interpreted evaluation by turning codegen off for one query
     withSQLConf("spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       val r = Tables.embeddings(spark, sf)
         .select(Vectors.dot(col("embedding"), col("embedding")).as("d"),
-          Vectors.dotHof(col("embedding"), col("embedding")).as("ref"))
+          VectorHof.dot(col("embedding"), col("embedding")).as("ref"))
         .filter(col("d") =!= col("ref"))
       assert(r.count() === 0)
     }
@@ -170,27 +144,24 @@ class VectorExprSpec extends SparkSpec {
     // interpreted paths, with the HOF columns asserted alongside so the
     // parity claim itself is exercised, not assumed.
     val gs = org.apache.spark.sql.graft.GraftSql
-    gs.ensureRegistered(spark)
     val df = Seq((Seq(1f, 2f, 3f), Seq(1f, 2f))).toDF("a", "b")
       .withColumn("ad", expr("transform(a, x -> CAST(x AS DOUBLE))"))
       .withColumn("bd", expr("transform(b, x -> CAST(x AS DOUBLE))"))
     def check(): Unit = {
       val row = df.select(
         Vectors.dot(col("a"), col("b")).as("d"),
-        Vectors.dotHof(col("a"), col("b")).as("dh"),
+        VectorHof.dot(col("a"), col("b")).as("dh"),
         Vectors.sqDist(col("a"), col("b")).as("s"),
-        Vectors.sqDistHof(col("a"), col("b")).as("sh"),
-        expr("double_sqdist(ad, bd)").as("ds"),
+        VectorHof.sqDist(col("a"), col("b")).as("sh"),
+        gs.doubleSqDist(col("ad"), col("bd")).as("ds"),
         gs.fdDot(col("a"), col("bd")).as("fd"),
         gs.fdSqDist(col("a"), col("bd")).as("fs")).head()
       (0 until 7).foreach(i =>
         assert(row.isNullAt(i), s"column $i finite on length mismatch"))
     }
-    withoutRewrite {
-      check()
-      withSQLConf("spark.sql.codegen.wholeStage" -> "false",
-        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") { check() }
-    }
+    check()
+    withSQLConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") { check() }
   }
 
   test("sparse_dot == exploded decimal join-aggregate, bit-exact, on fixture docs") {
@@ -230,32 +201,31 @@ class VectorExprSpec extends SparkSpec {
         assert(interp === cg)
       }
     }
-    // edge cases: empty side via the SQL registration path → exact zero
-    GraftSql.ensureRegistered(spark)
-    val empty = spark.sql(
-      """SELECT sparse_dot(
-        |  CAST(array() AS array<struct<word string, w double>>),
-        |  array(struct('x' AS word, CAST(2.0 AS DOUBLE) AS w))) AS d""".stripMargin)
-    assert(empty.collect()(0).getDouble(0) === 0.0)
+    // edge cases over SQL-literal frames: an empty side → exact zero
+    def sparseDotOf(sql: String): Double =
+      spark.sql(sql).select(GraftSql.sparseDot(col("a"), col("b")))
+        .collect()(0).getDouble(0)
+    val empty = sparseDotOf(
+      """SELECT CAST(array() AS array<struct<word string, w double>>) AS a,
+        |  array(struct('x' AS word, CAST(2.0 AS DOUBLE) AS w)) AS b""".stripMargin)
+    assert(empty === 0.0)
     // null elements and null word fields are skipped, not NPE'd
-    val nulls = spark.sql(
-      """SELECT sparse_dot(
-        |  array(struct('x' AS word, CAST(2.0 AS DOUBLE) AS w),
-        |        CAST(NULL AS struct<word string, w double>)),
+    val nulls = sparseDotOf(
+      """SELECT array(struct('x' AS word, CAST(2.0 AS DOUBLE) AS w),
+        |        CAST(NULL AS struct<word string, w double>)) AS a,
         |  array(struct(CAST(NULL AS STRING) AS word, CAST(9.0 AS DOUBLE) AS w),
-        |        struct('x' AS word, CAST(3.0 AS DOUBLE) AS w))) AS d""".stripMargin)
-    assert(nulls.collect()(0).getDouble(0) === 6.0)
+        |        struct('x' AS word, CAST(3.0 AS DOUBLE) AS w)) AS b""".stripMargin)
+    assert(nulls === 6.0)
     // the representable-tie case the exact decimal path exists for:
     // 0.000025 * 0.00002 = 5e-10 EXACTLY as decimals — a .5 boundary
     // at the 10th digit. HALF_UP on the exact product gives 1e-9;
     // rounding the DOUBLE product would depend on which side of 5e-10
     // the nearest double lands, per engine. DuckDB's
     // round(DECIMAL(18,6)*DECIMAL(18,6), 9) was probed to agree.
-    val tie = spark.sql(
-      """SELECT sparse_dot(
-        |  array(struct('x' AS word, CAST(0.000025 AS DOUBLE) AS w)),
-        |  array(struct('x' AS word, CAST(0.00002 AS DOUBLE) AS w))) AS d""".stripMargin)
-    assert(tie.collect()(0).getDouble(0) === 1e-9)
+    val tie = sparseDotOf(
+      """SELECT array(struct('x' AS word, CAST(0.000025 AS DOUBLE) AS w)) AS a,
+        |  array(struct('x' AS word, CAST(0.00002 AS DOUBLE) AS w)) AS b""".stripMargin)
+    assert(tie === 1e-9)
   }
 
   test("native ShingleMinHash == HOF minhash signature, exactly") {
