@@ -9,9 +9,9 @@ object Bench {
     // exactly those two warm-JIT/page-cache treatment the rest of the
     // sorted run didn't get; warming the shared expression classes on a
     // tiny in-memory frame compiles the same generated-code paths
-    // (shingle/MinHash loops, float dot/norm, SimHash64 merge, HOF
-    // folds, window machinery) without preferentially pre-running any
-    // query in the suite.
+    // (shingle/MinHash loops, float dot/norm, HOF folds, window
+    // machinery) without preferentially pre-running any query in the
+    // suite.
     spark.range(1000).selectExpr("sum(id)").collect()
     try {
       import org.apache.spark.sql.functions._
@@ -26,11 +26,6 @@ object Bench {
           gs.shingleSet(toks, 3).as("ss"),
           graft.functions.Vectors.dot(col("emb"), col("emb")).as("dp"),
           aggregate(toks, lit(0), (a, x) => a + length(x)).as("fold"))
-        .queryExecution.toRdd.foreach(_ => ())
-      val sim64 = udaf(graft.functions.SimHash64)
-      warm.select(explode(toks).as("w"), col("id"))
-        .groupBy("id").agg(sim64(col("w")).as("sh"))
-        .select(max(length(col("sh")))) // sh is hex text — just consume it
         .queryExecution.toRdd.foreach(_ => ())
       warm.select(sum(col("id")).over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("id") % 4).orderBy("id")

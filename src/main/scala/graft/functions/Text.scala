@@ -42,6 +42,23 @@ object Text {
   def gramConcatSql(toks: String, idx: String, n: Int): String =
     (0 until n).map(k => s"$toks[$idx+$k]").mkString(" || ' ' || ")
 
+  /** DuckDB CTE `name` (`doc_id, sh`): the distinct word 3-grams of each
+    * row of `from` (`doc_id, toks`) with at least 3 tokens — the oracle
+    * side of the shingle sets the near-duplicate queries block and
+    * compare on.
+    */
+  def sh3Sql(from: String, name: String): String =
+    s"""$name AS (SELECT doc_id,
+       |  list_distinct(list_transform(range(1, len(toks) - 1),
+       |    i -> ${gramConcatSql("toks", "i", 3)})) AS sh
+       |  FROM $from WHERE len(toks) >= 3)""".stripMargin
+
+  /** DuckDB CTEs `t` (`doc_id, toks` per document, [[ToksSql]]) and
+    * `sh3` over it ([[sh3Sql]]).
+    */
+  val ToksSh3Sql: String =
+    s"t AS (SELECT doc_id, $ToksSql AS toks FROM documents),\n${sh3Sql("t", "sh3")}"
+
   /** `text` → array<string> of tokens, empties removed.
     * `array_remove` is exact here: `split` never yields a null element,
     * and a null `text` gives null either way. Unlike a `filter` lambda

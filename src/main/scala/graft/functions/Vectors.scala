@@ -3,7 +3,10 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Vector primitives over ArrayType(FloatType) embedding columns.
+/** Vector primitives over dense embedding columns: ArrayType(FloatType)
+  * (stored vectors) or ArrayType(DoubleType) (derived means and
+  * subvectors) — float·float, float·double, and for [[sqDist]] also
+  * double·double.
   *
   * Products and sums are computed in DOUBLE, folding left in index
   * order with a 0.0 seed — which both matches DuckDB's `list_reduce`
@@ -12,20 +15,22 @@ import org.apache.spark.sql.functions._
   * exact, so the only rounding is the unavoidable sequential-sum
   * rounding, identical everywhere.
   *
-  * [[dot]] and [[sqDist]] are the native codegen'd Catalyst expressions
-  * in graft.plans (fused loop, no per-element boxing); VectorExprSpec
-  * checks them bit-for-bit against the portable `aggregate(zip_with(…))`
+  * [[dot]] and [[sqDist]] are the one native codegen'd Catalyst
+  * expression graft.plans.DenseFold (fused loop, no per-element
+  * boxing); plans name it by type pair and term (`float_dot`, `fd_dot`,
+  * `float_sqdist`, `double_sqdist`, `fd_sqdist`). VectorExprSpec checks
+  * it bit-for-bit against the portable `aggregate(zip_with(…))`
   * higher-order forms.
   */
 object Vectors {
 
   /** Σ aᵢ·bᵢ — native codegen'd Catalyst expression (hot path). */
   def dot(a: Column, b: Column): Column =
-    org.apache.spark.sql.graft.GraftSql.floatDot(a, b)
+    org.apache.spark.sql.graft.GraftSql.denseDot(a, b)
 
   /** Σ (aᵢ−bᵢ)² — native codegen'd Catalyst expression (hot path). */
   def sqDist(a: Column, b: Column): Column =
-    org.apache.spark.sql.graft.GraftSql.floatSqDist(a, b)
+    org.apache.spark.sql.graft.GraftSql.denseSqDist(a, b)
 
   /** ‖a‖₂ (sequential double sum of squares, codegen'd). */
   def norm(a: Column): Column = sqrt(dot(a, a))

@@ -85,10 +85,7 @@ object Curation {
        |  WHERE len(toks) >= 20
        |    AND CAST(len(list_filter(toks, x -> x IN ('the', 'a'))) AS DOUBLE) / len(toks) < 0.2),
        |keepers AS (SELECT MIN(doc_id) AS doc_id FROM quality GROUP BY md5(text)),
-       |sh3 AS (SELECT doc_id,
-       |  list_distinct(list_transform(range(1, len(toks) - 1),
-       |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-       |  FROM quality WHERE len(toks) >= 3),
+       |${Text.sh3Sql("quality", "sh3")},
        |blk AS (SELECT doc_id, sh, list_min(list_transform(sh, x -> md5(x))) AS blk
        |  FROM sh3 WHERE len(sh) > 0),
        |nd_pairs AS (SELECT x.doc_id AS a, y.doc_id AS b FROM blk x JOIN blk y

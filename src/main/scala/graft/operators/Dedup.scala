@@ -203,11 +203,7 @@ object Dedup {
     }.mkString("\n  UNION ALL ")
     val agree = (0 until MinhashK)
       .map(j => s"CASE WHEN sa.sig_$j = sb.sig_$j THEN 1 ELSE 0 END").mkString(" + ")
-    s"""WITH t AS (SELECT doc_id, ${Text.ToksSql} AS toks FROM documents),
-       |sh3 AS (SELECT doc_id,
-       |  list_distinct(list_transform(range(1, len(toks) - 1),
-       |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-       |  FROM t WHERE len(toks) >= 3),
+    s"""WITH ${Text.ToksSh3Sql},
        |sigs AS (SELECT doc_id,
        |  $sigExprs
        |FROM sh3 WHERE len(sh) > 0),
@@ -299,11 +295,7 @@ object Dedup {
     val agree = (0 until MinhashK)
       .map(j => s"CASE WHEN sa.sig_$j = sb.sig_$j THEN 1 ELSE 0 END")
       .mkString(" + ")
-    s"""WITH t AS (SELECT doc_id, ${Text.ToksSql} AS toks FROM documents),
-       |sh3 AS (SELECT doc_id,
-       |  list_distinct(list_transform(range(1, len(toks) - 1),
-       |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-       |  FROM t WHERE len(toks) >= 3),
+    s"""WITH ${Text.ToksSh3Sql},
        |sigs AS (SELECT doc_id,
        |  $sigExprs
        |FROM sh3 WHERE len(sh) > 0),
@@ -425,11 +417,7 @@ object Dedup {
       .map(j => s"CASE WHEN ascii(sa.sig_$j[1:1]) % 2 = " +
         s"ascii(sb.sig_$j[1:1]) % 2 THEN 1 ELSE 0 END")
       .mkString(" + ")
-    s"""WITH t AS (SELECT doc_id, ${Text.ToksSql} AS toks FROM documents),
-       |sh3 AS (SELECT doc_id,
-       |  list_distinct(list_transform(range(1, len(toks) - 1),
-       |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-       |  FROM t WHERE len(toks) >= 3),
+    s"""WITH ${Text.ToksSh3Sql},
        |sigs AS (SELECT doc_id,
        |  $sigExprs
        |FROM sh3 WHERE len(sh) > 0),
@@ -574,10 +562,7 @@ object Dedup {
       s"SELECT doc_id, $b AS band, md5($parts) AS bucket FROM sigs_$p"
     }.mkString("\n  UNION ALL ")
     def sigChain(p: String) =
-      s"""sh_$p AS (SELECT doc_id,
-         |  list_distinct(list_transform(range(1, len(toks) - 1),
-         |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-         |  FROM $p WHERE len(toks) >= 3),
+      s"""${Text.sh3Sql(p, s"sh_$p")},
          |sigs_$p AS (SELECT doc_id,
          |  $sigExprs
          |FROM sh_$p WHERE len(sh) > 0),
@@ -852,11 +837,7 @@ object Dedup {
       .orderBy("a", "b")
 
   val dOverlapSql: String =
-    s"""WITH t AS (SELECT doc_id, ${Text.ToksSql} AS toks FROM documents),
-       |sh3 AS (SELECT doc_id,
-       |  list_distinct(list_transform(range(1, len(toks) - 1),
-       |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-       |  FROM t WHERE len(toks) >= 3),
+    s"""WITH ${Text.ToksSh3Sql},
        |b AS (SELECT doc_id, sh,
        |  list_min(list_transform(sh, x -> md5(x))) AS blk
        |  FROM sh3 WHERE len(sh) > 0),
@@ -920,11 +901,7 @@ object Dedup {
   }
 
   val dEditDistSql: String =
-    s"""WITH t AS (SELECT doc_id, ${Text.ToksSql} AS toks FROM documents),
-       |sh3 AS (SELECT doc_id,
-       |  list_distinct(list_transform(range(1, len(toks) - 1),
-       |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-       |  FROM t WHERE len(toks) >= 3),
+    s"""WITH ${Text.ToksSh3Sql},
        |b AS (SELECT doc_id,
        |  list_min(list_transform(sh, x -> md5(x))) AS blk
        |  FROM sh3 WHERE len(sh) > 0),
@@ -941,11 +918,7 @@ object Dedup {
        |ORDER BY a, b""".stripMargin
 
   val dJaccardSql: String =
-    s"""WITH t AS (SELECT doc_id, ${Text.ToksSql} AS toks FROM documents),
-       |sh3 AS (SELECT doc_id,
-       |  list_distinct(list_transform(range(1, len(toks) - 1),
-       |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-       |  FROM t WHERE len(toks) >= 3),
+    s"""WITH ${Text.ToksSh3Sql},
        |b AS (SELECT doc_id, sh,
        |  list_min(list_transform(sh, x -> md5(x))) AS blk
        |  FROM sh3 WHERE len(sh) > 0),
@@ -1036,13 +1009,12 @@ object Dedup {
   /** 64-bit SimHash via the native codegen'd expression
     * (graft.plans.SimHash64Expr): md5 per token, 64 majority counters,
     * hex sketch — one per-row map, NO shuffle. The original
-    * explode-per-token + typed-Aggregator formulation (still in-tree as
-    * the custom-UDAF surface exercise, `functions/SimHashAgg.scala`,
-    * property-pinned bit-identical to this expression in
-    * SimHashExprSpec) paid an ExpressionEncoder round-trip of a 64-int
-    * buffer per token row plus a doc_id shuffle: 7.5 s at sf0.1 for
-    * what is algebraically a per-document scalar. The
-    * `size(toks) >= 1` filter keeps the explode+groupBy row set
+    * explode-per-token + typed-Aggregator formulation (now the test
+    * reference `graft.SimHash64`, pinned bit-identical to this
+    * expression in SimHashExprSpec) paid an ExpressionEncoder
+    * round-trip of a 64-int buffer per token row plus a doc_id
+    * shuffle: 7.5 s at sf0.1 for what is algebraically a per-document
+    * scalar. The `size(toks) >= 1` filter keeps the explode+groupBy row set
     * (token-less docs are absent there). Oracle unchanged: 64
     * SUM(CASE) bit counters over the same md5 bits.
     */
@@ -1056,7 +1028,34 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  val dSimhash64Sql: String = graft.functions.SimHash64.oracleSql(Text.ToksSql)
+  /** Oracle: 64 SUM(CASE) bit counters over md5 hex digits, reassembled
+    * into the same 16-char hex sketch. Hex digit d of the hash carries
+    * bits 4d..4d+3 (MSB first); the IN-sets below are the hex characters
+    * with that bit set.
+    */
+  val dSimhash64Sql: String = {
+    val bitSets = Seq(
+      "('8','9','a','b','c','d','e','f')", // value & 8
+      "('4','5','6','7','c','d','e','f')", // value & 4
+      "('2','3','6','7','a','b','e','f')", // value & 2
+      "('1','3','5','7','9','b','d','f')") // value & 1
+    val sums = (0 until 64).map { j =>
+      s"SUM(CASE WHEN substr(h, ${j / 4 + 1}, 1) IN ${bitSets(j % 4)} THEN 1 ELSE -1 END) AS s$j"
+    }.mkString(",\n    ")
+    val digits = (0 until 16).map { d =>
+      val v = (0 until 4).map(b => s"CASE WHEN s${d * 4 + b} > 0 THEN ${8 >> b} ELSE 0 END")
+        .mkString(" + ")
+      s"substr('0123456789abcdef', ($v) + 1, 1)"
+    }.mkString(" ||\n    ")
+    s"""WITH w AS (SELECT doc_id, unnest(${Text.ToksSql}) AS word FROM documents),
+       |h AS (SELECT doc_id, md5(word) AS h FROM w),
+       |s AS (SELECT doc_id,
+       |    $sums
+       |  FROM h GROUP BY doc_id)
+       |SELECT doc_id,
+       |    $digits AS simhash64
+       |FROM s ORDER BY doc_id""".stripMargin
+  }
 
   // ----------------------------------------------- near-dup clustering
   /** 1-hop min-label assignment over the LSH pair graph: every doc in a
@@ -1527,11 +1526,7 @@ object Dedup {
   }
 
   val dContainmentSql: String =
-    s"""WITH t AS (SELECT doc_id, ${Text.ToksSql} AS toks FROM documents),
-       |sh3 AS (SELECT doc_id,
-       |  list_distinct(list_transform(range(1, len(toks) - 1),
-       |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-       |  FROM t WHERE len(toks) >= 3),
+    s"""WITH ${Text.ToksSh3Sql},
        |a AS (SELECT doc_id AS a_id, sh,
        |    list_min(list_transform(sh, x -> md5(x))) AS blk
        |  FROM sh3 WHERE len(sh) > 0),
@@ -1707,12 +1702,7 @@ object Dedup {
       .orderBy("bucket")
 
   val dThresholdCurveSql: String =
-    s"""WITH t AS (SELECT doc_id, ${graft.functions.Text.ToksSql} AS toks
-       |  FROM documents),
-       |sh3 AS (SELECT doc_id,
-       |  list_distinct(list_transform(range(1, len(toks) - 1),
-       |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-       |  FROM t WHERE len(toks) >= 3),
+    s"""WITH ${Text.ToksSh3Sql},
        |b AS (SELECT doc_id, sh,
        |  list_min(list_transform(sh, x -> md5(x))) AS blk
        |  FROM sh3 WHERE len(sh) > 0),
@@ -1831,11 +1821,7 @@ object Dedup {
     }
     val blocks = Seq((1, 12), (2, 6), (3, 4), (4, 3), (6, 2))
       .map { case (b, r) => block(b, r) }
-    s"""WITH t AS (SELECT doc_id, ${Text.ToksSql} AS toks FROM documents),
-       |sh3 AS (SELECT doc_id,
-       |  list_distinct(list_transform(range(1, len(toks) - 1),
-       |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-       |  FROM t WHERE len(toks) >= 3),
+    s"""WITH ${Text.ToksSh3Sql},
        |sigs AS (SELECT doc_id,
        |  $sigExprs
        |FROM sh3 WHERE len(sh) > 0),

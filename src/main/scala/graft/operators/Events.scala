@@ -364,30 +364,39 @@ object Events {
       |  CAST(epoch(o_orderdate) AS BIGINT) AS order_epoch
       |FROM j WHERE rn = 1 ORDER BY event_id""".stripMargin
 
+  /** Runs `join` over the native as-of queries' two inputs — events
+    * (`event_id`, `user_id`, `ts_us` in µs) and orders (`o_custkey`,
+    * `o_orderkey`, `o_us`) — and projects its output to the e_asof_join
+    * oracle's columns, `order_epoch` in seconds.
+    */
+  private def asofOrders(s: SparkSession, d: String)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val ev = load(s, d).select(col("event_id"), col("user_id"),
+      unix_micros(col("ts")).as("ts_us"))
+    val ord = Tables.orders(s, d).select(col("o_custkey"), col("o_orderkey"),
+      (unix_timestamp(col("o_orderdate")) * lit(1000000L)).as("o_us"))
+    join(ev, ord)
+      .select(col("event_id"), col("user_id"), col("o_orderkey"),
+        (col("o_us") / lit(1000000L)).cast("bigint").as("order_epoch"))
+      .orderBy("event_id")
+  }
+
   /** The same as-of semantics as [[eAsofJoin]] through the NATIVE
     * whole-operator path (graft.plans.AsofJoinExec): one shuffle per
     * side on the equality key, a per-partition sort-merge with O(1)
     * held state, and zero fan-out — vs the composed plan's
     * |event × same-user orders| intermediate. Same oracle SQL as
-    * e_asof_join, so the driver's hash gate certifies the custom
-    * physical operator bit-for-bit against DuckDB every round.
+    * e_asof_join, so the DuckDB hash compare (`tools/parity.py`)
+    * certifies the custom physical operator bit-for-bit.
     */
-  def eAsofNative(s: SparkSession, d: String): DataFrame = {
-    val ev = load(s, d).select(col("event_id"), col("user_id"),
-      unix_micros(col("ts")).as("ts_us"))
-    val ord = Tables.orders(s, d).select(col("o_custkey"), col("o_orderkey"),
-      (unix_timestamp(col("o_orderdate")) * lit(1000000L)).as("o_us"))
-    graft.plans.AsofJoin.joinAsOf(ev, ord,
-        leftTime = "ts_us", rightTime = "o_us",
-        leftBy = Seq("user_id"), rightBy = Seq("o_custkey"),
-        // pin the shuffled exec: this query is the sort-merge flagship
-        // (eAsofBroadcast gates the broadcast path; with cost-based
-        // selection the small fixture dim would otherwise broadcast)
-        tiebreak = Seq("o_orderkey"), broadcast = Some(false))
-      .select(col("event_id"), col("user_id"), col("o_orderkey"),
-        (col("o_us") / lit(1000000L)).cast("bigint").as("order_epoch"))
-      .orderBy("event_id")
-  }
+  def eAsofNative(s: SparkSession, d: String): DataFrame =
+    asofOrders(s, d)(graft.plans.AsofJoin.joinAsOf(_, _,
+      leftTime = "ts_us", rightTime = "o_us",
+      leftBy = Seq("user_id"), rightBy = Seq("o_custkey"),
+      // pin the shuffled exec: this query is the sort-merge flagship
+      // (eAsofBroadcast gates the broadcast path; with cost-based
+      // selection the small fixture dim would otherwise broadcast)
+      tiebreak = Seq("o_orderkey"), broadcast = Some(false)))
 
   /** The SALTED shuffled plan of the same native as-of (same oracle as
     * e_asof_join/e_asof_native — the salt must be invisible in the
@@ -399,19 +408,11 @@ object Events {
     * give a custom exec. AsofJoinSpec pins the measured task bound
     * under an adversarial single-key fixture.
     */
-  def eAsofSalted(s: SparkSession, d: String): DataFrame = {
-    val ev = load(s, d).select(col("event_id"), col("user_id"),
-      unix_micros(col("ts")).as("ts_us"))
-    val ord = Tables.orders(s, d).select(col("o_custkey"), col("o_orderkey"),
-      (unix_timestamp(col("o_orderdate")) * lit(1000000L)).as("o_us"))
-    graft.plans.AsofJoin.joinAsOfSalted(ev, ord,
-        leftTime = "ts_us", rightTime = "o_us",
-        leftBy = Seq("user_id"), rightBy = Seq("o_custkey"),
-        bucketUs = 30L * 86400L * 1000000L, tiebreak = Seq("o_orderkey"))
-      .select(col("event_id"), col("user_id"), col("o_orderkey"),
-        (col("o_us") / lit(1000000L)).cast("bigint").as("order_epoch"))
-      .orderBy("event_id")
-  }
+  def eAsofSalted(s: SparkSession, d: String): DataFrame =
+    asofOrders(s, d)(graft.plans.AsofJoin.joinAsOfSalted(_, _,
+      leftTime = "ts_us", rightTime = "o_us",
+      leftBy = Seq("user_id"), rightBy = Seq("o_custkey"),
+      bucketUs = 30L * 86400L * 1000000L, tiebreak = Seq("o_orderkey")))
 
   /** The SQL front door over the same native as-of (same oracle as
     * e_asof_join/e_asof_native): the Spark side is PURE SQL TEXT — the
@@ -463,38 +464,22 @@ object Events {
     * pinned by AsofJoinSpec's adversarial single-key fixture with no
     * caller opt-in.
     */
-  def eAsofAuto(s: SparkSession, d: String): DataFrame = {
-    val ev = load(s, d).select(col("event_id"), col("user_id"),
-      unix_micros(col("ts")).as("ts_us"))
-    val ord = Tables.orders(s, d).select(col("o_custkey"), col("o_orderkey"),
-      (unix_timestamp(col("o_orderdate")) * lit(1000000L)).as("o_us"))
-    graft.plans.AsofJoin.joinAsOfAuto(ev, ord,
-        leftTime = "ts_us", rightTime = "o_us",
-        leftBy = Seq("user_id"), rightBy = Seq("o_custkey"),
-        tiebreak = Seq("o_orderkey"))
-      .select(col("event_id"), col("user_id"), col("o_orderkey"),
-        (col("o_us") / lit(1000000L)).cast("bigint").as("order_epoch"))
-      .orderBy("event_id")
-  }
+  def eAsofAuto(s: SparkSession, d: String): DataFrame =
+    asofOrders(s, d)(graft.plans.AsofJoin.joinAsOfAuto(_, _,
+      leftTime = "ts_us", rightTime = "o_us",
+      leftBy = Seq("user_id"), rightBy = Seq("o_custkey"),
+      tiebreak = Seq("o_orderkey")))
 
   /** The BROADCAST plan of the same native as-of (same oracle as
     * e_asof_join/e_asof_native): the orders side is broadcast whole and
     * indexed per task; the events side pays NO shuffle and NO sort —
     * the 100 TB fast path when the dimension fits the broadcast budget.
     */
-  def eAsofBroadcast(s: SparkSession, d: String): DataFrame = {
-    val ev = load(s, d).select(col("event_id"), col("user_id"),
-      unix_micros(col("ts")).as("ts_us"))
-    val ord = Tables.orders(s, d).select(col("o_custkey"), col("o_orderkey"),
-      (unix_timestamp(col("o_orderdate")) * lit(1000000L)).as("o_us"))
-    graft.plans.AsofJoin.joinAsOf(ev, ord,
-        leftTime = "ts_us", rightTime = "o_us",
-        leftBy = Seq("user_id"), rightBy = Seq("o_custkey"),
-        tiebreak = Seq("o_orderkey"), broadcast = Some(true))
-      .select(col("event_id"), col("user_id"), col("o_orderkey"),
-        (col("o_us") / lit(1000000L)).cast("bigint").as("order_epoch"))
-      .orderBy("event_id")
-  }
+  def eAsofBroadcast(s: SparkSession, d: String): DataFrame =
+    asofOrders(s, d)(graft.plans.AsofJoin.joinAsOf(_, _,
+      leftTime = "ts_us", rightTime = "o_us",
+      leftBy = Seq("user_id"), rightBy = Seq("o_custkey"),
+      tiebreak = Seq("o_orderkey"), broadcast = Some(true)))
 
   /** Native as-of with a 90-day tolerance window: the latest order at
     * most 90 days before the event — the freshness-bounded lookup every
@@ -502,20 +487,12 @@ object Events {
     * stale feature, worse than none). Same native operator; the
     * tolerance check rides the O(1) merge state, costing nothing.
     */
-  def eAsofTolerance(s: SparkSession, d: String): DataFrame = {
-    val ev = load(s, d).select(col("event_id"), col("user_id"),
-      unix_micros(col("ts")).as("ts_us"))
-    val ord = Tables.orders(s, d).select(col("o_custkey"), col("o_orderkey"),
-      (unix_timestamp(col("o_orderdate")) * lit(1000000L)).as("o_us"))
-    graft.plans.AsofJoin.joinAsOf(ev, ord,
-        leftTime = "ts_us", rightTime = "o_us",
-        leftBy = Seq("user_id"), rightBy = Seq("o_custkey"),
-        tiebreak = Seq("o_orderkey"), broadcast = Some(false),
-        toleranceUs = Some(90L * 86400L * 1000000L))
-      .select(col("event_id"), col("user_id"), col("o_orderkey"),
-        (col("o_us") / lit(1000000L)).cast("bigint").as("order_epoch"))
-      .orderBy("event_id")
-  }
+  def eAsofTolerance(s: SparkSession, d: String): DataFrame =
+    asofOrders(s, d)(graft.plans.AsofJoin.joinAsOf(_, _,
+      leftTime = "ts_us", rightTime = "o_us",
+      leftBy = Seq("user_id"), rightBy = Seq("o_custkey"),
+      tiebreak = Seq("o_orderkey"), broadcast = Some(false),
+      toleranceUs = Some(90L * 86400L * 1000000L)))
 
   val eAsofToleranceSql: String =
     """WITH ev AS (SELECT event_id, user_id, epoch_ns(ts) // 1000 AS us FROM events),
@@ -534,20 +511,12 @@ object Events {
     * Ties resolve to the smallest orderkey, mirroring backward's
     * largest-key convention under its DESC ordering.
     */
-  def eAsofForward(s: SparkSession, d: String): DataFrame = {
-    val ev = load(s, d).select(col("event_id"), col("user_id"),
-      unix_micros(col("ts")).as("ts_us"))
-    val ord = Tables.orders(s, d).select(col("o_custkey"), col("o_orderkey"),
-      (unix_timestamp(col("o_orderdate")) * lit(1000000L)).as("o_us"))
-    graft.plans.AsofJoin.joinAsOf(ev, ord,
-        leftTime = "ts_us", rightTime = "o_us",
-        leftBy = Seq("user_id"), rightBy = Seq("o_custkey"),
-        tiebreak = Seq("o_orderkey"), direction = "forward",
-        broadcast = Some(false))
-      .select(col("event_id"), col("user_id"), col("o_orderkey"),
-        (col("o_us") / lit(1000000L)).cast("bigint").as("order_epoch"))
-      .orderBy("event_id")
-  }
+  def eAsofForward(s: SparkSession, d: String): DataFrame =
+    asofOrders(s, d)(graft.plans.AsofJoin.joinAsOf(_, _,
+      leftTime = "ts_us", rightTime = "o_us",
+      leftBy = Seq("user_id"), rightBy = Seq("o_custkey"),
+      tiebreak = Seq("o_orderkey"), direction = "forward",
+      broadcast = Some(false)))
 
   val eAsofForwardSql: String =
     """WITH ev AS (SELECT event_id, user_id, epoch_ns(ts) // 1000 AS us FROM events),

@@ -160,8 +160,7 @@ object Similarity {
       .select(col("cell"), transform(col("pm"), p => p.getField("mv")).as("m_emb"))
     // medoid update: the member closest (max cosine) to the cell mean,
     // ties by vec_id — centroids stay actual data vectors
-    val mdot = org.apache.spark.sql.graft.GraftSql
-      .fdDot(col("embedding"), col("m_emb"))
+    val mdot = Vectors.dot(col("embedding"), col("m_emb"))
     val mnrm = sqrt(aggregate(transform(col("m_emb"), x => x * x),
       lit(0.0), (a, x) => a + x))
     val mcos = round(mdot / (col("nrm") * mnrm), 6)
@@ -297,34 +296,34 @@ object Similarity {
        |      a.vec_id) AS mrn
        |  FROM ${nx}_assign a JOIN ${nx}_mean m ON a.cell = m.cell) WHERE mrn = 1)""".stripMargin
 
+  /** The oracle's IVF centroid fit as a `WITH` list: `n` ([[NORM_CTE]]),
+    * the seed centroids `cent0`, then one [[lloydSql]] step per
+    * iteration, ending in `cent$LloydIters`. Joined here, outside any
+    * margin-stripped literal: an empty step list inlined before a
+    * margin pipe would leave a stray "|" in the generated SQL.
+    */
+  private def ivfCtes: String =
+    (Seq(NORM_CTE,
+      s"cent0 AS (SELECT vec_id AS c_id, embedding, nrm FROM n WHERE vec_id < $IvfK)") ++
+      (1 to LloydIters).map(t => lloydSql(s"cent${t - 1}", s"cent$t"))).mkString(",\n")
+
   val sAnnIvfSql: String = annIvfSqlFor(NumProbes)
 
   /** [[sAnnIvfSql]] parametrized by probe count (the s_probe_curve
     * oracle re-instantiates the whole verified chain per level).
     */
-  def annIvfSqlFor(nProbe: Int): String = {
-    val centFinal = if (LloydIters == 0) "cent0" else s"cent$LloydIters"
-    val lloydCtes = (1 to LloydIters)
-      .map(t => lloydSql(s"cent${t - 1}", s"cent$t"))
-      .mkString(",\n")
-    // join the optional lloyd CTEs OUTSIDE the margin-stripped literal:
-    // an empty block inlined before a margin pipe would leave a stray
-    // "|" in the generated SQL (stripMargin strips only the first).
-    val withCtes = (Seq(
-      NORM_CTE,
-      s"cent0 AS (SELECT vec_id AS c_id, embedding, nrm FROM n WHERE vec_id < $IvfK)")
-      ++ (if (LloydIters == 0) Nil else Seq(lloydCtes))).mkString(",\n")
-    s"""WITH $withCtes,
+  def annIvfSqlFor(nProbe: Int): String =
+    s"""WITH $ivfCtes,
        |assign AS (SELECT vec_id, embedding, nrm, c_id AS cell FROM (
        |  SELECT v.vec_id, v.embedding, v.nrm, c.c_id,
        |    row_number() OVER (PARTITION BY v.vec_id
        |      ORDER BY ${cosSql("v", "c")} DESC, c.c_id) AS arn
-       |  FROM n v CROSS JOIN $centFinal c) WHERE arn = 1),
+       |  FROM n v CROSS JOIN cent$LloydIters c) WHERE arn = 1),
        |probes AS (SELECT q_id, embedding, nrm, c_id AS cell FROM (
        |  SELECT q.vec_id AS q_id, q.embedding, q.nrm, c.c_id,
        |    row_number() OVER (PARTITION BY q.vec_id
        |      ORDER BY ${cosSql("q", "c")} DESC, c.c_id) AS prn
-       |  FROM n q CROSS JOIN $centFinal c WHERE q.vec_id < $NumQueries) WHERE prn <= $nProbe),
+       |  FROM n q CROSS JOIN cent$LloydIters c WHERE q.vec_id < $NumQueries) WHERE prn <= $nProbe),
        |scored AS (
        |  SELECT p.q_id, a.vec_id AS n_id, ${cosSql("p", "a")} AS cos
        |  FROM probes p JOIN assign a ON p.cell = a.cell AND p.q_id <> a.vec_id),
@@ -333,7 +332,6 @@ object Similarity {
        |  FROM scored)
        |SELECT q_id, n_id, rnk, cos FROM ranked WHERE rnk <= $TopK
        |ORDER BY q_id, rnk""".stripMargin
-  }
 
   // ------------------------------------------------- LSH-bucketed ANN
   val LshPlanes = 8     // sign-random-projection hyperplanes
@@ -680,8 +678,7 @@ object Similarity {
     */
   // native codegen'd double-array squared L2 (bit-identical to the HOF
   // form it replaced — VectorExprSpec pins the equality)
-  private val pqDist = (a: Column, b: Column) =>
-    round(org.apache.spark.sql.graft.GraftSql.doubleSqDist(a, b), 6)
+  private val pqDist = (a: Column, b: Column) => round(Vectors.sqDist(a, b), 6)
 
   /** Long form (vec_id, m, sub double[PqSub]): one row per subspace.
     * Frame-based so the serve path can derive QUERY subvectors from a
@@ -1077,14 +1074,6 @@ object Similarity {
   }
 
   lazy val sPqResidualSql: String = {
-    val centFinal = if (LloydIters == 0) "cent0" else s"cent$LloydIters"
-    val lloydCtes = (1 to LloydIters)
-      .map(t => lloydSql(s"cent${t - 1}", s"cent$t"))
-      .mkString(",\n")
-    val ivfCtes = (Seq(
-      NORM_CTE,
-      s"cent0 AS (SELECT vec_id AS c_id, embedding, nrm FROM n WHERE vec_id < $IvfK)")
-      ++ (if (LloydIters == 0) Nil else Seq(lloydCtes))).mkString(",\n")
     def errCte(name: String, fin: String) =
       s"""$name AS (SELECT vec_id,
          |  round(CAST(SUM(CAST(d AS DECIMAL(16,6))) AS DOUBLE), 6) AS err
@@ -1096,14 +1085,14 @@ object Similarity {
        |  SELECT v.vec_id, c.c_id AS ivf_cell,
        |    row_number() OVER (PARTITION BY v.vec_id
        |      ORDER BY ${cosSql("v", "c")} DESC, c.c_id) AS arn
-       |  FROM n v CROSS JOIN $centFinal c) WHERE arn = 1),
+       |  FROM n v CROSS JOIN cent$LloydIters c) WHERE arn = 1),
        |resid AS (SELECT a.vec_id, a.ivf_cell,
        |    list_transform(range(1, 65),
        |      i -> CAST(e.embedding[i] AS DOUBLE)
        |         - CAST(c.embedding[i] AS DOUBLE)) AS remb
        |  FROM assign a
        |  JOIN embeddings e ON e.vec_id = a.vec_id
-       |  JOIN $centFinal c ON c.c_id = a.ivf_cell),
+       |  JOIN cent$LloydIters c ON c.c_id = a.ivf_cell),
        |$pqCtesSql,
        |rsub AS (SELECT vec_id, m,
        |    list_transform(range(1, ${PqSub + 1}),
@@ -1162,26 +1151,18 @@ object Similarity {
     annIvfPqServe(queries, lCent, lCodebook, lCodes)
   }
 
-  lazy val sIvfPqSql: String = {
-    val centFinal = if (LloydIters == 0) "cent0" else s"cent$LloydIters"
-    val lloydCtes = (1 to LloydIters)
-      .map(t => lloydSql(s"cent${t - 1}", s"cent$t"))
-      .mkString(",\n")
-    val ivfCtes = (Seq(
-      NORM_CTE,
-      s"cent0 AS (SELECT vec_id AS c_id, embedding, nrm FROM n WHERE vec_id < $IvfK)")
-      ++ (if (LloydIters == 0) Nil else Seq(lloydCtes))).mkString(",\n")
+  lazy val sIvfPqSql: String =
     s"""WITH $ivfCtes,
        |assign AS (SELECT vec_id, c_id AS ivf_cell FROM (
        |  SELECT v.vec_id, c.c_id,
        |    row_number() OVER (PARTITION BY v.vec_id
        |      ORDER BY ${cosSql("v", "c")} DESC, c.c_id) AS arn
-       |  FROM n v CROSS JOIN $centFinal c) WHERE arn = 1),
+       |  FROM n v CROSS JOIN cent$LloydIters c) WHERE arn = 1),
        |probes AS (SELECT q_id, ivf_cell FROM (
        |  SELECT q.vec_id AS q_id, c.c_id AS ivf_cell,
        |    row_number() OVER (PARTITION BY q.vec_id
        |      ORDER BY ${cosSql("q", "c")} DESC, c.c_id) AS prn
-       |  FROM n q CROSS JOIN $centFinal c WHERE q.vec_id < $NumQueries)
+       |  FROM n q CROSS JOIN cent$LloydIters c WHERE q.vec_id < $NumQueries)
        |  WHERE prn <= $NumProbes),
        |cand AS (SELECT p.q_id, a.vec_id
        |  FROM probes p JOIN assign a USING (ivf_cell)
@@ -1201,7 +1182,6 @@ object Similarity {
        |    ORDER BY adist ASC, n_id) AS INT) AS rnk FROM adc)
        |SELECT q_id, n_id, rnk, adist FROM r WHERE rnk <= $TopK
        |ORDER BY q_id, rnk""".stripMargin
-  }
 
   // ----------------------------------------------- filtered vector search
   /** Metadata-FILTERED exact top-k: per query, the k nearest corpus
@@ -1395,9 +1375,8 @@ object Similarity {
       .select(col("c_label"), col("c_emb"),
         sqrt(aggregate(col("c_emb"), lit(0.0), (a, x) => a + x * x)).as("c_nrm"))
     val base = withNorm(s, d)
-    val cos = round(
-      org.apache.spark.sql.graft.GraftSql.fdDot(col("embedding"), col("c_emb"))
-        / (col("nrm") * col("c_nrm")), 6)
+    val cos = round(Vectors.dot(col("embedding"), col("c_emb"))
+      / (col("nrm") * col("c_nrm")), 6)
     val wA = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("c_label"))
     val pred = base
       .join(Tables.embeddings(s, d).select(col("vec_id"), col("label")), "vec_id")
@@ -1488,21 +1467,13 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  val dSemdedupSql: String = {
-    val centFinal = if (LloydIters == 0) "cent0" else s"cent$LloydIters"
-    val lloydCtes = (1 to LloydIters)
-      .map(t => lloydSql(s"cent${t - 1}", s"cent$t"))
-      .mkString(",\n")
-    val withCtes = (Seq(
-      NORM_CTE,
-      s"cent0 AS (SELECT vec_id AS c_id, embedding, nrm FROM n WHERE vec_id < $IvfK)")
-      ++ (if (LloydIters == 0) Nil else Seq(lloydCtes))).mkString(",\n")
-    s"""WITH $withCtes,
+  val dSemdedupSql: String =
+    s"""WITH $ivfCtes,
        |assign AS (SELECT vec_id, embedding, nrm, c_id AS cell FROM (
        |  SELECT v.vec_id, v.embedding, v.nrm, c.c_id,
        |    row_number() OVER (PARTITION BY v.vec_id
        |      ORDER BY ${cosSql("v", "c")} DESC, c.c_id) AS arn
-       |  FROM n v CROSS JOIN $centFinal c) WHERE arn = 1),
+       |  FROM n v CROSS JOIN cent$LloydIters c) WHERE arn = 1),
        |victims AS (SELECT DISTINCT b.vec_id
        |  FROM assign a JOIN assign b
        |    ON a.cell = b.cell AND a.vec_id < b.vec_id
@@ -1511,7 +1482,6 @@ object Similarity {
        |  CASE WHEN v.vec_id IS NULL THEN 1 ELSE 0 END AS keep
        |FROM assign s LEFT JOIN victims v ON s.vec_id = v.vec_id
        |ORDER BY s.vec_id""".stripMargin
-  }
 
   // ------------------------------------------------- recall evaluation
   /** ANN recall@k — the evaluation every approximate-index deployment
@@ -2041,8 +2011,7 @@ object Similarity {
       .select(transform(col("cs"), x => x("mu")).as("mu"))
     val dists = Tables.embeddings(s, d).crossJoin(broadcast(centArr))
       .select(col("vec_id"), col("label"),
-        round(sqrt(org.apache.spark.sql.graft.GraftSql
-          .fdSqDist(col("embedding"), col("mu"))), 6).as("dist"))
+        round(sqrt(Vectors.sqDist(col("embedding"), col("mu"))), 6).as("dist"))
     val stats = dists.agg(
       sum(floor(col("dist") * lit(1e6)).cast("long")).as("sdm"),
       count(lit(1)).as("n"))
@@ -2117,8 +2086,7 @@ object Similarity {
           / lit(1e6)).as("cq"))
     val cells = compSums.join(cellStats, "c2")
     val m2 = col("cn") * col("sqx") -
-      lit(2.0) * org.apache.spark.sql.graft.GraftSql
-        .fdDot(col("embedding"), col("sVec")) + col("cq")
+      lit(2.0) * Vectors.dot(col("embedding"), col("sVec")) + col("cq")
     val perVC = assign
       .withColumn("sqx", sqOf(col("embedding")))
       .crossJoin(broadcast(cells))
@@ -2140,22 +2108,14 @@ object Similarity {
   }
 
   val sSilhouetteSql: String = {
-    val centFinal = if (LloydIters == 0) "cent0" else s"cent$LloydIters"
-    val lloydCtes = (1 to LloydIters)
-      .map(t => lloydSql(s"cent${t - 1}", s"cent$t"))
-      .mkString(",\n")
-    val withCtes = (Seq(
-      NORM_CTE,
-      s"cent0 AS (SELECT vec_id AS c_id, embedding, nrm FROM n WHERE vec_id < $IvfK)")
-      ++ (if (LloydIters == 0) Nil else Seq(lloydCtes))).mkString(",\n")
     val sqx = """list_reduce(list_prepend(0.0, list_transform(embedding,
                 |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (a, b) -> a + b)""".stripMargin
-    s"""WITH $withCtes,
+    s"""WITH $ivfCtes,
        |assign AS (SELECT vec_id, embedding, nrm, c_id AS cell FROM (
        |  SELECT v.vec_id, v.embedding, v.nrm, c.c_id,
        |    row_number() OVER (PARTITION BY v.vec_id
        |      ORDER BY ${cosSql("v", "c")} DESC, c.c_id) AS arn
-       |  FROM n v CROSS JOIN $centFinal c) WHERE arn = 1),
+       |  FROM n v CROSS JOIN cent$LloydIters c) WHERE arn = 1),
        |comp AS (SELECT cell, i AS pos,
        |    CAST(SUM(CAST(embedding[i] AS DECIMAL(20,8))) AS DOUBLE) AS sv
        |  FROM assign CROSS JOIN range(1, 65) t(i) GROUP BY 1, 2),
@@ -2773,21 +2733,13 @@ object Similarity {
       .orderBy("cell")
   }
 
-  val sCellBalanceSql: String = {
-    val centFinal = if (LloydIters == 0) "cent0" else s"cent$LloydIters"
-    val lloydCtes = (1 to LloydIters)
-      .map(t => lloydSql(s"cent${t - 1}", s"cent$t"))
-      .mkString(",\n")
-    val withCtes = (Seq(
-      NORM_CTE,
-      s"cent0 AS (SELECT vec_id AS c_id, embedding, nrm FROM n WHERE vec_id < $IvfK)")
-      ++ (if (LloydIters == 0) Nil else Seq(lloydCtes))).mkString(",\n")
-    s"""WITH $withCtes,
+  val sCellBalanceSql: String =
+    s"""WITH $ivfCtes,
        |assign AS (SELECT vec_id, c_id AS cell FROM (
        |  SELECT v.vec_id, c.c_id,
        |    row_number() OVER (PARTITION BY v.vec_id
        |      ORDER BY ${cosSql("v", "c")} DESC, c.c_id) AS arn
-       |  FROM n v CROSS JOIN $centFinal c) WHERE arn = 1),
+       |  FROM n v CROSS JOIN cent$LloydIters c) WHERE arn = 1),
        |cells AS (SELECT cell, COUNT(*) AS n_members FROM assign GROUP BY 1),
        |st AS (SELECT COUNT(*) AS n_cells,
        |    CAST(SUM(n_members) AS BIGINT) AS n_total,
@@ -2796,7 +2748,6 @@ object Similarity {
        |  CAST(n_members * n_cells AS DOUBLE) / n_total AS load_ratio,
        |  CAST(n_max * n_cells AS DOUBLE) / n_total AS max_load_ratio
        |FROM cells, st ORDER BY cell""".stripMargin
-  }
 
   // --------------------------- greedy k-center (farthest-point sampling)
   /** Gonzalez greedy k-center over the embedding corpus — the classic

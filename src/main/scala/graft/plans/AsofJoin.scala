@@ -720,12 +720,11 @@ object AsofJoin {
     * join keys + time of BOTH inputs (map-side partial combine, so the
     * detection pass itself is skew-immune; column-pruned to key +
     * time); if the hottest key's combined row count stays at or below
-    * `spark.graft.asof.autoSkewThreshold` (default 2,000,000 — a
-    * single merge task's comfortable row budget), the plain
-    * [[joinAsOf]] plan runs untouched. Above it, the join reruns as
-    * [[joinAsOfSalted]] with the bucket width DERIVED from the hot
-    * key itself: enough buckets to hold the hot key at
-    * `spark.graft.asof.targetBucketRows` rows each (default 500,000),
+    * [[AutoSkewThreshold]] (2,000,000 — a single merge task's
+    * comfortable row budget), the plain [[joinAsOf]] plan runs
+    * untouched. Above it, the join reruns as [[joinAsOfSalted]] with
+    * the bucket width DERIVED from the hot key itself: enough buckets
+    * to hold the hot key at [[TargetBucketRows]] rows each (500,000),
     * spread over the hot key's observed time span —
     * `bucketUs = ceil(span / ceil(hotCount / target))`. Exactness is
     * [[joinAsOfSalted]]'s bucket-carry proof; the salt never reaches
@@ -749,13 +748,32 @@ object AsofJoin {
       rightBy: Seq[String],
       tiebreak: Seq[String] = Nil,
       toleranceUs: Option[Long] = None,
-      direction: String = "backward"): DataFrame = {
+      direction: String = "backward"): DataFrame =
+    joinAsOfAuto(left, right, leftTime, rightTime, leftBy, rightBy,
+      tiebreak, toleranceUs, direction, AutoSkewThreshold, TargetBucketRows)
+
+  /** Hot-key row count above which [[joinAsOfAuto]] salts. */
+  private val AutoSkewThreshold = 2000000L
+
+  /** Rows per time bucket [[joinAsOfAuto]] aims the hot key at. */
+  private val TargetBucketRows = 500000L
+
+  /** [[joinAsOfAuto]] with its two sizes given: tests reach the salted
+    * branch on a small fixture through it.
+    */
+  private[graft] def joinAsOfAuto(
+      left: DataFrame,
+      right: DataFrame,
+      leftTime: String,
+      rightTime: String,
+      leftBy: Seq[String],
+      rightBy: Seq[String],
+      tiebreak: Seq[String],
+      toleranceUs: Option[Long],
+      direction: String,
+      threshold: Long,
+      target: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
-    val s = left.sparkSession
-    val threshold =
-      s.conf.get("spark.graft.asof.autoSkewThreshold", "2000000").toLong
-    val target =
-      s.conf.get("spark.graft.asof.targetBucketRows", "500000").toLong
     require(threshold > 0 && target > 0,
       s"joinAsOfAuto: threshold/target must be positive ($threshold/$target)")
     def proj(df: DataFrame, keys: Seq[String], t: String) =

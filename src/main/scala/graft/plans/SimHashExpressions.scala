@@ -12,17 +12,13 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native 64-bit SimHash over a token array: md5 every token (with
   * multiplicity), keep 64 ±1 majority counters over the digest's first
   * 64 bits, emit the 16-char lowercase-hex sketch — bit-for-bit the
-  * output of the `graft.functions.SimHash64` typed Aggregator, without
-  * the explode-to-one-row-per-token + ExpressionEncoder'd 64-int buffer
-  * round-trip per row that made the UDAF the bench's second-costliest
-  * query (7.5 s at sf0.1). As a per-row map it needs NO shuffle at all:
-  * the aggregation disappears, not just its constant factor — the
-  * `ShingleMinHash` recipe applied to SimHash.
-  *
-  * The Aggregator stays in-tree as the engine's custom-UDAF surface
-  * exercise (`functions/SimHashAgg.scala`, tested by DedupSpec); this
-  * expression is the hot path the registered queries use. A property
-  * test pins the two bit-identical.
+  * output of a typed SimHash Aggregator (the test reference
+  * `graft.SimHash64`), without the explode-to-one-row-per-token +
+  * ExpressionEncoder'd 64-int buffer round-trip per row that made the
+  * UDAF the bench's second-costliest query (7.5 s at sf0.1). As a
+  * per-row map it needs NO shuffle at all: the aggregation disappears,
+  * not just its constant factor — the `ShingleMinHash` recipe applied
+  * to SimHash. SimHashExprSpec pins the two bit-identical.
   *
   * NULL for a NULL token array; empty arrays yield the all-zero sketch
   * ("0000000000000000") — callers that must match the explode+groupBy

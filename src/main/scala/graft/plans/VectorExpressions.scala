@@ -7,44 +7,66 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: Σ aᵢ·bᵢ over two ArrayType(FloatType)
-  * columns, accumulating in double, left-to-right.
+/** Native Catalyst fold over two dense vectors: Σ aᵢ·bᵢ (`sq = false`)
+  * or Σ (aᵢ−bᵢ)² (`sq = true`). Each side is an ArrayType(FloatType)
+  * column (stored embeddings) or an ArrayType(DoubleType) one (derived
+  * means, PQ subvectors, directions): float·float, float·double, and
+  * for the distance also double·double.
   *
-  * This is the codegen'd fast path for the similarity operators. The
-  * generated loop reads floats straight out of the UnsafeArrayData
-  * buffers — no per-element boxing, no lambda dispatch, and it fuses
-  * into the surrounding WholeStageCodegen stage, unlike the equivalent
-  * `aggregate(zip_with(...))` higher-order pipeline (interpreted, one
-  * allocation per pair). Summation order is identical to the
-  * higher-order form and to DuckDB's list_reduce fold (see
-  * graft.functions.Vectors), so the two are bit-exact; VectorExprSpec
-  * checks the natives against the higher-order forms.
+  * The fold is the one rule every vector comparison in the suite uses:
+  * read each element as a double — `(double) getFloat(i)` or
+  * `getDouble(i)`, by its side's array type — form the term x·y, or d·d
+  * with d = x−y, and sum left to right from 0.0. That is the order of
+  * the `aggregate(zip_with(…))` higher-order form and of DuckDB's
+  * `list_reduce` fold (see graft.functions.Vectors), so the three are
+  * bit-exact; VectorExprSpec checks the native against the higher-order
+  * forms on the codegen and the interpreted path. The generated loop
+  * reads straight out of the UnsafeArrayData buffers — no per-element
+  * boxing, no lambda dispatch — and fuses into the surrounding
+  * WholeStageCodegen stage.
   *
   * Precondition: array elements are non-null (embedding vectors). A
   * null ARRAY (either side) yields null via BinaryExpression's default
-  * null handling, and a LENGTH MISMATCH yields null too — exactly the
+  * null handling, and a LENGTH MISMATCH yields null too — the
   * higher-order form's semantics (zip_with null-pads the shorter array
-  * and the aggregate fold propagates the null), so the bit-equality
-  * claim covers malformed/short vectors as well, not just the fixture's
-  * fixed-width case.
+  * and the fold propagates the null).
+  *
+  * Plans name the type pair and the term, never the `sq` flag:
+  * `float_dot`, `fd_dot` (float × double), `float_sqdist`,
+  * `double_sqdist`, `fd_sqdist`.
   */
-case class FloatDotProduct(left: Expression, right: Expression)
+case class DenseFold(left: Expression, right: Expression, sq: Boolean)
     extends BinaryExpression {
 
   override def nullable: Boolean = true
 
+  override def dataType: DataType = DoubleType
+
+  // "" for an unresolved child or a rejected type pair
+  private def pair: String =
+    if (!childrenResolved) ""
+    else (left.dataType, right.dataType) match {
+      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) => "float"
+      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) if sq => "double"
+      case (ArrayType(FloatType, _), ArrayType(DoubleType, _)) => "fd"
+      case _ => ""
+    }
+
+  override def prettyName: String =
+    (if (pair.isEmpty) "dense" else pair) + (if (sq) "_sqdist" else "_dot")
+
+  override protected def stringArgs: Iterator[Any] = Iterator(left, right)
+
   override def checkInputDataTypes(): TypeCheckResult =
-    if (Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })) TypeCheckResult.TypeCheckSuccess
+    if (pair.nonEmpty) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"float_dot expects two array<float> arguments, got " +
+      s"$prettyName expects (array<float>, array<float>), (array<float>, " +
+        s"array<double>) or, for sqdist, (array<double>, array<double>), got " +
         s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
 
-  override def dataType: DataType = DoubleType
-
-  override def prettyName: String = "float_dot"
+  // element reads per side: float in "float" and "fd", double otherwise
+  @transient private lazy val leftFloat = pair == "float" || pair == "fd"
+  @transient private lazy val rightFloat = pair == "float"
 
   override protected def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
@@ -54,7 +76,9 @@ case class FloatDotProduct(left: Expression, right: Expression)
     var acc = 0.0
     var i = 0
     while (i < n) {
-      acc += a.getFloat(i).toDouble * b.getFloat(i).toDouble
+      val x = if (leftFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (rightFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      if (sq) { val d = x - y; acc += d * d } else acc += x * y
       i += 1
     }
     acc
@@ -65,6 +89,13 @@ case class FloatDotProduct(left: Expression, right: Expression)
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
       val acc = ctx.freshName("acc")
+      val x = if (leftFloat) s"((double) $a.getFloat($i))" else s"$a.getDouble($i)"
+      val y = if (rightFloat) s"((double) $b.getFloat($i))" else s"$b.getDouble($i)"
+      val term =
+        if (sq) {
+          val d = ctx.freshName("d")
+          s"final double $d = $x - $y;\n  $acc += $d * $d;"
+        } else s"$acc += $x * $y;"
       s"""
          |if ($a.numElements() != $b.numElements()) {
          |  ${ev.isNull} = true;
@@ -72,7 +103,7 @@ case class FloatDotProduct(left: Expression, right: Expression)
          |final int $n = $a.numElements();
          |double $acc = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += ((double) $a.getFloat($i)) * ((double) $b.getFloat($i));
+         |  $term
          |}
          |${ev.value} = $acc;
          |}
@@ -80,273 +111,7 @@ case class FloatDotProduct(left: Expression, right: Expression)
     })
 
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): FloatDotProduct =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Native Catalyst expression: Σ (aᵢ−bᵢ)² over two ArrayType(FloatType)
-  * columns — the squared-L2 distance the k-center / PQ-recall /
-  * exact-kNN paths rank on. Same contract as [[FloatDotProduct]]:
-  * accumulates in double, left-to-right, each term computed as
-  * ((double)aᵢ − (double)bᵢ)² — bit-identical to the
-  * `aggregate(zip_with(...))` higher-order form it replaces (same
-  * operation order) and to DuckDB's `list_reduce` fold, but codegen'd:
-  * the loop reads floats straight off the UnsafeArrayData buffers and
-  * fuses into the surrounding WholeStageCodegen stage instead of
-  * paying interpreted lambda dispatch and a per-pair array allocation.
-  */
-case class FloatSqDist(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  // length mismatch -> null, matching the HOF form (see FloatDotProduct)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"float_sqdist expects two array<float> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-
-  override def dataType: DataType = DoubleType
-
-  override def prettyName: String = "float_sqdist"
-
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    if (a.numElements() != b.numElements()) return null
-    val n = a.numElements()
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val d = a.getFloat(i).toDouble - b.getFloat(i).toDouble
-      acc += d * d
-      i += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |final int $n = $a.numElements();
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final double $d = ((double) $a.getFloat($i)) - ((double) $b.getFloat($i));
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): FloatSqDist =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[FloatSqDist]]'s ArrayType(DoubleType) twin — the PQ family's
-  * subvector/codebook distances work in double arrays (exact-decimal
-  * means surfaced as doubles), so they need the same fused codegen'd
-  * subtract-square-sum over double buffers. Identical fold order to
-  * the `aggregate(zip_with(...))` form it replaces.
-  */
-case class DoubleSqDist(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  // length mismatch -> null, matching the HOF form (see FloatDotProduct)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"double_sqdist expects two array<double> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-
-  override def dataType: DataType = DoubleType
-
-  override def prettyName: String = "double_sqdist"
-
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    if (a.numElements() != b.numElements()) return null
-    val n = a.numElements()
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val d = a.getDouble(i) - b.getDouble(i)
-      acc += d * d
-      i += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |final int $n = $a.numElements();
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final double $d = $a.getDouble($i) - $b.getDouble($i);
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DoubleSqDist =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Mixed-type dot: Σ (double)aᵢ·bᵢ with `a: array<float>` (stored
-  * vectors) and `b: array<double>` (derived means / component sums /
-  * normalized directions). Same left-to-right double fold as the
-  * `aggregate(zip_with(a, b, (x, y) => x.cast("double") * y))` form it
-  * replaces — the shape every centroid-mean comparison in the suite
-  * uses (Lloyd medoid pick, nearest-centroid classify, silhouette
-  * moment identity).
-  */
-case class FloatDoubleDot(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  // length mismatch -> null, matching the HOF form (see FloatDotProduct)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"fd_dot expects (array<float>, array<double>), got " +
-          s"${l.simpleString} and ${r.simpleString}")
-    }
-
-  override def dataType: DataType = DoubleType
-
-  override def prettyName: String = "fd_dot"
-
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    if (a.numElements() != b.numElements()) return null
-    val n = a.numElements()
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      acc += a.getFloat(i).toDouble * b.getDouble(i)
-      i += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |final int $n = $a.numElements();
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += ((double) $a.getFloat($i)) * $b.getDouble($i);
-         |}
-         |${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): FloatDoubleDot =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Mixed-type squared L2: Σ ((double)aᵢ − bᵢ)² with `a: array<float>`,
-  * `b: array<double>` — the stored-vector-vs-derived-mean distance
-  * (centroid outlier screen). Fold order identical to the HOF form.
-  */
-case class FloatDoubleSqDist(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  // length mismatch -> null, matching the HOF form (see FloatDotProduct)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"fd_sqdist expects (array<float>, array<double>), got " +
-          s"${l.simpleString} and ${r.simpleString}")
-    }
-
-  override def dataType: DataType = DoubleType
-
-  override def prettyName: String = "fd_sqdist"
-
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    if (a.numElements() != b.numElements()) return null
-    val n = a.numElements()
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val d = a.getFloat(i).toDouble - b.getDouble(i)
-      acc += d * d
-      i += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |final int $n = $a.numElements();
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final double $d = ((double) $a.getFloat($i)) - $b.getDouble($i);
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): FloatDoubleSqDist =
+      newLeft: Expression, newRight: Expression): DenseFold =
     copy(left = newLeft, right = newRight)
 }
 

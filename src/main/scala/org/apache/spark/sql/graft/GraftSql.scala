@@ -7,15 +7,16 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.SparkStrategy
 
-import graft.plans.{CharStats, DoubleSqDist, FloatDotProduct, FloatDoubleDot,
-  FloatDoubleSqDist, FloatSqDist, PairExplode, ShingleHashSet, ShingleMinHash,
-  ShingleSet, SignBands, SimHash16Expr, SimHash64Expr, SortedIntersectCount,
-  SparseDotProduct}
+import graft.plans.{CharStats, DenseFold, PairExplode, ShingleHashSet,
+  ShingleMinHash, ShingleSet, SignBands, SimHash16Expr, SimHash64Expr,
+  SortedIntersectCount, SparseDotProduct}
 
 /** Bridge into Spark's private[sql] surface (hence the package): builds
   * Columns from custom Catalyst Expressions, and holds the one registry
   * of everything the engine adds to a session — optimizer rules and
-  * planner strategies.
+  * planner strategies. Dense-vector products and distances are one
+  * expression, graft.plans.DenseFold, behind [[denseDot]] and
+  * [[denseSqDist]].
   *
   * [[ensureRegistered]] is the one registration path. It is per-session
   * and idempotent, so query functions can call it defensively: they
@@ -59,25 +60,13 @@ object GraftSql {
     override def allocate(n: Int): Array[Int] = new Array[Int](n)
   }
 
-  /** Codegen'd float-array dot product (see graft.plans.FloatDotProduct). */
-  def floatDot(a: Column, b: Column): Column =
-    column(FloatDotProduct(expression(a), expression(b)))
+  /** Codegen'd Σ aᵢ·bᵢ over two float/double arrays (see graft.plans.DenseFold). */
+  def denseDot(a: Column, b: Column): Column =
+    column(DenseFold(expression(a), expression(b), sq = false))
 
-  /** Codegen'd float-array squared L2 (see graft.plans.FloatSqDist). */
-  def floatSqDist(a: Column, b: Column): Column =
-    column(FloatSqDist(expression(a), expression(b)))
-
-  /** Codegen'd double-array squared L2 (see graft.plans.DoubleSqDist). */
-  def doubleSqDist(a: Column, b: Column): Column =
-    column(DoubleSqDist(expression(a), expression(b)))
-
-  /** Codegen'd float×double dot (see graft.plans.FloatDoubleDot). */
-  def fdDot(a: Column, b: Column): Column =
-    column(FloatDoubleDot(expression(a), expression(b)))
-
-  /** Codegen'd float×double squared L2 (graft.plans.FloatDoubleSqDist). */
-  def fdSqDist(a: Column, b: Column): Column =
-    column(FloatDoubleSqDist(expression(a), expression(b)))
+  /** Codegen'd Σ (aᵢ−bᵢ)² over two float/double arrays (graft.plans.DenseFold). */
+  def denseSqDist(a: Column, b: Column): Column =
+    column(DenseFold(expression(a), expression(b), sq = true))
 
   /** Hash-aggregable argmin over (key ASC, id ASC) returning struct
     * (k, v) — the mutable-buffer replacement for the SortAggregate-

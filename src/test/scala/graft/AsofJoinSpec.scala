@@ -506,9 +506,9 @@ class AsofJoinSpec extends SparkSpec {
   }
   test("auto-skew: hot key detected and balanced with NO caller opt-in; cold path plans plain") {
     // joinAsOfAuto's contract: the caller names no bucket and makes no
-    // skew decision. Thresholds here are engine conf scaled to the
-    // fixture (production defaults are 2M/500k rows); the derivation
-    // picks the bucket from the hot key's own span and count.
+    // skew decision. The sizes here are scaled to the fixture through
+    // the test overload (the engine's constants are 2M/500k rows); the
+    // derivation picks the bucket from the hot key's own span and count.
     val m = 20000
     val left = (0 until m).map(i => (1L, i * 1000L, i.toLong))
       .toDF("k", "t", "lid")
@@ -516,9 +516,10 @@ class AsofJoinSpec extends SparkSpec {
       .toDF("k_r", "t_r", "rid")
     def rows(df: DataFrame): Set[(Long, Option[Long])] =
       df.select("lid", "rid").as[(Long, Option[Long])].collect().toSet
-    spark.conf.set("spark.graft.asof.autoSkewThreshold", "10000")
-    spark.conf.set("spark.graft.asof.targetBucketRows", "2000")
-    try withoutCoalescing {
+    def autoJoin(l: DataFrame, r: DataFrame, by: Seq[String], byR: Seq[String]) =
+      AsofJoin.joinAsOfAuto(l, r, "t", "t_r", by, byR, Seq("rid"), None,
+        "backward", threshold = 10000L, target = 2000L)
+    withoutCoalescing {
       val (wantRows, ctl) = measureShuffleReads(rows(
         AsofJoin.joinAsOf(left, right, "t", "t_r", Seq("k"), Seq("k_r"),
           tiebreak = Seq("rid"), broadcast = Some(false))))
@@ -527,8 +528,7 @@ class AsofJoinSpec extends SparkSpec {
         .map(ts => ts.max.toDouble / ts.sum).max
       assert(worstCtl >= 0.99, s"control lost its hot task ($worstCtl)")
 
-      val auto = AsofJoin.joinAsOfAuto(left, right, "t", "t_r",
-        Seq("k"), Seq("k_r"), tiebreak = Seq("rid"))
+      val auto = autoJoin(left, right, Seq("k"), Seq("k_r"))
       assert(auto.queryExecution.optimizedPlan.toString.contains("_asof_salt"),
         "detection missed the hot key: auto did not salt")
       val (gotRows, salted) = measureShuffleReads(rows(auto))
@@ -548,8 +548,7 @@ class AsofJoinSpec extends SparkSpec {
         ((i % 300).toLong, i * 1000L, i.toLong)).toDF("k", "t", "lid")
       val rightC = (0 until 3000).map(i =>
         ((i % 300).toLong, i * 1000L + 500L, i.toLong)).toDF("k_r", "t_r", "rid")
-      val cold = AsofJoin.joinAsOfAuto(leftC, rightC, "t", "t_r",
-        Seq("k"), Seq("k_r"), tiebreak = Seq("rid"))
+      val cold = autoJoin(leftC, rightC, Seq("k"), Seq("k_r"))
       assert(!cold.queryExecution.optimizedPlan.toString.contains("_asof_salt"),
         "cold path salted: detection fired below threshold")
       assert(rows(cold) === rows(
@@ -558,18 +557,13 @@ class AsofJoinSpec extends SparkSpec {
 
       // keyless global: auto handles the empty-key shape (global stats
       // row), salts above threshold, stays exact
-      val gotG = AsofJoin.joinAsOfAuto(left.select("t", "lid"),
-          right.select("t_r", "rid"), "t", "t_r", Nil, Nil,
-          tiebreak = Seq("rid"))
+      val gotG = autoJoin(left.select("t", "lid"), right.select("t_r", "rid"), Nil, Nil)
         .select("lid", "rid").as[(Long, Option[Long])].collect().toSet
       val wantG = AsofJoin.joinAsOf(left.select("t", "lid"),
           right.select("t_r", "rid"), "t", "t_r", Nil, Nil,
           tiebreak = Seq("rid"), broadcast = Some(false))
         .select("lid", "rid").as[(Long, Option[Long])].collect().toSet
       assert(gotG === wantG)
-    } finally {
-      spark.conf.unset("spark.graft.asof.autoSkewThreshold")
-      spark.conf.unset("spark.graft.asof.targetBucketRows")
     }
   }
   test("SQL front door: textbook max_by shape plans the native exec, == rule-stripped") {

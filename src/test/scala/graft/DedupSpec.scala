@@ -460,7 +460,7 @@ class DedupSpec extends SparkSpec {
 
   test("simhash64 aggregator: order- and partition-insensitive") {
     val base = Dedup.dSimhash64(spark, sf).as[(Long, String)].collect().toMap
-    val sim64 = org.apache.spark.sql.functions.udaf(graft.functions.SimHash64)
+    val sim64 = org.apache.spark.sql.functions.udaf(SimHash64)
     val docs = Tables.documents(spark, sf).orderBy(rand(11))
       .select(col("doc_id"), explode(graft.functions.Text.tokens(col("text"))).as("word"))
       .repartition(3)

@@ -1,4 +1,4 @@
-package graft.functions
+package graft
 
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
@@ -7,10 +7,10 @@ import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
-/** 64-bit SimHash as a typed custom aggregate (`Aggregator[IN, BUF, OUT]`,
-  * the idiomatic Spark custom-UDAF surface; the reference's only custom
-  * aggregate is Hadoop's IntSumReducer — this is the engine's
-  * "user-defined aggregation" extension point exercised for real).
+/** 64-bit SimHash as a typed custom aggregate (`Aggregator[IN, BUF, OUT]`):
+  * the explode+groupBy reference that SimHashExprSpec and DedupSpec check
+  * the native `graft.plans.SimHash64Expr` (the `d_simhash64` query's
+  * path) against.
   *
   * Semantics: per group, take the md5 of every input token (with
   * multiplicity); per bit position j (0–63 over the first 16 hex chars),
@@ -68,33 +68,4 @@ object SimHash64 extends Aggregator[String, Array[Int], String] {
 
   override def bufferEncoder: Encoder[Array[Int]] = ExpressionEncoder[Array[Int]]()
   override def outputEncoder: Encoder[String] = Encoders.STRING
-
-  /** DuckDB oracle body: 64 SUM(CASE) bit counters over md5 hex digits,
-    * reassembled into the same 16-char hex sketch. Hex digit d of the
-    * hash carries bits 4d..4d+3 (MSB first); the IN-sets below are the
-    * hex characters with that bit set.
-    */
-  def oracleSql(toksSql: String): String = {
-    val bitSets = Seq(
-      "('8','9','a','b','c','d','e','f')", // value & 8
-      "('4','5','6','7','c','d','e','f')", // value & 4
-      "('2','3','6','7','a','b','e','f')", // value & 2
-      "('1','3','5','7','9','b','d','f')") // value & 1
-    val sums = (0 until 64).map { j =>
-      s"SUM(CASE WHEN substr(h, ${j / 4 + 1}, 1) IN ${bitSets(j % 4)} THEN 1 ELSE -1 END) AS s$j"
-    }.mkString(",\n    ")
-    val digits = (0 until 16).map { d =>
-      val v = (0 until 4).map(b => s"CASE WHEN s${d * 4 + b} > 0 THEN ${8 >> b} ELSE 0 END")
-        .mkString(" + ")
-      s"substr('0123456789abcdef', ($v) + 1, 1)"
-    }.mkString(" ||\n    ")
-    s"""WITH w AS (SELECT doc_id, unnest($toksSql) AS word FROM documents),
-       |h AS (SELECT doc_id, md5(word) AS h FROM w),
-       |s AS (SELECT doc_id,
-       |    $sums
-       |  FROM h GROUP BY doc_id)
-       |SELECT doc_id,
-       |    $digits AS simhash64
-       |FROM s ORDER BY doc_id""".stripMargin
-  }
 }

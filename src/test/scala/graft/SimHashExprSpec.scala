@@ -16,7 +16,7 @@ class SimHashExprSpec extends SparkSpec {
   private val gs = org.apache.spark.sql.graft.GraftSql
 
   test("SimHash64Expr == SimHash64 Aggregator on fixture documents") {
-    val sim64 = udaf(graft.functions.SimHash64)
+    val sim64 = udaf(SimHash64)
     val toks = Text.tokens(col("text"))
     val viaAgg = Tables.documents(spark, sf)
       .select(col("doc_id"), explode(toks).as("word"))

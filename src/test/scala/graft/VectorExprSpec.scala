@@ -6,7 +6,7 @@ import org.scalacheck.rng.Seed
 
 import graft.functions.Vectors
 
-/** The native codegen'd FloatDotProduct must be BIT-identical to the
+/** The native codegen'd DenseFold must be BIT-identical to the
   * portable higher-order form (same left-to-right double fold) — that
   * equivalence is what lets the fast path serve oracle-checked queries.
   */
@@ -79,7 +79,7 @@ class VectorExprSpec extends SparkSpec {
     val hof = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
       aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
         lit(0.0), (acc, v) => acc + v)
-    val nat = org.apache.spark.sql.graft.GraftSql.doubleSqDist _
+    val nat = Vectors.sqDist _
     // PQ-shaped fixture pairs: double subvectors against each other
     val subs = Tables.embeddings(spark, sf)
       .select(col("vec_id"),
@@ -107,9 +107,9 @@ class VectorExprSpec extends SparkSpec {
       (x, y) => (x.cast("double") - y) * (x.cast("double") - y)),
       lit(0.0), (a, x) => a + x)
     val diff = subs.select(
-        org.apache.spark.sql.graft.GraftSql.fdDot(col("embedding"), col("m")).as("fd"),
+        Vectors.dot(col("embedding"), col("m")).as("fd"),
         hofDot.as("rd"),
-        org.apache.spark.sql.graft.GraftSql.fdSqDist(col("embedding"), col("m")).as("fs"),
+        Vectors.sqDist(col("embedding"), col("m")).as("fs"),
         hofSq.as("rs"))
       .filter(col("fd") =!= col("rd") || col("fs") =!= col("rs"))
     assert(diff.count() === 0)
@@ -117,7 +117,7 @@ class VectorExprSpec extends SparkSpec {
     withSQLConf("spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       val r = subs.select(
-          org.apache.spark.sql.graft.GraftSql.fdDot(col("embedding"), col("m")).as("fd"),
+          Vectors.dot(col("embedding"), col("m")).as("fd"),
           hofDot.as("rd"))
         .filter(col("fd") =!= col("rd"))
       assert(r.count() === 0)
@@ -143,25 +143,38 @@ class VectorExprSpec extends SparkSpec {
     // distance over the truncated prefix. Checked on codegen AND
     // interpreted paths, with the HOF columns asserted alongside so the
     // parity claim itself is exercised, not assumed.
-    val gs = org.apache.spark.sql.graft.GraftSql
     val df = Seq((Seq(1f, 2f, 3f), Seq(1f, 2f))).toDF("a", "b")
       .withColumn("ad", expr("transform(a, x -> CAST(x AS DOUBLE))"))
       .withColumn("bd", expr("transform(b, x -> CAST(x AS DOUBLE))"))
+    def query = df.select(
+      Vectors.dot(col("a"), col("b")).as("d"),
+      VectorHof.dot(col("a"), col("b")).as("dh"),
+      Vectors.sqDist(col("a"), col("b")).as("s"),
+      VectorHof.sqDist(col("a"), col("b")).as("sh"),
+      Vectors.sqDist(col("ad"), col("bd")).as("ds"),
+      Vectors.dot(col("a"), col("bd")).as("fd"),
+      Vectors.sqDist(col("a"), col("bd")).as("fs"))
     def check(): Unit = {
-      val row = df.select(
-        Vectors.dot(col("a"), col("b")).as("d"),
-        VectorHof.dot(col("a"), col("b")).as("dh"),
-        Vectors.sqDist(col("a"), col("b")).as("s"),
-        VectorHof.sqDist(col("a"), col("b")).as("sh"),
-        gs.doubleSqDist(col("ad"), col("bd")).as("ds"),
-        gs.fdDot(col("a"), col("bd")).as("fd"),
-        gs.fdSqDist(col("a"), col("bd")).as("fs")).head()
+      val row = query.head()
       (0 until 7).foreach(i =>
         assert(row.isNullAt(i), s"column $i finite on length mismatch"))
     }
     check()
     withSQLConf("spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") { check() }
+    // each type pair and term prints its own name over exactly its two
+    // arguments — no flag in plan strings
+    val text = query.queryExecution.toString
+    Seq("float_dot", "float_sqdist", "double_sqdist", "fd_dot", "fd_sqdist").foreach { name =>
+      val call = s"$name\\(\\w+#\\d+, \\w+#\\d+\\)".r
+      assert(call.findFirstIn(text).nonEmpty, s"$name missing from the plan text")
+    }
+    // anything but a float/double array pair fails analysis, naming both
+    // argument types
+    val bad = intercept[org.apache.spark.sql.AnalysisException](
+      Seq((Seq(1, 2), Seq(1.0, 2.0))).toDF("i", "d")
+        .select(Vectors.dot(col("i"), col("d"))))
+    assert(bad.getMessage.contains("got array<int> and array<double>"), bad.getMessage)
   }
 
   test("sparse_dot == exploded decimal join-aggregate, bit-exact, on fixture docs") {

@@ -4,6 +4,19 @@
 # tokens that change from run to run, so that `diff -r` of two dumps
 # shows only real plan changes.
 # Usage: tools/explain.sh <sfDir> <outDir> [query,query,...]
+#
+# Not reproducible in a full run: q_distinct_agg and q_outer_join order
+# their Expand projections by expression-id hash, which depends on how
+# many expressions earlier queries in the same JVM created. Compare
+# those two dumped alone on both sides:
+#   tools/explain.sh <sfDir> <outDir> q_distinct_agg,q_outer_join
+#
+# Oracle text: graft.Verify (tools/verify.sh) writes every query's DuckDB
+# SQL to <outDir>/oracle_sql.json. Compare two of them key by key with
+#   python3 -c 'import json, sys
+#   a, b = (json.load(open(f)) for f in sys.argv[1:])
+#   print("only one side:", sorted(a.keys() ^ b.keys()))
+#   print("differ:", sorted(k for k in a.keys() & b.keys() if a[k] != b[k]))' A.json B.json
 set -e
 if [ $# -lt 2 ] || [ $# -gt 3 ]; then
   echo "Usage: tools/explain.sh <sfDir> <outDir> [query,query,...]" >&2
